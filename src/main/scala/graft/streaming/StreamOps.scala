@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.Det
 
 /** One event in the per-key timeline, timestamps at µs (the engine's
@@ -64,10 +64,6 @@ case class AsofState(cId: Long, cUs: Long)
 
 /** Drift-monitor input: group, orderable value, side flag (true = A). */
 case class DriftRowIn(grp: String, v: Long, a: Boolean)
-
-/** Drift-monitor state: the distinct-value histogram — (side-A count,
-  * side-B count) per pooled value. Integer-only, arrival-order-free. */
-case class DriftHist(vs: Map[Long, (Long, Long)])
 
 /** Drift-monitor emission: current KS per group (None when a side is
   * still empty), smallest argmax value, and both side counts. */
@@ -159,11 +155,9 @@ case class PitOut(user_id: Long, p_id: Long, p_us: Long,
                   ctx_attr: Option[String], ctx_from_us: Option[Long],
                   ctx_age_us: Option[Long])
 
-/** Per-key last-touch state: the most recent non-purchase event type seen
-  * so far ("" = none yet — the batch query's 'direct' case). */
-case class AttribState(touch: String)
-/** [[AttribTwsProcessor]]'s state: the carried touch PLUS its event
-  * time, so the attribution window is measured from the touch itself
+/** Per-key last-touch state: the most recent non-purchase event type
+  * ("" = none yet — the batch query's 'direct' case) PLUS its event
+  * time, so an attribution window is measured from the touch itself
   * (r20, ADVICE — the store TTL refreshes on every update and is only
   * a state bound, never a window). touchUs = Long.MinValue ⟺ no touch. */
 case class AttribWState(touch: String, touchUs: Long)
@@ -210,15 +204,16 @@ case class CmsProbeOut(event_type: String, probe_user: Long, n: Long,
   * minimum hash, and the KMV estimate (exact below k). */
 case class KmvOut(event_type: String, n_bot: Long, h_k: Long, est: Long)
 
-case class TopkState(sums: Map[Long, Long], n: Long)
-/** [[WindowTopkTwsProcessor]]'s state: [[TopkState]]'s map FLATTENED
-  * to parallel Seqs — transformWithState's Avro state encoding rejects
+/** Windowed top-k state: the user→scaled-sum map FLATTENED to sorted
+  * parallel Seqs, plus the event count. Both state APIs carry this
+  * shape because transformWithState's Avro state encoding rejects
   * MapType (measured: IncompatibleSchemaException on
-  * MapType(Long, Long)), so map-shaped state rides the successor API
-  * as sorted parallel columns and rebuilds per batch. */
+  * MapType(Long, Long)); the fold rebuilds the map per batch. */
 case class TopkTwsState(users: Seq[Long], sums: Seq[Long], n: Long)
-/** [[KsDriftTwsProcessor]]'s state: [[DriftHist]]'s map flattened the
-  * same way (value, count-A, count-B as parallel sorted Seqs). */
+/** Drift-monitor state: the distinct-value histogram — (side-A count,
+  * side-B count) per pooled value — flattened the same way (value,
+  * count-A, count-B as parallel sorted Seqs). Integer-only,
+  * arrival-order-free. */
 case class DriftTwsState(vs: Seq[Long], ca: Seq[Long], cb: Seq[Long])
 
 case class TopkOut(window_us: Long, rk: Int, user_id: Long, value: Double,
@@ -238,6 +233,38 @@ case class TopkOut(window_us: Long, rk: Int, user_id: Long, value: Double,
   * unbounded input, so the reference's causal-ordering semantics are
   * testable against a SQL oracle AND provable over a stream.
   *
+  * Keyed stateful maintainers are written ONCE, as a [[KeyedFold]]: the
+  * grouping key, the in-batch replay order, and a pure per-key
+  * transition (key, prior state, batch events) ⇒ (next state, outputs).
+  * Two generic adapters serve every fold: [[KeyedFold.fmgws]]
+  * (`flatMapGroupsWithState`) and [[KeyedFold.tws]]
+  * (`transformWithState`, one ValueState per key through
+  * [[KeyedFoldProcessor]]). A builder pair (`xMonitor` ∕ `xTws`) is one
+  * fold on the two adapters; the two builders differ only in output
+  * mode, TTL and initial state. Each fold declares:
+  *  - its replay order: [[ById]], [[ByTsId]], one of the tie orders
+  *    [[PurchasesLast]] (asof, pit) and [[ByFunnelStage]] (funnel), or
+  *    none for a commutative fold, which gives the same standings under
+  *    any arrival order and any batch split. An ordered fold is exact
+  *    across micro-batches under per-key in-order delivery in its order
+  *    (the reference's causal-ordering contract).
+  *  - its TTL, fixed by its TWS builder: a TTL'd store expires a key
+  *    idle for that much processing time, bounding state to
+  *    O(recently-active keys) with cold-start semantics on return. Folds
+  *    whose state is a lifetime fact (causal counts, first days, SCD2
+  *    ranges, sketches) are never TTL'd; each builder's scaladoc says
+  *    why. The fMGWS adapter never expires state.
+  *
+  * Why the fMGWS adapter stays: transformWithState requires the RocksDB
+  * state-store provider, so flatMapGroupsWithState is the only keyed
+  * path on the default HDFS-backed store. The benchmark's causal-stream
+  * workload runs the causal fold on both paths.
+  *
+  * Hand-written processors remain only where a maintainer needs a state
+  * primitive the adapter does not model: MapState
+  * ([[TypeCountsProcessor]]), timers ([[SessionTimerProcessor]]) and
+  * ListState ([[RollingSumProcessor]]).
+  *
   * Scale note: all stateful operators key by user_id (the causality
   * key). On a cluster, state shards across executors by that key — the
   * same sharding the reference derived from its partitioned log — and
@@ -246,31 +273,38 @@ case class TopkOut(window_us: Long, rk: Int, user_id: Long, value: Double,
   * per key), not O(history).
   */
 object StreamOps {
+  import KeyedFold.{fmgws, tws}
 
   /** The one 4dp decimal-scaling implementation every stateful
-    * processor shares (Det.dsum's per-value contract: setScale(4,
+    * maintainer shares (Det.dsum's per-value contract: setScale(4,
     * HALF_UP) → exact unscaled long — summing the longs IS the decimal
     * sum, and a long survives state-store round-trips bit-exactly). */
   private[streaming] def scaled4(v: Double): Long =
     BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
       .underlying.unscaledValue.longValueExact
 
-  /** THE sequence-gap transition function — one definition shared by
-    * the batch fold, [[gapAudit]] (flatMapGroupsWithState),
-    * [[GapAuditProcessor]] (transformWithState), and the warm-start
-    * bootstrap ([[gapBootstrapState]]), so the four evaluation paths
-    * cannot drift. */
-  private[streaming] def gapStep(s: GapState, e: Event): GapState = {
-    val withGap =
-      if (s.lastId >= 0L && e.event_id - s.lastId > 1L) {
-        val g = e.event_id - s.lastId - 1L
-        s.copy(nGaps = s.nGaps + 1L, missing = s.missing + g,
-          maxGap = math.max(s.maxGap, g))
-      } else s
-    withGap.copy(lastId = e.event_id, n = withGap.n + 1L)
-  }
+  /** event_id replay: event_id IS the arrival order (FIXTURES.md). */
+  private[graft] val ById: Ordering[Event] = Ordering.by[Event, Long](_.event_id)
 
-  private[streaming] val gapZero = GapState(-1L, 0L, 0L, 0L, 0L)
+  /** (ts_us, event_id) replay: the batch window queries' total order. */
+  private[graft] val ByTsId: Ordering[Event] =
+    Ordering.by[Event, (Long, Long)](e => (e.ts_us, e.event_id))
+
+  /** (ts_us, event_id) with purchases after every other type at one µs:
+    * a click or attribute change at a fact's own instant counts as
+    * prior (q_join_asof's `c_us <= p_us`, q_event_pit's
+    * changes-before-facts tie rule). */
+  private[graft] val PurchasesLast: Ordering[Event] =
+    Ordering.by[Event, (Long, Boolean, Long)](e =>
+      (e.ts_us, e.event_type == "purchase", e.event_id))
+
+  /** (ts_us, stage, event_id): views before clicks before purchases at
+    * one µs, so a click at the first view's instant converts (the batch
+    * funnel's `>=` contract). */
+  private[graft] val ByFunnelStage: Ordering[Event] =
+    Ordering.by[Event, (Long, Int, Long)](e => (e.ts_us, e.event_type match {
+      case "view" => 0; case "click" => 1; case "purchase" => 2; case _ => 3
+    }, e.event_id))
 
   /** Tumbling 1h window × event_type. Streaming callers watermark `ts`
     * first; append-mode emission happens when the watermark passes the
@@ -347,15 +381,6 @@ object StreamOps {
         col("click_ts"), col("purchase_ts"))
   }
 
-  /** Sequence-gap audit — the reference's delivery-guarantee check as a
-    * stateful streaming operator (twin of the batch q_seq_gap): per key,
-    * a jump in the sequence id between consecutive arrivals means
-    * messages were lost or not yet delivered. State is one row per key
-    * (last id + 4 counters); every micro-batch emits the updated totals
-    * (OutputMode.Update — the last emission per key equals the batch
-    * row). In-batch events are replayed in sequence order; exact across
-    * micro-batches under per-key in-order delivery, the same one-sided
-    * contract as [[asofEnrich]]/[[dedupFirstArrival]]. */
   /** Streaming twin of the graded q_event_gapsweep: per key, ONE row
     * of state (last event µs + the four counters) maintains the
     * running event count and the session-boundary counts at the
@@ -370,39 +395,60 @@ object StreamOps {
     * State is O(keys) — 5 longs — against an unbounded timeline. */
   def gapsweepMonitor(events: Dataset[Event]): Dataset[GapSweepOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[GapSweepState]) =>
-          var s = state.getOption.getOrElse(
-            GapSweepState(Long.MinValue, 0L, 0L, 0L, 0L))
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            def brk(m: Long) = s.lastUs == Long.MinValue ||
-              e.ts_us - s.lastUs > m * 60000000L
-            s = GapSweepState(e.ts_us, s.n + 1,
-              s.s15 + (if (brk(15)) 1 else 0),
-              s.s30 + (if (brk(30)) 1 else 0),
-              s.s60 + (if (brk(60)) 1 else 0))
-          }
-          state.update(s)
-          Iterator.single(GapSweepOut(user, s.n, s.s15, s.s30, s.s60))
-      }
+    fmgws(events, gapsweepFold, OutputMode.Update)
   }
 
+  private[graft] val gapsweepFold =
+    KeyedFold[Long, Event, GapSweepState, GapSweepOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(GapSweepState(Long.MinValue, 0L, 0L, 0L, 0L))
+        evs.foreach { e =>
+          def brk(m: Long) = s.lastUs == Long.MinValue ||
+            e.ts_us - s.lastUs > m * 60000000L
+          s = GapSweepState(e.ts_us, s.n + 1,
+            s.s15 + (if (brk(15)) 1 else 0),
+            s.s30 + (if (brk(30)) 1 else 0),
+            s.s60 + (if (brk(60)) 1 else 0))
+        }
+        (Some(s), Iterator.single(GapSweepOut(user, s.n, s.s15, s.s30, s.s60)))
+    }
+
+  /** Sequence-gap audit — the reference's delivery-guarantee check as a
+    * stateful streaming operator (twin of the batch q_seq_gap): per key,
+    * a jump in the sequence id between consecutive arrivals means
+    * messages were lost or not yet delivered. State is one row per key
+    * (last id + 4 counters); every micro-batch emits the updated totals
+    * (OutputMode.Update — the last emission per key equals the batch
+    * row). In-batch events are replayed in sequence order; exact across
+    * micro-batches under per-key in-order delivery, the same one-sided
+    * contract as [[asofEnrich]]/[[dedupFirstArrival]]. */
   def gapAudit(events: Dataset[Event]): Dataset[GapOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[GapState]) =>
-          val s = it.toSeq.sortBy(_.event_id)
-            .foldLeft(state.getOption.getOrElse(gapZero))(gapStep)
-          state.update(s)
-          Iterator.single(GapOut(user, s.n, s.nGaps, s.missing, s.maxGap))
-      }
+    fmgws(events, gapFold, OutputMode.Update)
   }
 
+  /** THE sequence-gap fold — one definition shared by [[gapAudit]],
+    * [[gapAuditTws]], [[gapAuditFrom]] and the warm-start bootstrap
+    * ([[gapBootstrapState]]), so the four evaluation paths cannot
+    * drift. */
+  private[graft] val gapFold =
+    KeyedFold[Long, Event, GapState, GapOut](_.user_id, Some(ById)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(GapState(-1L, 0L, 0L, 0L, 0L))
+        evs.foreach { e =>
+          if (s.lastId >= 0L && e.event_id - s.lastId > 1L) {
+            val g = e.event_id - s.lastId - 1L
+            s = s.copy(nGaps = s.nGaps + 1L, missing = s.missing + g,
+              maxGap = math.max(s.maxGap, g))
+          }
+          s = s.copy(lastId = e.event_id, n = s.n + 1L)
+        }
+        (Some(s), Iterator.single(GapOut(user, s.n, s.nGaps, s.missing, s.maxGap)))
+    }
+
   /** The q_event_ewma tap weights (2^-(j+1) on lag j) and the ONE
-    * left-associated evaluation order — shared by the streaming
-    * processor and the parity expectation so stream, batch fold, and
+    * left-associated evaluation order — shared by [[ewmaFold]] and the
+    * parity expectation so stream, batch fold, and
     * the graded window query run the textually identical IEEE chain
     * (power-of-two products are exact; only the addition order could
     * diverge, and this pins it). */
@@ -431,19 +477,20 @@ object StreamOps {
     * mode never re-emits a key's past rows. */
   def ewmaSmooth(events: Dataset[Event]): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[EwmaState]) =>
-          var recent = state.getOption.map(_.recent).getOrElse(Nil)
-          val out = it.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
-            val sm = ewmaOf(e.value, recent)
-            recent = (e.value :: recent).take(EwmaWeights.length - 1)
-            EwmaOut(user, e.event_id, e.ts_us, e.value, sm)
-          }
-          state.update(EwmaState(recent))
-          out.iterator
-      }
+    fmgws(events, ewmaFold, OutputMode.Update)
   }
+
+  private[graft] val ewmaFold =
+    KeyedFold[Long, Event, EwmaState, EwmaOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var recent = prior.map(_.recent).getOrElse(Nil)
+        val out = Seq.newBuilder[EwmaOut]
+        evs.foreach { e =>
+          out += EwmaOut(user, e.event_id, e.ts_us, e.value, ewmaOf(e.value, recent))
+          recent = (e.value :: recent).take(EwmaWeights.length - 1)
+        }
+        (Some(EwmaState(recent)), out.result().iterator)
+    }
 
   /** Streaming streak maintainer — the stateful twin of the graded
     * q_event_streak (gaps-and-islands on the day domain): per key,
@@ -461,26 +508,22 @@ object StreamOps {
     * batch query on sf0.001. */
   def streakMonitor(events: Dataset[Event]): Dataset[StreakOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[StreakState]) =>
-          var s = state.getOption.getOrElse(StreakState(Long.MinValue, 0L, 0L, 0L))
-          // within-batch arrival order is partition order, not event
-          // time — sort the batch slice (O(batch/key) memory, the
-          // bootstrap-fold discipline); the cross-BATCH order contract
-          // remains the caller's
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            val day = Math.floorDiv(e.ts_us, 86400000000L)
-            if (day != s.lastDay) {
-              val cur = if (day == s.lastDay + 1) s.current + 1 else 1L
-              s = StreakState(day, cur, math.max(s.longest, cur),
-                s.nActive + 1)
-            }
-          }
-          state.update(s)
-          Iterator.single(StreakOut(user, s.nActive, s.longest, s.current))
-      }
+    fmgws(events, streakFold, OutputMode.Update)
   }
+
+  private[graft] val streakFold =
+    KeyedFold[Long, Event, StreakState, StreakOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(StreakState(Long.MinValue, 0L, 0L, 0L))
+        evs.foreach { e =>
+          val day = Math.floorDiv(e.ts_us, 86400000000L)
+          if (day != s.lastDay) {
+            val cur = if (day == s.lastDay + 1) s.current + 1 else 1L
+            s = StreakState(day, cur, math.max(s.longest, cur), s.nActive + 1)
+          }
+        }
+        (Some(s), Iterator.single(StreakOut(user, s.nActive, s.longest, s.current)))
+    }
 
   /** Streaming per-key quantile sketch (r13) — the
     * [[graft.operators.QuantileSketch]] compactor hierarchy carried as
@@ -497,22 +540,23 @@ object StreamOps {
     * offer a stream. */
   def quantileMonitor(events: Dataset[Event], k: Int = 64): Dataset[QuantOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[KllState]) =>
-          val s = state.getOption
-            .map(st => graft.operators.QuantileSketch
-              .restore(k, st.n, st.parity, st.levels))
-            .getOrElse(new graft.operators.QuantileSketch.Summary(k))
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id))
-            .foreach(e => s.update(e.value))
-          val (sn, sp, sl) = s.snapshot
-          state.update(KllState(sn, sp, sl))
+    fmgws(events, quantileFold(k), OutputMode.Update)
+  }
+
+  private[graft] def quantileFold(k: Int) =
+    KeyedFold[Long, Event, KllState, QuantOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        val s = prior
+          .map(st => graft.operators.QuantileSketch
+            .restore(k, st.n, st.parity, st.levels))
+          .getOrElse(new graft.operators.QuantileSketch.Summary(k))
+        evs.foreach(e => s.update(e.value))
+        val (sn, sp, sl) = s.snapshot
+        (Some(KllState(sn, sp, sl)),
           if (s.n == 0L) Iterator.empty
           else Iterator.single(QuantOut(user, s.n,
-            s.quantile(0.5).get, s.quantile(0.9).get, s.errBound))
-      }
-  }
+            s.quantile(0.5).get, s.quantile(0.9).get, s.errBound)))
+    }
 
   /** Streaming KMV distinct-cardinality tracker — the stateful twin of
     * q_agg_kmv's batch sketch (r15): per event type, the k minimum
@@ -530,25 +574,26 @@ object StreamOps {
     * per touched key per batch. */
   def kmvMonitor(events: Dataset[Event], k: Int = 256): Dataset[KmvOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (tp: String, it: Iterator[Event], state: GroupState[KmvState]) =>
-          var hs = state.getOption.map(_.hs.toVector)
-            .getOrElse(Vector.empty[Long])
-          it.foreach { e =>
-            val h = graft.Det.jvmMd5h32(e.user_id.toString)
-            if ((hs.size < k || h < hs.last) && !hs.contains(h)) {
-              val grown = if (hs.size < k) hs :+ h else hs.init :+ h
-              hs = grown.sorted
-            }
+    fmgws(events, kmvFold(k), OutputMode.Update)
+  }
+
+  private[graft] def kmvFold(k: Int) =
+    KeyedFold[String, Event, KmvState, KmvOut](_.event_type, None) {
+      (tp, prior, evs) =>
+        var hs = prior.map(_.hs.toVector).getOrElse(Vector.empty[Long])
+        evs.foreach { e =>
+          val h = graft.Det.jvmMd5h32(e.user_id.toString)
+          if ((hs.size < k || h < hs.last) && !hs.contains(h)) {
+            val grown = if (hs.size < k) hs :+ h else hs.init :+ h
+            hs = grown.sorted
           }
-          state.update(KmvState(hs))
+        }
+        (Some(KmvState(hs)),
           if (hs.isEmpty) Iterator.empty
           else Iterator.single(KmvOut(tp, hs.size.toLong, hs.last,
             if (hs.size < k) hs.size.toLong
-            else (k - 1).toLong * 4294967296L / hs.last))
-      }
-  }
+            else (k - 1).toLong * 4294967296L / hs.last)))
+    }
 
   /** Streaming count-min frequency tracker — the stateful twin of
     * q_agg_cms (r15), completing the streaming sketch family (KLL
@@ -567,28 +612,28 @@ object StreamOps {
   def cmsMonitor(events: Dataset[Event], probes: Seq[Long],
                  d: Int = 4, w: Int = 64): Dataset[CmsProbeOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (tp: String, it: Iterator[Event], state: GroupState[CmsState]) =>
-          val st = state.getOption
-          val cnt = st.map(_.cnt.toArray).getOrElse(new Array[Long](d * w))
-          var n = st.map(_.n).getOrElse(0L)
-          it.foreach { e =>
-            var i = 0
-            while (i < d) {
-              cnt(i * w + (graft.Det.jvmMd5h32(s"$i#${e.user_id}") % w).toInt) += 1
-              i += 1
-            }
-            n += 1
-          }
-          state.update(CmsState(cnt.toSeq, n))
-          probes.iterator.map { p =>
-            val est = (0 until d).map(i =>
-              cnt(i * w + (graft.Det.jvmMd5h32(s"$i#$p") % w).toInt)).min
-            CmsProbeOut(tp, p, n, est)
-          }
-      }
+    fmgws(events, cmsFold(probes, d, w), OutputMode.Update)
   }
+
+  private[graft] def cmsFold(probes: Seq[Long], d: Int, w: Int) =
+    KeyedFold[String, Event, CmsState, CmsProbeOut](_.event_type, None) {
+      (tp, prior, evs) =>
+        val cnt = prior.map(_.cnt.toArray).getOrElse(new Array[Long](d * w))
+        var n = prior.map(_.n).getOrElse(0L)
+        evs.foreach { e =>
+          var i = 0
+          while (i < d) {
+            cnt(i * w + (graft.Det.jvmMd5h32(s"$i#${e.user_id}") % w).toInt) += 1
+            i += 1
+          }
+          n += 1
+        }
+        (Some(CmsState(cnt.toSeq, n)), probes.iterator.map { p =>
+          val est = (0 until d).map(i =>
+            cnt(i * w + (graft.Det.jvmMd5h32(s"$i#$p") % w).toInt)).min
+          CmsProbeOut(tp, p, n, est)
+        })
+    }
 
   /** Streaming AMS F2 tracker (r16) — the second-moment member of the
     * sketch-monitor family ([[kmvMonitor]] cardinality /
@@ -605,34 +650,34 @@ object StreamOps {
   def amsMonitor(events: Dataset[Event], rows: Int = 8)
       : Dataset[AmsMonOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (tp: String, it: Iterator[Event], state: GroupState[AmsMonState]) =>
-          val st = state.getOption
-          val z = st.map(_.z.toArray).getOrElse(new Array[Long](rows))
-          var n = st.map(_.n).getOrElse(0L)
-          it.foreach { e =>
-            var i = 0
-            while (i < rows) {
-              z(i) +=
-                (if (graft.Det.jvmMd5h32(s"$i#${e.user_id}") % 2 == 0) 1L
-                 else -1L)
-              i += 1
-            }
-            n += 1
-          }
-          state.update(AmsMonState(z.toSeq, n))
-          // square into BigInt before the mean — z_i can reach n per
-          // event type, so z_i² wraps a Long past |z_i| ≈ 3.04e9; the
-          // batch engine (Aggregates.amsOn) accumulates the squares in
-          // DECIMAL(38,0) for exactly this reason and this monitor
-          // advertises an always-on lifetime where such counts are
-          // plausible. The final narrowing mirrors the batch's
-          // `cast(... as bigint)` readout contract.
-          val f2 = z.map(v => BigInt(v) * BigInt(v)).sum / rows
-          Iterator.single(AmsMonOut(tp, n, f2.toLong))
-      }
+    fmgws(events, amsFold(rows), OutputMode.Update)
   }
+
+  private[graft] def amsFold(rows: Int) =
+    KeyedFold[String, Event, AmsMonState, AmsMonOut](_.event_type, None) {
+      (tp, prior, evs) =>
+        val z = prior.map(_.z.toArray).getOrElse(new Array[Long](rows))
+        var n = prior.map(_.n).getOrElse(0L)
+        evs.foreach { e =>
+          var i = 0
+          while (i < rows) {
+            z(i) +=
+              (if (graft.Det.jvmMd5h32(s"$i#${e.user_id}") % 2 == 0) 1L
+               else -1L)
+            i += 1
+          }
+          n += 1
+        }
+        // square into BigInt before the mean — z_i can reach n per
+        // event type, so z_i² wraps a Long past |z_i| ≈ 3.04e9; the
+        // batch engine (Aggregates.amsOn) accumulates the squares in
+        // DECIMAL(38,0) for exactly this reason and this monitor
+        // advertises an always-on lifetime where such counts are
+        // plausible. The final narrowing mirrors the batch's
+        // `cast(... as bigint)` readout contract.
+        val f2 = z.map(v => BigInt(v) * BigInt(v)).sum / rows
+        (Some(AmsMonState(z.toSeq, n)), Iterator.single(AmsMonOut(tp, n, f2.toLong)))
+    }
 
   /** Streaming SCD2 dimension-history maintainer — the stateful twin of
     * q_event_scd2's lag/lead build (r13): ONE open range per key in
@@ -650,29 +695,28 @@ object StreamOps {
     * StreamingParitySuite, including a change across a batch boundary. */
   def scd2Monitor(events: Dataset[Event]): Dataset[Scd2Out] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[Scd2State]) =>
-          var open = state.getOption
-          val out = Seq.newBuilder[Scd2Out]
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            open match {
-              case None =>
-                open = Some(Scd2State(e.event_type, e.ts_us, e.event_id))
-                out += Scd2Out(user, e.event_type, e.ts_us, e.event_id,
-                  -1L, 1)
-              case Some(o) if o.attr != e.event_type =>
-                out += Scd2Out(user, o.attr, o.fromUs, o.fromId, e.ts_us, 0)
-                open = Some(Scd2State(e.event_type, e.ts_us, e.event_id))
-                out += Scd2Out(user, e.event_type, e.ts_us, e.event_id,
-                  -1L, 1)
-              case _ => // same attr: the run merges, nothing to emit
-            }
-          }
-          open.foreach(state.update)
-          out.result().iterator
-      }
+    fmgws(events, scd2Fold, OutputMode.Update)
   }
+
+  private[graft] val scd2Fold =
+    KeyedFold[Long, Event, Scd2State, Scd2Out](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var open = prior
+        val out = Seq.newBuilder[Scd2Out]
+        evs.foreach { e =>
+          open match {
+            case None =>
+              open = Some(Scd2State(e.event_type, e.ts_us, e.event_id))
+              out += Scd2Out(user, e.event_type, e.ts_us, e.event_id, -1L, 1)
+            case Some(o) if o.attr != e.event_type =>
+              out += Scd2Out(user, o.attr, o.fromUs, o.fromId, e.ts_us, 0)
+              open = Some(Scd2State(e.event_type, e.ts_us, e.event_id))
+              out += Scd2Out(user, e.event_type, e.ts_us, e.event_id, -1L, 1)
+            case _ => // same attr: the run merges, nothing to emit
+          }
+        }
+        (open, out.result().iterator)
+    }
 
   /** Streaming new-vs-returning feed — the stateful twin of
     * q_event_newret's distinct (user, day) collapse: TWO LONGS of state
@@ -686,25 +730,25 @@ object StreamOps {
     * same-day slice split across micro-batches emits once (pinned). */
   def newretMonitor(events: Dataset[Event]): Dataset[NewretOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[NewretState]) =>
-          var s = state.getOption
-            .getOrElse(NewretState(Long.MinValue, Long.MinValue))
-          val out = Seq.newBuilder[NewretOut]
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            val day = Math.floorDiv(e.ts_us, 86400000000L)
-            if (day != s.lastDay) {
-              val isNew = if (s.firstDay == Long.MinValue) 1 else 0
-              out += NewretOut(user, day * 86400000000L, isNew)
-              s = NewretState(
-                if (s.firstDay == Long.MinValue) day else s.firstDay, day)
-            }
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    fmgws(events, newretFold, OutputMode.Append)
   }
+
+  private[graft] val newretFold =
+    KeyedFold[Long, Event, NewretState, NewretOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(NewretState(Long.MinValue, Long.MinValue))
+        val out = Seq.newBuilder[NewretOut]
+        evs.foreach { e =>
+          val day = Math.floorDiv(e.ts_us, 86400000000L)
+          if (day != s.lastDay) {
+            val isNew = if (s.firstDay == Long.MinValue) 1 else 0
+            out += NewretOut(user, day * 86400000000L, isNew)
+            s = NewretState(
+              if (s.firstDay == Long.MinValue) day else s.firstDay, day)
+          }
+        }
+        (Some(s), out.result().iterator)
+    }
 
   /** Streaming inter-arrival feed (r14) — the stateful twin of
     * q_event_interarrival's per-user lag: ONE LONG of state per key
@@ -719,19 +763,20 @@ object StreamOps {
     * batch lag CTE on sf0.001. */
   def timeGapMonitor(events: Dataset[Event]): Dataset[TimeGapOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[TimeGapState]) =>
-          var last = state.getOption.map(_.lastUs)
-          val out = Seq.newBuilder[TimeGapOut]
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            last.foreach(l => out += TimeGapOut(user, e.event_type, e.ts_us - l))
-            last = Some(e.ts_us)
-          }
-          last.foreach(l => state.update(TimeGapState(l)))
-          out.result().iterator
-      }
+    fmgws(events, timeGapFold, OutputMode.Append)
   }
+
+  private[graft] val timeGapFold =
+    KeyedFold[Long, Event, TimeGapState, TimeGapOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var last = prior.map(_.lastUs)
+        val out = Seq.newBuilder[TimeGapOut]
+        evs.foreach { e =>
+          last.foreach(l => out += TimeGapOut(user, e.event_type, e.ts_us - l))
+          last = Some(e.ts_us)
+        }
+        (last.map(TimeGapState), out.result().iterator)
+    }
 
   /** Streaming user-lifetime feed (r14) — the stateful twin of
     * q_event_survival's per-user min/max collapse: TWO LONGS of state
@@ -747,25 +792,20 @@ object StreamOps {
     * contract. Parity-pinned vs the graded batch query. */
   def lifetimeMonitor(events: Dataset[Event]): Dataset[LifetimeOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[LifetimeState]) =>
-          val days = it.map(e => Math.floorDiv(e.ts_us, 86400000000L)).toSeq
-          if (days.isEmpty) Iterator.empty
-          else {
-            val prev = state.getOption
-            val nf = math.min(prev.map(_.firstDay).getOrElse(Long.MaxValue),
-              days.min)
-            val nl = math.max(prev.map(_.lastDay).getOrElse(Long.MinValue),
-              days.max)
-            val changed = prev.forall(p => p.firstDay != nf || p.lastDay != nl)
-            state.update(LifetimeState(nf, nl))
-            if (changed)
-              Iterator.single(LifetimeOut(user, nf * 86400000000L, nl - nf))
-            else Iterator.empty
-          }
-      }
+    fmgws(events, lifetimeFold, OutputMode.Update)
   }
+
+  private[graft] val lifetimeFold =
+    KeyedFold[Long, Event, LifetimeState, LifetimeOut](_.user_id, None) {
+      (user, prior, evs) =>
+        val days = evs.map(e => Math.floorDiv(e.ts_us, 86400000000L)).toSeq
+        val nf = math.min(prior.fold(Long.MaxValue)(_.firstDay), days.min)
+        val nl = math.max(prior.fold(Long.MinValue)(_.lastDay), days.max)
+        val changed = prior.forall(p => p.firstDay != nf || p.lastDay != nl)
+        (Some(LifetimeState(nf, nl)),
+          if (changed) Iterator.single(LifetimeOut(user, nf * 86400000000L, nl - nf))
+          else Iterator.empty)
+    }
 
   /** Streaming day-grain count maintainer — the stateful feed of
     * q_event_changepoint's daily collapse: ONE LONG of state per
@@ -777,34 +817,18 @@ object StreamOps {
     * the batch query's windows run over its day-grain aggregate. */
   def dailyCountMonitor(events: Dataset[Event]): Dataset[DayCountOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts_us, 86400000000L)))
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: (String, Long), it: Iterator[Event],
-         state: GroupState[DayCountState]) =>
-          var add = 0L
-          while (it.hasNext) { it.next(); add += 1 }
-          if (add == 0) Iterator.empty
-          else {
-            val n = state.getOption.map(_.n).getOrElse(0L) + add
-            state.update(DayCountState(n))
-            Iterator.single(DayCountOut(key._1, key._2 * 86400000000L, n))
-          }
-      }
+    fmgws(events, dailyCountFold, OutputMode.Update)
   }
 
-  /** Streaming last-touch attribution — the stateful twin of
-    * q_event_attrib's strictly-prior carry: ONE STRING of state per key
-    * (the most recent non-purchase type), each arriving purchase emitted
-    * once with the touch it credits ('direct' when none precedes it).
-    * Emissions are final (Append — a credit never revises), and the
-    * type-level count/share aggregation composes downstream exactly as
-    * winnowIngestProbe's ungrouped rows do. Within-batch slices sort by
-    * (ts, id) — sequential replay of the batch window's total order —
-    * and the purchase-before-update iteration IS the strictly-prior
-    * frame (a purchase reads the state before its own row; a
-    * simultaneous later-id touch hasn't been folded yet). Cross-batch
-    * needs the ewma-class in-order contract. */
+  private[graft] val dailyCountFold =
+    KeyedFold[(String, Long), Event, DayCountState, DayCountOut](
+        e => (e.event_type, Math.floorDiv(e.ts_us, 86400000000L)), None) {
+      (key, prior, evs) =>
+        val n = prior.fold(0L)(_.n) + evs.size
+        (Some(DayCountState(n)),
+          Iterator.single(DayCountOut(key._1, key._2 * 86400000000L, n)))
+    }
+
   /** Streaming point-in-time enrichment — the stateful twin of
     * q_event_pit (the feature-store join at ingest time): each
     * arriving fact (purchase) is emitted ONCE, final, with the
@@ -818,42 +842,60 @@ object StreamOps {
     * contract — the reference's causal-ordering guarantee, §1.1). */
   def pitMonitor(events: Dataset[Event]): Dataset[PitOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[PitState]) =>
-          var cur = state.getOption
-          val out = Seq.newBuilder[PitOut]
-          it.toSeq
-            .sortBy(e => (e.ts_us, e.event_type == "purchase", e.event_id))
-            .foreach { e =>
-              if (e.event_type == "purchase")
-                out += PitOut(user, e.event_id, e.ts_us,
-                  cur.map(_.attr), cur.map(_.fromUs),
-                  cur.map(e.ts_us - _.fromUs))
-              else if (!cur.exists(_.attr == e.event_type))
-                cur = Some(PitState(e.event_type, e.ts_us))
-            }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
+    fmgws(events, pitFold, OutputMode.Append)
   }
 
+  private[graft] val pitFold =
+    KeyedFold[Long, Event, PitState, PitOut](_.user_id, Some(PurchasesLast)) {
+      (user, prior, evs) =>
+        var cur = prior
+        val out = Seq.newBuilder[PitOut]
+        evs.foreach { e =>
+          if (e.event_type == "purchase")
+            out += PitOut(user, e.event_id, e.ts_us,
+              cur.map(_.attr), cur.map(_.fromUs), cur.map(e.ts_us - _.fromUs))
+          else if (!cur.exists(_.attr == e.event_type))
+            cur = Some(PitState(e.event_type, e.ts_us))
+        }
+        (cur, out.result().iterator)
+    }
+
+  /** Streaming last-touch attribution — the stateful twin of
+    * q_event_attrib's strictly-prior carry: ONE STRING of state per key
+    * (the most recent non-purchase type), each arriving purchase emitted
+    * once with the touch it credits ('direct' when none precedes it).
+    * Emissions are final (Append — a credit never revises), and the
+    * type-level count/share aggregation composes downstream exactly as
+    * winnowIngestProbe's ungrouped rows do. Within-batch slices sort by
+    * (ts, id) — sequential replay of the batch window's total order —
+    * and the purchase-before-update iteration IS the strictly-prior
+    * frame (a purchase reads the state before its own row; a
+    * simultaneous later-id touch hasn't been folded yet). Cross-batch
+    * needs the ewma-class in-order contract. */
   def attribMonitor(events: Dataset[Event]): Dataset[AttribOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[AttribState]) =>
-          var touch = state.getOption.map(_.touch).getOrElse("")
-          val out = Seq.newBuilder[AttribOut]
-          it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-            if (e.event_type == "purchase")
-              out += AttribOut(user, e.event_id,
-                if (touch.isEmpty) "direct" else touch)
-            else touch = e.event_type
-          }
-          state.update(AttribState(touch))
-          out.result().iterator
-      }
+    fmgws(events, attribFold(None), OutputMode.Append)
+  }
+
+  /** The attribution fold: purchases emit the carried touch ("direct"
+    * when none, or when it is older than `window` — measured from the
+    * touch's own carried event time, never from a TTL clock);
+    * non-purchases move the touch. */
+  private[graft] def attribFold(window: Option[java.time.Duration]) = {
+    val windowUs = window.fold(Long.MaxValue)(_.toMillis * 1000L)
+    KeyedFold[Long, Event, AttribWState, AttribOut](_.user_id, Some(ByTsId)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(AttribWState("", Long.MinValue))
+        val out = Seq.newBuilder[AttribOut]
+        evs.foreach { e =>
+          if (e.event_type == "purchase") {
+            val stale = s.touchUs != Long.MinValue && e.ts_us - s.touchUs > windowUs
+            out += AttribOut(user, e.event_id,
+              if (s.touch.isEmpty || stale) "direct" else s.touch)
+          } else s = AttribWState(e.event_type, e.ts_us)
+        }
+        (Some(s), out.result().iterator)
+    }
   }
 
   /** Streaming exact-moments maintainer — the stateful twin of the
@@ -877,44 +919,45 @@ object StreamOps {
     * raw-units batch would — mean/variance ship in cents by contract. */
   def momentsMonitor(events: Dataset[Event]): Dataset[MomentsOut] = {
     import events.sparkSession.implicits._
-    import java.math.BigInteger
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[MomentsState]) =>
-          var n = 0L
-          var s1 = BigInteger.ZERO; var s2 = BigInteger.ZERO
-          var s3 = BigInteger.ZERO; var s4 = BigInteger.ZERO
-          state.getOption.foreach { s =>
-            n = s.n
-            s1 = new BigInteger(s.s1); s2 = new BigInteger(s.s2)
-            s3 = new BigInteger(s.s3); s4 = new BigInteger(s.s4)
-          }
-          it.foreach { e =>
-            val c = BigDecimal(e.value)
-              .setScale(2, BigDecimal.RoundingMode.HALF_UP)
-              .underlying.unscaledValue
-            val c2 = c.multiply(c)
-            n += 1L
-            s1 = s1.add(c); s2 = s2.add(c2)
-            s3 = s3.add(c2.multiply(c)); s4 = s4.add(c2.multiply(c2))
-          }
-          state.update(MomentsState(n, s1.toString, s2.toString,
-            s3.toString, s4.toString))
-          val nD = n.toDouble
-          val (d1, d2, d3, d4) =
-            (s1.doubleValue, s2.doubleValue, s3.doubleValue, s4.doubleValue)
-          val m2 = (nD * d2 - d1 * d1) / (nD * nD)
-          val m3 = (nD * nD * d3 - 3.0 * nD * d1 * d2 + 2.0 * d1 * d1 * d1) /
-            (nD * nD * nD)
-          val m4 = (nD * nD * nD * d4 - 4.0 * nD * nD * d1 * d3 +
-            6.0 * nD * d1 * d1 * d2 - 3.0 * d1 * d1 * d1 * d1) /
-            (nD * nD * nD * nD)
-          val ok = n > 1 && m2 > 0
+    fmgws(events, momentsFold, OutputMode.Update)
+  }
+
+  private[graft] val momentsFold =
+    KeyedFold[Long, Event, MomentsState, MomentsOut](_.user_id, None) {
+      (user, prior, evs) =>
+        import java.math.BigInteger
+        var n = 0L
+        var s1 = BigInteger.ZERO; var s2 = BigInteger.ZERO
+        var s3 = BigInteger.ZERO; var s4 = BigInteger.ZERO
+        prior.foreach { s =>
+          n = s.n
+          s1 = new BigInteger(s.s1); s2 = new BigInteger(s.s2)
+          s3 = new BigInteger(s.s3); s4 = new BigInteger(s.s4)
+        }
+        evs.foreach { e =>
+          val c = BigDecimal(e.value)
+            .setScale(2, BigDecimal.RoundingMode.HALF_UP)
+            .underlying.unscaledValue
+          val c2 = c.multiply(c)
+          n += 1L
+          s1 = s1.add(c); s2 = s2.add(c2)
+          s3 = s3.add(c2.multiply(c)); s4 = s4.add(c2.multiply(c2))
+        }
+        val nD = n.toDouble
+        val (d1, d2, d3, d4) =
+          (s1.doubleValue, s2.doubleValue, s3.doubleValue, s4.doubleValue)
+        val m2 = (nD * d2 - d1 * d1) / (nD * nD)
+        val m3 = (nD * nD * d3 - 3.0 * nD * d1 * d2 + 2.0 * d1 * d1 * d1) /
+          (nD * nD * nD)
+        val m4 = (nD * nD * nD * d4 - 4.0 * nD * nD * d1 * d3 +
+          6.0 * nD * d1 * d1 * d2 - 3.0 * d1 * d1 * d1 * d1) /
+          (nD * nD * nD * nD)
+        val ok = n > 1 && m2 > 0
+        (Some(MomentsState(n, s1.toString, s2.toString, s3.toString, s4.toString)),
           Iterator.single(MomentsOut(user, n, d1 / nD, m2,
             if (ok) Some(m3 / (m2 * math.sqrt(m2))) else None,
-            if (ok) Some(m4 / (m2 * m2) - 3.0) else None))
-      }
-  }
+            if (ok) Some(m4 / (m2 * m2) - 3.0) else None)))
+    }
 
   /** Streaming presence-bitmap maintainer — the stateful twin of the
     * graded q_agg_bitmask's bit algebra (hour-of-day bits over the
@@ -930,27 +973,28 @@ object StreamOps {
     * yields under the session's pinned UTC zone. */
   def bitmaskMonitor(events: Dataset[Event]): Dataset[BitmaskOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[BitmaskState]) =>
-          var s = state.getOption.getOrElse(BitmaskState(0L, 0L, 0L))
-          it.foreach { e =>
-            val bit = 1L << ((e.ts_us % 86400000000L) / 3600000000L)
-            s = BitmaskState(s.orMask | bit, s.xorMask ^ bit, s.n + 1L)
-          }
-          state.update(s)
-          Iterator.single(BitmaskOut(user, s.orMask, s.xorMask, s.n,
-            java.lang.Long.bitCount(s.orMask)))
-      }
+    fmgws(events, bitmaskFold, OutputMode.Update)
   }
+
+  private[graft] val bitmaskFold =
+    KeyedFold[Long, Event, BitmaskState, BitmaskOut](_.user_id, None) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(BitmaskState(0L, 0L, 0L))
+        evs.foreach { e =>
+          val bit = 1L << ((e.ts_us % 86400000000L) / 3600000000L)
+          s = BitmaskState(s.orMask | bit, s.xorMask ^ bit, s.n + 1L)
+        }
+        (Some(s), Iterator.single(BitmaskOut(user, s.orMask, s.xorMask, s.n,
+          java.lang.Long.bitCount(s.orMask))))
+    }
 
   /** Batch bootstrap for the warm-start path: fold the HISTORY table
     * into one (key, GapState) row per key — the exact state the live
     * stream would have reached had it consumed that history. */
   def gapBootstrapState(history: Dataset[Event]): Dataset[(Long, GapState)] = {
     import history.sparkSession.implicits._
-    history.groupByKey(_.user_id).mapGroups { (uid, it) =>
-      uid -> it.toSeq.sortBy(_.event_id).foldLeft(gapZero)(gapStep)
+    history.groupByKey(gapFold.key).mapGroups { (uid, it) =>
+      uid -> gapFold(uid, None, it)._1.get
     }
   }
 
@@ -966,10 +1010,7 @@ object StreamOps {
   def gapAuditFrom(events: Dataset[Event],
                    initial: Dataset[(Long, GapState)]): Dataset[GapOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new GapAuditInitProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update,
-        initial.groupByKey(_._1).mapValues(_._2))
+    tws(events, gapFold, OutputMode.Update, initial = Some(initial))
   }
 
   /** Streaming twin of the graded q_event_retention cohort derivation:
@@ -988,28 +1029,29 @@ object StreamOps {
     * to the graded batch query. */
   def retention(events: Dataset[Event]): Dataset[RetOut] = {
     import events.sparkSession.implicits._
-    val HourUs = 3600000000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[RetState]) =>
-          var s = state.getOption.getOrElse(RetState(Long.MaxValue, 0))
-          it.foreach { e =>
-            val h = e.ts_us - java.lang.Math.floorMod(e.ts_us, HourUs)
-            if (s.cohortUs == Long.MaxValue) s = RetState(h, 1)
-            else if (h < s.cohortUs) {
-              val shift = (s.cohortUs - h) / HourUs
-              val shifted =
-                if (shift > 3) 1 else ((s.mask << shift.toInt) & 0xF) | 1
-              s = RetState(h, shifted)
-            } else {
-              val k = (h - s.cohortUs) / HourUs
-              if (k <= 3) s = RetState(s.cohortUs, s.mask | (1 << k.toInt))
-            }
-          }
-          state.update(s)
-          Iterator.single(RetOut(uid, s.cohortUs, s.mask))
-      }
+    fmgws(events, retentionFold, OutputMode.Update)
   }
+
+  private[graft] val retentionFold =
+    KeyedFold[Long, Event, RetState, RetOut](_.user_id, None) {
+      (uid, prior, evs) =>
+        val HourUs = 3600000000L
+        var s = prior.getOrElse(RetState(Long.MaxValue, 0))
+        evs.foreach { e =>
+          val h = e.ts_us - java.lang.Math.floorMod(e.ts_us, HourUs)
+          if (s.cohortUs == Long.MaxValue) s = RetState(h, 1)
+          else if (h < s.cohortUs) {
+            val shift = (s.cohortUs - h) / HourUs
+            val shifted =
+              if (shift > 3) 1 else ((s.mask << shift.toInt) & 0xF) | 1
+            s = RetState(h, shifted)
+          } else {
+            val k = (h - s.cohortUs) / HourUs
+            if (k <= 3) s = RetState(s.cohortUs, s.mask | (1 << k.toInt))
+          }
+        }
+        (Some(s), Iterator.single(RetOut(uid, s.cohortUs, s.mask)))
+    }
 
   /** Streaming twin of the graded q_event_paths transition extraction:
     * ONE row of state per key (the last event type); each event emits at
@@ -1021,19 +1063,20 @@ object StreamOps {
     * aggregates these steps and pins them equal to the batch form. */
   def paths(events: Dataset[Event]): Dataset[PathStep] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[PathState]) =>
-          var last = state.getOption.map(_.lastType).getOrElse("")
-          val out = Seq.newBuilder[PathStep]
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            if (last.nonEmpty) out += PathStep(user, last, e.event_type)
-            last = e.event_type
-          }
-          state.update(PathState(last))
-          out.result().iterator
-      }
+    fmgws(events, pathsFold, OutputMode.Update)
   }
+
+  private[graft] val pathsFold =
+    KeyedFold[Long, Event, PathState, PathStep](_.user_id, Some(ById)) {
+      (user, prior, evs) =>
+        var last = prior.map(_.lastType).getOrElse("")
+        val out = Seq.newBuilder[PathStep]
+        evs.foreach { e =>
+          if (last.nonEmpty) out += PathStep(user, last, e.event_type)
+          last = e.event_type
+        }
+        (Some(PathState(last)), out.result().iterator)
+    }
 
   /** Second-order twin of [[paths]] — the stateful feed of the graded
     * q_event_markov2: TWO rows of history per key (the last two event
@@ -1047,20 +1090,21 @@ object StreamOps {
     * trigram counts. */
   def paths2(events: Dataset[Event]): Dataset[TrigramStep] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[Path2State]) =>
-          var s = state.getOption.getOrElse(Path2State("", ""))
-          val out = Seq.newBuilder[TrigramStep]
-          it.toSeq.sortBy(_.event_id).foreach { e =>
-            if (s.prev2.nonEmpty)
-              out += TrigramStep(user, s.prev2, s.prev1, e.event_type)
-            s = Path2State(prev1 = e.event_type, prev2 = s.prev1)
-          }
-          state.update(s)
-          out.result().iterator
-      }
+    fmgws(events, paths2Fold, OutputMode.Update)
   }
+
+  private[graft] val paths2Fold =
+    KeyedFold[Long, Event, Path2State, TrigramStep](_.user_id, Some(ById)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(Path2State("", ""))
+        val out = Seq.newBuilder[TrigramStep]
+        evs.foreach { e =>
+          if (s.prev2.nonEmpty)
+            out += TrigramStep(user, s.prev2, s.prev1, e.event_type)
+          s = Path2State(prev1 = e.event_type, prev2 = s.prev1)
+        }
+        (Some(s), out.result().iterator)
+    }
 
   /** Streaming funnel tracker — the stateful twin of the graded
     * q_event_funnel (first-touch view → click-at-or-after → purchase-
@@ -1083,34 +1127,36 @@ object StreamOps {
     * and the parity suite pins it equal to the graded query. */
   def funnel(events: Dataset[Event]): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
-    def stageRank(t: String): Int =
-      t match { case "view" => 0; case "click" => 1; case "purchase" => 2; case _ => 3 }
     // no event_type pre-filter: the graded query reports EVERY user (a
     // user with only non-funnel events gets a (0,0,0) row), so the twin
     // must see every key too — non-funnel events are state no-ops
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          it.toSeq.sortBy(e => (e.ts_us, stageRank(e.event_type), e.event_id))
-            .foreach { e =>
-              e.event_type match {
-                case "view" if s.tView < 0L => s = s.copy(tView = e.ts_us)
-                case "click" if s.tClick < 0L && s.tView >= 0L
-                  && e.ts_us >= s.tView => s = s.copy(tClick = e.ts_us)
-                case "purchase" if s.tPurchase < 0L && s.tClick >= 0L
-                  && e.ts_us >= s.tClick => s = s.copy(tPurchase = e.ts_us)
-                case _ => ()
-              }
-            }
-          state.update(s)
-          Iterator.single(FunnelOut(user,
-            if (s.tView >= 0L) 1 else 0,
-            if (s.tClick >= 0L) 1 else 0,
-            if (s.tPurchase >= 0L) 1 else 0))
-      }
+    fmgws(events, funnelFold(Long.MaxValue, Long.MaxValue), OutputMode.Update)
   }
+
+  /** The funnel fold: a click converts within `clickWinUs` of the first
+    * view, a purchase within `buyWinUs` of that click (Long.MaxValue =
+    * no deadline). */
+  private[graft] def funnelFold(clickWinUs: Long, buyWinUs: Long) =
+    KeyedFold[Long, Event, FunnelState, FunnelOut](_.user_id, Some(ByFunnelStage)) {
+      (user, prior, evs) =>
+        var s = prior.getOrElse(FunnelState(-1L, -1L, -1L))
+        evs.foreach { e =>
+          e.event_type match {
+            case "view" if s.tView < 0L => s = s.copy(tView = e.ts_us)
+            case "click" if s.tClick < 0L && s.tView >= 0L
+              && e.ts_us >= s.tView && e.ts_us - s.tView <= clickWinUs =>
+              s = s.copy(tClick = e.ts_us)
+            case "purchase" if s.tPurchase < 0L && s.tClick >= 0L
+              && e.ts_us >= s.tClick && e.ts_us - s.tClick <= buyWinUs =>
+              s = s.copy(tPurchase = e.ts_us)
+            case _ => ()
+          }
+        }
+        (Some(s), Iterator.single(FunnelOut(user,
+          if (s.tView >= 0L) 1 else 0,
+          if (s.tClick >= 0L) 1 else 0,
+          if (s.tPurchase >= 0L) 1 else 0)))
+    }
 
   /** Streaming CONVERSION-WINDOW funnel — the stateful twin of the
     * graded q_event_funnel_win: [[funnel]]'s one-row state machine with
@@ -1127,34 +1173,7 @@ object StreamOps {
   def funnelWindowed(events: Dataset[Event]): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
     import graft.queries.EventOps.{BuyWinUs, ClickWinUs}
-    def stageRank(t: String): Int =
-      t match { case "view" => 0; case "click" => 1; case "purchase" => 2; case _ => 3 }
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-          it.toSeq.sortBy(e => (e.ts_us, stageRank(e.event_type), e.event_id))
-            .foreach { e =>
-              e.event_type match {
-                case "view" if s.tView < 0L => s = s.copy(tView = e.ts_us)
-                case "click" if s.tClick < 0L && s.tView >= 0L
-                  && e.ts_us >= s.tView
-                  && e.ts_us <= s.tView + ClickWinUs =>
-                  s = s.copy(tClick = e.ts_us)
-                case "purchase" if s.tPurchase < 0L && s.tClick >= 0L
-                  && e.ts_us >= s.tClick
-                  && e.ts_us <= s.tClick + BuyWinUs =>
-                  s = s.copy(tPurchase = e.ts_us)
-                case _ => ()
-              }
-            }
-          state.update(s)
-          Iterator.single(FunnelOut(user,
-            if (s.tView >= 0L) 1 else 0,
-            if (s.tClick >= 0L) 1 else 0,
-            if (s.tPurchase >= 0L) 1 else 0))
-      }
+    fmgws(events, funnelFold(ClickWinUs, BuyWinUs), OutputMode.Update)
   }
 
   /** Streaming AS-OF enrichment — the streaming twin of the batch
@@ -1177,29 +1196,26 @@ object StreamOps {
     * table. */
   def asofEnrich(events: Dataset[Event]): Dataset[AsofOut] = {
     import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[Event], state: GroupState[AsofState]) =>
-          var last = state.getOption
-          val out = Seq.newBuilder[AsofOut]
-          it.toSeq
-            .sortBy(e => (e.ts_us, if (e.event_type == "purchase") 1 else 0,
-              e.event_id))
-            .foreach { e =>
-              if (e.event_type == "click") {
-                if (last.forall(s => s.cUs < e.ts_us
-                    || (s.cUs == e.ts_us && s.cId < e.event_id)))
-                  last = Some(AsofState(e.event_id, e.ts_us))
-              } else out += AsofOut(e.event_id, user, e.ts_us,
-                last.map(_.cId), last.map(_.cUs),
-                last.map(s => e.ts_us - s.cUs))
-            }
-          last.foreach(state.update)
-          out.result().iterator
-      }
+    fmgws(events.filter(e => e.event_type == "click" || e.event_type == "purchase"),
+      asofFold, OutputMode.Append)
   }
+
+  private[graft] val asofFold =
+    KeyedFold[Long, Event, AsofState, AsofOut](_.user_id, Some(PurchasesLast)) {
+      (user, prior, evs) =>
+        var last = prior
+        val out = Seq.newBuilder[AsofOut]
+        evs.foreach { e =>
+          if (e.event_type == "click") {
+            if (last.forall(s => s.cUs < e.ts_us
+                || (s.cUs == e.ts_us && s.cId < e.event_id)))
+              last = Some(AsofState(e.event_id, e.ts_us))
+          } else if (e.event_type == "purchase")
+            out += AsofOut(e.event_id, user, e.ts_us,
+              last.map(_.cId), last.map(_.cUs), last.map(s => e.ts_us - s.cUs))
+        }
+        (last, out.result().iterator)
+    }
 
   /** Streaming NEAR-dup ingest: arriving documents are MinHash-banded
     * per-row ([[graft.queries.LlmOps.minhashBands]] — a stateless
@@ -1538,32 +1554,37 @@ object StreamOps {
     * never does). */
   def ksDriftMonitor(rows: Dataset[DriftRowIn]): Dataset[DriftOut] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_.grp)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (grp: String, it: Iterator[DriftRowIn], state: GroupState[DriftHist]) =>
-          val m = collection.mutable.Map.empty[Long, (Long, Long)]
-          state.getOption.foreach(h => m ++= h.vs)
-          it.foreach { r =>
-            val (ca, cb) = m.getOrElse(r.v, (0L, 0L))
-            m(r.v) = if (r.a) (ca + 1L, cb) else (ca, cb + 1L)
-          }
-          state.update(DriftHist(m.toMap))
-          val na = m.valuesIterator.map(_._1).sum
-          val nb = m.valuesIterator.map(_._2).sum
+    fmgws(rows, ksDriftFold, OutputMode.Update)
+  }
+
+  private[graft] val ksDriftFold =
+    KeyedFold[String, DriftRowIn, DriftTwsState, DriftOut](_.grp, None) {
+      (grp, prior, rows) =>
+        val m = collection.mutable.Map.empty[Long, (Long, Long)]
+        prior.foreach(s => m ++= s.vs.iterator.zip(s.ca.iterator.zip(s.cb.iterator)))
+        rows.foreach { r =>
+          val (ca, cb) = m.getOrElse(r.v, (0L, 0L))
+          m(r.v) = if (r.a) (ca + 1L, cb) else (ca, cb + 1L)
+        }
+        val flat = m.toSeq.sortBy(_._1)
+        val na = flat.iterator.map(_._2._1).sum
+        val nb = flat.iterator.map(_._2._2).sum
+        val out =
           if (na == 0L || nb == 0L) DriftOut(grp, None, None, na, nb)
           else {
             var cumA = 0L; var cumB = 0L
             var best = Double.NegativeInfinity; var bestAt = 0L
-            m.keysIterator.toSeq.sorted.foreach { v =>
-              val c = m(v); cumA += c._1; cumB += c._2
+            flat.foreach { case (v, (a, b)) =>
+              cumA += a; cumB += b
               val gap = math.abs(cumA.toDouble / na.toDouble
                 - cumB.toDouble / nb.toDouble)
               if (gap > best) { best = gap; bestAt = v }
             }
             DriftOut(grp, Some(best), Some(bestAt), na, nb)
           }
-      }
-  }
+        (Some(DriftTwsState(flat.map(_._1), flat.map(_._2._1), flat.map(_._2._2))),
+          Iterator.single(out))
+    }
 
   /** Windowed top-k leaderboard monitor (r11) — the stateful streaming
     * twin of graded q_stream_topk: per tumbling 1h window, the top-`k`
@@ -1587,25 +1608,28 @@ object StreamOps {
     * against the oracle-checked graded query on sf0.001. */
   def windowTopkMonitor(events: Dataset[Event], k: Int = 3): Dataset[TopkOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(e => math.floorDiv(e.ts_us, 3600000000L) * 3600000000L)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (winUs: Long, it: Iterator[Event], state: GroupState[TopkState]) =>
-          val m = collection.mutable.Map.empty[Long, Long]
-          var n = state.getOption.map(_.n).getOrElse(0L)
-          state.getOption.foreach(s => m ++= s.sums)
-          it.foreach { e =>
-            m(e.user_id) = m.getOrElse(e.user_id, 0L) + scaled4(e.value)
-            n += 1L
-          }
-          state.update(TopkState(m.toMap, n))
-          m.toSeq.sortBy { case (u, s) => (-s, u) }.take(k).zipWithIndex
+    fmgws(events, windowTopkFold(k), OutputMode.Update)
+  }
+
+  private[graft] def windowTopkFold(k: Int) =
+    KeyedFold[Long, Event, TopkTwsState, TopkOut](
+        e => math.floorDiv(e.ts_us, 3600000000L) * 3600000000L, None) {
+      (winUs, prior, evs) =>
+        val m = collection.mutable.Map.empty[Long, Long]
+        var n = prior.fold(0L)(_.n)
+        prior.foreach(s => m ++= s.users.iterator.zip(s.sums.iterator))
+        evs.foreach { e =>
+          m(e.user_id) = m.getOrElse(e.user_id, 0L) + scaled4(e.value)
+          n += 1L
+        }
+        val flat = m.toSeq.sortBy(_._1)
+        (Some(TopkTwsState(flat.map(_._1), flat.map(_._2), n)),
+          flat.sortBy { case (u, s) => (-s, u) }.take(k).zipWithIndex
             .map { case ((u, s), i) =>
               TopkOut(winUs, i + 1, u,
                 BigDecimal(java.math.BigDecimal.valueOf(s, 4)).toDouble, n)
-            }.iterator
-      }
-  }
+            }.iterator)
+    }
 
   /** The reference's raison d'être as a stateful streaming operator:
     * per-key causal-order audit via flatMapGroupsWithState. An event
@@ -1622,22 +1646,19 @@ object StreamOps {
     * State is 3 longs per key — O(keys) total, sharded by user_id. */
   def causalTracker(events: Dataset[Event]): Dataset[CausalOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[CausalState]) =>
-          // Arrival order within a micro-batch is not guaranteed per key;
-          // event_id IS the arrival order (FIXTURES.md), so restore it.
-          val evs = it.toArray.sortBy(_.event_id)
-          var st = state.getOption.getOrElse(CausalState(Long.MinValue, 0L, 0L))
-          evs.foreach { e =>
-            val viol = if (st.n > 0 && e.ts_us < st.maxTsUs) 1L else 0L
-            st = CausalState(math.max(st.maxTsUs, e.ts_us), st.n + 1, st.viol + viol)
-          }
-          state.update(st)
-          Iterator(CausalOut(uid, st.n, st.viol))
-      }
+    fmgws(events, causalFold, OutputMode.Update)
   }
+
+  private[graft] val causalFold =
+    KeyedFold[Long, Event, CausalState, CausalOut](_.user_id, Some(ById)) {
+      (uid, prior, evs) =>
+        var st = prior.getOrElse(CausalState(Long.MinValue, 0L, 0L))
+        evs.foreach { e =>
+          val viol = if (st.n > 0 && e.ts_us < st.maxTsUs) 1L else 0L
+          st = CausalState(math.max(st.maxTsUs, e.ts_us), st.n + 1, st.viol + viol)
+        }
+        (Some(st), Iterator.single(CausalOut(uid, st.n, st.viol)))
+    }
 
   /** Incremental view maintenance (the reference's "view", SURVEY §1.1):
     * per-key running count + decimal(18,4) sum, one output row PER
@@ -1646,21 +1667,21 @@ object StreamOps {
     * exactly, emitted as double. */
   def runningAgg(events: Dataset[Event]): Dataset[RunningOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Event], state: GroupState[(Long, BigDecimal)]) =>
-          val evs = it.toArray.sortBy(_.event_id)
-          var (n, sum) = state.getOption.getOrElse((0L, BigDecimal(0).setScale(4)))
-          val out = evs.map { e =>
-            n += 1
-            sum += BigDecimal(e.value).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-            RunningOut(e.event_id, uid, n, sum.toDouble)
-          }
-          state.update((n, sum))
-          out.iterator
-      }
+    fmgws(events, runningFold, OutputMode.Append)
   }
+
+  private[graft] val runningFold =
+    KeyedFold[Long, Event, (Long, BigDecimal), RunningOut](_.user_id, Some(ById)) {
+      (uid, prior, evs) =>
+        var (n, sum) = prior.getOrElse((0L, BigDecimal(0).setScale(4)))
+        val out = Seq.newBuilder[RunningOut]
+        evs.foreach { e =>
+          n += 1
+          sum += BigDecimal(e.value).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+          out += RunningOut(e.event_id, uid, n, sum.toDouble)
+        }
+        (Some((n, sum)), out.result().iterator)
+    }
 
   /** The sequence-gap audit on Spark 4's `transformWithState` — the
     * successor API to `flatMapGroupsWithState` (typed named state via a
@@ -1668,14 +1689,12 @@ object StreamOps {
     * timers, schema-evolvable state) and the one the 100×-state
     * machinery is built around: transformWithState REQUIRES the RocksDB
     * state-store provider, so this path and SURVEY §3.4's at-scale
-    * backend are exercised together. Same per-key transition function
-    * as [[gapAudit]]; the parity test pins both APIs produce identical
+    * backend are exercised together. [[gapAudit]]'s fold on
+    * [[KeyedFold.tws]]; the parity test pins both APIs produce identical
     * audits over identical micro-batches. */
   def gapAuditTws(events: Dataset[Event]): Dataset[GapOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new GapAuditProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update)
+    tws(events, gapFold, OutputMode.Update)
   }
 
   /** Per-key running event count whose state carries a processing-time
@@ -1688,11 +1707,15 @@ object StreamOps {
   def ttlCount(events: Dataset[Event],
                ttl: java.time.Duration): Dataset[TtlCountOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TtlCountProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update)
+    tws(events, ttlCountFold, OutputMode.Update, Some(ttl))
   }
+
+  private[graft] val ttlCountFold =
+    KeyedFold[Long, Event, Long, TtlCountOut](_.user_id, None) {
+      (user, prior, evs) =>
+        val n = prior.getOrElse(0L) + evs.size
+        (Some(n), Iterator.single(TtlCountOut(user, n)))
+    }
 
   /** Per-key per-type running counts on the transformWithState MapState
     * primitive — the sub-keyed-view shape of the new state API (the gap
@@ -1735,493 +1758,302 @@ object StreamOps {
         OutputMode.Append)
   }
 
-  /** The daily-count maintainer on transformWithState (r15, ADVICE 6)
-    * — [[dailyCountMonitor]]'s feed, GRADED-family-load-bearing (the
-    * five daily queries changepoint/lagcorr/quiet/seasonality/trend
-    * all compose off this one (type, day, n) table), ported to the
-    * Spark 4 successor API: ONE TTL'd ValueState[Long] per (type, day)
-    * key. The TTL is the at-scale state bound the fMGWS twin lacks —
-    * a day-grain key stops being written once its day passes, so the
+  /** [[dailyCountMonitor]]'s fold on transformWithState (r15, ADVICE
+    * 6) — GRADED-family-load-bearing (the five daily queries
+    * changepoint/lagcorr/quiet/seasonality/trend all compose off this
+    * one (type, day, n) table), with ONE TTL'd ValueState per (type,
+    * day) key. The TTL is the at-scale state bound the fMGWS path lacks
+    * — a day-grain key stops being written once its day passes, so the
     * store itself expires dormant counters (default 24 h of
     * processing-time idleness) instead of state growing ∝ calendar
     * forever; for an always-on monitor that is the difference between
-    * O(active days) and O(history) state. Counting is commutative —
-    * no in-order contract. Parity vs the fMGWS twin AND the graded
-    * batch tails is pinned under RocksDB in StreamingParitySuite. */
+    * O(active days) and O(history) state. */
   def dailyCountMonitorTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[DayCountOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(e => (e.event_type, Math.floorDiv(e.ts_us, 86400000000L)))
-      .transformWithState(new DayCountProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update)
+    tws(events, dailyCountFold, OutputMode.Update, Some(ttl))
   }
 
-  /** The as-of enrichment on transformWithState (r16) — the
-    * reference's CORE per-key causal pattern ([[asofEnrich]], the
-    * fMGWS twin) ported to the Spark 4 successor API: ONE TTL'd
-    * ValueState[AsofState] per user holding the latest click. The TTL
-    * is the at-scale state bound the fMGWS twin lacks — a user whose
-    * last click has been idle past `ttl` has the state-store row
-    * itself expire (no timer bookkeeping), so an always-on enricher
-    * holds O(recently-active users), not O(all users ever seen);
-    * post-expiry purchases enrich as NULL, exactly the cold-start
-    * semantics of a user with no click on record. Same in-order
-    * per-key delivery contract and same within-batch (ts, purchase-
-    * last, event_id) ordering as the twin — parity vs the twin AND
-    * the graded q_join_asof is pinned under RocksDB in
-    * StreamingParitySuite. TTL requires TimeMode.ProcessingTime. */
+  /** [[asofEnrich]]'s fold on transformWithState (r16) — the
+    * reference's CORE per-key causal pattern — with ONE TTL'd
+    * ValueState per user holding the latest click. The TTL is the
+    * at-scale state bound the fMGWS path lacks — a user whose last
+    * click has been idle past `ttl` has the state-store row itself
+    * expire (no timer bookkeeping), so an always-on enricher holds
+    * O(recently-active users), not O(all users ever seen); post-expiry
+    * purchases enrich as NULL, exactly the cold-start semantics of a
+    * user with no click on record. */
   def asofEnrichTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[AsofOut] = {
     import events.sparkSession.implicits._
-    events
-      .filter(e => e.event_type == "click" || e.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .transformWithState(new AsofEnrichProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Append)
+    tws(events.filter(e => e.event_type == "click" || e.event_type == "purchase"),
+      asofFold, OutputMode.Append, Some(ttl))
   }
 
-  /** The funnel tracker on transformWithState (r17, wave 2 of the
-    * successor-API ports — asofEnrichTws proved the pattern): ONE
-    * TTL'd ValueState[FunnelState] per user, the identical three-
-    * stage-timestamp state machine and within-batch (ts, stage,
-    * event_id) replay order as the [[funnel]] fMGWS twin (views before
-    * clicks before purchases at an equal timestamp — the batch `>=`
-    * contract; greedy first-match ≡ the min-based derivation in that
-    * order). The TTL is the at-scale state bound the twin lacks: a
-    * user idle past `ttl` has the state-store row itself expire, so an
-    * always-on tracker holds O(recently-active users) — post-expiry
-    * events restart the funnel from stage 0, exactly a cold user's
-    * semantics. Same one-sided per-key in-order delivery contract
-    * across batches; parity vs the twin AND the graded q_event_funnel
-    * is pinned under RocksDB in StreamingParitySuite. */
+  /** [[funnel]]'s fold on transformWithState (r17) with ONE TTL'd
+    * ValueState per user: a user idle past `ttl` has the state-store
+    * row itself expire, so an always-on tracker holds
+    * O(recently-active users) — post-expiry events restart the funnel
+    * from stage 0, exactly a cold user's semantics. */
   def funnelTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new FunnelTwsProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update)
+    tws(events, funnelFold(Long.MaxValue, Long.MaxValue), OutputMode.Update, Some(ttl))
   }
 
-  /** The cohort-retention tracker on transformWithState (r17, wave 2):
-    * ONE TTL'd ValueState[RetState] per user — the identical two-word
-    * (cohort hour, 4-bit offset mask) COMMUTATIVE fold as the
-    * [[retention]] fMGWS twin (no delivery-order contract at all: OR
-    * and rebase commute). The TTL bounds an always-on tracker to
-    * O(recently-active users); a user whose state expired and returns
-    * REBASES as a fresh cohort at their next event — for a metric
-    * whose graded window is offsets 0..3 of the FIRST-ever hour, that
-    * is a documented semantic narrowing (ttl below the 4-offset span
-    * truncates deep-offset returns), so the parity test runs the
-    * default 24 h TTL where no graded key can expire mid-stream and
-    * the TTL unit pins the expiry behavior in isolation. */
+  /** [[retention]]'s commutative fold on transformWithState (r17) with
+    * ONE TTL'd ValueState per user. The TTL bounds an always-on tracker
+    * to O(recently-active users); a user whose state expired and
+    * returns REBASES as a fresh cohort at their next event — for a
+    * metric whose graded window is offsets 0..3 of the FIRST-ever
+    * hour, that is a documented semantic narrowing (ttl below the
+    * 4-offset span truncates deep-offset returns), so the parity test
+    * runs the default 24 h TTL where no graded key can expire
+    * mid-stream and the TTL unit pins the expiry behavior in
+    * isolation. */
   def retentionTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[RetOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RetentionTwsProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update)
+    tws(events, retentionFold, OutputMode.Update, Some(ttl))
   }
 
-  /** The path-transition extractor on transformWithState (r17, wave
-    * 3): [[paths]]'s ONE-row last-type state per user on a TTL'd
-    * ValueState — the store expires a dormant user's trailing type,
-    * so an always-on extractor holds O(recently-active users) and a
-    * returning user's first event emits NO transition (the cold-start
-    * semantics: a stale "view → purchase" step across a week of
-    * silence is usually noise, and the graded q_event_paths matrix is
-    * dominated by in-session transitions). Same in-order per-key
-    * contract and within-batch event_id replay as the twin; parity vs
-    * the twin AND the graded transition counts is pinned under
-    * RocksDB, plus the TTL cold-start law. */
+  /** [[paths]]'s fold on transformWithState (r17) with ONE TTL'd
+    * ValueState per user — the store expires a dormant user's trailing
+    * type, so an always-on extractor holds O(recently-active users)
+    * and a returning user's first event emits NO transition (the
+    * cold-start semantics: a stale "view → purchase" step across a
+    * week of silence is usually noise, and the graded q_event_paths
+    * matrix is dominated by in-session transitions). */
   def pathsTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[PathStep] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new PathsTwsProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Append)
+    tws(events, pathsFold, OutputMode.Append, Some(ttl))
   }
 
-  /** The gap-sweep maintainer on transformWithState (r18, wave 3 of
-    * the successor-API ports): ONE TTL'd ValueState[GapSweepState] per
-    * user — the identical (last-ts + four counters) fold and within-
-    * batch (ts_us, event_id) replay order as the [[gapsweepMonitor]]
-    * fMGWS twin, so summing over keys equals the graded
+  /** [[gapsweepMonitor]]'s fold on transformWithState (r18) with ONE
+    * TTL'd ValueState per user, so summing over keys equals the graded
     * q_event_gapsweep 3-row sweep AT ANY INSTANT WITHIN THE TTL
-    * HORIZON — i.e. as long as no key's state row has expired (the
-    * shape StreamingParitySuite pins). Past expiry the claims split
-    * (r18 ADVICE): the SESSION-BOUNDARY classification stays
-    * conservative — an expired row makes the next event start a
-    * session at every threshold (lastUs = MinValue), exactly a cold
-    * user, and a gap that outlives a 24 h TTL is a boundary at
-    * 15∕30∕60 min a fortiori — but the CUMULATIVE counters
+    * HORIZON — i.e. as long as no key's state row has expired. Past
+    * expiry the claims split (r18 ADVICE): the SESSION-BOUNDARY
+    * classification stays conservative — an expired row makes the next
+    * event start a session at every threshold (lastUs = MinValue),
+    * exactly a cold user, and a gap that outlives a 24 h TTL is a
+    * boundary at 15∕30∕60 min a fortiori — but the CUMULATIVE counters
     * (n, s15/s30/s60) restart at zero with the row, so a downstream
     * last-write-wins sum over keys UNDERCOUNTS lifetime events and
-    * sessions versus the never-expiring fMGWS twin. Callers needing
-    * exact lifetime totals across idle periods should use the twin
-    * (unbounded state) or re-aggregate the emitted deltas externally;
-    * the TTL'd form prices the at-scale trade — O(recently-active
-    * users) state for within-horizon parity. Same one-sided per-key
-    * in-order delivery contract across batches; parity vs the twin
-    * AND the graded query pinned under RocksDB in
-    * StreamingParitySuite (a no-expiry run, per the horizon above). */
+    * sessions versus the never-expiring fMGWS path. Callers needing
+    * exact lifetime totals across idle periods should use
+    * [[gapsweepMonitor]] (unbounded state) or re-aggregate the emitted
+    * deltas externally; the TTL'd form prices the at-scale trade —
+    * O(recently-active users) state for within-horizon parity. */
   def gapsweepTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[GapSweepOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new GapsweepTwsProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update)
+    tws(events, gapsweepFold, OutputMode.Update, Some(ttl))
   }
 
-  /** The streak maintainer on transformWithState (r19, wave 4 of the
-    * successor-API ports): ONE TTL'd ValueState[StreakState] per user
-    * — the identical four-long fold and within-batch (ts_us, event_id)
-    * replay order as the [[streakMonitor]] fMGWS twin, so per-user
-    * standings equal the twin (and the graded q_event_streak) at any
-    * instant WITHIN THE TTL HORIZON — no key's row expired (the shape
-    * the parity suite pins; the r18 gapsweepTws ADVICE lesson applied
-    * from day one). Past expiry the claims split: the CURRENT-streak
-    * restart at 1 is the right classification whenever the idle gap
-    * really crossed a calendar day (the default 72 h ttl means an
-    * expired key sat idle ≥ 3 days of PROCESSING time — a genuine
-    * break unless the pipeline replays a lagged backlog, which is the
-    * caller's processing-time caveat), but longest_streak and
+  /** [[streakMonitor]]'s fold on transformWithState (r19) with ONE
+    * TTL'd ValueState per user, so per-user standings equal the fMGWS
+    * path (and the graded q_event_streak) at any instant WITHIN THE TTL
+    * HORIZON — no key's row expired. Past expiry the claims split: the
+    * CURRENT-streak restart at 1 is the right classification whenever
+    * the idle gap really crossed a calendar day (the default 72 h ttl
+    * means an expired key sat idle ≥ 3 days of PROCESSING time — a
+    * genuine break unless the pipeline replays a lagged backlog, which
+    * is the caller's processing-time caveat), but longest_streak and
     * n_active_days restart at zero with the row, so downstream
-    * last-write-wins sums UNDERCOUNT lifetime totals versus the
-    * never-expiring twin. Exact lifetime standings across idle
-    * periods → use the twin (unbounded state) or re-aggregate the
-    * emitted standings externally; the TTL'd form prices the at-scale
-    * trade — O(recently-active users) state. Same per-key
-    * non-decreasing day-order contract across batches as the twin. */
+    * last-write-wins sums UNDERCOUNT lifetime totals versus
+    * [[streakMonitor]]. Exact lifetime standings across idle periods →
+    * use [[streakMonitor]] (unbounded state) or re-aggregate the
+    * emitted standings externally. */
   def streakTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(72))
       : Dataset[StreakOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new StreakTwsProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update)
+    tws(events, streakFold, OutputMode.Update, Some(ttl))
   }
 
-  /** Last-touch attribution on transformWithState (r19, wave 4; window
-    * semantics corrected r20 per ADVICE): ONE TTL'd
-    * ValueState[AttribWState] per user — the last-touch string PLUS
-    * its EVENT TIME, the identical fold and within-batch (ts_us,
-    * event_id) replay order as the [[attribMonitor]] fMGWS twin
-    * (purchases emit the carried touch or "direct", non-purchases move
-    * the touch). The attribution WINDOW is the explicit `window`
-    * parameter, enforced at purchase time against the touch's own
-    * carried timestamp — a touch older than `window` credits "direct"
-    * even when intervening activity kept the state row alive. The
-    * store TTL is NOT the window (the r19 ADVICE finding: TTL
-    * refreshes on every state update — including purchase-only
-    * batches — so it measures idle time since the key's LAST ACTIVITY,
-    * not since the touch); it remains what it honestly is, the
-    * at-scale state bound — O(recently-active users) × one small row,
-    * and an expired-then-returning user restarts cold ("direct" until
-    * the next touch, a conservative credit). `window = None` (default)
-    * is the twin's unwindowed semantics: emissions equal the twin and
-    * the graded q_event_attrib exactly within the no-expiry horizon
-    * (the parity suite pins it under RocksDB); the windowed direction
-    * has its own pin (a stale touch credits "direct" where the twin
-    * still credits the touch). Emissions are FINAL (Append) — an
-    * expiry never rewrites history, it only changes future credits. */
+  /** [[attribMonitor]]'s fold on transformWithState (r19; window
+    * semantics corrected r20 per ADVICE) with ONE TTL'd ValueState per
+    * user. The attribution WINDOW is the explicit `window` parameter,
+    * enforced at purchase time against the touch's own carried
+    * timestamp — a touch older than `window` credits "direct" even when
+    * intervening activity kept the state row alive. The store TTL is
+    * NOT the window (the r19 ADVICE finding: TTL refreshes on every
+    * state update — including purchase-only batches — so it measures
+    * idle time since the key's LAST ACTIVITY, not since the touch); it
+    * remains what it honestly is, the at-scale state bound —
+    * O(recently-active users) × one small row, and an
+    * expired-then-returning user restarts cold ("direct" until the next
+    * touch, a conservative credit). `window = None` (default) is
+    * [[attribMonitor]]'s unwindowed semantics. Emissions are FINAL
+    * (Append) — an expiry never rewrites history, it only changes
+    * future credits. */
   def attribTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24),
       window: Option[java.time.Duration] = None)
       : Dataset[AttribOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new AttribTwsProcessor(ttl, window),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Append)
+    tws(events, attribFold(window), OutputMode.Append, Some(ttl))
   }
 
-  /** The SCD2 dimension maintainer on transformWithState (r19, wave
-    * 4, third member): ONE ValueState[Scd2State] per key — the open
-    * range's (attr, from_ts, from_id), the identical fold and
-    * within-batch (ts_us, event_id) replay order as the
-    * [[scd2Monitor]] fMGWS twin (an attr change closes the carried
-    * range at the new ts and opens a new one; same-attr runs merge).
-    * Deliberately NO TTL — the one wave-4 port where expiry is WRONG
-    * rather than a trade: an idle-expired key's standing open row
-    * could never be closed retroactively, leaving the materialized
-    * dimension with OVERLAPPING is_current rows (the half-open tiling
-    * invariant q_event_scd2 grades would break), and unlike activity
-    * counters a dimension's state is bounded by the ENTITY count (one
-    * small row per key ever seen), not by activity — O(entities) is
-    * the honest floor for any SCD2 engine. Update-mode emissions,
-    * last-write-wins materialization downstream (the twin's
-    * contract); parity vs the twin and the graded query pinned under
-    * RocksDB with a change-across-batches straddle. */
+  /** [[scd2Monitor]]'s fold on transformWithState (r19) with ONE
+    * ValueState per key — the open range's (attr, from_ts, from_id).
+    * Deliberately NO TTL — expiry here is WRONG rather than a trade: an
+    * idle-expired key's standing open row could never be closed
+    * retroactively, leaving the materialized dimension with
+    * OVERLAPPING is_current rows (the half-open tiling invariant
+    * q_event_scd2 grades would break), and unlike activity counters a
+    * dimension's state is bounded by the ENTITY count (one small row
+    * per key ever seen), not by activity — O(entities) is the honest
+    * floor for any SCD2 engine. */
   def scd2Tws(events: Dataset[Event]): Dataset[Scd2Out] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new Scd2TwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, scd2Fold, OutputMode.Update)
   }
 
-  /** The per-key quantile sketch on transformWithState (r19, wave 4,
-    * fourth member — completing the port of every fMGWS-only
-    * maintainer the r18 verdict named): ONE ValueState[KllState] per
-    * user carrying the [[graft.operators.QuantileSketch]] compactor
-    * hierarchy's EXACT structural snapshot (n, parity flags, level
-    * buffers — nested Seqs through the product encoder), the
-    * identical (ts_us, event_id)-ordered fold as the
-    * [[quantileMonitor]] twin, so restore(fold(A)) then fold(B) ≡
-    * fold(A++B) bit-for-bit across any batch split (the twin's
-    * round-trip claim, re-pinned here under RocksDB). No TTL — the
-    * sketch IS the bounded-state story: O(k·log(n∕k)) doubles per key
-    * at ANY history length, so expiry would trade exactness of the
-    * deterministic error bound for a saving the structure already
-    * provides. Update mode: one (n, p50, p90, err_bound) readout per
-    * touched key per batch. */
-  def quantileTws(events: Dataset[Event], k: Int = 64)
-      : Dataset[QuantOut] = {
+  /** [[quantileMonitor]]'s fold on transformWithState (r19): ONE
+    * ValueState per user carrying the sketch's EXACT structural
+    * snapshot (nested Seqs through the product encoder), so
+    * restore(fold(A)) then fold(B) ≡ fold(A++B) bit-for-bit across any
+    * batch split under RocksDB too. No TTL — the sketch IS the
+    * bounded-state story: O(k·log(n∕k)) doubles per key at ANY history
+    * length, so expiry would trade exactness of the deterministic error
+    * bound for a saving the structure already provides. */
+  def quantileTws(events: Dataset[Event], k: Int = 64): Dataset[QuantOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new QuantileTwsProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, quantileFold(k), OutputMode.Update)
   }
 
-  /** The KMV distinct-cardinality tracker on transformWithState (r20,
-    * wave 5 — the sketch trio the r19 verdict named, first member):
-    * ONE ValueState[KmvState] per event type carrying the identical
-    * k-minimum-hash vector as the [[kmvMonitor]] fMGWS twin. KMV is a
-    * pure function of the value SET — insertion order, batch splits,
-    * duplicates, and at-least-once replay are all provably inert (no
-    * within-batch sort, the twin's contract verbatim) — so stream ≡
-    * twin ≡ the graded q_agg_kmv audit grain holds bit-for-bit by
-    * construction (pinned under RocksDB). No TTL — the sketch IS the
-    * bounded-state story: O(k) longs per key at ANY history length
-    * (the quantileTws reasoning; expiry would only trade away the
-    * replay-immune set semantics). Update mode: one readout per
-    * touched key per batch. */
+  /** [[kmvMonitor]]'s fold on transformWithState (r20): ONE ValueState
+    * per event type carrying the k-minimum-hash vector. KMV is a pure
+    * function of the value SET, so stream ≡ batch ≡ the graded q_agg_kmv
+    * audit grain holds bit-for-bit by construction. No TTL — the sketch
+    * IS the bounded-state story: O(k) longs per key at ANY history
+    * length (expiry would only trade away the replay-immune set
+    * semantics). */
   def kmvTws(events: Dataset[Event], k: Int = 256): Dataset[KmvOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new KmvTwsProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, kmvFold(k), OutputMode.Update)
   }
 
-  /** The CMS frequency tracker on transformWithState (r20, wave 5,
-    * second member): ONE ValueState[CmsState] per event type — the
-    * identical d×w counter grid and [[graft.Det.jvmMd5h32]] row hashes
-    * as the [[cmsMonitor]] fMGWS twin. Counter addition commutes, so
-    * batch splits and arrival order are inert (no within-batch sort);
-    * UNLIKE KMV the sketch is ADDITIVE — at-least-once replay inflates
-    * counts, so the tracker belongs behind an exactly-once source or
-    * an idempotent upstream dedup (the twin's documented delivery
-    * trade, carried verbatim). No TTL — O(d·w) longs per key forever
-    * IS the bounded-state story. Update mode: one row per (touched
-    * key, probe) per batch; estimates never undercount. */
+  /** [[cmsMonitor]]'s fold on transformWithState (r20): ONE ValueState
+    * per event type holding the d×w counter grid. Additive, so the
+    * exactly-once delivery caveat of [[cmsMonitor]] applies. No TTL —
+    * O(d·w) longs per key forever IS the bounded-state story. */
   def cmsTws(events: Dataset[Event], probes: Seq[Long],
-             d: Int = 4, w: Int = 64): Dataset[CmsProbeOut] = {
+             d: Int = 4, w: Int = 64)
+      : Dataset[CmsProbeOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new CmsTwsProcessor(probes, d, w),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, cmsFold(probes, d, w), OutputMode.Update)
   }
 
-  /** The AMS F2 tracker on transformWithState (r20, wave 5, third
-    * member — wave complete: every fMGWS sketch monitor now has a
-    * successor-API port): ONE ValueState[AmsMonState] per event type —
-    * the identical signed-sum vector fold as the [[amsMonitor]] fMGWS
-    * twin (a LINEAR sketch: per-key state is `rows` longs + n forever,
-    * the fold plain addition — commutative, no within-batch sort).
-    * Shares [[cmsTws]]'s additive delivery contract (replays
-    * double-count; exactly-once required) and the twin's BigInt
-    * squaring before the mean (z_i² wraps a Long past |z_i| ≈ 3e9 on
-    * an always-on lifetime). No TTL by the same bounded-state
-    * reasoning. Update mode: one (n, f2_est) readout per touched key
-    * per batch. */
-  def amsTws(events: Dataset[Event], rows: Int = 8)
-      : Dataset[AmsMonOut] = {
+  /** [[amsMonitor]]'s fold on transformWithState (r20): ONE ValueState
+    * per event type holding the signed-sum vector. Shares [[cmsTws]]'s
+    * additive delivery contract (replays double-count; exactly-once
+    * required). No TTL by the same bounded-state reasoning. */
+  def amsTws(events: Dataset[Event], rows: Int = 8): Dataset[AmsMonOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new AmsTwsProcessor(rows),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, amsFold(rows), OutputMode.Update)
   }
 
-  /** The per-key causal-order audit on transformWithState (r20, wave
-    * 6 — the reference's raison d'être on the successor API): ONE
-    * un-TTL'd ValueState[CausalState] per user — the identical
-    * (max ts, n, violations) fold and within-batch event_id replay
-    * (event_id IS the arrival order — FIXTURES.md) as the
-    * [[causalTracker]] fMGWS twin, so per-key standings equal the twin
-    * and the graded q_causal row at any instant (pinned under
-    * RocksDB). NO TTL by design: the audit's n∕violations are LIFETIME
-    * delivery-guarantee counters — expiry would silently undercount
-    * the very violations the reference exists to surface, and the
-    * state is 3 longs per key, O(keys) — the honest floor of any
-    * per-key ordering audit (the scd2Tws reasoning). Update mode. */
+  /** [[causalTracker]]'s fold on transformWithState (r20 — the
+    * reference's raison d'être on the successor API): ONE un-TTL'd
+    * ValueState per user, so per-key standings equal the fMGWS path
+    * and the graded q_causal row at any instant. NO TTL by design: the
+    * audit's n∕violations are LIFETIME delivery-guarantee counters —
+    * expiry would silently undercount the very violations the reference
+    * exists to surface, and the state is 3 longs per key, O(keys) — the
+    * honest floor of any per-key ordering audit. */
   def causalTws(events: Dataset[Event]): Dataset[CausalOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new CausalTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, causalFold, OutputMode.Update)
   }
 
-  /** The exact-moments maintainer on transformWithState (r20, wave 6):
-    * ONE un-TTL'd ValueState[MomentsState] per user — the identical
-    * exact BigInteger power sums (carried as decimal strings through
-    * the product encoder) and cents quantization as the
-    * [[momentsMonitor]] fMGWS twin, with the same pinned IEEE combine
-    * at readout (one correctly-rounded BigInteger→double conversion
-    * per sum). Addition of exact integers commutes — no within-batch
-    * sort, no delivery-order contract, and any batch split is provably
-    * inert. NO TTL: lifetime moments are the contract (expiry would
-    * reset the sums), and state is five small values per key. Update
-    * mode: one standings row per touched key per batch. */
+  /** [[momentsMonitor]]'s fold on transformWithState (r20): ONE
+    * un-TTL'd ValueState per user. NO TTL: lifetime moments are the
+    * contract (expiry would reset the sums), and state is five small
+    * values per key. */
   def momentsTws(events: Dataset[Event]): Dataset[MomentsOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new MomentsTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, momentsFold, OutputMode.Update)
   }
 
-  /** The presence-bitmap maintainer on transformWithState (r20, wave
-    * 6): ONE un-TTL'd ValueState[BitmaskState] per user — the
-    * identical OR∕XOR hour-bit fold as the [[bitmaskMonitor]] fMGWS
-    * twin. OR and XOR are commutative AND associative, so the final
-    * emission is bit-identical to the batch aggregate under ANY
-    * micro-batch split or arrival order — the strongest delivery
-    * contract in the family (the parity test replays a deliberately
-    * SHUFFLED stream). NO TTL: the bitmap is lifetime presence
-    * algebra in 3 longs per key. Update mode. */
+  /** [[bitmaskMonitor]]'s fold on transformWithState (r20): ONE
+    * un-TTL'd ValueState per user. NO TTL: the bitmap is lifetime
+    * presence algebra in 3 longs per key. */
   def bitmaskTws(events: Dataset[Event]): Dataset[BitmaskOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new BitmaskTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, bitmaskFold, OutputMode.Update)
   }
 
-  /** The inter-arrival gap feed on transformWithState (r20, wave 6,
-    * fourth member): ONE TTL'd ValueState[TimeGapState] per user — the
-    * identical one-long state and (ts_us, event_id) within-batch
-    * replay as the [[timeGapMonitor]] fMGWS twin; emissions are FINAL
-    * (Append — a gap never revises). The TTL is the pathsTws
-    * discipline: a key idle past `ttl` of PROCESSING time has its
-    * last-timestamp expire, so the returning event emits NO cross-idle
-    * gap (a stale inter-arrival spanning a week of silence is noise to
-    * the percentile consumers downstream) — cold-start semantics, with
-    * the processing-time caveat (a replayed backlog does not expire
-    * mid-replay, so twin parity holds on any replay — pinned under
-    * RocksDB). State O(recently-active users) × one long. */
+  /** [[timeGapMonitor]]'s fold on transformWithState (r20) with ONE
+    * TTL'd ValueState per user: a key idle past `ttl` of PROCESSING
+    * time has its last timestamp expire, so the returning event emits
+    * NO cross-idle gap (a stale inter-arrival spanning a week of
+    * silence is noise to the percentile consumers downstream) —
+    * cold-start semantics, with the processing-time caveat (a replayed
+    * backlog does not expire mid-replay). State O(recently-active
+    * users) × one long. */
   def timeGapTws(events: Dataset[Event],
       ttl: java.time.Duration = java.time.Duration.ofHours(24))
       : Dataset[TimeGapOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TimeGapTwsProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Append)
+    tws(events, timeGapFold, OutputMode.Append, Some(ttl))
   }
 
-  /** The new-vs-returning feed on transformWithState (r20, wave 7 —
-    * the wave that FINISHES the r19 verdict's twelve-name list: no
-    * fMGWS-only maintainer from it remains): ONE un-TTL'd
-    * ValueState[NewretState] per user — the twin's (first-ever day,
-    * last day) pair, Append-mode one-row-per-(user, day) emissions
-    * with is_new = 1 only on the key's first-ever day. NO TTL: the
-    * first-day is a LIFETIME fact — an expired key's return would be
-    * wrongly re-flagged new, corrupting the new∕returning split the
-    * feed exists to compute; state is 2 longs per key. Same
-    * forward-day in-order contract as the twin. */
+  /** [[newretMonitor]]'s fold on transformWithState (r20): ONE
+    * un-TTL'd ValueState per user. NO TTL: the first day is a LIFETIME
+    * fact — an expired key's return would be wrongly re-flagged new,
+    * corrupting the new∕returning split the feed exists to compute;
+    * state is 2 longs per key. */
   def newretTws(events: Dataset[Event]): Dataset[NewretOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new NewretTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
+    tws(events, newretFold, OutputMode.Append)
   }
 
-  /** The user-lifetime maintainer on transformWithState (r20, wave
-    * 7): ONE un-TTL'd ValueState[LifetimeState] per user — the twin's
-    * first∕last-day min∕max fold (commutative: no sort, no delivery
-    * contract), Update-mode upserts only when the lifetime GROWS. NO
-    * TTL by definition of the metric. */
+  /** [[lifetimeMonitor]]'s fold on transformWithState (r20): ONE
+    * un-TTL'd ValueState per user. NO TTL by definition of the
+    * metric. */
   def lifetimeTws(events: Dataset[Event]): Dataset[LifetimeOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new LifetimeTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, lifetimeFold, OutputMode.Update)
   }
 
-  /** The point-in-time enrichment on transformWithState (r20, wave
-    * 7): ONE un-TTL'd ValueState[PitState] per user — the twin's
-    * (attr, run-start) row, facts emitted ONCE with the attribute
-    * active at their instant, changes-before-facts at an equal µs in
-    * event_id order (the batch interleave's tie rule). NO TTL — the
-    * scd2Tws reasoning verbatim: an expired active attribute would
-    * NULL-enrich facts that a never-expiring feature store answers,
-    * and dimension state is O(entities) regardless. */
+  /** [[pitMonitor]]'s fold on transformWithState (r20): ONE un-TTL'd
+    * ValueState per user. NO TTL — the [[scd2Tws]] reasoning: an
+    * expired active attribute would NULL-enrich facts that a
+    * never-expiring feature store answers, and dimension state is
+    * O(entities) regardless. */
   def pitTws(events: Dataset[Event]): Dataset[PitOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new PitTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append)
+    tws(events, pitFold, OutputMode.Append)
   }
 
-  /** The windowed top-k leaderboard on transformWithState (r20, wave
-    * 7): ONE ValueState[TopkTwsState] per tumbling-hour window — the
-    * twin's user→scaled-sum map FLATTENED to sorted parallel Seqs,
-    * because the TWS Avro state encoding rejects MapType outright
-    * (measured: IncompatibleSchemaException — the one structural
-    * constraint the successor API adds over fMGWS, recorded on the
-    * state class); the same exact scaled-long ranking either way.
-    * Un-TTL'd for twin parity; at scale
-    * the principled bound is a TTL at the window-retention horizon (a
-    * CLOSED window under event-time order never updates again — the
-    * documented trade, unlike the lifetime families where expiry is
-    * wrong). Update mode: the window's standings re-emit per batch. */
-  def windowTopkTws(events: Dataset[Event], k: Int = 3)
-      : Dataset[TopkOut] = {
+  /** [[windowTopkMonitor]]'s fold on transformWithState (r20): ONE
+    * ValueState per tumbling-hour window. Un-TTL'd to match the fMGWS
+    * path; at scale the principled bound is a TTL at the
+    * window-retention horizon (a CLOSED window under event-time order
+    * never updates again — the documented trade, unlike the lifetime
+    * families where expiry is wrong). */
+  def windowTopkTws(events: Dataset[Event], k: Int = 3): Dataset[TopkOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(e => math.floorDiv(e.ts_us, 3600000000L) * 3600000000L)
-      .transformWithState(new WindowTopkTwsProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(events, windowTopkFold(k), OutputMode.Update)
   }
 
-  /** The KS drift gauge on transformWithState (r20, wave 7, last
-    * member — the twelve-name list CLOSES here): ONE un-TTL'd
-    * ValueState[DriftTwsState] per group — the distinct-value
-    * histogram flattened to sorted parallel Seqs (the MapType
-    * constraint on [[TopkTwsState]]'s scaladoc), integer
-    * counts so state is arrival-order-free, the identical IEEE KS
-    * program at each readout. State bounded by the VALUE DOMAIN,
-    * never the stream — the bounded-state story is the histogram
-    * itself, so no TTL. Update mode. */
+  /** [[ksDriftMonitor]]'s fold on transformWithState (r20): ONE
+    * un-TTL'd ValueState per group. State is bounded by the VALUE
+    * DOMAIN, never the stream — the bounded-state story is the
+    * histogram itself, so no TTL. */
   def ksDriftTws(rows: Dataset[DriftRowIn]): Dataset[DriftOut] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_.grp)
-      .transformWithState(new KsDriftTwsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update)
+    tws(rows, ksDriftFold, OutputMode.Update)
   }
 
   /** Rolling 3-event decimal sum per key on the transformWithState
@@ -2240,853 +2072,6 @@ object StreamOps {
     events.groupByKey(_.user_id)
       .transformWithState(new RollingSumProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append)
-  }
-}
-
-/** [[StreamOps.dailyCountMonitorTws]]'s processor: ONE TTL'd
-  * ValueState[Long] per (type, day) key — the same single-counter state
-  * shape as the flatMapGroupsWithState twin, plus the store-enforced
-  * idle expiry (see the builder's scaladoc for why TTL is the at-scale
-  * point). Emits the grown count for every key the batch touches. */
-class DayCountProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[(String, Long), Event, DayCountOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var n: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig(ttl))
-
-  override def handleInputRows(key: (String, Long), rows: Iterator[Event],
-                               tv: TimerValues): Iterator[DayCountOut] = {
-    var add = 0L
-    while (rows.hasNext) { rows.next(); add += 1 }
-    if (add == 0) Iterator.empty
-    else {
-      val next = (if (n.exists()) n.get() else 0L) + add
-      n.update(next)
-      Iterator.single(DayCountOut(key._1, key._2 * 86400000000L, next))
-    }
-  }
-}
-
-/** [[StreamOps.asofEnrichTws]]'s processor: ONE TTL'd
-  * ValueState[AsofState] per user — the identical last-click state
-  * shape and within-batch replay order as the flatMapGroupsWithState
-  * twin (clicks advance the watermark state monotonically by
-  * (ts, event_id); purchases read it), plus the store-enforced idle
-  * expiry (the builder's scaladoc has the at-scale argument). */
-class AsofEnrichProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, AsofOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var last: ValueState[AsofState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[AsofState]("last",
-      Encoders.product[AsofState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[AsofOut] = {
-    var cur = if (last.exists()) Option(last.get()) else None
-    val out = Seq.newBuilder[AsofOut]
-    rows.toSeq
-      .sortBy(e => (e.ts_us, if (e.event_type == "purchase") 1 else 0,
-        e.event_id))
-      .foreach { e =>
-        if (e.event_type == "click") {
-          if (cur.forall(s => s.cUs < e.ts_us
-              || (s.cUs == e.ts_us && s.cId < e.event_id)))
-            cur = Some(AsofState(e.event_id, e.ts_us))
-        } else out += AsofOut(e.event_id, user, e.ts_us,
-          cur.map(_.cId), cur.map(_.cUs), cur.map(s => e.ts_us - s.cUs))
-      }
-    cur.foreach(last.update)
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.funnelTws]]'s processor: ONE TTL'd
-  * ValueState[FunnelState] per user — the identical greedy three-stage
-  * machine and within-batch (ts, stage, event_id) replay order as the
-  * flatMapGroupsWithState twin; the store-enforced idle expiry
-  * restarts an expired user's funnel from stage 0 (the builder's
-  * scaladoc has the at-scale argument). */
-class FunnelTwsProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, FunnelOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[FunnelState] = _
-
-  private def stageRank(t: String): Int =
-    t match { case "view" => 0; case "click" => 1; case "purchase" => 2; case _ => 3 }
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[FunnelState]("funnel",
-      Encoders.product[FunnelState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[FunnelOut] = {
-    var s = if (st.exists()) st.get() else FunnelState(-1L, -1L, -1L)
-    rows.toSeq
-      .sortBy(e => (e.ts_us, stageRank(e.event_type), e.event_id))
-      .foreach { e =>
-        e.event_type match {
-          case "view" if s.tView < 0L => s = s.copy(tView = e.ts_us)
-          case "click" if s.tClick < 0L && s.tView >= 0L
-            && e.ts_us >= s.tView => s = s.copy(tClick = e.ts_us)
-          case "purchase" if s.tPurchase < 0L && s.tClick >= 0L
-            && e.ts_us >= s.tClick => s = s.copy(tPurchase = e.ts_us)
-          case _ => ()
-        }
-      }
-    st.update(s)
-    Iterator.single(FunnelOut(user,
-      if (s.tView >= 0L) 1 else 0,
-      if (s.tClick >= 0L) 1 else 0,
-      if (s.tPurchase >= 0L) 1 else 0))
-  }
-}
-
-/** [[StreamOps.retentionTws]]'s processor: ONE TTL'd
-  * ValueState[RetState] per user — the identical commutative
-  * (cohort, mask) fold as the flatMapGroupsWithState twin (no replay
-  * sort needed: OR and rebase commute); an expired user rebases as a
-  * fresh cohort at their next event. */
-class RetentionTwsProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, RetOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  private val HourUs = 3600000000L
-  @transient private var st: ValueState[RetState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[RetState]("ret",
-      Encoders.product[RetState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[RetOut] = {
-    var s = if (st.exists()) st.get() else RetState(Long.MaxValue, 0)
-    rows.foreach { e =>
-      val h = e.ts_us - java.lang.Math.floorMod(e.ts_us, HourUs)
-      if (s.cohortUs == Long.MaxValue) s = RetState(h, 1)
-      else if (h < s.cohortUs) {
-        val shift = (s.cohortUs - h) / HourUs
-        val shifted =
-          if (shift > 3) 1 else ((s.mask << shift.toInt) & 0xF) | 1
-        s = RetState(h, shifted)
-      } else {
-        val k = (h - s.cohortUs) / HourUs
-        if (k <= 3) s = RetState(s.cohortUs, s.mask | (1 << k.toInt))
-      }
-    }
-    st.update(s)
-    Iterator.single(RetOut(user, s.cohortUs, s.mask))
-  }
-}
-
-/** [[StreamOps.pathsTws]]'s processor: ONE TTL'd ValueState[PathState]
-  * per user — the identical last-type machine and event_id replay as
-  * the flatMapGroupsWithState twin; an expired trailing type emits no
-  * transition on return (cold start). */
-class PathsTwsProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, PathStep] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[PathState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[PathState]("last",
-      Encoders.product[PathState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[PathStep] = {
-    var last = if (st.exists()) st.get().lastType else ""
-    val out = Seq.newBuilder[PathStep]
-    rows.toSeq.sortBy(_.event_id).foreach { e =>
-      if (last.nonEmpty) out += PathStep(user, last, e.event_type)
-      last = e.event_type
-    }
-    st.update(PathState(last))
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.gapsweepTws]]'s processor: ONE TTL'd
-  * ValueState[GapSweepState] per user — the identical last-ts + four
-  * exact counters and (ts_us, event_id) in-batch replay as the
-  * flatMapGroupsWithState twin; an expired user's next event opens a
-  * session at every threshold (the cold-user semantics). */
-class GapsweepTwsProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, GapSweepOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[GapSweepState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[GapSweepState]("gapsweep",
-      Encoders.product[GapSweepState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[GapSweepOut] = {
-    var s = if (st.exists()) st.get()
-      else GapSweepState(Long.MinValue, 0L, 0L, 0L, 0L)
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      def brk(m: Long) = s.lastUs == Long.MinValue ||
-        e.ts_us - s.lastUs > m * 60000000L
-      s = GapSweepState(e.ts_us, s.n + 1,
-        s.s15 + (if (brk(15)) 1 else 0),
-        s.s30 + (if (brk(30)) 1 else 0),
-        s.s60 + (if (brk(60)) 1 else 0))
-    }
-    st.update(s)
-    Iterator.single(GapSweepOut(user, s.n, s.s15, s.s30, s.s60))
-  }
-}
-
-/** [[StreamOps.streakTws]]'s processor: ONE TTL'd
-  * ValueState[StreakState] per user — the same four-long state shape
-  * as the flatMapGroupsWithState twin, the store-enforced idle expiry
-  * on top (see the builder's scaladoc for the split between the
-  * conservative current-streak restart and the undercounting lifetime
-  * counters past expiry). */
-class StreakTwsProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, StreakOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[StreakState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[StreakState]("streak",
-      Encoders.product[StreakState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[StreakOut] = {
-    var s = if (st.exists()) st.get()
-      else StreakState(Long.MinValue, 0L, 0L, 0L)
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      val day = Math.floorDiv(e.ts_us, 86400000000L)
-      if (day != s.lastDay) {
-        val cur = if (day == s.lastDay + 1) s.current + 1 else 1L
-        s = StreakState(day, cur, math.max(s.longest, cur), s.nActive + 1)
-      }
-    }
-    st.update(s)
-    Iterator.single(StreakOut(user, s.nActive, s.longest, s.current))
-  }
-}
-
-/** [[StreamOps.attribTws]]'s processor: ONE TTL'd
-  * ValueState[AttribWState] per user — the twin's one-string state
-  * plus the touch's own event time (r20, ADVICE): the window check at
-  * purchase time reads the CARRIED touchUs, because the store TTL
-  * refreshes on every update and therefore cannot be the window. */
-class AttribTwsProcessor(ttl: java.time.Duration,
-                         window: Option[java.time.Duration] = None)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, AttribOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  private val windowUs: Long =
-    window.map(w => w.toMillis * 1000L).getOrElse(Long.MaxValue)
-
-  @transient private var st: ValueState[AttribWState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[AttribWState]("touch",
-      Encoders.product[AttribWState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[AttribOut] = {
-    var s = if (st.exists()) st.get() else AttribWState("", Long.MinValue)
-    val out = Seq.newBuilder[AttribOut]
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      if (e.event_type == "purchase") {
-        // a stale touch is expired AT PURCHASE TIME, from the touch's
-        // own event time — never from the TTL clock
-        val stale = s.touchUs != Long.MinValue &&
-          e.ts_us - s.touchUs > windowUs
-        out += AttribOut(user, e.event_id,
-          if (s.touch.isEmpty || stale) "direct" else s.touch)
-      } else s = AttribWState(e.event_type, e.ts_us)
-    }
-    st.update(s)
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.scd2Tws]]'s processor: ONE un-TTL'd
-  * ValueState[Scd2State] per key — the same open-range state shape as
-  * the flatMapGroupsWithState twin; TTLConfig.NONE by design (see the
-  * builder's scaladoc: expiry would break the tiling invariant, and
-  * dimension state is O(entities) regardless). */
-class Scd2TwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, Scd2Out] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[Scd2State] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[Scd2State]("open",
-      Encoders.product[Scd2State], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[Scd2Out] = {
-    var open = if (st.exists()) Option(st.get()) else None
-    val out = Seq.newBuilder[Scd2Out]
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      open match {
-        case None =>
-          open = Some(Scd2State(e.event_type, e.ts_us, e.event_id))
-          out += Scd2Out(user, e.event_type, e.ts_us, e.event_id, -1L, 1)
-        case Some(o) if o.attr != e.event_type =>
-          out += Scd2Out(user, o.attr, o.fromUs, o.fromId, e.ts_us, 0)
-          open = Some(Scd2State(e.event_type, e.ts_us, e.event_id))
-          out += Scd2Out(user, e.event_type, e.ts_us, e.event_id, -1L, 1)
-        case _ => // same attr: the run merges, nothing to emit
-      }
-    }
-    open.foreach(st.update)
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.quantileTws]]'s processor: ONE un-TTL'd
-  * ValueState[KllState] per key — the sketch's exact structural
-  * snapshot, restored and re-snapshotted per batch exactly like the
-  * flatMapGroupsWithState twin (bit-identical round trip). */
-class QuantileTwsProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, QuantOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[KllState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[KllState]("kll",
-      Encoders.product[KllState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[QuantOut] = {
-    val s = if (st.exists()) {
-      val kst = st.get()
-      graft.operators.QuantileSketch.restore(k, kst.n, kst.parity,
-        kst.levels)
-    } else new graft.operators.QuantileSketch.Summary(k)
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id))
-      .foreach(e => s.update(e.value))
-    val (sn, sp, sl) = s.snapshot
-    st.update(KllState(sn, sp, sl))
-    if (s.n == 0L) Iterator.empty
-    else Iterator.single(QuantOut(user, s.n,
-      s.quantile(0.5).get, s.quantile(0.9).get, s.errBound))
-  }
-}
-
-/** [[StreamOps.kmvTws]]'s processor: ONE un-TTL'd ValueState[KmvState]
-  * per key — the twin's k-minimum sorted hash vector, restored and
-  * re-folded per batch with the identical insert rule (set function:
-  * no sort, no delivery caveat). */
-class KmvTwsProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, KmvOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[KmvState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[KmvState]("kmv",
-      Encoders.product[KmvState], TTLConfig.NONE)
-
-  override def handleInputRows(tp: String, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[KmvOut] = {
-    var hs = if (st.exists()) st.get().hs.toVector else Vector.empty[Long]
-    rows.foreach { e =>
-      val h = graft.Det.jvmMd5h32(e.user_id.toString)
-      if ((hs.size < k || h < hs.last) && !hs.contains(h)) {
-        val grown = if (hs.size < k) hs :+ h else hs.init :+ h
-        hs = grown.sorted
-      }
-    }
-    st.update(KmvState(hs))
-    if (hs.isEmpty) Iterator.empty
-    else Iterator.single(KmvOut(tp, hs.size.toLong, hs.last,
-      if (hs.size < k) hs.size.toLong
-      else (k - 1).toLong * 4294967296L / hs.last))
-  }
-}
-
-/** [[StreamOps.cmsTws]]'s processor: ONE un-TTL'd ValueState[CmsState]
-  * per key — the twin's d×w counter grid, incremented with the same
-  * row hashes (commutative; additive — the exactly-once caveat lives
-  * on the builder). */
-class CmsTwsProcessor(probes: Seq[Long], d: Int, w: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, CmsProbeOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[CmsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CmsState]("cms",
-      Encoders.product[CmsState], TTLConfig.NONE)
-
-  override def handleInputRows(tp: String, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[CmsProbeOut] = {
-    val prior = if (st.exists()) Option(st.get()) else None
-    val cnt = prior.map(_.cnt.toArray).getOrElse(new Array[Long](d * w))
-    var n = prior.map(_.n).getOrElse(0L)
-    rows.foreach { e =>
-      var i = 0
-      while (i < d) {
-        cnt(i * w + (graft.Det.jvmMd5h32(s"$i#${e.user_id}") % w).toInt) += 1
-        i += 1
-      }
-      n += 1
-    }
-    st.update(CmsState(cnt.toSeq, n))
-    probes.iterator.map { p =>
-      val est = (0 until d).map(i =>
-        cnt(i * w + (graft.Det.jvmMd5h32(s"$i#$p") % w).toInt)).min
-      CmsProbeOut(tp, p, n, est)
-    }
-  }
-}
-
-/** [[StreamOps.amsTws]]'s processor: ONE un-TTL'd
-  * ValueState[AmsMonState] per key — the twin's signed-sum vector
-  * (linear sketch: plain addition), BigInt squaring at readout. */
-class AmsTwsProcessor(rows: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, Event, AmsMonOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[AmsMonState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[AmsMonState]("ams",
-      Encoders.product[AmsMonState], TTLConfig.NONE)
-
-  override def handleInputRows(tp: String, evs: Iterator[Event],
-                               tv: TimerValues): Iterator[AmsMonOut] = {
-    val prior = if (st.exists()) Option(st.get()) else None
-    val z = prior.map(_.z.toArray).getOrElse(new Array[Long](rows))
-    var n = prior.map(_.n).getOrElse(0L)
-    evs.foreach { e =>
-      var i = 0
-      while (i < rows) {
-        z(i) +=
-          (if (graft.Det.jvmMd5h32(s"$i#${e.user_id}") % 2 == 0) 1L
-           else -1L)
-        i += 1
-      }
-      n += 1
-    }
-    st.update(AmsMonState(z.toSeq, n))
-    val f2 = z.map(v => BigInt(v) * BigInt(v)).sum / rows
-    Iterator.single(AmsMonOut(tp, n, f2.toLong))
-  }
-}
-
-/** [[StreamOps.causalTws]]'s processor: ONE un-TTL'd
-  * ValueState[CausalState] per key — the twin's (max ts, n,
-  * violations) fold with event_id as the arrival order. */
-class CausalTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, CausalOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[CausalState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CausalState]("causal",
-      Encoders.product[CausalState], TTLConfig.NONE)
-
-  override def handleInputRows(uid: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[CausalOut] = {
-    var s = if (st.exists()) st.get()
-      else CausalState(Long.MinValue, 0L, 0L)
-    rows.toSeq.sortBy(_.event_id).foreach { e =>
-      val viol = if (s.n > 0 && e.ts_us < s.maxTsUs) 1L else 0L
-      s = CausalState(math.max(s.maxTsUs, e.ts_us), s.n + 1, s.viol + viol)
-    }
-    st.update(s)
-    Iterator.single(CausalOut(uid, s.n, s.viol))
-  }
-}
-
-/** [[StreamOps.momentsTws]]'s processor: ONE un-TTL'd
-  * ValueState[MomentsState] per key — exact BigInteger power sums as
-  * decimal strings through the product encoder (commutative fold, no
-  * sort), the twin's pinned IEEE combine at readout. */
-class MomentsTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, MomentsOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-  import java.math.BigInteger
-
-  @transient private var st: ValueState[MomentsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[MomentsState]("moments",
-      Encoders.product[MomentsState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[MomentsOut] = {
-    var n = 0L
-    var s1 = BigInteger.ZERO; var s2 = BigInteger.ZERO
-    var s3 = BigInteger.ZERO; var s4 = BigInteger.ZERO
-    if (st.exists()) {
-      val s = st.get()
-      n = s.n
-      s1 = new BigInteger(s.s1); s2 = new BigInteger(s.s2)
-      s3 = new BigInteger(s.s3); s4 = new BigInteger(s.s4)
-    }
-    rows.foreach { e =>
-      val c = BigDecimal(e.value)
-        .setScale(2, BigDecimal.RoundingMode.HALF_UP)
-        .underlying.unscaledValue
-      val c2 = c.multiply(c)
-      n += 1L
-      s1 = s1.add(c); s2 = s2.add(c2)
-      s3 = s3.add(c2.multiply(c)); s4 = s4.add(c2.multiply(c2))
-    }
-    st.update(MomentsState(n, s1.toString, s2.toString,
-      s3.toString, s4.toString))
-    val nD = n.toDouble
-    val (d1, d2, d3, d4) =
-      (s1.doubleValue, s2.doubleValue, s3.doubleValue, s4.doubleValue)
-    val m2 = (nD * d2 - d1 * d1) / (nD * nD)
-    val m3 = (nD * nD * d3 - 3.0 * nD * d1 * d2 + 2.0 * d1 * d1 * d1) /
-      (nD * nD * nD)
-    val m4 = (nD * nD * nD * d4 - 4.0 * nD * nD * d1 * d3 +
-      6.0 * nD * d1 * d1 * d2 - 3.0 * d1 * d1 * d1 * d1) /
-      (nD * nD * nD * nD)
-    val ok = n > 1 && m2 > 0
-    Iterator.single(MomentsOut(user, n, d1 / nD, m2,
-      if (ok) Some(m3 / (m2 * math.sqrt(m2))) else None,
-      if (ok) Some(m4 / (m2 * m2) - 3.0) else None))
-  }
-}
-
-/** [[StreamOps.bitmaskTws]]'s processor: ONE un-TTL'd
-  * ValueState[BitmaskState] per key — the twin's OR∕XOR hour-bit
-  * fold (commutative AND associative: any order, any split). */
-class BitmaskTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, BitmaskOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[BitmaskState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[BitmaskState]("bits",
-      Encoders.product[BitmaskState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[BitmaskOut] = {
-    var s = if (st.exists()) st.get() else BitmaskState(0L, 0L, 0L)
-    rows.foreach { e =>
-      val bit = 1L << ((e.ts_us % 86400000000L) / 3600000000L)
-      s = BitmaskState(s.orMask | bit, s.xorMask ^ bit, s.n + 1L)
-    }
-    st.update(s)
-    Iterator.single(BitmaskOut(user, s.orMask, s.xorMask, s.n,
-      java.lang.Long.bitCount(s.orMask)))
-  }
-}
-
-/** [[StreamOps.timeGapTws]]'s processor: ONE TTL'd
-  * ValueState[TimeGapState] per key — the twin's one-long state; an
-  * expired key's next event emits no cross-idle gap (cold start). */
-class TimeGapTwsProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, TimeGapOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[TimeGapState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[TimeGapState]("lastts",
-      Encoders.product[TimeGapState], TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[TimeGapOut] = {
-    var last: Option[Long] = if (st.exists()) Some(st.get().lastUs) else None
-    val out = Seq.newBuilder[TimeGapOut]
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      last.foreach(l => out += TimeGapOut(user, e.event_type, e.ts_us - l))
-      last = Some(e.ts_us)
-    }
-    last.foreach(l => st.update(TimeGapState(l)))
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.newretTws]]'s processor: ONE un-TTL'd
-  * ValueState[NewretState] per key — the twin's (firstDay, lastDay)
-  * pair; first-day is a lifetime fact, never expired. */
-class NewretTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, NewretOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[NewretState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[NewretState]("newret",
-      Encoders.product[NewretState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[NewretOut] = {
-    var s = if (st.exists()) st.get()
-      else NewretState(Long.MinValue, Long.MinValue)
-    val out = Seq.newBuilder[NewretOut]
-    rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-      val day = Math.floorDiv(e.ts_us, 86400000000L)
-      if (day != s.lastDay) {
-        val isNew = if (s.firstDay == Long.MinValue) 1 else 0
-        out += NewretOut(user, day * 86400000000L, isNew)
-        s = NewretState(
-          if (s.firstDay == Long.MinValue) day else s.firstDay, day)
-      }
-    }
-    st.update(s)
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.lifetimeTws]]'s processor: ONE un-TTL'd
-  * ValueState[LifetimeState] per key — the twin's min∕max fold,
-  * upserting only on growth. */
-class LifetimeTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, LifetimeOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[LifetimeState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[LifetimeState]("lifetime",
-      Encoders.product[LifetimeState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[LifetimeOut] = {
-    val days = rows.map(e => Math.floorDiv(e.ts_us, 86400000000L)).toSeq
-    if (days.isEmpty) Iterator.empty
-    else {
-      val prev = if (st.exists()) Option(st.get()) else None
-      val nf = math.min(prev.map(_.firstDay).getOrElse(Long.MaxValue),
-        days.min)
-      val nl = math.max(prev.map(_.lastDay).getOrElse(Long.MinValue),
-        days.max)
-      val changed = prev.forall(p => p.firstDay != nf || p.lastDay != nl)
-      st.update(LifetimeState(nf, nl))
-      if (changed)
-        Iterator.single(LifetimeOut(user, nf * 86400000000L, nl - nf))
-      else Iterator.empty
-    }
-  }
-}
-
-/** [[StreamOps.pitTws]]'s processor: ONE un-TTL'd ValueState[PitState]
-  * per key — the twin's (attr, run-start) row; expiry would
-  * NULL-enrich facts wrongly (the scd2 reasoning). */
-class PitTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, PitOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[PitState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[PitState]("pit",
-      Encoders.product[PitState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[PitOut] = {
-    var cur: Option[PitState] = if (st.exists()) Some(st.get()) else None
-    val out = Seq.newBuilder[PitOut]
-    rows.toSeq
-      .sortBy(e => (e.ts_us, e.event_type == "purchase", e.event_id))
-      .foreach { e =>
-        if (e.event_type == "purchase")
-          out += PitOut(user, e.event_id, e.ts_us,
-            cur.map(_.attr), cur.map(_.fromUs),
-            cur.map(e.ts_us - _.fromUs))
-        else if (!cur.exists(_.attr == e.event_type))
-          cur = Some(PitState(e.event_type, e.ts_us))
-      }
-    cur.foreach(st.update)
-    out.result().iterator
-  }
-}
-
-/** [[StreamOps.windowTopkTws]]'s processor: ONE
-  * ValueState[TopkTwsState] per tumbling window — the twin's
-  * user→scaled-sum map flattened to sorted parallel Seqs (the TWS
-  * Avro state encoding rejects MapType — TopkTwsState's scaladoc);
-  * exact scaled-long ranking, the twin verbatim. */
-class WindowTopkTwsProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, TopkOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[TopkTwsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[TopkTwsState]("topk",
-      Encoders.product[TopkTwsState], TTLConfig.NONE)
-
-  override def handleInputRows(winUs: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[TopkOut] = {
-    val m = collection.mutable.Map.empty[Long, Long]
-    var n = 0L
-    if (st.exists()) {
-      val s = st.get()
-      m ++= s.users.iterator.zip(s.sums.iterator)
-      n = s.n
-    }
-    rows.foreach { e =>
-      m(e.user_id) = m.getOrElse(e.user_id, 0L) +
-        StreamOps.scaled4(e.value)
-      n += 1L
-    }
-    val flat = m.toSeq.sortBy(_._1)
-    st.update(TopkTwsState(flat.map(_._1), flat.map(_._2), n))
-    m.toSeq.sortBy { case (u, s) => (-s, u) }.take(k).zipWithIndex
-      .map { case ((u, s), i) =>
-        TopkOut(winUs, i + 1, u,
-          BigDecimal(java.math.BigDecimal.valueOf(s, 4)).toDouble, n)
-      }.iterator
-  }
-}
-
-/** [[StreamOps.ksDriftTws]]'s processor: ONE un-TTL'd
-  * ValueState[DriftTwsState] per group — the twin's distinct-value
-  * histogram flattened to sorted parallel Seqs (the MapType
-  * constraint above); the identical IEEE KS program at each readout. */
-class KsDriftTwsProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, DriftRowIn, DriftOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var st: ValueState[DriftTwsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[DriftTwsState]("hist",
-      Encoders.product[DriftTwsState], TTLConfig.NONE)
-
-  override def handleInputRows(grp: String, rows: Iterator[DriftRowIn],
-                               tv: TimerValues): Iterator[DriftOut] = {
-    val m = collection.mutable.Map.empty[Long, (Long, Long)]
-    if (st.exists()) {
-      val s = st.get()
-      s.vs.indices.foreach(i => m(s.vs(i)) = ((s.ca(i), s.cb(i))))
-    }
-    rows.foreach { r =>
-      val (ca, cb) = m.getOrElse(r.v, (0L, 0L))
-      m(r.v) = if (r.a) (ca + 1L, cb) else (ca, cb + 1L)
-    }
-    val flat = m.toSeq.sortBy(_._1)
-    st.update(DriftTwsState(flat.map(_._1), flat.map(_._2._1),
-      flat.map(_._2._2)))
-    val na = m.valuesIterator.map(_._1).sum
-    val nb = m.valuesIterator.map(_._2).sum
-    if (na == 0L || nb == 0L) Iterator.single(DriftOut(grp, None, None, na, nb))
-    else {
-      var cumA = 0L; var cumB = 0L
-      var best = Double.NegativeInfinity; var bestAt = 0L
-      m.keysIterator.toSeq.sorted.foreach { v =>
-        val c = m(v); cumA += c._1; cumB += c._2
-        val gap = math.abs(cumA.toDouble / na.toDouble
-          - cumB.toDouble / nb.toDouble)
-        if (gap > best) { best = gap; bestAt = v }
-      }
-      Iterator.single(DriftOut(grp, Some(best), Some(bestAt), na, nb))
-    }
-  }
-}
-
-/** [[StreamOps.ttlCount]]'s processor: ONE TTL'd ValueState row per key.
-  * The TTL is enforced by the state store itself — `exists()` answers
-  * false once the row's processing-time TTL has lapsed, with no timer
-  * or eviction code here. */
-class TtlCountProcessor(ttl: java.time.Duration)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, TtlCountOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var n: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig(ttl))
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[TtlCountOut] = {
-    val next = (if (n.exists()) n.get() else 0L) + rows.size
-    n.update(next)
-    Iterator.single(TtlCountOut(user, next))
-  }
-}
-
-/** [[StreamOps.gapAuditTws]]'s processor: ONE ValueState row per key —
-  * the same state shape the flatMapGroupsWithState twin keeps. */
-class GapAuditProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, GapOut] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var state: ValueState[GapState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[GapState]("gap",
-      Encoders.product[GapState], TTLConfig.NONE)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[GapOut] = {
-    val s = rows.toSeq.sortBy(_.event_id)
-      .foldLeft(if (state.exists()) state.get() else StreamOps.gapZero)(
-        StreamOps.gapStep)
-    state.update(s)
-    Iterator.single(GapOut(user, s.n, s.nGaps, s.missing, s.maxGap))
-  }
-}
-
-/** [[StreamOps.gapAuditFrom]]'s processor: [[GapAuditProcessor]] plus
-  * the initial-state hook — `handleInitialState` runs once per
-  * bootstrapped key (before any live rows) and seeds the same
-  * ValueState the live fold then continues from. */
-class GapAuditInitProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[Long, Event, GapOut, GapState] {
-  import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-  import org.apache.spark.sql.Encoders
-
-  @transient private var state: ValueState[GapState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[GapState]("gap",
-      Encoders.product[GapState], TTLConfig.NONE)
-
-  override def handleInitialState(user: Long, init: GapState,
-                                  tv: TimerValues): Unit =
-    state.update(init)
-
-  override def handleInputRows(user: Long, rows: Iterator[Event],
-                               tv: TimerValues): Iterator[GapOut] = {
-    val s = rows.toSeq.sortBy(_.event_id)
-      .foldLeft(if (state.exists()) state.get() else StreamOps.gapZero)(
-        StreamOps.gapStep)
-    state.update(s)
-    Iterator.single(GapOut(user, s.n, s.nGaps, s.missing, s.maxGap))
   }
 }
 
