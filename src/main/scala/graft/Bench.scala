@@ -13,9 +13,9 @@ package graft
   * showed 2–8× inflation on UNTOUCHED trivial queries vs r4), and
   * min-of-k reports the code's cost rather than the host's worst
   * moment — but only if the k attempts don't share the throttle
-  * window, hence the pass separation. All runs start cache-cold
-  * (clearCache between), so the min still pays the query's own
-  * scan/shuffle/codegen work.
+  * window, hence the pass separation. All runs start cache-cold (each
+  * query runs in its own owning scope), so the min still pays the
+  * query's own scan/shuffle/codegen work.
   */
 object Bench {
   private[graft] def jstr(s: String): String =
@@ -81,27 +81,25 @@ object Bench {
     def once(name: String,
              fn: (org.apache.spark.sql.SparkSession, String) =>
                org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          errors ::= name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-          System.err.println(s"[bench] $name FAILED: $e")
-          false
-        }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // Cache hygiene between runs/queries (outside the timed window,
-      // so eviction cost is never charged to the measured query).
-      // Two sweeps (r22): clearCache drops SQL-cached intermediates;
-      // sweepRddBlocks drops the RDD-level checkpoint blocks the
-      // iterative engines pin per round, which clearCache never
-      // reaches (Graft.sweepRddBlocks scaladoc — the r21 bench showed
-      // untouched queries regressing up to 3x at 32 threads from the
-      // accumulated blocks). Methodology is otherwise unchanged: every
-      // query still starts cache-cold and pays its own scan/shuffle.
-      spark.catalog.clearCache()
-      Graft.sweepRddBlocks(spark)
-      (elapsed, ok)
+      // Cache hygiene between runs/queries: the query runs in an owning
+      // scope whose close — after `elapsed` is taken, so release cost is
+      // never charged to the measured query — frees every cache and
+      // checkpoint block the query made (blocking; Scope.owning doc —
+      // the r21 bench showed untouched queries regressing up to 3x at 32
+      // threads from accumulated checkpoint blocks). Methodology is
+      // otherwise unchanged: every query still starts cache-cold and
+      // pays its own scan/shuffle.
+      Graft.cacheScoped(spark) {
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            errors ::= name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+            System.err.println(s"[bench] $name FAILED: $e")
+            false
+          }
+        ((System.nanoTime() - t0) / 1e9, ok)
+      }
     }
     // INTERLEAVED min-of-2 (method "m2ci", since r7): a full pass over
     // every query, then a second full pass, min per query. The r6 form

@@ -25,47 +25,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *  - [[graft.streaming.StreamOps]] — every streaming builder takes a
   *    Dataset/DataFrame (batch or stream) already.
   *
-  * Cache contract: [[nearDupPairs]] / [[containPairs]] (via the
-  * AllPairs/containment helpers),
-  * [[simDupPairs]] (the signature table), [[embDupPairs]] (the prepared
-  * embedding table), [[ivfSearch]] (the centroid-assignment table),
-  * [[heavyHitters]] / [[topKFrequent]] (the per-partition summary
-  * table), and
-  * [[graft.operators.Percentiles.contSelect]] (the range-partitioned
-  * pre-agg; the empty-input branch self-releases) persist
-  * intermediates — the same lifecycle note as [[SparkEntry]]:
-  * release with `spark.catalog.clearCache()` (or targeted unpersist)
-  * after materializing the result in a long-lived session.
+  * Materialization: operators cache and cut their multi-consumer
+  * intermediates through [[Scope]] (e.g. [[nearDupPairs]]' token table,
+  * [[simDupPairs]]' signature table, [[heavyHitters]]' partition
+  * summaries, the iterative engines' per-round state). Run a result's
+  * materialization inside [[cacheScoped]] (or [[runScoped]]) and
+  * everything the operator made is freed when it returns; outside a
+  * scope the caches are plain persists, released by
+  * `spark.catalog.clearCache()`.
   */
 object Graft {
-
-  /** Persist + EAGERLY materialize a multi-consumer intermediate.
-    *
-    * `persist()` alone is lazy: when the downstream plan fans the
-    * cached frame into ≥ 2 INDEPENDENT subtrees (a normalizer
-    * aggregate broadcast beside the main projection, union branches,
-    * a self-join's two sides under separate exchanges), AQE submits
-    * those stages concurrently and each one that reaches the
-    * not-yet-populated InMemoryRelation recomputes the whole subtree
-    * — the r15 cache race (q_graph_hits 6.8→44.6 s, q_llm_clustco
-    * 2.1→17.7 s driver-measured, identical code). One bounded action
-    * here fills the cache BEFORE the fan-out, so every consumer is a
-    * cache read; the count's scan is work the first consumer would
-    * have paid anyway, making the eager form cost-neutral when the
-    * race is lost and strictly cheaper when it is won. The
-    * `q_graph_trusspeel` per-round count and ConnectedComponents'
-    * `localCheckpoint(eager = true)` are the two standing precedents;
-    * this is the reusable third. At 100 TB the stakes invert from
-    * "seconds" to "N extra full corpus scans" — eager is the only
-    * plan you'd want.
-    *
-    * Builders calling this run one Spark job at build time (the
-    * sanctioned trusspeel pattern — bounded, documented here once). */
-  private[graft] def eager(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    p.count()
-    p
-  }
 
   /** Exact content dedup over any (id, content) pair: one row per input
     * row with its content hash, cluster size, and the cluster keeper
@@ -124,10 +93,8 @@ object Graft {
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    blockCols: Seq[String], tNum: Int, tDen: Int): DataFrame = {
     val toks = array_distinct(split(col(textCol), " "))
-    val docs = df
-      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ toks.as("tk"): _*)
-      .persist()
-    docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val docs = Scope.eager(df
+      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ toks.as("tk"): _*))
     val feats = docs.select(
       (col("doc_id") +: blockCols.map(col)) :+
         size(col("tk")).cast("long").as("sz") :+ explode(col("tk")).as("feat"): _*)
@@ -170,10 +137,8 @@ object Graft {
                    blockCols: Seq[String], tNum: Int, tDen: Int): DataFrame = {
     graft.functions.OverlapCount.register(df.sparkSession) // idempotent
     val toks = array_distinct(split(col(textCol), " "))
-    val docs = df
-      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ toks.as("tk"): _*)
-      .persist()
-    docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val docs = Scope.eager(df
+      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ toks.as("tk"): _*))
     val feats = docs.select(
       (col("doc_id") +: blockCols.map(col)) :+
         size(col("tk")).cast("long").as("sz") :+ explode(col("tk")).as("feat"): _*)
@@ -772,75 +737,31 @@ object Graft {
     graft.operators.QuantileSketch.quantilesBy(df, groupCols, valueCol,
       k, qs)
 
-  /** Run `body` in a persist SCOPE (r13): cache entries created inside
-    * it — the engine's internal multi-consumer persist()s the caller
-    * never holds a reference to — are uncached (blocking) on the way
-    * out, while cache entries that existed before are left untouched.
-    * This is the long-lived-embedder alternative to the documented
-    * runner contract (Verify/Bench call `clearCache()` after every
-    * query, which would also evict the HOST application's caches).
-    * `body` must MATERIALIZE whatever it needs (collect/write/count)
-    * before returning — a lazy DataFrame escaping the scope recomputes
-    * its formerly-persisted intermediates on later actions (correct,
-    * just uncached). */
-  def cacheScoped[A](spark: SparkSession)(body: => A): A = {
-    val before = org.apache.spark.sql.graftbridge.CacheBridge.snapshot(spark)
-    try body
-    finally org.apache.spark.sql.graftbridge.CacheBridge
-      .uncacheDelta(spark, before)
-  }
+  /** Run `body` in an owning [[Scope]]: every cache and cut the
+    * engine makes inside it — its internal multi-consumer intermediates,
+    * which the caller never holds a reference to, and the iterative
+    * engines' checkpoint blocks — is freed (blocking) on the way out,
+    * while caches that existed before, or that the caller made outside
+    * the engine's verbs, are left untouched. `body` must MATERIALIZE
+    * whatever it needs (collect/write/count) before returning: a lazy
+    * DataFrame escaping the scope recomputes its formerly cached
+    * intermediates, and fails on a freed cut. */
+  def cacheScoped[A](spark: SparkSession)(body: => A): A = Scope.owning(body)
 
   /** [[cacheScoped]] loaned over one graded query: builds
     * `SparkEntry.queries(name)`, hands it to `use` for materialization,
-    * then drops every cache entry the query created — zero residual
-    * cached RDDs from the engine, host caches intact (pinned in
+    * then frees everything the query made — zero residual persisted
+    * RDDs, checkpoint blocks included, host caches intact (pinned in
     * CacheHygieneSuite). */
   def runScoped[A](name: String, spark: SparkSession, sfDir: String)
                   (use: DataFrame => A): A =
     cacheScoped(spark)(use(graft.SparkEntry.queries(name)(spark, sfDir)))
 
-  /** Release EVERY RDD-level persisted block in the session — the
-    * runner-side complement of `spark.catalog.clearCache()` (r22).
-    * The iterative engines truncate per-round lineage with
-    * RDD-level local checkpoints (PlanBridge.eagerCut /
-    * Dataset.localCheckpoint), whose blocks the catalog sweep never
-    * reaches: they are normally reclaimed by the ContextCleaner only
-    * after GC drops the last reference. A loop-runner that executes
-    * hundreds of queries back-to-back (Bench, Verify) accumulates
-    * those MEMORY_AND_DISK blocks faster than GC releases them and
-    * the leftovers squeeze execution memory for whatever runs next —
-    * the r21 bench measured untouched queries regressing up to 3x at
-    * 32 threads from exactly this. Call between queries, after the
-    * previous query's action has completed; the next query rebuilds
-    * its state from scratch, so nothing can still need the blocks.
-    * BLOCKING (r22 driver-bench finding): an async sweep returns
-    * before the BlockManager removals run, so the removal work and its
-    * GC churn land INSIDE the next query's timed window — two
-    * untouched sub-second queries drifted +0.7-1.2 s until the sweep
-    * paid for removal in ITS caller's (untimed) slot. */
-  def sweepRddBlocks(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.valuesIterator
-      .foreach(_.unpersist(blocking = true))
-
-  /** Persist `df` hash-partitioned AND sorted by `key` — the join-side
-    * discipline for the iterative engines (r22). An engine joins this
-    * frame EVERY round on `key`; a cache that already carries
-    * HashPartitioning(key) + ascending order lets each round's
-    * sort-merge join reuse the one exchange and the one sort instead of
-    * re-shuffling and re-sorting the big side per round (guide §2.4 —
-    * ProfJobs measured an 11 MB edge re-exchange per round/level in the
-    * r21 Brandes sweeps). The width is EXPLICIT so AQE cannot coalesce
-    * the cached layout below the join parallelism the rounds need (the
-    * per-round state is byte-tiny but CPU-heavy — bytes-based
-    * coalescing picks 1-2 partitions and serializes the work); it reads
-    * the session's shuffle width, the deployment's own scale knob,
-    * never a local constant. Caller materializes (count) and the
-    * runner's clearCache releases it. */
-  private[graft] def keyedCache(df: DataFrame, keys: String*): DataFrame = {
-    val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ks = keys.map(col)
-    df.repartition(width, ks: _*).sortWithinPartitions(ks: _*).persist()
-  }
+  /** Release EVERY persisted RDD in the session, blocking, whoever made
+    * it ([[Scope.sweep]]) — a session-wide hammer for a harness that
+    * wants a clean slate between runs. The engine's own runners rely on
+    * [[cacheScoped]], which frees exactly what each query made. */
+  def sweepRddBlocks(spark: SparkSession): Unit = Scope.sweep(spark)
 
   /** Spread a too-narrow BATCH scan across the session's cores before a
     * CPU-heavy per-row map (r22, guide §2.5's unsplittable-input fix).
@@ -864,7 +785,7 @@ object Graft {
 
   /** Broadcast hint gated on a frame's EXACT materialized size (r22):
     * the iterative engines know the true row count of a
-    * PlanBridge.eagerCut state table the moment it materializes, so the
+    * Scope.cut state table the moment it materializes, so the
     * build-side decision can be made from real numbers instead of the
     * planner's 10 MB default over an estimate (guide §3.1 — "use an
     * explicit broadcast hint when you know a side is small"). Measured
@@ -951,9 +872,8 @@ object Graft {
   /** Per-group keyword extraction over any (group, text) corpus
     * (graded q_text_keyness's engine, r14): top words over-represented
     * in each group vs the rest, by exact-integer Haldane-smoothed odds
-    * ratio. Persists its (group, word) count table — callers should
-    * clearCache (the SparkEntry cache contract) or wrap in
-    * [[runScoped]]. */
+    * ratio. Caches its (group, word) count table — wrap in
+    * [[cacheScoped]] to release it. */
   def keywords(df: DataFrame, groupCol: String,
                textCol: String): DataFrame =
     graft.queries.TextOps.keynessOn(
@@ -1047,8 +967,8 @@ object Graft {
   /** Theil-Sen robust trend over any keyed timestamped stream (graded
     * q_event_trend's engine, r14): per key, the discrete lower-median
     * of all pairwise slopes of the daily-count series — 29%-breakdown
-    * robust where OLS chases outliers. Persists its day-grain table —
-    * callers should clearCache or wrap in [[runScoped]]. */
+    * robust where OLS chases outliers. Caches its day-grain table —
+    * wrap in [[cacheScoped]] to release it. */
   def trendSlope(df: DataFrame, keyCol: String, tsCol: String): DataFrame =
     graft.queries.EventOps.trendOn(
       df.select(col(keyCol).as("event_type"), col(tsCol).as("ts")))
@@ -1403,7 +1323,7 @@ object Graft {
     * edges are canonicalized (self-loops dropped, duplicates + reverse
     * orientations collapsed). One row: n_nodes, n_edges, n_wedges,
     * n_triangles, transitivity = 3·tri∕wedges (6dp, NULL if no wedge).
-    * Persists intermediates — callers clearCache or [[runScoped]]. */
+    * Caches intermediates — wrap in [[cacheScoped]] to release them. */
   def triangleCensus(edges: DataFrame, srcCol: String,
                      dstCol: String): DataFrame =
     graft.queries.GraphOps.triangleStatsOn(canonEdges(edges, srcCol, dstCol))

@@ -50,7 +50,7 @@ object LocalSession {
     muteKnownBenignWarn("org.apache.spark.sql.execution.window",
       "No Partition Defined")
     // The iterative engines deliberately unpersist DEAD local-checkpoint
-    // blocks (PlanBridge.free / Graft.sweepRddBlocks — the r22 block-
+    // blocks (Scope.release and the scope close — the r22 block-
     // lifecycle fix); Spark WARNs once per freed RDD that the truncated
     // lineage cannot recompute, which is exactly the point. Hundreds of
     // repeats per bench run otherwise flood the 2000-char output tail

@@ -18,11 +18,10 @@ object PlanDump {
     Files.createDirectories(outDir)
     val spark = LocalSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val formatted = Graft.runScoped(name, spark, sf)(
+        _.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), formatted)
-      spark.catalog.clearCache()
       println(s"[plandump] $name -> ${name}_$suffix.txt")
     }
     spark.stop()

@@ -28,15 +28,13 @@ object Plans {
     sb ++= "are enforced as tests in `PlanAssertionsSuite`; this file is the\n"
     sb ++= "human-readable audit trail.\n"
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      // scoped: an earlier query's caches would otherwise substitute
+      // InMemoryTableScans into later queries' dumps and the audit
+      // would show cache topology instead of each query's own plan
+      val formatted = Graft.runScoped(name, spark, sf)(
+        _.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
       sb ++= s"\n## $name\n\n```\n$formatted```\n"
-      // the SparkEntry cache contract: without this, an earlier
-      // query's persist() substitutes InMemoryTableScans into later
-      // queries' dumps and the audit shows cache topology instead of
-      // each query's own plan
-      spark.catalog.clearCache()
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"[plans] wrote PLANS.md (${headline.size} queries)")

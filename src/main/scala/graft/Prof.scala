@@ -13,11 +13,12 @@ object Prof {
     SparkEntry.queries("q_scan")(spark, sfDir).count()
     names.foreach { n =>
       (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).count()
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache() // outside the timed window
-        Graft.sweepRddBlocks(spark) // the Bench runner-side pair (r22)
+        // the scope's release runs outside the timed window
+        val elapsed = Graft.cacheScoped(spark) {
+          val t0 = System.nanoTime()
+          SparkEntry.queries(n)(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }
         println(f"[prof] $n%-20s run$i $elapsed%8.3f s")
       }
     }

@@ -50,11 +50,11 @@ object ProfJobs {
     SparkEntry.queries("q_scan")(spark, sfDir).count()
     Thread.sleep(500); jobs.synchronized { jobs.clear(); byId.clear(); stageToJob.clear() }
     args.foreach { n =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      Graft.sweepRddBlocks(spark) // the Bench runner-side pair (r22)
+      val wall = Graft.runScoped(n, spark, sfDir) { df =>
+        val t0 = System.nanoTime()
+        df.count()
+        (System.nanoTime() - t0) / 1e9
+      }
       Thread.sleep(800) // let listener events drain
       jobs.synchronized {
         println(f"%n=== $n wall=$wall%.3f s jobs=${jobs.size} ===")

@@ -88,10 +88,12 @@ object ScaleRehearsal {
       })
     def time(label: String, n: Long)(body: => Long): Unit = {
       Thread.sleep(300); shuffleBytes.set(0L)
-      val t0 = System.nanoTime()
-      val rows = body
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      // the scope frees the probe's caches and cuts after the timing
+      val (rows, secs) = Graft.cacheScoped(spark) {
+        val t0 = System.nanoTime()
+        val rows = body
+        (rows, (System.nanoTime() - t0) / 1e9)
+      }
       Thread.sleep(1000) // drain the listener bus before reading
       val mb = shuffleBytes.get / 1e6
       println(f"""{"probe":"$label","rows":$n,"secs":${"%.2f".formatLocal(java.util.Locale.ROOT, secs)},"out":$rows,"shuffle_mb":${"%.1f".formatLocal(java.util.Locale.ROOT, mb)}}""")
@@ -163,7 +165,6 @@ object ScaleRehearsal {
         val r = graft.queries.GraphOps.assortOn(edges).collect().head
         require(r.getAs[Double]("assort") == -1.0,
           s"planted star-forest assort != -1: $r")
-        spark.catalog.clearCache()
         r.getAs[Long]("m_edges")
       }
       // Chunk-level dedup (r14): 128-byte payloads = 8 fixed 16-byte
@@ -206,12 +207,10 @@ object ScaleRehearsal {
       // 9.6M → 96M total pairs.
       if (want("event_trend")) time("event_trend", n) {
         val days = math.sqrt(n.toDouble).toLong
-        val daily = spark.range(32L * days).select(
+        val daily = Scope.eager(spark.range(32L * days).select(
           concat(lit("t"), pmod(col("id"), lit(32L))).as("event_type"),
           expr("id div 32").as("dd"),
-          expr("5 + (id div 32) * 2").as("n")).repartition(32)
-          .persist()
-        daily.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+          expr("5 + (id div 32) * 2").as("n")).repartition(32))
         val pairs = daily.select(col("event_type"), col("dd").as("d1"),
             col("n").as("n1"))
           .join(daily.select(col("event_type"), col("dd").as("d2"),
@@ -233,7 +232,6 @@ object ScaleRehearsal {
         require(meds.length == 32 &&
           meds.forall(_.getAs[Double]("slope") == 2.0),
           s"planted perfect-line trend missed: ${meds.take(3).mkString}")
-        spark.catalog.clearCache()
         meds.length.toLong
       }
       if (want("neardup_pairs")) time("neardup_pairs", n) {
@@ -243,12 +241,10 @@ object ScaleRehearsal {
         // the q_llm_ngram shape on the synthetic corpus: 3-gram
         // shingles, prefix filter at t = 1/5, codegen Jaccard verify
         graft.functions.JaccardStr.register(spark)
-        val docs = synthDocs(n)
+        val docs = Scope.eager(synthDocs(n)
           .withColumn("tk", split(col("text"), " "))
           .select(col("doc_id"),
-            graft.queries.LlmOps.shinglesCol(col("tk")).as("g"))
-          .persist()
-        docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+            graft.queries.LlmOps.shinglesCol(col("tk")).as("g")))
         val feats = docs.select(col("doc_id"),
           size(col("g")).cast("long").as("sz"), explode(col("g")).as("feat"))
         graft.queries.LlmOps.jaccardCandidates(feats, Nil, 1, 5)
@@ -349,14 +345,13 @@ object ScaleRehearsal {
         Graft.keepBest(pairs(), kbScores, "doc_id", "sc").count()
       }
       if (want("compose_shared")) time("compose_shared", n) {
-        val pairs = pairCols(
-          Graft.nearDupPairs(synthDocs(n), "doc_id", "text", Nil, 4, 5))
-          .persist()
-        pairs.count() // one materialization feeds all three consumers
+        // one materialization feeds all three consumers
+        val pairs = Scope.eager(pairCols(
+          Graft.nearDupPairs(synthDocs(n), "doc_id", "text", Nil, 4, 5)))
         graft.operators.ConnectedComponents.run(pairs).count()
         triCount(pairs)
         val out = Graft.keepBest(pairs, kbScores, "doc_id", "sc").count()
-        pairs.unpersist()
+        Scope.release(pairs)
         out
       }
       // Pipeline composition (r11, verdict item 8): the graded
@@ -912,19 +907,18 @@ object ScaleRehearsal {
               (1 to 6).map(j => concat(lit("w"),
                 pmod(xxhash64(col("id") * 16L + j), lit(n))))): _*)
             .as("text"))
-        val ss = srcDocs
+        val ss = Scope.eager(srcDocs
           .withColumn("tk", split(col("text"), " "))
           .select(col("source"), explode(
             graft.queries.LlmOps.shinglesCol(col("tk"))).as("sh"))
-          .distinct().persist()
-        ss.count() // eager: both self-join sides read it
+          .distinct()) // both self-join sides read it
         val inter = ss
           .join(ss.select(col("source").as("sb"), col("sh").as("sh2")),
             col("sh") === col("sh2") && col("source") < col("sb"))
           .groupBy(col("source"), col("sb"))
           .agg(count(lit(1)).as("n_inter"))
           .collect()
-        ss.unpersist()
+        Scope.release(ss)
         require(inter.length == 190
             && inter.forall(_.getAs[Long]("n_inter") >= 1L),
           s"srcsim exact-audit bound violated at n=$n: ${inter.length} pairs")

@@ -10,13 +10,14 @@ import graft.queries._
   * semantics are SQL-expressible. Column names, orderings, and numeric
   * determinism follow the contract in SURVEY §7.4 via [[Det]].
   *
-  * Cache contract: some query builders `persist()` multi-consumer
-  * intermediates (LSH posting/signature/prefix tables, IVF assignments).
-  * A returned DataFrame is lazy, so the builder cannot unpersist after
-  * its own action — callers that loop over queries should run
-  * `spark.catalog.clearCache()` between executions (Bench, Verify, and
-  * Prof all do) or unpersist via `spark.sharedState.cacheManager` when
-  * embedding a single query long-term.
+  * Materialization: query builders cache and cut multi-consumer
+  * intermediates through [[Scope]] (LSH posting/signature/prefix tables,
+  * IVF assignments, the iterative engines' per-round state). A returned
+  * DataFrame is lazy, so the builder cannot free them after its own
+  * action: run each query through [[Graft.runScoped]] (or materialize
+  * it inside [[Graft.cacheScoped]]), which frees exactly what the query
+  * made once the body returns — the runners (Bench, Verify, Prof) all
+  * do.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.

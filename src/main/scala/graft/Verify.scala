@@ -21,13 +21,12 @@ object Verify {
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n)) }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // the scope frees the query's caches and cuts once it is written
+      try Graft.cacheScoped(spark)(fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache() // drop per-query persist()ed intermediates
-      Graft.sweepRddBlocks(spark) // and the engines' RDD-level checkpoint blocks
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

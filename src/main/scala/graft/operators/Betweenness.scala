@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Pivot-sampled Brandes betweenness (Brandes 2001's dependency
   * accumulation, restricted to a bounded deterministic pivot set — the
   * sampling estimator of Brandes & Pich 2007): the last classic
@@ -77,10 +79,10 @@ object Betweenness {
     // ONCE so the per-round sort-merge join re-shuffles only the state
     // side (ProfJobs r22: the unkeyed cache re-exchanged 11 MB of edges
     // per round at sf0.1)
-    val e = graft.Graft.keyedCache(
+    // every round's join reads it
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "src")
-    e.count() // eager: every round's join reads it
-    forwardKeyed(e, seeds, rounds)
+    forwardKeyed(e, seeds, rounds)._1
   }
 
   /** [[forward]] over an ALREADY keyed-cached-and-materialized edge
@@ -88,20 +90,21 @@ object Betweenness {
     * share ONE keyed cache between the seed ranking, this sweep, and
     * [[dependenciesKeyed]] — the r22 interim shape built the same
     * keyed cache twice (once per sweep) on top of the caller's eager
-    * cache. */
+    * cache. Returns the settled table and its per-round cuts, which the
+    * caller releases once nothing lazy reads the table. */
   private[graft] def forwardKeyed(e: DataFrame, seeds: DataFrame,
-                                  rounds: Int): DataFrame = {
+                                  rounds: Int): (DataFrame, List[DataFrame]) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val dec = "decimal(38,0)"
-    import org.apache.spark.sql.graftbridge.PlanBridge.eagerCut
-    var (settled, frontierCount) = eagerCut(
+    var (settled, frontierCount) = Scope.cut(
       seeds.select(col("seed"), col("node"),
         lit(0).cast("long").as("d"), lit(1).cast(dec).as("sigma")))
     var frontier = settled
+    var cuts = List(settled)
     var r = 0
     while (frontierCount > 0 && r < rounds) {
       r += 1
-      val (nxt, c) = eagerCut(e
+      val (nxt, c) = Scope.cut(e
         .join(frontier
           .select(col("seed"), col("node").as("src"), col("sigma")),
           Seq("src"))
@@ -114,8 +117,9 @@ object Betweenness {
       frontierCount = c
       settled = settled.unionByName(nxt)
       frontier = nxt
+      cuts ::= nxt
     }
-    settled
+    (settled, cuts)
   }
 
   /** Backward sweep over a [[forward]] table: per (seed, node) the
@@ -133,16 +137,16 @@ object Betweenness {
   private[graft] def dependencies(edges: DataFrame,
                                   settled: DataFrame): DataFrame = {
     // keyed cache (r22): every level joins node === src — see forward
-    val e = graft.Graft.keyedCache(
+    // every level's join reads it (columnar — r21)
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "src")
-    e.count() // eager: every level's join reads it (columnar — r21)
-    dependenciesKeyed(e, settled)
+    dependenciesKeyed(e, settled)._1
   }
 
   /** [[dependencies]] over an ALREADY keyed-cached edge frame — see
-    * [[forwardKeyed]]. */
-  private[graft] def dependenciesKeyed(e: DataFrame,
-                                       settled: DataFrame): DataFrame = {
+    * [[forwardKeyed]]; returns the per-level cuts with the table. */
+  private[graft] def dependenciesKeyed(e: DataFrame, settled: DataFrame)
+      : (DataFrame, List[DataFrame]) = Scope {
     val spark = e.sparkSession
     val hdr = settled.agg(max(col("d")), max(col("sigma")),
       count(lit(1))).collect()(0)
@@ -165,6 +169,7 @@ object Betweenness {
         .add("seed", "long").add("node", "long")
         .add("dq", org.apache.spark.sql.types.DecimalType(38, 0)))
     var out = empty
+    var cuts = List.empty[DataFrame]
     var below = empty // dq of level lev+1
     var lev = maxD - 1
     while (lev >= 0) {
@@ -177,10 +182,10 @@ object Betweenness {
       // meet a ~5 MB build side. With exact rowCount attached the
       // planner broadcasts w when it truly is small and keeps SMJ when
       // it is not — the scale-correct decision both ways (the
-      // PlanBridge.eagerCut contract). Cost: one extra bounded action
+      // Scope.cut contract). Cost: one extra bounded action
       // per level; the cut is freed as soon as the level's dq
       // materializes.
-      val (wc, wn) = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+      val (wc, wn) = Scope.cut(
         settled.filter(col("d") === lev + 1)
           .join(below, Seq("seed", "node"), "left")
           .select(col("seed"), col("node").as("dst"),
@@ -190,7 +195,7 @@ object Betweenness {
       // just past the planner's 10 MB default, so without the hint the
       // probe still exchanged+sorted; past the env bound the SMJ stays
       val w = graft.Graft.bcastIfSmall(wc, wn)
-      val dl = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+      val dl = Scope.cut(
         settled.filter(col("d") === lev)
           .select(col("seed"), col("node"), col("sigma"))
           .join(e, col("node") === col("src"))
@@ -200,12 +205,13 @@ object Betweenness {
             "(sigma * (1000000 + dqw)) div sw")).as("dq"))
           .select(col("seed"), col("node"),
             col("dq").cast("decimal(38,0)").as("dq")))._1
-      org.apache.spark.sql.graftbridge.PlanBridge.free(wc)
+      Scope.release(wc)
       out = out.unionByName(dl)
+      cuts ::= dl
       below = dl
       lev -= 1
     }
-    out
+    (out, cuts)
   }
 
   /** The full estimator: top-`k` nodes by summed pivot dependency,
@@ -219,9 +225,8 @@ object Betweenness {
     // ONE keyed cache shared by the forward sweep, the dependency
     // sweep, and the node count (r22 — both sweeps previously built
     // their own copy of the same keyed edge cache)
-    val e = graft.Graft.keyedCache(
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "src")
-    e.count()
     pivotBetweennessKeyed(e, seeds, rounds, k)
   }
 
@@ -229,18 +234,19 @@ object Betweenness {
     * the graded registration shares its one keyed cache between the
     * top-degree seed ranking and this estimator. */
   private[graft] def pivotBetweennessKeyed(e: DataFrame, seeds: DataFrame,
-                                           rounds: Int, k: Int): DataFrame = {
-    val fw = forwardKeyed(e, seeds, rounds)
+                                           rounds: Int,
+                                           k: Int): DataFrame = Scope {
+    val (fw, fwCuts) = forwardKeyed(e, seeds, rounds)
     val nn = e.select(col("src").as("node")).distinct()
       .agg(count(lit(1)).as("n_nodes"))
     val npiv = seeds.select(col("seed")).distinct()
       .agg(count(lit(1)).as("n_pivots"))
-    val dep = dependenciesKeyed(e, fw)
-    // r22: dependencies ran its whole level loop eagerly (each level an
-    // eagerCut), so the forward table's per-round checkpoint pieces are
-    // dead the moment it returns — free them; dep's own pieces stay
-    // (the returned frame reads them lazily).
-    org.apache.spark.sql.graftbridge.PlanBridge.free(fw)
+    val dep = dependenciesKeyed(e, fw)._1
+    // dependencies ran its whole level loop eagerly (each level a cut),
+    // so the forward table's per-round pieces are dead the moment it
+    // returns — free them; dep's own pieces stay (the returned frame
+    // reads them lazily).
+    fwCuts.foreach(Scope.release)
     dep
       .filter(col("node") =!= col("seed"))
       .groupBy(col("node"))

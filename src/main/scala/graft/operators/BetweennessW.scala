@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Pivot-sampled WEIGHTED betweenness (r20) — [[Betweenness]] with σ
   * counted over MINIMAL-COST paths instead of fewest-hop paths: the
   * brokerage question on the affinity-cost graph that
@@ -68,7 +70,7 @@ object BetweennessW {
     * every node with ≥ 1 counted ≤`rounds`-edge DAG path. Also returns
     * the checkpointed DAG for the backward sweep. */
   private[graft] def forwardW(edges: DataFrame, seeds: DataFrame,
-                              rounds: Int): (DataFrame, DataFrame) = {
+                              rounds: Int): (DataFrame, DataFrame) = Scope {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val dec = "decimal(38,0)"
     // plain columnar persist (r21 form, RESTORED after an r22 A/B: the
@@ -76,21 +78,18 @@ object BetweennessW {
     // every step, so a keyed repartition+sort of the wide DAG tables
     // was pure added cost — the driver bench measured betweenness_w
     // 5.2 → 6.8 s with the keyed caches and recovered without them)
-    val e = edges.select(col("src"), col("dst"), col("cost"))
-      .persist()
-    e.count()
+    val e = Scope.eager(edges.select(col("src"), col("dst"), col("cost")))
     val d = Bfs.costFrom(e, seeds, rounds)
     // the minimal-cost DAG: edge kept iff it LIES ON a minimal route
-    val dag = d.select(col("seed"), col("node").as("src"),
+    // columnar (r21; see `e` for why not keyed)
+    val dag = Scope.eager(d.select(col("seed"), col("node").as("src"),
         col("d").as("dv"))
       .join(e, Seq("src"))
       .join(d.select(col("seed"), col("node").as("dst"),
         col("d").as("dw")), Seq("seed", "dst"))
       .filter(col("dw") === col("dv") + col("cost"))
-      .select(col("seed"), col("src"), col("dst"))
-      .persist() // columnar (r21; see `e` for why not keyed)
-    dag.count()
-    val base = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+      .select(col("seed"), col("src"), col("dst")))
+    val base = Scope.cut(
       seeds.select(col("seed"), col("node"),
         lit(1).cast(dec).as("sigma")))._1
     // r21: each σ step reads the previous state ONCE (the base union
@@ -105,7 +104,7 @@ object BetweennessW {
       val step = math.min(Bfs.CostFuseRounds, rounds - r)
       r += step
       val prev = sigma // superseded once the new cut has materialized
-      sigma = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+      sigma = Scope.cut(
         (1 to step).foldLeft(sigma)((s, _) =>
           base.unionByName(
               dag.join(s.select(col("seed"), col("node").as("src"),
@@ -118,21 +117,21 @@ object BetweennessW {
       // checkpoint blocks are provably dead — but NEVER free `base`,
       // which every later fused step's union still reads.
       if (!(prev eq base))
-        org.apache.spark.sql.graftbridge.PlanBridge.free(prev)
+        Scope.release(prev)
     }
     // d (costFrom's final cut) was last read when `dag` materialized;
     // base stays alive only while sigma steps union it — both dead here
     // (when rounds = 0, sigma IS base: keep it)
-    org.apache.spark.sql.graftbridge.PlanBridge.free(d)
+    Scope.release(d)
     if (!(sigma eq base))
-      org.apache.spark.sql.graftbridge.PlanBridge.free(base)
+      Scope.release(base)
     (sigma, dag)
   }
 
   /** The dq fixpoint: per (seed, node) the FLOOR-micros dependency
     * after `rounds` steps; rows with zero dependency absent. */
   private[graft] def dependenciesW(dag: DataFrame, sigma: DataFrame,
-                                   rounds: Int): DataFrame = {
+                                   rounds: Int): DataFrame = Scope {
     val spark = dag.sparkSession
     // one guarded 1-row action (the Betweenness.dependencies bound)
     val hdr = sigma.agg(max(col("sigma")), count(lit(1))).collect()(0)
@@ -149,14 +148,13 @@ object BetweennessW {
     }
     // σ attached to both DAG endpoints ONCE; the fixpoint then only
     // re-joins the dq state (∝ pivots·DAG-edges per step)
-    val dagS = dag
+    // columnar (r21; see forwardW's `e` for why not keyed)
+    val dagS = Scope.eager(dag
       .join(sigma.select(col("seed"), col("node").as("src"),
         col("sigma").as("sv")), Seq("seed", "src"))
       .join(sigma.select(col("seed"), col("node").as("dst"),
         col("sigma").as("sw")), Seq("seed", "dst"))
-      .select(col("seed"), col("src"), col("dst"), col("sv"), col("sw"))
-      .persist() // columnar (r21; see forwardW's `e` for why not keyed)
-    dagS.count()
+      .select(col("seed"), col("src"), col("dst"), col("sv"), col("sw")))
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       new org.apache.spark.sql.types.StructType()
@@ -170,7 +168,7 @@ object BetweennessW {
       val step = math.min(Bfs.CostFuseRounds, rounds - r)
       r += step
       val prev = dq // superseded once the new cut has materialized
-      dq = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+      dq = Scope.cut(
         (1 to step).foldLeft(dq)((s, _) => dagS
           .join(s.select(col("seed"), col("node").as("dst"),
             col("dq").as("dqw")), Seq("seed", "dst"), "left")
@@ -180,7 +178,7 @@ object BetweennessW {
           .select(col("seed"), col("node"),
             col("dq").cast("decimal(38,0)").as("dq"))))._1
       // r22: the superseded cut is dead (no-op on the empty seed frame)
-      org.apache.spark.sql.graftbridge.PlanBridge.free(prev)
+      Scope.release(prev)
     }
     dq
   }
@@ -191,7 +189,7 @@ object BetweennessW {
     * wbc_est) ordered (wbc_micro desc, node asc), wbc_est the (n∕k)
     * extrapolation as ONE IEEE expression of exact integers. */
   def pivotBetweennessW(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                        k: Int): DataFrame = {
+                        k: Int): DataFrame = Scope {
     val (sigma, dag) = forwardW(edges, seeds, rounds)
     val nn = edges.select(col("src").as("node")).distinct()
       .agg(count(lit(1)).as("n_nodes"))
@@ -201,7 +199,7 @@ object BetweennessW {
     // r22: dependenciesW materialized σ into dagS eagerly (persist +
     // count), so the σ cut is dead the moment it returns — the dq
     // readout below reads only dagS and the final dq cut.
-    org.apache.spark.sql.graftbridge.PlanBridge.free(sigma)
+    Scope.release(sigma)
     dq
       .filter(col("node") =!= col("seed"))
       .groupBy(col("node"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Fixed-round breadth-first hop distances from a deterministic seed —
   * the REACHABILITY primitive of the graph family ([[PageRank]] ranks,
   * [[ConnectedComponents]] groups, [[KCore]]/[[CoreNumber]] trim, this
@@ -65,13 +67,12 @@ object Bfs {
     * scan (the early-exit probe). */
   private def frontierLoop(e: DataFrame, seeds0: DataFrame,
                            rounds: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.PlanBridge.eagerCut
-    var (settled, frontierCount) = eagerCut(seeds0)
+    var (settled, frontierCount) = Scope.cut(seeds0)
     var frontier = settled
     var r = 0
     while (frontierCount > 0 && r < rounds) {
       r += 1
-      val (nxt, c) = eagerCut(e
+      val (nxt, c) = Scope.cut(e
         .join(frontier.select(col("seed"), col("node").as("src")),
           Seq("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
@@ -94,9 +95,9 @@ object Bfs {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     // keyed cache (r22): every round joins on src — partition + sort
     // once so per-round joins never re-shuffle the edge side
-    val e = graft.Graft.keyedCache(
+    // the seed aggregate + every round's join read it
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "src")
-    e.count() // eager: the seed aggregate + every round's join read it
     // On an EMPTY edge frame min(src) yields one NULL row — filter it
     // so hops() returns an empty histogram instead of a spurious
     // (dist=0, n_nodes=1) seed for a nonexistent node (the public
@@ -131,15 +132,15 @@ object Bfs {
   def hopsFrom(edges: DataFrame, seeds: DataFrame,
                rounds: Int): DataFrame = {
     // keyed cache (r22): see hops
-    val e = graft.Graft.keyedCache(
+    // every round's join reads it
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "src")
-    e.count() // eager: every round's join reads it
     hopsFromKeyed(e, seeds, rounds)
   }
 
   /** [[hopsFrom]] over an ALREADY keyed-cached-and-materialized edge
     * frame (r22) — the graded call sites build ONE
-    * `Graft.keyedCache(edges, "src")` that serves BOTH their top-degree
+    * `Scope.eager(edges, "src")` that serves BOTH their top-degree
     * seed selection (a src-grain aggregate, exchange-free on the keyed
     * layout) and this loop; the old shape materialized the edge list
     * twice (the caller's eager cache + this operator's keyed one —
@@ -197,37 +198,35 @@ object Bfs {
     * @param rounds fixed relaxation rounds (≥ 0).
     * @return (`seed`, `node`, `d`): minimum ≤`rounds`-edge path cost. */
   def costFrom(edges: DataFrame, seeds: DataFrame,
-               rounds: Int): DataFrame = {
+               rounds: Int): DataFrame = Scope {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val e0 = edges.select(col("src"), col("dst"), col("cost"))
     // keyed cache (r22): every round joins on src — see hops
-    val e = graft.Graft.keyedCache(
+    val e = Scope.eager(
       e0.unionByName(
         e0.select(col("src"))
           .unionByName(seeds.select(col("node").as("src")))
           .distinct()
           .select(col("src"), col("src").as("dst"),
-            lit(0L).as("cost"))), "src")
-    e.count() // eager: every round's join reads it
-    import org.apache.spark.sql.graftbridge.PlanBridge.eagerCut
-    var dist: DataFrame = eagerCut(seeds
+            lit(0L).as("cost"))), "src") // every round's join reads it
+    var dist: DataFrame = Scope.cut(seeds
       .select(col("seed"), col("node"), lit(0L).as("d")))._1
     var r = 0
     while (r < rounds) {
       val step = math.min(CostFuseRounds, rounds - r)
       r += step
       val prev = dist // superseded once the new cut has materialized
-      dist = eagerCut((1 to step).foldLeft(dist)((d, _) =>
+      dist = Scope.cut((1 to step).foldLeft(dist)((d, _) =>
         e.join(d.select(col("seed"), col("node").as("src"),
             col("d")), Seq("src"))
           .select(col("seed"), col("dst").as("node"),
             (col("d") + col("cost")).as("d"))
           .groupBy(col("seed"), col("node")).agg(min(col("d")).as("d"))))
         ._1
-      // r22: the superseded materialization's checkpoint blocks are
-      // provably dead (the new cut's count already read them) — free
-      // now instead of waiting for GC-driven ContextCleaner
-      org.apache.spark.sql.graftbridge.PlanBridge.free(prev)
+      // the superseded materialization's blocks are provably dead (the
+      // new cut's count already read them) — free now instead of
+      // waiting for the GC-driven ContextCleaner
+      Scope.release(prev)
     }
     dist
   }

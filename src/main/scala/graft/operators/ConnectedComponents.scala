@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Connected components over an undirected edge list by hash-min label
   * propagation — the pair→cluster step of a dedup pipeline (near-dup
   * PAIRS from LSH/AllPairs candidate generation become KEEP/DROP
@@ -49,39 +51,37 @@ object ConnectedComponents {
     *                exact only at the fixpoint), so non-convergence throws.
     * @return (node: long, rep: long) — one row per distinct endpoint,
     *         rep = min node id in its component. */
-  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+  def run(edges: DataFrame, maxIter: Int = 50): DataFrame = Scope {
     val Seq(srcCol, dstCol) = edges.columns.take(2).toSeq
     // Persist the raw pair list BEFORE symmetrizing: the union's two
     // branches would otherwise each evaluate the caller's (potentially
     // expensive — LSH candidate + verify) edge pipeline once. The first
     // scan fills the cache, the swapped branch reads it.
-    val fwd = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .persist()
-    // eager (r16): the union's two scan legs run in the SAME job and
-    // can race to materialize this cache (Graft.eager doc)
-    fwd.count()
+    // Eager (r16): the union's two scan legs run in the SAME job and
+    // can race to materialize this cache (Scope.eager doc).
+    val fwd = Scope.eager(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     // Re-joined every round — persisted AFTER a hash repartition on the
     // join key, so the cached blocks carry hashpartitioning(src) and the
-    // per-hop join only exchanges the label side. keyedCache (r22) adds
-    // the explicit width (AQE would coalesce the unnumbered repartition
-    // below the rounds' join parallelism) and the in-partition sort a
-    // sort-merge round reuses.
-    val e = graft.Graft.keyedCache(
+    // per-hop join only exchanges the label side. The keyed layout
+    // (r22) adds the explicit width (AQE would coalesce the unnumbered
+    // repartition below the rounds' join parallelism) and the
+    // in-partition sort a sort-merge round reuses.
+    val e = Scope.eager(
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))),
-      "src")
-    e.count() // eager (r16): every round's join reads it (Graft.eager doc)
+      "src") // every round's join reads it
     // Round 1 fused into initialization: from identity labels, a
     // neighbor's message is just its node id, so the first label table
     // is one groupBy-min over (neighbor ids ∪ self) — no join, and no
     // separate distinct-nodes pass (the node set is exactly src of the
     // symmetrized edge list).
-    var labels = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+    var labels = Scope.cut(
       e.select(col("dst").as("node"), col("src").as("rep"))
         .union(e.select(col("src").as("node"), col("src").as("rep")))
         .groupBy(col("node")).agg(min(col("rep")).as("rep")))._1
     // e is materialized by the (eager) init above; the raw list's cache
     // has served its one purpose
-    fwd.unpersist()
+    Scope.release(fwd)
     // Convergence check: labels only ever DECREASE (new rep =
     // min(old, neighbor reps) ≤ old) over a fixed node set, so Σrep
     // strictly decreases exactly when some label changed — one exact
@@ -102,16 +102,16 @@ object ConnectedComponents {
       // for the two consumers (sum check now, join next round)
       val msgs = e.join(labels, col("src") === col("node"))
         .select(col("dst").as("node"), col("rep"))
-      val next = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+      val next = Scope.cut(
         msgs.union(labels)
           .groupBy(col("node")).agg(min(col("rep")).as("rep")))._1
       val nextSum = repSum(next)
-      org.apache.spark.sql.graftbridge.PlanBridge.free(labels)
+      Scope.release(labels)
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
     }
-    e.unpersist()
+    Scope.release(e)
     require(converged,
       s"ConnectedComponents did not converge in $maxIter rounds (diameter > maxIter?)")
     labels

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Full k-core DECOMPOSITION over a symmetrized edge list — the
   * per-node generalization of [[KCore]]'s fixed-k peel: instead of
   * "who survives k = 3", every node gets its CORE NUMBER, the deepest
@@ -49,15 +51,14 @@ object CoreNumber {
     * @param rounds max synchronized peel rounds per level (≥ 1).
     * @return (`node`, `corenum`): every node of the input graph with
     *         its (capped) core number, corenum ≥ 1. */
-  def decompose(edges: DataFrame, kMax: Int, rounds: Int): DataFrame = {
+  def decompose(edges: DataFrame, kMax: Int, rounds: Int): DataFrame = Scope {
     require(kMax >= 1, s"kMax must be >= 1, got $kMax")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.sql.graftbridge.PlanBridge.{eagerCut, free}
-    var (e, nEdges) = eagerCut(edges.select(col("src"), col("dst")))
+    var (e, nEdges) = Scope.cut(edges.select(col("src"), col("dst")))
     // membership frames: (node, k) — corenum = max k per node. Level 0
     // seeds every node so the aggregate is total over the input graph.
     var members = List[DataFrame](
-      eagerCut(e.select(col("src").as("node")).distinct()
+      Scope.cut(e.select(col("src").as("node")).distinct()
         .select(col("node"), lit(0L).as("k")))._1)
     var k = 1
     while (k <= kMax && nEdges > 0) {
@@ -67,10 +68,10 @@ object CoreNumber {
         it += 1
         val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k).select(col("src").as("kn"))
-        val (next, nextCount) = eagerCut(e
+        val (next, nextCount) = Scope.cut(e
           .join(keep, e("src") === keep("kn"), "left_semi")
           .join(keep, e("dst") === keep("kn"), "left_semi"))
-        free(e)
+        Scope.release(e)
         e = next
         // dropping any node removes its ≥1 edges, so equal edge counts
         // over a monotone subset chain mean an identical edge set
@@ -78,7 +79,7 @@ object CoreNumber {
         nEdges = nextCount
       }
       if (nEdges > 0) {
-        members ::= eagerCut(e.select(col("src").as("node")).distinct()
+        members ::= Scope.cut(e.select(col("src").as("node")).distinct()
           .select(col("node"), lit(k.toLong).as("k")))._1
       }
       k += 1

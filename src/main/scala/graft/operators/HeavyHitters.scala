@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Mergeable heavy-hitters sketch (Misra-Gries "frequent" summaries) —
   * the third standard sketch of a 100 TB pipeline, next to
   * approx_count_distinct (HLL) and approx_percentile (KLL): "which
@@ -41,8 +43,8 @@ object HeavyHitters {
     * scalar crossJoin, the tfidf n_docs pattern — no driver action at
     * build time), so the sketch can sit inside a graded query plan.
     * The persist() on the tiny summary table (≤ (k+1)·partitions + 1
-    * rows) has two consumers (n recovery + the merge agg) and follows
-    * the caller-clearCache cache contract (SparkEntry scaladoc). */
+    * rows) has two consumers (n recovery + the merge agg); it is an
+    * eager [[graft.Scope]] cache, released with the enclosing scope. */
   def sketch(items: Dataset[Row], k: Int): DataFrame =
     merged(items, k).orderBy(col("est_count").desc, col("item").asc)
 
@@ -55,7 +57,7 @@ object HeavyHitters {
     require(k > 0)
     val spark = items.sparkSession
     import spark.implicits._
-    val summaries = items.mapPartitions { it =>
+    val summaries = Scope.eager(items.mapPartitions { it =>
       val counters = scala.collection.mutable.LinkedHashMap.empty[String, Long]
       var n = 0L
       it.foreach { r =>
@@ -74,8 +76,7 @@ object HeavyHitters {
       val sentinel = if (n > 0L) Iterator.single((Option.empty[String], 0L, n))
                      else Iterator.empty
       counters.iterator.map { case (item, c) => (Some(item), c, 0L) } ++ sentinel
-    }.toDF("item", "cnt", "part_n").persist()
-    summaries.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    }.toDF("item", "cnt", "part_n"))
     val nTotal = summaries.filter(col("item").isNull)
       .agg(coalesce(sum(col("part_n")), lit(0L)).as("n_total"))
     summaries.filter(col("item").isNotNull)

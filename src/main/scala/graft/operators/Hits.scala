@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Scope
+
 /** HITS (hubs & authorities) over a directed edge list — the third
   * iterative link-analysis operator beside [[ConnectedComponents]] and
   * [[PageRank]], and the one that separates the two ROLES a node can
@@ -56,39 +58,36 @@ object Hits {
     * edge join when it truly is small — at which point the persisted
     * edge table is never re-shuffled at all (guide §3.1). */
   private def materialize(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(df)._1
+    Scope.cut(df)._1
 
   /** @param edges0     directed edges (`src`, `dst`); duplicates removed.
     * @param iterations fixed iteration count (≥ 1).
     * @return (`node`, `role`, `score`): every src with role 'hub',
     *         every dst with role 'auth', 6dp scores summing (up to
     *         rounding) to 1 within each role. */
-  def run(edges0: DataFrame, iterations: Int): DataFrame = {
+  def run(edges0: DataFrame, iterations: Int): DataFrame = Scope {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // keyedCache (r22): explicit width (AQE would coalesce the old
+    // keyed (r22): explicit width (AQE would coalesce the old
     // unnumbered repartition) + in-partition sort for the sort-merge
-    // fallback when a score table outgrows the broadcast threshold
-    val edges = graft.Graft.keyedCache(
+    // fallback when a score table outgrows the broadcast threshold.
+    // Eager: the first job fans edges into THREE independent subtrees
+    // (srcs distinct, the nSrc aggregate, and the first half-step
+    // join) — a lazy cache races under concurrent AQE stages, the
+    // exact r15 defect this file fixes for the half-steps.
+    val edges = Scope.eager(
       edges0.select(col("src"), col("dst")).distinct(), "src")
-    // eager (Graft.eager's discipline): the first job fans edges into
-    // THREE independent subtrees (srcs distinct, the nSrc aggregate,
-    // and the first half-step join) — a lazy persist races under
-    // concurrent AQE stages, the exact r15 defect this file fixes for
-    // the half-steps.
-    edges.count()
     val srcs = edges.select(col("src")).distinct()
     val nSrc = srcs.agg(count(lit(1)).cast("double").as("n"))
     var h: DataFrame = srcs.crossJoin(nSrc)
       .select(col("src"), (lit(1.0) / col("n")).as("h"))
     var a: DataFrame = null
-    // superseded half-step cuts, freed one step later (r16 unpersist
-    // discipline, r22 checkpoint-block form): a step's raw table is
-    // last READ when the NEXT half-step's raw table materializes, so
-    // freeing the (i−1)-pair once step i's cut returns keeps the
-    // materialized footprint O(1) — edges plus at most 3 node-sized
-    // frames — instead of O(iterations) (CacheHygieneSuite pins the
-    // bound for an embedded looping caller; the final pair's blocks
-    // fall to the runner's sweepRddBlocks)
+    // superseded half-step cuts, freed one step later: a step's raw
+    // table is last READ when the NEXT half-step's raw table
+    // materializes, so freeing the (i−1)-pair once step i's cut returns
+    // keeps the materialized footprint O(1) — edges plus at most 3
+    // node-sized frames — instead of O(iterations) (CacheHygieneSuite
+    // pins the bound for an embedded looping caller; the final pair's
+    // blocks are freed when the enclosing scope closes)
     var prevA: DataFrame = null
     var prevH: DataFrame = null
     for (_ <- 1 to iterations) {
@@ -101,7 +100,7 @@ object Hits {
       val aRaw = materialize(edges.join(h, Seq("src"))
         .groupBy(col("dst")).agg(sum(q12(col("h"))).as("raw")))
       if (prevH != null) // h_{i-1} is baked into aRaw_i
-        org.apache.spark.sql.graftbridge.PlanBridge.free(prevH)
+        Scope.release(prevH)
       val aTot = aRaw.agg(sum(col("raw")).cast(Dec38).as("tot"))
       a = aRaw.crossJoin(broadcast(aTot))
         .select(col("dst"),
@@ -110,7 +109,7 @@ object Hits {
       val hRaw = materialize(edges.join(a, Seq("dst"))
         .groupBy(col("src")).agg(sum(q12(col("a"))).as("raw")))
       if (prevA != null) // a_{i-1} was consumed at hRaw_{i-1}
-        org.apache.spark.sql.graftbridge.PlanBridge.free(prevA)
+        Scope.release(prevA)
       val hTot = hRaw.agg(sum(col("raw")).cast(Dec38).as("tot"))
       h = hRaw.crossJoin(broadcast(hTot))
         .select(col("src"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Fixed-round k-core peel over a symmetrized edge list — the
   * density-core extractor of the graph family ([[PageRank]] ranks
   * authority, [[ConnectedComponents]] groups, this TRIMS): repeatedly
@@ -44,21 +46,20 @@ object KCore {
     * @param rounds fixed peel rounds (≥ 0).
     * @return (`node`, `deg`): surviving nodes with their degree in the
     *         peeled subgraph. */
-  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = Scope {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    import org.apache.spark.sql.graftbridge.PlanBridge.{eagerCut, free}
-    var (e, prevCount) = eagerCut(edges.select(col("src"), col("dst")))
+    var (e, prevCount) = Scope.cut(edges.select(col("src"), col("dst")))
     var stable = false
     var it = 0
     while (!stable && it < rounds) {
       it += 1
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("kn"))
-      val (next, nextCount) = eagerCut(e
+      val (next, nextCount) = Scope.cut(e
         .join(keep, e("src") === keep("kn"), "left_semi")
         .join(keep, e("dst") === keep("kn"), "left_semi"))
-      free(e)
+      Scope.release(e)
       e = next
       stable = nextCount == prevCount
       prevCount = nextCount
@@ -93,11 +94,10 @@ object KCore {
     * @param rounds fixed peel rounds (≥ 0).
     * @return (`node`, `strength`): survivors with their strength in
     *         the peeled subgraph. */
-  def peelW(edges: DataFrame, s: Long, rounds: Int): DataFrame = {
+  def peelW(edges: DataFrame, s: Long, rounds: Int): DataFrame = Scope {
     require(s >= 1, s"s must be >= 1, got $s")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    import org.apache.spark.sql.graftbridge.PlanBridge.{eagerCut, free}
-    var (e, prevCount) = eagerCut(
+    var (e, prevCount) = Scope.cut(
       edges.select(col("src"), col("dst"), col("w")))
     var stable = false
     var it = 0
@@ -105,10 +105,10 @@ object KCore {
       it += 1
       val keep = e.groupBy(col("src")).agg(sum(col("w")).as("st"))
         .filter(col("st") >= s).select(col("src").as("kn"))
-      val (next, nextCount) = eagerCut(e
+      val (next, nextCount) = Scope.cut(e
         .join(keep, e("src") === keep("kn"), "left_semi")
         .join(keep, e("dst") === keep("kn"), "left_semi"))
-      free(e)
+      Scope.release(e)
       e = next
       stable = nextCount == prevCount
       prevCount = nextCount

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Fixed-round synchronous label propagation over a symmetrized edge
   * list — the COMMUNITY detector of the graph family ([[PageRank]]
   * ranks, [[ConnectedComponents]] groups by reachability, [[KCore]]
@@ -35,14 +37,13 @@ object LabelProp {
     *               orientations of every undirected edge present;
     *               integer node ids.
     * @return (node, label) — the label after `rounds` rounds. */
-  def run(edges: DataFrame, rounds: Int): DataFrame = {
+  def run(edges: DataFrame, rounds: Int): DataFrame = Scope {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.sql.graftbridge.PlanBridge.eagerCut
     // keyed cache (r22): every round joins labels onto the dst side —
     // partition + sort once so per-round joins never re-shuffle edges
-    val e = graft.Graft.keyedCache(
+    // every round's join reads it (columnar — r21)
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "dst")
-    e.count() // eager: every round's join reads it (columnar — r21)
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     // r21: each round reads the previous labels ONCE (the single join),
@@ -51,15 +52,11 @@ object LabelProp {
     // instead of every round (the Bfs.costFrom fusion discipline; the
     // stats-carrying cut lets the label side broadcast when small).
     var r = 0
-    var owned = false // labels is OUR cut (never free the seed frame:
-    // its lineage embeds the CALLER's plan, and free() walking it would
-    // release upstream checkpoints other consumers still read — the
-    // projmod prs cut, caught by KCoreSuite)
     while (r < rounds) {
       val step = math.min(FuseRounds, rounds - r)
       r += step
       val prev = labels // superseded once the new cut has materialized
-      labels = eagerCut((1 to step).foldLeft(labels)((l, _) => e
+      labels = Scope.cut((1 to step).foldLeft(labels)((l, _) => e
         .join(l.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
@@ -68,11 +65,11 @@ object LabelProp {
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
         .select(col("src").as("node"), (-col("m.nl")).as("label"))))._1
-      // r22: eagerCut's count has materialized the new round, so the
-      // previous round's checkpoint blocks are provably dead — free
-      // them now instead of waiting for GC-driven ContextCleaner
-      if (owned) org.apache.spark.sql.graftbridge.PlanBridge.free(prev)
-      owned = true
+      // the cut's count has materialized the new round, so the previous
+      // round's blocks are provably dead — free them now instead of
+      // waiting for the GC-driven ContextCleaner (a no-op on the seed
+      // frame, which this scope did not make)
+      Scope.release(prev)
     }
     labels
   }
@@ -99,23 +96,21 @@ object LabelProp {
     *               integer weights; both orientations present with the
     *               SAME weight (the edge-builder contract).
     * @return (node, label) — the label after `rounds` rounds. */
-  def runW(edges: DataFrame, rounds: Int): DataFrame = {
+  def runW(edges: DataFrame, rounds: Int): DataFrame = Scope {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import org.apache.spark.sql.graftbridge.PlanBridge.eagerCut
     // keyed cache (r22): see run
-    val e = graft.Graft.keyedCache(
+    // every round's join reads it (columnar — r21)
+    val e = Scope.eager(
       edges.select(col("src"), col("dst"), col("w")), "dst")
-    e.count() // eager: every round's join reads it (columnar — r21)
     var labels = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     // r21: fused rounds — the [[run]] discipline verbatim
     var r = 0
-    var owned = false // never free the seed frame — see run
     while (r < rounds) {
       val step = math.min(FuseRounds, rounds - r)
       r += step
       val prev = labels // superseded once the new cut has materialized
-      labels = eagerCut((1 to step).foldLeft(labels)((l, _) => e
+      labels = Scope.cut((1 to step).foldLeft(labels)((l, _) => e
         .join(l.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(sum(col("w")).as("wsum"))
@@ -124,9 +119,8 @@ object LabelProp {
         .groupBy(col("src"))
         .agg(max(struct(col("wsum"), (-col("label")).as("nl"))).as("m"))
         .select(col("src").as("node"), (-col("m.nl")).as("label"))))._1
-      // r22: the superseded round's blocks are dead — free (see run)
-      if (owned) org.apache.spark.sql.graftbridge.PlanBridge.free(prev)
-      owned = true
+      // the superseded round's blocks are dead — free (see run)
+      Scope.release(prev)
     }
     labels
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Scope
+
 /** PageRank over an edge list — the link-authority signal a
   * training-data pipeline uses to score document quality from a
   * citation/hyperlink/co-occurrence graph (the classic web-corpus
@@ -79,24 +81,18 @@ object PageRank {
     val outd = edges.groupBy(col("src")).agg(sum(col("w")).as("outw"))
     // static across iterations: pre-partition by the join key once so
     // per-hop shuffles move only the node-sized rank table.
-    // CACHE CONTRACT (r11 advice): the returned DataFrame is lazy, so
-    // this operator cannot unpersist e after the caller's action (unlike
-    // the eager ConnectedComponents, which checkpoints internally and
-    // cleans up before returning). Callers looping over many invocations
-    // must clearCache() between them — the SparkEntry cache contract;
-    // Bench/Verify/Prof all do — or unpersist via the cacheManager when
-    // embedding one ranking long-term. An eager-checkpoint variant was
-    // considered and rejected: it would hide the iteration body from
-    // every plan assertion (the returned plan collapses to an RDD scan).
-    // keyedCache (r22): explicit width (AQE would coalesce the
-    // unnumbered repartition below the iterations' join parallelism)
-    // + the in-partition sort a sort-merge iteration reuses
-    val e = graft.Graft.keyedCache(edges.join(outd, "src"), "src")
-    // eager (r16): the node-set/N aggregates and the first iteration's
-    // contribution join otherwise race to materialize the cache under
-    // concurrent AQE stages (Graft.eager doc; unlike the rejected
-    // checkpoint variant this leaves the returned plan untouched)
-    e.count()
+    // The returned DataFrame is lazy, so e stays cached until the
+    // enclosing Scope closes (or the caller's clearCache). An
+    // eager-checkpoint variant was considered and rejected: it would
+    // hide the iteration body from every plan assertion (the returned
+    // plan collapses to an RDD scan).
+    // Keyed (r22): explicit width (AQE would coalesce the unnumbered
+    // repartition below the iterations' join parallelism) + the
+    // in-partition sort a sort-merge iteration reuses. Eager (r16): the
+    // node-set/N aggregates and the first iteration's contribution join
+    // otherwise race to materialize the cache under concurrent AQE
+    // stages (Scope.eager doc).
+    val e = Scope.eager(edges.join(outd, "src"), "src")
     // node set and N read the PERSISTED e, not the raw edge lineage:
     // the caller's edge derivation may be an expensive scan (a lag
     // window over an event log; a full corpus scan at 100 TB), and

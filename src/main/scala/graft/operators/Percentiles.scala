@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
+
 /** Scale-safe EXACT percentiles over arbitrary (group, value) columns —
   * the engine behind the graded `q_agg_pctile` / `q_agg_pctile_disc` and
   * [[graft.Graft.percentiles]] / [[graft.Graft.percentilesDisc]].
@@ -192,7 +194,7 @@ object Percentiles {
   def contSelect(df: DataFrame, groupCols: Seq[String], valueCol: String,
                  ps: Seq[(Double, String)],
                  weightCol: Option[String] = None,
-                 partitions: Int = 0): DataFrame = {
+                 partitions: Int = 0): DataFrame = Scope {
     require(ps.nonEmpty && ps.forall { case (p, _) => p >= 0 && p <= 1 },
       s"percentile fractions must be in [0,1]: ${ps.map(_._1)}")
     checkNames(groupCols, ps.map(_._2))
@@ -207,15 +209,13 @@ object Percentiles {
     // — a perf choice, not correctness: RangePartitioner's sampling
     // seed is deterministic, so a recomputed partition reproduces the
     // same boundaries (and ANY boundary split yields the same order
-    // statistics regardless). Release follows the library cache
-    // contract (caller clearCache after materializing).
-    val vc = df.filter(col(valueCol).isNotNull)
+    // statistics regardless). Released with the enclosing scope.
+    val vc = Scope.cache(df.filter(col(valueCol).isNotNull)
       .groupBy((gc :+ col(valueCol).as(V)): _*)
       .agg(sum(w).as(CNT))
       .filter(col(CNT) > 0)
       .repartitionByRange(P, col(V))
-      .withColumn(PID, spark_partition_id())
-      .persist()
+      .withColumn(PID, spark_partition_id()))
     // ≤ groups×partitions rows — the driver-side piece of selection
       val subs = vc.groupBy((gc :+ col(PID)): _*).agg(sum(CNT).as("c"))
         .collect()
@@ -229,87 +229,88 @@ object Percentiles {
         // (empty) frame recomputes its lineage trivially; leaving the
         // cached empty RDD behind would accumulate across calls in a
         // long-lived session (r10 advice).
-        vc.unpersist()
-        return vc.groupBy(gc: _*)
+        Scope.release(vc)
+        vc.groupBy(gc: _*)
           .agg(max(col(CNT)).cast("long").as("n"))
           .select((gc ++ ps.map { case (_, name) =>
             lit(null).cast("double").as(name) }) :+ col("n"): _*)
-      }
-      val keyOf: org.apache.spark.sql.Row => Seq[Any] =
-        r => groupCols.indices.map(r.get)
-      // per group: partition subtotals in value order (pid IS the order)
-      val byGroup = subs.groupBy(keyOf).map { case (k, rows) =>
-        k -> rows.map(r => (r.getAs[Int](PID),
-          r.getAs[Long]("c"))).sortBy(_._1)
-      }
-      // target rows: (groupKey..., pid, residual 1-based rank, tag, r)
-      // one per requested fraction per floor/ceil neighbour
-      val targets = byGroup.toSeq.flatMap { case (k, parts) =>
-        val n = parts.map(_._2).sum
-        ps.zipWithIndex.flatMap { case ((p, _), i) =>
-          val r = p * (n - 1).toDouble
-          Seq(("lo", math.floor(r).toLong), ("hi", math.ceil(r).toLong))
-            .map { case (side, j) =>
-              val rank = j + 1 // 1-based global rank of 0-based index j
-              var acc = 0L
-              var hit: Option[(Int, Long)] = None
-              parts.foreach { case (pid, c) =>
-                if (hit.isEmpty && rank <= acc + c) hit = Some((pid, acc))
-                acc += c
-              }
-              val (pid, before) = hit.get
-              (k, pid, rank - before, s"$side$i", r, n)
-            }
+      } else {
+        val keyOf: org.apache.spark.sql.Row => Seq[Any] =
+          r => groupCols.indices.map(r.get)
+        // per group: partition subtotals in value order (pid IS the order)
+        val byGroup = subs.groupBy(keyOf).map { case (k, rows) =>
+          k -> rows.map(r => (r.getAs[Int](PID),
+            r.getAs[Long]("c"))).sortBy(_._1)
         }
+        // target rows: (groupKey..., pid, residual 1-based rank, tag, r)
+        // one per requested fraction per floor/ceil neighbour
+        val targets = byGroup.toSeq.flatMap { case (k, parts) =>
+          val n = parts.map(_._2).sum
+          ps.zipWithIndex.flatMap { case ((p, _), i) =>
+            val r = p * (n - 1).toDouble
+            Seq(("lo", math.floor(r).toLong), ("hi", math.ceil(r).toLong))
+              .map { case (side, j) =>
+                val rank = j + 1 // 1-based global rank of 0-based index j
+                var acc = 0L
+                var hit: Option[(Int, Long)] = None
+                parts.foreach { case (pid, c) =>
+                  if (hit.isEmpty && rank <= acc + c) hit = Some((pid, acc))
+                  acc += c
+                }
+                val (pid, before) = hit.get
+                (k, pid, rank - before, s"$side$i", r, n)
+              }
+          }
+        }
+        val tRows = targets.map { case (k, pid, rank, tag, r, n) =>
+          org.apache.spark.sql.Row.fromSeq(
+            k ++ Seq(pid, rank, tag, r, n))
+        }
+        val gFields = groupCols.map(c =>
+          org.apache.spark.sql.types.StructField(
+            s"__pct_g_$c", df.schema(c).dataType))
+        val tSchema = org.apache.spark.sql.types.StructType(gFields ++ Seq(
+          org.apache.spark.sql.types.StructField("__pct_tpid",
+            org.apache.spark.sql.types.IntegerType),
+          org.apache.spark.sql.types.StructField("__pct_trank",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("__pct_tag",
+            org.apache.spark.sql.types.StringType),
+          org.apache.spark.sql.types.StructField("__pct_r",
+            org.apache.spark.sql.types.DoubleType),
+          org.apache.spark.sql.types.StructField("__pct_tn",
+            org.apache.spark.sql.types.LongType)))
+        val tDf = spark.createDataFrame(
+          spark.sparkContext.parallelize(tRows, 1), tSchema)
+        // per-(group, partition) cumulative — parallelism groups × P
+        val wRun = Window.partitionBy((gc :+ col(PID)): _*).orderBy(col(V))
+        val cum = vc.withColumn(CUM_END, sum(CNT).over(wRun))
+          .withColumn(CUM_START, col(CUM_END) - col(CNT))
+        val joinCond = groupCols.map(c => col(c) <=> col(s"__pct_g_$c"))
+          .foldLeft(col(PID) === col("__pct_tpid") &&
+            col(CUM_START) < col("__pct_trank") &&
+            col("__pct_trank") <= col(CUM_END))(_ && _)
+        val hits = cum.join(broadcast(tDf), joinCond)
+        val aggs = ps.indices.flatMap { i =>
+          Seq(max(when(col("__pct_tag") === s"lo$i",
+              col(V).cast("double"))).as(s"__pct_lo$i"),
+            max(when(col("__pct_tag") === s"hi$i",
+              col(V).cast("double"))).as(s"__pct_hi$i"),
+            max(when(col("__pct_tag") === s"lo$i",
+              col("__pct_r"))).as(s"__pct_r$i"))
+        } :+ max(col("__pct_tn")).as("n")
+        // identical interpolation expression shape to cont — the IEEE
+        // sequence (and so the bytes) must match cont exactly
+        val outs = ps.zipWithIndex.map { case ((_, name), i) =>
+          (col(s"__pct_lo$i") +
+            (col(s"__pct_r$i") - floor(col(s"__pct_r$i"))) *
+              (col(s"__pct_hi$i") - col(s"__pct_lo$i")))
+            .as(name)
+        }
+        hits.groupBy(gc: _*)
+          .agg(aggs.head, aggs.tail: _*)
+          .select((gc ++ outs) :+ col("n"): _*)
       }
-      val tRows = targets.map { case (k, pid, rank, tag, r, n) =>
-        org.apache.spark.sql.Row.fromSeq(
-          k ++ Seq(pid, rank, tag, r, n))
-      }
-      val gFields = groupCols.map(c =>
-        org.apache.spark.sql.types.StructField(
-          s"__pct_g_$c", df.schema(c).dataType))
-      val tSchema = org.apache.spark.sql.types.StructType(gFields ++ Seq(
-        org.apache.spark.sql.types.StructField("__pct_tpid",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("__pct_trank",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("__pct_tag",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__pct_r",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("__pct_tn",
-          org.apache.spark.sql.types.LongType)))
-      val tDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(tRows, 1), tSchema)
-      // per-(group, partition) cumulative — parallelism groups × P
-      val wRun = Window.partitionBy((gc :+ col(PID)): _*).orderBy(col(V))
-      val cum = vc.withColumn(CUM_END, sum(CNT).over(wRun))
-        .withColumn(CUM_START, col(CUM_END) - col(CNT))
-      val joinCond = groupCols.map(c => col(c) <=> col(s"__pct_g_$c"))
-        .foldLeft(col(PID) === col("__pct_tpid") &&
-          col(CUM_START) < col("__pct_trank") &&
-          col("__pct_trank") <= col(CUM_END))(_ && _)
-      val hits = cum.join(broadcast(tDf), joinCond)
-      val aggs = ps.indices.flatMap { i =>
-        Seq(max(when(col("__pct_tag") === s"lo$i",
-            col(V).cast("double"))).as(s"__pct_lo$i"),
-          max(when(col("__pct_tag") === s"hi$i",
-            col(V).cast("double"))).as(s"__pct_hi$i"),
-          max(when(col("__pct_tag") === s"lo$i",
-            col("__pct_r"))).as(s"__pct_r$i"))
-      } :+ max(col("__pct_tn")).as("n")
-      // identical interpolation expression shape to cont — the IEEE
-      // sequence (and so the bytes) must match cont exactly
-      val outs = ps.zipWithIndex.map { case ((_, name), i) =>
-        (col(s"__pct_lo$i") +
-          (col(s"__pct_r$i") - floor(col(s"__pct_r$i"))) *
-            (col(s"__pct_hi$i") - col(s"__pct_lo$i")))
-          .as(name)
-      }
-      hits.groupBy(gc: _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .select((gc ++ outs) :+ col("n"): _*)
   }
 
   /** Discrete (type-1 order statistic, SQL `percentile_disc`)

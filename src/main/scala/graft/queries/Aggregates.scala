@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Det, Tables => T}
+import graft.{Det, Scope, Tables => T}
 
 /** SURVEY §2.4 aggregations, §2.6 sort/limit/top-k, §2.7 set ops.
   *
@@ -273,7 +273,7 @@ object Aggregates {
       val DT = org.apache.spark.sql.types.DecimalType
       // eager (r16, prophylactic per the r15 verdict): base has 3
       // readers (both rank collapses + the pair aggregate); lazy
-      // persists race under concurrent AQE stages (Graft.eager's doc).
+      // persists race under concurrent AQE stages (Scope.eager's doc).
       // r22 restructure (guide §2.4 — fewer passes, same numbers):
       // every marginal power sum is computable from the JOINT pair
       // table once the rank columns ride it (Σ_x cnt·r_x ≡
@@ -283,7 +283,7 @@ object Aggregates {
       // eager caches, and the three-way g-join of the readouts
       // collapse into ONE aggregate over the joined pair table. Each
       // rank table is now consumed exactly once — nothing to cache.
-      val base = graft.Graft.eager(
+      val base = Scope.eager(
         T.lineitem(s, d).select(col("l_returnflag").as("g"),
           col("l_quantity").cast(DT(9, 2)).as("x"),
           col("l_extendedprice").cast(DT(12, 2)).as("y")))
@@ -778,10 +778,9 @@ object Aggregates {
     // is TakeOrderedAndProject + a 1-row agg, total is a 1-row
     // broadcast — no global sort anywhere.
     "q_agg_topshare" -> ((s, d) => {
-      val byCust = T.orders(s, d).groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast(Det.Dec)).as("rev"))
-        .persist() // total + two top-k consumers; caller clearCache
-      byCust.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      // total + two top-k consumers
+      val byCust = Scope.eager(T.orders(s, d).groupBy(col("o_custkey"))
+        .agg(sum(col("o_totalprice").cast(Det.Dec)).as("rev")))
       val total = byCust.agg(sum(col("rev")).as("tot"))
       def top(k: Int) = byCust
         .orderBy(col("rev").desc, col("o_custkey").asc).limit(k)
@@ -1179,14 +1178,14 @@ object Aggregates {
     * weighted discrete lower median of Walsh averages off the
     * distinct-value cell table (work ∝ |domain|² per group,
     * SF-invariant). `s2t` is the doubled-average decimal type — one
-    * integer digit wider than x. Persists the cell table — caller
-    * clearCache. Returns (g, n_pairs, hl). */
+    * integer digit wider than x. Caches the cell table. Returns
+    * (g, n_pairs, hl). */
   private[graft] def hlOn(gx: DataFrame,
                           s2t: org.apache.spark.sql.types.DecimalType)
       : DataFrame = {
-    val cells = gx.groupBy(col("g"), col("x")).agg(count(lit(1)).as("w"))
-      .persist() // both Walsh self-join sides; caller clearCache
-    cells.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // both Walsh self-join sides
+    val cells = Scope.eager(
+      gx.groupBy(col("g"), col("x")).agg(count(lit(1)).as("w")))
     val pairs = cells
       .join(cells.select(col("g").as("g2"), col("x").as("x2"),
         col("w").as("w2")),
@@ -1522,9 +1521,9 @@ object Aggregates {
     // eager (r16): FIVE readers (ns/n1/n2 + both pair-join sides) of
     // the one corpus-sized collapse; a lazy persist raced under
     // concurrent AQE stages — up to 5 extra full scans at 100 TB
-    // (Graft.eager's doc). The count is ≤ |domain_x × domain_y| rows
+    // (Scope.eager's doc). The count is ≤ |domain_x × domain_y| rows
     // per group — bounded.
-    val jt = graft.Graft.eager(base.groupBy(col("g"), col("x"), col("y"))
+    val jt = Scope.eager(base.groupBy(col("g"), col("x"), col("y"))
       .agg(count(lit(1)).as("c")))
     def cd(c: Column) = c.cast(DT(18, 0))
     val ns = jt.groupBy(col("g")).agg(sum(col("c")).as("n"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Det, Tables => T}
+import graft.{Det, Scope, Tables => T}
 
 /** SURVEY §2.9: the reference's stream-processing semantics, as
   * batch/stream-unified queries over the `events` table.
@@ -69,11 +69,8 @@ object EventOps {
   }
 
   private[graft] def sessionFunnelOn(events: DataFrame): DataFrame = {
-    val e = sessionizedOn(events)
-      // persisted for the 4 downstream consumers; released by the
-      // caller's clearCache between queries (SparkEntry cache contract)
-      .persist()
-    e.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // cached for the 4 downstream consumers
+    val e = Scope.eager(sessionizedOn(events))
     val v = e.filter(col("event_type") === "view")
       .groupBy(col("user_id"), col("sess"))
       .agg(min(col("ts")).as("t_view"))
@@ -163,11 +160,9 @@ object EventOps {
         count(lit(1)).as("freq"),
         dsum(col("value")).as("monetary"))
     val gmax = u.agg(max(col("uday")).as("gday"))
-    val ru = u.crossJoin(broadcast(gmax))
+    val ru = Scope.eager(u.crossJoin(broadcast(gmax))
       .select(col("user_id"), (col("gday") - col("uday")).as("rec_days"),
-        col("freq"), col("monetary"))
-      .persist() // 4 consumers (3 cut chains + scoring); caller clearCache
-    ru.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        col("freq"), col("monetary"))) // 4 consumers (3 cut chains + scoring)
     def quartiles(c: String, p: String) =
       Percentiles.disc(ru.select(col(c)), Nil, c,
         Seq((1, 4, s"${p}1"), (2, 4, s"${p}2"), (3, 4, s"${p}3")))
@@ -198,11 +193,9 @@ object EventOps {
     * the full scale/determinism argument. */
   private[graft] def anomalyOn(events: DataFrame): DataFrame = {
     import graft.operators.Percentiles
-    val daily = events.filter(col("ts").isNotNull)
+    val daily = Scope.eager(events.filter(col("ts").isNotNull)
       .groupBy(date_trunc("day", col("ts")).as("day"))
-      .agg(count(lit(1)).as("n"))
-      .persist() // 3 consumers (median chain, dev, output); caller clearCache
-    daily.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      .agg(count(lit(1)).as("n"))) // 3 consumers (median chain, dev, output)
     val med = Percentiles.cont(daily.select(col("n")), Nil, "n",
       Seq(0.5 -> "med")).select(col("med"))
     val dev = daily.crossJoin(broadcast(med))
@@ -386,9 +379,8 @@ object EventOps {
     // user-keyed joins over one persisted 3-column projection — shuffle
     // ∝ users, no window (a hot user never sorts in one partition).
     "q_event_funnel" -> ((s, d) => {
-      val e = T.events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts")).persist()
-      e.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      val e = Scope.eager(T.events(s, d)
+        .select(col("user_id"), col("event_type"), col("ts")))
       val v = e.groupBy(col("user_id"))
         .agg(min(when(col("event_type") === "view", col("ts"))).as("t_view"))
       val c = e.join(v.filter(col("t_view").isNotNull), "user_id")
@@ -419,11 +411,9 @@ object EventOps {
     // three user-keyed map-side-combining aggs + two user-keyed joins
     // over one persisted projection, all bounds exact integer µs.
     "q_event_funnel_win" -> ((s, d) => {
-      val e = T.events(s, d)
+      val e = Scope.eager(T.events(s, d)
         .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-        .persist() // 3 consumers; caller clearCache
-      e.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+          unix_micros(col("ts")).as("us"))) // 3 consumers
       val v = e.groupBy(col("user_id"))
         .agg(min(when(col("event_type") === "view", col("us"))).as("t_view"))
       val c = e.join(v.filter(col("t_view").isNotNull), "user_id")
@@ -465,11 +455,9 @@ object EventOps {
     "q_event_abtest_t" -> ((s, d) => abtestTOn(T.events(s, d))),
 
     "q_event_acf" -> ((s, d) => {
-      val daily = T.events(s, d).filter(col("ts").isNotNull)
+      val daily = Scope.eager(T.events(s, d).filter(col("ts").isNotNull)
         .groupBy(expr("unix_micros(ts) div 86400000000").as("dd"))
-        .agg(count(lit(1)).as("n"))
-        .persist() // both lag-join sides; caller clearCache
-      daily.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .agg(count(lit(1)).as("n"))) // both lag-join sides
       val pairs = daily
         .select(col("dd"), col("n").as("x"),
           explode(array((1 to 7).map(lit): _*)).as("lag"))
@@ -513,13 +501,11 @@ object EventOps {
     // one equi join to the purchase side (AQE broadcasts — both sides
     // are day-grain forever), final agg to 4 rows.
     "q_event_lagcorr" -> ((s, d) => {
-      val daily = T.events(s, d).filter(col("ts").isNotNull)
+      val daily = Scope.eager(T.events(s, d).filter(col("ts").isNotNull)
         .filter(col("event_type").isin("view", "purchase"))
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 86400000000").as("dd"))
-        .agg(count(lit(1)).as("n"))
-        .persist() // both series slices; caller clearCache
-      daily.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .agg(count(lit(1)).as("n"))) // both series slices
       val pairs = daily.filter(col("event_type") === "view")
         .select(col("dd"), col("n").as("x"),
           explode(array((0 to 3).map(lit): _*)).as("lag"))
@@ -872,11 +858,9 @@ object EventOps {
     // broadcast semi-join (calendar-sized). Shuffle: pairs + 7·pairs,
     // both map-side combined; no window function, no range join.
     "q_event_wau" -> ((s, d) => {
-      val e = T.events(s, d)
+      val e = Scope.eager(T.events(s, d)
         .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-        .distinct()
-        .persist() // 3 consumers (dau, contrib, days); caller clearCache
-      e.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .distinct()) // 3 consumers (dau, contrib, days)
       val days = e.select(col("day")).distinct()
       val dau = e.groupBy(col("day")).agg(count(lit(1)).as("dau"))
       val wau = e
@@ -904,11 +888,9 @@ object EventOps {
     // REAL activity days; exact integer day µs; stickiness is ONE IEEE
     // division of exact counts, unrounded (§7.4.7).
     "q_event_stickiness" -> ((s, d) => {
-      val e = T.events(s, d)
+      val e = Scope.eager(T.events(s, d)
         .select(col("user_id"), date_trunc("day", col("ts")).as("day"))
-        .distinct()
-        .persist() // 3 consumers (dau, contrib, days); caller clearCache
-      e.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .distinct()) // 3 consumers (dau, contrib, days)
       val days = e.select(col("day")).distinct()
       val dau = e.groupBy(col("day")).agg(count(lit(1)).as("dau"))
       val mau = e
@@ -1047,10 +1029,9 @@ object EventOps {
     // q_profile min/max precedent). No cartesian: the self-join is an
     // equi-join on user_id (plan-pinned).
     "q_event_cooccur" -> ((s, d) => {
-      val ut = T.events(s, d)
-        .select(col("user_id"), col("event_type")).distinct()
-        .persist() // 2 consumers (pair join + per-type counts); caller clearCache
-      ut.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      // 2 consumers (pair join + per-type counts)
+      val ut = Scope.eager(T.events(s, d)
+        .select(col("user_id"), col("event_type")).distinct())
       val perType = ut.groupBy(col("event_type")).agg(count(lit(1)).as("nt"))
       ut.as("a")
         .join(ut.as("b"),
@@ -1138,7 +1119,7 @@ object EventOps {
     // join); one equi-join grid←days and one user-keyed window for the
     // fill. Output ∝ Σ user spans.
     "q_event_fillforward" -> ((s, d) => {
-      val perDay = T.events(s, d)
+      val perDay = Scope.eager(T.events(s, d)
         .filter(col("ts").isNotNull)
         .select(col("user_id"),
           expr("unix_micros(ts) div 86400000000 * 86400000000").as("dus"),
@@ -1146,9 +1127,7 @@ object EventOps {
         .groupBy(col("user_id"), col("dus"))
         .agg(count(lit(1)).as("n_events"),
           max(struct(col("us"), col("event_id"), col("value")))
-            .getField("value").as("v_day"))
-        .persist() // 2 consumers (span + join-back); caller clearCache
-      perDay.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+            .getField("value").as("v_day"))) // 2 consumers (span + join-back)
       val grid = perDay.groupBy(col("user_id"))
         .agg(min(col("dus")).as("d0"), max(col("dus")).as("d1"))
         .select(col("user_id"),
@@ -1385,12 +1364,10 @@ object EventOps {
       // on, incl. q_event_gapsweep's gap math). Pre-1970 timestamps
       // would need floor-consistent bucketing on the Spark side.
       val D = 86400000000L
-      val perDay = T.events(s, d).filter(col("ts").isNotNull)
+      val perDay = Scope.eager(T.events(s, d).filter(col("ts").isNotNull)
         .groupBy(col("event_type"),
           expr(s"unix_micros(ts) div $D * $D").as("dus"))
-        .agg(count(lit(1)).as("n"))
-        .persist() // 2 consumers (span + join-back); caller clearCache
-      perDay.count() // eager: fill the cache before the fan-out (Graft.eager doc)
+        .agg(count(lit(1)).as("n"))) // 2 consumers (span + join-back)
       val grid = perDay.groupBy(col("event_type"))
         .agg(min(col("dus")).as("d0"), max(col("dus")).as("d1"))
         .select(col("event_type"),
@@ -1625,14 +1602,14 @@ object EventOps {
         .withColumn("half", when(col("dd") < col("split_dd"), 1).otherwise(2))
       val w = Window.partitionBy(col("user_id"), col("half"))
         .orderBy(col("event_id").asc)
-      val t = e.withColumn("prev_type", lag(col("event_type"), 1).over(w))
+      // ≤ 2·|types|² rows; every downstream branch reads it (one
+      // window pass total)
+      val t = Scope.eager(e
+        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
         .filter(col("prev_type").isNotNull)
         .groupBy(col("half"), col("prev_type"),
           col("event_type").as("next_type"))
-        .agg(count(lit(1)).as("n"))
-        .persist() // ≤ 2·|types|² rows; every downstream branch reads
-                   // it (one window pass total); caller clearCache
-      t.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .agg(count(lit(1)).as("n")))
       val tot = t.groupBy(col("half"), col("prev_type"))
         .agg(sum(col("n")).as("tot"))
       val sh = t.join(tot, Seq("half", "prev_type"))
@@ -1732,11 +1709,9 @@ object EventOps {
     // correction is an integer CASE on S. Plan: corpus → days
     // immediately; everything after is calendar-sized.
     "q_event_mannkendall" -> ((s, d) => {
-      val daily = T.events(s, d).filter(col("ts").isNotNull)
+      val daily = Scope.eager(T.events(s, d).filter(col("ts").isNotNull)
         .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(count(lit(1)).as("n"))
-        .persist() // pair join both sides + ties + count; clearCache
-      daily.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .agg(count(lit(1)).as("n"))) // pair join both sides + ties + count
       val sPairs = daily.select(col("day"), col("n"))
         .join(daily.select(col("day").as("d2"), col("n").as("n2")),
           col("day") < col("d2"))
@@ -1910,12 +1885,10 @@ object EventOps {
   /** q_event_trend's engine over any (event_type, ts) stream —
     * [[graft.Graft.trendSlope]] enters here. */
   private[graft] def trendOn(events: DataFrame): DataFrame = {
-    val daily = events.filter(col("ts").isNotNull)
+    val daily = Scope.eager(events.filter(col("ts").isNotNull)
       .groupBy(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("dd"))
-      .agg(count(lit(1)).as("n"))
-      .persist() // both join sides; caller clearCache
-    daily.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      .agg(count(lit(1)).as("n"))) // both join sides
     val pairs = daily.select(col("event_type"), col("dd").as("d1"),
         col("n").as("n1"))
       .join(daily.select(col("event_type"), col("dd").as("d2"),
@@ -2137,12 +2110,10 @@ object EventOps {
   /** q_event_newret core over any frame with (user_id, ts) — the planted
     * unit fixture enters here. */
   private[graft] def newretOn(events: DataFrame): DataFrame = {
-    val days = events.filter(col("ts").isNotNull)
+    val days = Scope.eager(events.filter(col("ts").isNotNull)
       .select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("dd"))
-      .distinct()
-      .persist() // 2 consumers (firsts, dau); caller clearCache
-    days.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      .distinct()) // 2 consumers (firsts, dau)
     val newu = days.groupBy(col("user_id"))
       .agg(min(col("dd")).as("dd"))
       .groupBy(col("dd")).agg(count(lit(1)).as("new_users"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Det, Tables => T}
+import graft.{Det, Scope, Tables => T}
 
 /** Graph analytics over relations derived from the corpus tables —
   * the iterative-propagation family beside LlmOps' connected
@@ -149,16 +149,14 @@ object GraphOps {
     * candidates → true-set-size Jaccard → top-k per sp. See the
     * registration comment for the full scale argument. */
   private[graft] def cosimOn(pairs0: DataFrame): DataFrame = {
-    val ps = pairs0.select(col("p"), col("sp")).persist() // 3 consumers
-    ps.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val ps = Scope.eager(pairs0.select(col("p"), col("sp"))) // 3 consumers
     val keep = ps.groupBy(col("p")).agg(count(lit(1)).as("pd"))
       .filter(col("pd") <= CosimMaxDeg).select(col("p"))
     // keyed cache (r22; persisted since r16 — both self-join sides read
     // it): pre-partitioned + sorted on p, the wedge self-join needs no
     // exchange and no sort on EITHER side (the projectionEdges finding)
-    val el = graft.Graft.keyedCache(
+    val el = Scope.eager(
       ps.join(keep, Seq("p"), "left_semi"), "p")
-    el.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
     val sz = ps.groupBy(col("sp")).agg(count(lit(1)).as("nparts"))
     val pairs = el.select(col("p"), col("sp").as("sa"))
       .join(el.select(col("p").as("p2"), col("sp").as("sb")),
@@ -204,17 +202,15 @@ object GraphOps {
     * part degree, computed BEFORE the hub cap (the cosim discipline: the
     * cap thins wedge candidates, it never changes a weight). */
   private[graft] def linkpredOn(pairs0: DataFrame): DataFrame = {
-    val ps = pairs0.select(col("p"), col("sp"))
-      .persist() // 2 consumers (degree agg + edge join); caller clearCache
-    ps.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // 2 consumers (degree agg + edge join)
+    val ps = Scope.eager(pairs0.select(col("p"), col("sp")))
     val deg = ps.groupBy(col("p")).agg(count(lit(1)).as("pd"))
     // one inner join both thins hubs AND attaches the weight
     // keyed cache (r22): see cosimOn — the wedge self-join reuses the
     // one exchange + sort
-    val el = graft.Graft.keyedCache(
+    val el = Scope.eager(
       ps.join(deg.filter(col("pd") <= CosimMaxDeg), Seq("p"))
         .select(col("p"), col("sp"), expr("1000000 div pd").as("wt")), "p")
-    el.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
     el.select(col("p"), col("sp").as("sa"), col("wt"))
       .join(el.select(col("p").as("p2"), col("sp").as("sb")),
         col("p") === col("p2") && col("sa") < col("sb"))
@@ -265,20 +261,19 @@ object GraphOps {
     * the quadratic term is bounded by the graph's degeneracy, not its
     * max degree. All-integer; every triangle appears exactly once.
     *
-    * Returns (triangles(a0, nb, nc), degrees(node, deg), the persisted
-    * canonical edge frame); persists the edge + oriented frames
-    * (multi-consumer) — caller clearCache. */
+    * Returns (triangles(a0, nb, nc), degrees(node, deg), the cached
+    * canonical edge frame); caches the edge, degree and oriented
+    * frames (multi-consumer). */
   private[graft] def trianglesOn(edges: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val e = edges.persist() // degree agg + orientation join
-    e.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
-    val deg = e.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .persist() // two orientation join-backs + caller stats
-    deg.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val e = Scope.eager(edges) // degree agg + orientation join
+    // two orientation join-backs + caller stats
+    val deg = Scope.eager(e.select(explode(array(col("a"), col("b"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // a < b always, so (da, a) < (db, b) ⟺ da ≤ db: the lower-key
     // endpoint of a tied-degree edge is already the lower id.
-    val oriented = e
+    // both wedge-join sides + the closing semi join
+    val oriented = Scope.eager(e
       .join(deg.select(col("node").as("na"), col("deg").as("da")),
         col("a") === col("na"))
       .join(deg.select(col("node").as("nb2"), col("deg").as("db")),
@@ -286,9 +281,7 @@ object GraphOps {
       .select(
         when(col("da") <= col("db"), col("a")).otherwise(col("b")).as("src"),
         when(col("da") <= col("db"), col("b")).otherwise(col("a")).as("dst"),
-        greatest(col("da"), col("db")).as("dd"))
-      .persist() // both wedge-join sides + the closing semi join
-    oriented.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        greatest(col("da"), col("db")).as("dd")))
     val cand = oriented.select(col("src"), col("dst").as("nb"), col("dd").as("degb"))
       .join(oriented.select(col("src").as("s2"), col("dst").as("nc"),
         col("dd").as("degc")),
@@ -464,8 +457,7 @@ object GraphOps {
       // ONE keyed cache (r22) serving the seed ranking (src-grain agg,
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
-      val e = graft.Graft.keyedCache(copurchaseEdges(s, d), "src")
-      e.count()
+      val e = Scope.eager(copurchaseEdges(s, d), "src")
       val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -490,8 +482,7 @@ object GraphOps {
       // ONE keyed cache (r22) serving the seed ranking (src-grain agg,
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
-      val e = graft.Graft.keyedCache(copurchaseEdges(s, d), "src")
-      e.count()
+      val e = Scope.eager(copurchaseEdges(s, d), "src")
       val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -524,8 +515,7 @@ object GraphOps {
     // sum order-free) — then ONE IEEE division for the double.
     "q_graph_harmonic" -> ((s, d) => {
       // ONE keyed cache (r22) — see q_graph_kbfs
-      val e = graft.Graft.keyedCache(copurchaseEdges(s, d), "src")
-      e.count()
+      val e = Scope.eager(copurchaseEdges(s, d), "src")
       val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -551,7 +541,7 @@ object GraphOps {
     // NULL-guarded. Uniform-cost ≡ hops law in-unit; oracle unrolls
     // the identical rounds.
     "q_graph_wcloseness" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       val seeds = ew.groupBy(col("src")).agg(sum(col("w")).as("st"))
         .orderBy(col("st").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -583,8 +573,7 @@ object GraphOps {
       // ONE keyed cache (r22) serving the seed ranking (src-grain agg,
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
-      val e = graft.Graft.keyedCache(copurchaseEdges(s, d), "src")
-      e.count()
+      val e = Scope.eager(copurchaseEdges(s, d), "src")
       val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -615,8 +604,7 @@ object GraphOps {
       // ONE keyed cache (r22) serving the seed ranking (src-grain agg,
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
-      val e = graft.Graft.keyedCache(copurchaseEdges(s, d), "src")
-      e.count()
+      val e = Scope.eager(copurchaseEdges(s, d), "src")
       val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -654,7 +642,7 @@ object GraphOps {
     // horizon, the ecc truncation discipline). Three weighted
     // centralities at ONE Bellman-Ford floor.
     "q_graph_wcentral" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       val seeds = ew.groupBy(col("src")).agg(sum(col("w")).as("st"))
         .orderBy(col("st").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -698,8 +686,7 @@ object GraphOps {
       // ONE keyed cache (r22) serving the seed ranking (src-grain agg,
       // exchange-free on the keyed layout), both Brandes sweeps, and
       // the node count — was an eager cache + a keyed re-cache per sweep
-      val e = graft.Graft.keyedCache(copurchaseEdges(s, d), "src")
-      e.count()
+      val e = Scope.eager(copurchaseEdges(s, d), "src")
       val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -779,7 +766,7 @@ object GraphOps {
     // accept direction is pinned in-unit (KCoreSuite: two-clique
     // bridge fixture, Q(labelprop) = 0.423… > Q(single) = 0).
     "q_graph_modularity" -> ((s, d) => {
-      val edges = graft.Graft.eager(copurchaseEdgesMin(s, d, CoreMinPair))
+      val edges = Scope.eager(copurchaseEdgesMin(s, d, CoreMinPair))
       val out = modularityOn(edges,
         graft.operators.LabelProp.run(edges, LpRounds))
       out
@@ -797,7 +784,7 @@ object GraphOps {
     // edge crosses sides) — the per-community confirmation of
     // modularity's global REJECT.
     "q_graph_conductance" -> ((s, d) => {
-      val edges = graft.Graft.eager(copurchaseEdgesMin(s, d, CoreMinPair))
+      val edges = Scope.eager(copurchaseEdgesMin(s, d, CoreMinPair))
       conductanceOn(edges,
         graft.operators.LabelProp.run(edges, LpRounds), 10)
     }),
@@ -844,7 +831,7 @@ object GraphOps {
     // in-unit (KCoreSuite). Engine semantics/determinism/scale in
     // modularityWOn's scaladoc.
     "q_graph_modularity_w" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       modularityWOn(ew,
         graft.operators.LabelProp.run(
           ew.select(col("src"), col("dst")), LpRounds))
@@ -861,7 +848,7 @@ object GraphOps {
     // unweighted law in-unit (KCoreSuite); engine in conductanceWOn's
     // scaladoc.
     "q_graph_conductance_w" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       conductanceWOn(ew,
         graft.operators.LabelProp.run(
           ew.select(col("src"), col("dst")), LpRounds), 10)
@@ -884,7 +871,7 @@ object GraphOps {
     // conductanceWOn's scaladoc; oracle unrolls the SUM(w)-vote
     // rounds + the weighted fold.
     "q_graph_conductance_ww" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       conductanceWOn(ew,
         graft.operators.LabelProp.runW(ew, LpRounds), 10)
     }),
@@ -911,7 +898,7 @@ object GraphOps {
     // clusters ⟹ Q > 0) is pinned in-unit on modularityOn's
     // two-clique fixture.
     "q_graph_projmod" -> ((s, d) => {
-      val edges = graft.Graft.eager(supplierProjection(s, d))
+      val edges = Scope.eager(supplierProjection(s, d))
       modularityOn(edges,
         graft.operators.LabelProp.run(edges, LpRounds))
     }),
@@ -934,7 +921,7 @@ object GraphOps {
     // never-decreases law (KCoreSuite). Output one row forever:
     // (n_comms, m_edges, q_micro_base, q_micro, q_modularity).
     "q_graph_refine" -> ((s, d) => {
-      val edges = graft.Graft.eager(copurchaseEdgesMin(s, d, CoreMinPair))
+      val edges = Scope.eager(copurchaseEdgesMin(s, d, CoreMinPair))
       val l0 = graft.operators.LabelProp.run(edges, LpRounds)
       val l1 = refineOn(edges, l0, RefineMoves)
       val before = modularityOn(edges, l0)
@@ -956,7 +943,7 @@ object GraphOps {
     // one row forever: (n_comms, w_total, q_micro_base, q_micro,
     // q_modularity).
     "q_graph_refine_w" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       val l0 = graft.operators.LabelProp.runW(ew, LpRounds)
       val l1 = refineWOn(ew, l0, RefineMoves)
       val before = modularityWOn(ew, l0)
@@ -984,7 +971,7 @@ object GraphOps {
     // Output one row forever: (n_comms_l1, n_comms_l2, w_total,
     // q_micro_base, q_micro_l1, q_micro_l2, q_modularity).
     "q_graph_louvain2" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       val l0 = graft.operators.LabelProp.runW(ew, LpRounds)
       val (l1, l2) = louvain2On(ew, l0, RefineMoves)
       val qb = modularityWOn(ew, l0)
@@ -1019,7 +1006,7 @@ object GraphOps {
     // oracle unrolls all three fixpoints verbatim; top-BetwTopK via
     // TakeOrderedAndProject.
     "q_graph_betweenness_w" -> ((s, d) => {
-      val ew = graft.Graft.eager(copurchaseEdgesW(s, d, CoreMinPair))
+      val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
       val seeds = ew.groupBy(col("src")).agg(sum(col("w")).as("st"))
         .orderBy(col("st").desc, col("src").asc).limit(KbfsSeeds)
         .select(col("src").as("seed"), col("src").as("node"))
@@ -1199,10 +1186,10 @@ object GraphOps {
     * form made the branches race to materialize the shared uncached
     * prefix). Returns (round, n_edges). */
   private[graft] def trussPeelOn(edges0: DataFrame, minSup: Int,
-                                 rounds: Int): DataFrame = {
+                                 rounds: Int): DataFrame = Scope {
     val spark = edges0.sparkSession
     val (tris0, _, e0) = trianglesOn(edges0)
-    // tris_r needs NO eager count (the Graft.eager exception): every
+    // tris_r needs NO eager count (the Scope.eager exception): every
     // consumer of a round frame sits under its own BOUNDED DRIVER
     // ACTION — round r+1's e.count() is the single action that reads
     // tris_r (once, via sup), and the r+1 prune then reads the cache
@@ -1210,7 +1197,7 @@ object GraphOps {
     // an r16 draft that counted every round frame eagerly paid a
     // standalone pass over the triangle list per round (5.9 → 13.6 s
     // at sf0.1) for a race that structurally cannot happen here.
-    var tris = tris0.persist()
+    var tris = Scope.cache(tris0)
     var e = e0
     // superseded round frames release one round later (r16): e_{r-1}
     // is last read when e_r materializes, tris_{r-1} once round r+1's
@@ -1223,15 +1210,14 @@ object GraphOps {
         .groupBy(col("x"), col("y")).agg(count(lit(1)).as("support"))
         .filter(col("support") >= minSup)
         .select(col("x"), col("y"))
-      e = e.join(sup,
-        col("a") === col("x") && col("b") === col("y"), "left_semi")
-        .persist()
+      e = Scope.cache(e.join(sup,
+        col("a") === col("x") && col("b") === col("y"), "left_semi"))
       val n = e.count() // materializes tris_{r-1}'s cache on the way
-      if (prevE ne e0) prevE.unpersist() // e0 is trianglesOn's shared frame
-      if (prevTris != null) prevTris.unpersist()
+      if (prevE ne e0) Scope.release(prevE) // e0 is trianglesOn's shared frame
+      if (prevTris != null) Scope.release(prevTris)
       if (r < rounds) { // the last round's prune has no reader — skip it
         prevTris = tris
-        tris = tris
+        tris = Scope.cache(tris
           .join(e.select(col("a").as("ea1"), col("b").as("eb1")),
             least(col("a0"), col("nb")) === col("ea1")
               && greatest(col("a0"), col("nb")) === col("eb1"), "left_semi")
@@ -1240,8 +1226,7 @@ object GraphOps {
               && greatest(col("a0"), col("nc")) === col("eb2"), "left_semi")
           .join(e.select(col("a").as("ea3"), col("b").as("eb3")),
             least(col("nb"), col("nc")) === col("ea3")
-              && greatest(col("nb"), col("nc")) === col("eb3"), "left_semi")
-          .persist()
+              && greatest(col("nb"), col("nc")) === col("eb3"), "left_semi"))
       }
       (r, n)
     }
@@ -1312,8 +1297,8 @@ object GraphOps {
   private[graft] def modularityOn(edges: DataFrame,
                                   labels: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val lab = labels.select(col("node"), col("label")).persist()
-    lab.count() // eager: both join-backs read it (Graft.eager doc)
+    // both join-backs read it
+    val lab = Scope.eager(labels.select(col("node"), col("label")))
     val e2 = edges.select(col("src"), col("dst"))
       .join(lab.select(col("node").as("src"), col("label").as("la")),
         Seq("src"))
@@ -1348,9 +1333,8 @@ object GraphOps {
   private[graft] def richclubOn(edges: DataFrame,
                                 ks: Seq[Long]): DataFrame = {
     val dec = "decimal(38,0)"
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .persist() // 2 join-backs + the node fold; caller clearCache
-    deg.count() // eager (r16): fill the cache before the fan-out
+    // 2 join-backs + the node fold
+    val deg = Scope.eager(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val e2 = edges
       .join(deg.select(col("src"), col("deg").as("dx")), Seq("src"))
       .join(deg.select(col("src").as("dst"), col("deg").as("dy")),
@@ -1404,8 +1388,8 @@ object GraphOps {
   private[graft] def conductanceOn(edges: DataFrame, labels: DataFrame,
                                    k: Int): DataFrame = {
     val dec = "decimal(38,0)"
-    val lab = labels.select(col("node"), col("label")).persist()
-    lab.count() // eager: 2 join-backs + the node count read it (Graft.eager doc)
+    // 2 join-backs + the node count read it
+    val lab = Scope.eager(labels.select(col("node"), col("label")))
     val e2 = edges.select(col("src"), col("dst"))
       .join(lab.select(col("node").as("src"), col("label").as("la")),
         Seq("src"))
@@ -1438,14 +1422,12 @@ object GraphOps {
     * cap discipline as cosim/linkpred: a commodity part fans the pair
     * join out by degree² while saying nothing about supplier
     * affinity. Shuffle ∝ Σ deg(part)² under the cap; the (p, sp)
-    * table persists for its two self-join sides (caller clearCache
-    * per the SparkEntry cache contract). */
+    * table is cached for its two self-join sides. */
   private[graft] def supplierProjection(s: SparkSession,
                                         d: String): DataFrame = {
-    val ps = T.lineitem(s, d)
+    val ps = Scope.eager(T.lineitem(s, d)
       .select(col("l_partkey").as("p"), col("l_suppkey").as("sp"))
-      .distinct().persist()
-    ps.count() // eager: both self-join sides read it (Graft.eager doc)
+      .distinct()) // both self-join sides read it
     projectionEdges(ps)
   }
 
@@ -1465,14 +1447,13 @@ object GraphOps {
     // cached pre-partitioned, the join needs no exchange on either side
     // (and without any cache the whole hub-cap pipeline evaluated once
     // per side: ProfJobs measured the 2842K el exchange built 4x)
-    val el = graft.Graft.keyedCache(
+    val el = Scope.eager(
       ps.join(deg, Seq("p")).filter(col("pd") <= CosimMaxDeg)
-        .select(col("p"), col("sp")), "p")
-    el.count() // eager: both self-join sides read it (Graft.eager doc)
+        .select(col("p"), col("sp")), "p") // both self-join sides read it
     // stats-preserving cut (r22): prs feeds the 1-row affinity total
     // AND the edge filter — uncut, the whole wedge join ran TWICE
     // (ProfJobs: two identical 3.1 s jobs at sf0.1)
-    val prs = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+    val prs = Scope.cut(
       el.select(col("p"), col("sp").as("sa"))
         .join(el.select(col("p"), col("sp").as("sb")), Seq("p"))
         .filter(col("sa") < col("sb"))
@@ -1548,8 +1529,8 @@ object GraphOps {
   private[graft] def modularityWOn(edges: DataFrame,
                                    labels: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val lab = labels.select(col("node"), col("label")).persist()
-    lab.count() // eager: both join-backs read it (Graft.eager doc)
+    // both join-backs read it
+    val lab = Scope.eager(labels.select(col("node"), col("label")))
     val e2 = edges.select(col("src"), col("dst"), col("w"))
       .join(lab.select(col("node").as("src"), col("label").as("la")),
         Seq("src"))
@@ -1585,8 +1566,8 @@ object GraphOps {
   private[graft] def conductanceWOn(edges: DataFrame, labels: DataFrame,
                                     k: Int): DataFrame = {
     val dec = "decimal(38,0)"
-    val lab = labels.select(col("node"), col("label")).persist()
-    lab.count() // eager: 2 join-backs + the node count read it
+    // 2 join-backs + the node count read it
+    val lab = Scope.eager(labels.select(col("node"), col("label")))
     val e2 = edges.select(col("src"), col("dst"), col("w"))
       .join(lab.select(col("node").as("src"), col("label").as("la")),
         Seq("src"))
@@ -1656,25 +1637,24 @@ object GraphOps {
     * over the entry checkpoint — no per-round join, persist, or
     * checkpoint, and rounds-minus-one fewer driver actions. */
   private[graft] def refineOn(edges: DataFrame, labels0: DataFrame,
-                              moves: Int): DataFrame = {
+                              moves: Int): DataFrame = Scope {
     require(moves >= 0, s"moves must be >= 0, got $moves")
     val dec = "decimal(38,0)"
     // keyed cache (r22): every round's kv scoring join keys on dst —
     // partition + sort once so rounds never re-shuffle the edge side
-    val e = graft.Graft.keyedCache(
+    // (columnar — r21)
+    val e = Scope.eager(
       edges.select(col("src"), col("dst")), "dst")
-    e.count() // eager: every round's scoring join reads it (columnar — r21)
-    val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      .persist() // read every round; unpersisted before return
-    deg.count() // eager: fill the cache before the fan-out
+    // read every round; released before return
+    val deg = Scope.eager(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")))
     // m2 as a one-time driver literal (r22): the 1-row normalizer was a
     // crossJoin(broadcast) rebuilt by EVERY round's action — same exact
     // decimal value, rounds fewer broadcast stages (NULL on an empty
     // graph, exactly like the old empty-sum broadcast row)
     val m2 = Option(deg.agg(sum(col("d")).cast(dec)).head.getDecimal(0))
       .map(lit).getOrElse(lit(null).cast(dec))
-    var labels = org.apache.spark.sql.graftbridge.PlanBridge
-      .eagerCut(labels0.select(col("node"), col("label")))._1
+    var labels = Scope.cut(labels0.select(col("node"), col("label")))._1
     // Community degree sums: computed ONCE (stats-carrying cut — it
     // broadcasts into both the dsa and dsb joins), then maintained on
     // the driver (r22 second pass): the applied move changes exactly
@@ -1682,7 +1662,7 @@ object GraphOps {
     // in hand from the argmax row — a literal when-projection over the
     // round-1 cut, zero jobs per later round (same exact long
     // arithmetic the re-aggregation would produce, term for term).
-    val ds0 = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+    val ds0 = Scope.cut(
       labels.join(deg, Seq("node"))
         .groupBy(col("label")).agg(sum(col("d")).as("dsum")))._1
     var ds = ds0
@@ -1750,8 +1730,8 @@ object GraphOps {
       }
     }
     // the returned labels read only their entry cut; the dsum cut is dead
-    org.apache.spark.sql.graftbridge.PlanBridge.free(ds0)
-    deg.unpersist()
+    Scope.release(ds0)
+    Scope.release(deg)
     labels
   }
 
@@ -1778,15 +1758,16 @@ object GraphOps {
     * TakeOrderedAndProject argmax + a broadcast label update; the
     * per-round driver action reads ≤1 row. */
   private[graft] def refineWOn(edges: DataFrame, labels0: DataFrame,
-                               moves: Int): DataFrame = {
+                               moves: Int): DataFrame = Scope {
     // keyed cache (r22): see refineOn
-    val e = graft.Graft.keyedCache(
+    val e = Scope.eager(
       edges.select(col("src"), col("dst"), col("w")), "dst")
-    e.count() // eager: every round's scoring join reads it (columnar — r21)
-    val deg = e.groupBy(col("src").as("node")).agg(sum(col("w")).as("d"))
-      .persist() // read every round; unpersisted by the core
-    deg.count() // eager: fill the cache before the fan-out
-    refineWCore(e, deg, labels0, moves)
+    // read every round; dead once the core returns
+    val deg = Scope.eager(
+      e.groupBy(col("src").as("node")).agg(sum(col("w")).as("d")))
+    val out = refineWCore(e, deg, labels0, moves)
+    Scope.release(deg)
+    out
   }
 
   /** [[refineWOn]]'s move loop with the strength table INJECTED (r20)
@@ -1799,23 +1780,22 @@ object GraphOps {
     * the original-graph ΔQ of the projected move (the contraction
     * invariant in [[contractW]]'s scaladoc), so level-2 moves carry
     * refineOn's never-decreases law up to the original graph.
-    * Contract: `e` materialized (persisted) by the caller, no
-    * self-loops; `deg` persisted by the caller and covering every node
-    * of `e` (unpersisted here before return); m2 = Σ deg is the FULL
-    * directed weight. */
+    * Contract: `e` materialized (cached) by the caller, no
+    * self-loops; `deg` cached by the caller and covering every node of
+    * `e` (dead once this returns — the caller releases it); m2 = Σ deg
+    * is the FULL directed weight. */
   private[graft] def refineWCore(e: DataFrame, deg: DataFrame,
                                  labels0: DataFrame,
-                                 moves: Int): DataFrame = {
+                                 moves: Int): DataFrame = Scope {
     require(moves >= 0, s"moves must be >= 0, got $moves")
     val dec = "decimal(38,0)"
     // m2 as a one-time driver literal — see refineOn
     val m2 = Option(deg.agg(sum(col("d")).cast(dec)).head.getDecimal(0))
       .map(lit).getOrElse(lit(null).cast(dec))
-    var labels = org.apache.spark.sql.graftbridge.PlanBridge
-      .eagerCut(labels0.select(col("node"), col("label")))._1
+    var labels = Scope.cut(labels0.select(col("node"), col("label")))._1
     // strength sums cut once, then maintained as exact literal deltas —
     // see refineOn (the move shifts ssum by the ±s_v in the argmax row)
-    val ds0 = org.apache.spark.sql.graftbridge.PlanBridge.eagerCut(
+    val ds0 = Scope.cut(
       labels.join(deg, Seq("node"))
         .groupBy(col("label")).agg(sum(col("d")).as("dsum")))._1
     var ds = ds0
@@ -1869,8 +1849,7 @@ object GraphOps {
             .otherwise(col("dsum")).as("dsum"))
       }
     }
-    org.apache.spark.sql.graftbridge.PlanBridge.free(ds0)
-    deg.unpersist()
+    Scope.release(ds0)
     labels
   }
 
@@ -1887,7 +1866,7 @@ object GraphOps {
     * ordered by k_pivots — the k = max row is the tautological 100%
     * anchor, exact integers throughout. */
   private[graft] def betwsweepOn(e: DataFrame, ks0: Seq[Int],
-                                 topK: Int): DataFrame = {
+                                 topK: Int): DataFrame = Scope {
     // Normalize the pivot counts (r21, the r20 ADVICE fix): the
     // overlap fold below anchors on tops.last, which is only the
     // documented k = max 100% reference when ks is distinct and
@@ -1901,34 +1880,32 @@ object GraphOps {
     // ONE keyed cache (r22) shared by the seed ranking (a src-grain
     // aggregate — exchange-free on the keyed layout) and BOTH Brandes
     // sweeps; the callers pass the raw edge lineage.
-    val ek = graft.Graft.keyedCache(
-      e.select(col("src"), col("dst")), "src")
-    ek.count()
-    val top = ek.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-      .orderBy(col("dg").desc, col("src").asc).limit(kmax)
-      .localCheckpoint() // ≤ kmax rows: the rank window stays tiny
+    val ek = Scope.eager(e.select(col("src"), col("dst")), "src")
+    // ≤ kmax rows: the rank window stays tiny
+    val top = Scope.cut(ek.groupBy(col("src")).agg(count(lit(1)).as("dg"))
+      .orderBy(col("dg").desc, col("src").asc).limit(kmax))._1
     val ranked = top.select(col("src"), row_number().over(
         Window.orderBy(col("dg").desc, col("src").asc)).as("rk"))
     val seeds = ranked.select(col("src").as("seed"),
       col("src").as("node"))
-    val fw = graft.operators.Betweenness.forwardKeyed(ek, seeds, BfsRounds)
-    val dep = graft.operators.Betweenness.dependenciesKeyed(ek, fw)
-    val dq = dep
+    val (fw, fwCuts) =
+      graft.operators.Betweenness.forwardKeyed(ek, seeds, BfsRounds)
+    val (dep, depCuts) =
+      graft.operators.Betweenness.dependenciesKeyed(ek, fw)
+    // read once per k below
+    val dq = Scope.cut(dep
       .filter(col("node") =!= col("seed"))
       .join(broadcast(ranked.select(col("src").as("seed"), col("rk"))),
-        Seq("seed"))
-      .localCheckpoint() // read once per k below
-    // r22: dq is checkpointed, so BOTH sweeps' per-round/level pieces
-    // are dead — free them now (the k-filters below read only dq)
-    org.apache.spark.sql.graftbridge.PlanBridge.free(fw)
-    org.apache.spark.sql.graftbridge.PlanBridge.free(dep)
+        Seq("seed")))._1
+    // r22: dq is cut, so BOTH sweeps' per-round/level pieces are dead —
+    // free them now (the k-filters below read only dq)
+    (fwCuts ++ depCuts).foreach(Scope.release)
     val tops = ks.map { k =>
-      dq.filter(col("rk") <= k)
+      Scope.cut(dq.filter(col("rk") <= k)
         .groupBy(col("node"))
         .agg(sum(col("dq")).cast("decimal(38,0)").as("bc_q"))
         .orderBy(col("bc_q").desc, col("node").asc).limit(topK)
-        .select(lit(k.toLong).as("k_pivots"), col("node"))
-        .localCheckpoint() // ≤ topK rows each
+        .select(lit(k.toLong).as("k_pivots"), col("node")))._1 // ≤ topK rows
     }
     val ref = tops.last.select(col("node").as("rnode"))
     tops.reduce(_ unionByName _)
@@ -1988,27 +1965,26 @@ object GraphOps {
     * ∝ CONTRACTED edges (≪ edges); the projection is one broadcast-
     * sized equi-join. */
   private[graft] def louvain2On(ew: DataFrame, l0: DataFrame,
-                                moves: Int): (DataFrame, DataFrame) = {
+                                moves: Int): (DataFrame, DataFrame) = Scope {
     val l1 = refineWOn(ew, l0, moves)
-    val cg = org.apache.spark.sql.graftbridge.PlanBridge
-      .eagerCut(contractW(ew, l1))._1
-    // keyed cache (r22): refineWCore's kv join keys on dst
-    val ce = graft.Graft.keyedCache(
+    val cg = Scope.cut(contractW(ew, l1))._1
+    // keyed cache (r22): refineWCore's kv join keys on dst; every
+    // level-2 scoring join reads it
+    val ce = Scope.eager(
       cg.filter(col("src") =!= col("dst")), "dst")
-    ce.count() // eager: every level-2 scoring join reads it
-    val cdeg = cg.groupBy(col("src").as("node")).agg(sum(col("w")).as("d"))
-      .persist() // read every level-2 round; unpersisted by the core
-    cdeg.count() // eager: fill the cache before the fan-out
+    // read every level-2 round
+    val cdeg = Scope.eager(
+      cg.groupBy(col("src").as("node")).agg(sum(col("w")).as("d")))
     val ident = cg.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     val l2c = refineWCore(ce, cdeg, ident, moves)
     // r22: l2c is a stack of literal when-projections over refineWCore's
     // ENTRY cut (which materialized ident, cg's only lazy reader), and
-    // the move loop has fully run — the contracted graph and its
-    // move-edge cache are dead; release them now (refineWCore already
-    // unpersisted cdeg)
-    ce.unpersist(blocking = false)
-    org.apache.spark.sql.graftbridge.PlanBridge.free(cg)
+    // the move loop has fully run — the contracted graph, its move-edge
+    // cache and its strength table are dead; release them now
+    Scope.release(ce)
+    Scope.release(cdeg)
+    Scope.release(cg)
     val l2 = l1.select(col("node"), col("label").as("c"))
       .join(l2c.select(col("node").as("c"), col("label").as("l2")),
         Seq("c"))
@@ -2020,9 +1996,8 @@ object GraphOps {
     * extracted for the planted star/regular fixtures. */
   private[graft] def assortOn(edges: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .persist() // 3 consumers (both join-backs + node count); caller clearCache
-    deg.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // 3 consumers (both join-backs + node count)
+    val deg = Scope.eager(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     val e2 = edges
       .join(deg.select(col("src"), col("deg").as("dx")), Seq("src"))
       .join(deg.select(col("src").as("dst"), col("deg").as("dy")),

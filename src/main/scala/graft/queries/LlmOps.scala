@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Det, Tables => T}
+import graft.{Det, Scope, Tables => T}
 
 /** SURVEY §2.10 + north-star LLM-data-pipeline operators: exact dedup,
   * MinHash-LSH / n-gram-Jaccard near-dup, SimHash fingerprints,
@@ -294,8 +294,7 @@ object LlmOps {
     * @return (doc_a, doc_b, blockCols…, hamming), doc_a < doc_b. */
   private[graft] def simDupPairsOn(sigs0: DataFrame,
                                    blockCols: Seq[String]): DataFrame = {
-    val sigs = sigs0.persist()
-    sigs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val sigs = Scope.eager(sigs0)
     val bc = blockCols.map(col)
     val bands = sigs.select((col("doc_id") +: bc) :+
       posexplode(array((0 until SimBands).map(b =>
@@ -364,13 +363,11 @@ object LlmOps {
     *                  integer prefilter is conservative).
     * @return distinct (doc_a, doc_b) with doc_a < doc_b — candidates
     *         only; callers must verify the actual Jaccard.
-    * @note Cache lifecycle: this helper `persist()`s two intermediates
-    *       (the feature rows and the ranked prefix index) because each
-    *       feeds two consumers; the marks live until the caller releases
-    *       them. Long-lived callers embedding this in a larger job must
-    *       call `spark.catalog.clearCache()` (or unpersist by plan) after
-    *       materializing the result — the same contract documented on
-    *       [[graft.SparkEntry]], which Bench/Verify honor between queries.
+    * @note Cache lifecycle: this helper caches two intermediates (the
+    *       feature rows and the ranked prefix index) because each feeds
+    *       two consumers; they are released with the enclosing
+    *       [[graft.Scope]] — wrap a long-lived use in
+    *       [[graft.Graft.cacheScoped]] (see [[graft.SparkEntry]]).
     */
   def jaccardCandidates(feats: DataFrame, blockCols: Seq[String],
                         tNum: Int, tDen: Int): DataFrame = {
@@ -384,17 +381,15 @@ object LlmOps {
     // splittable by AQE — which also broadcasts the vocabulary-sized DF
     // table outright when it is small (no hint needed either way). The
     // per-doc windows below are skew-free (doc sizes are bounded).
-    val f = feats.persist() // two consumers: DF table + the ranked index
-    f.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val f = Scope.eager(feats) // two consumers: DF table + the ranked index
     val dfTab = f.groupBy(col("feat")).agg(count(lit(1)).as("df"))
     val withDf = f.join(dfTab, "feat")
-    val prefix = (if (feats.columns.contains("sz")) withDf
+    // both sides of the self-join below
+    val prefix = Scope.eager((if (feats.columns.contains("sz")) withDf
       else withDf.withColumn("sz", count(lit(1)).over(w)))
       .withColumn("rn", row_number().over(wOrd))
       .filter(col("rn") <= col("sz") - ceilT + 1)
-      .select(col("doc_id") +: col("feat") +: col("sz") +: blockCols.map(col): _*)
-      .persist() // both sides of the self-join below
-    prefix.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      .select(col("doc_id") +: col("feat") +: col("sz") +: blockCols.map(col): _*))
     val a = prefix.select(col("doc_id").as("doc_a") +: col("feat") +:
       col("sz").as("sz_a") +: blockCols.map(col): _*)
     val b = prefix.select(col("doc_id").as("doc_b") +: col("feat").as("feat_b") +:
@@ -443,14 +438,12 @@ object LlmOps {
     val w = Window.partitionBy(col("doc_id"))
     val wOrd = w.orderBy(col("df").asc, col("feat").asc)
     val ceilT = floor((lit(tNum) * col("sz") + lit(tDen - 1)) / lit(tDen))
-    val f = feats.persist() // two consumers: DF table + both join sides
-    f.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val f = Scope.eager(feats) // two consumers: DF table + both join sides
     val dfTab = f.groupBy(col("feat")).agg(count(lit(1)).as("df"))
     val withDf = f.join(dfTab, "feat")
-    val sized = (if (feats.columns.contains("sz")) withDf
-      else withDf.withColumn("sz", count(lit(1)).over(w)))
-      .persist() // two consumers: the probe prefix AND the container side
-    sized.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // two consumers: the probe prefix AND the container side
+    val sized = Scope.eager((if (feats.columns.contains("sz")) withDf
+      else withDf.withColumn("sz", count(lit(1)).over(w))))
     // probe side: a-prefix only (the pigeonhole bound above)
     val prefix = sized
       .withColumn("rn", row_number().over(wOrd))
@@ -542,10 +535,8 @@ object LlmOps {
   private[graft] def embDupPairsOn(base0: DataFrame, blockCols: Seq[String],
                                    simMin: Double): DataFrame = {
     // three consumers (band explode + both verify sides) — without the
-    // persist each re-runs the caller's scan + cast + norm pipeline;
-    // same cache contract as the other LSH helpers (caller clearCache)
-    val base = base0.persist()
-    base.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // cache each re-runs the caller's scan + cast + norm pipeline
+    val base = Scope.eager(base0)
     val bc = blockCols.map(col)
     val bands = base.select((col("vec_id") +: bc) :+
       posexplode(array((0 until 8).map(bd =>
@@ -713,9 +704,8 @@ object LlmOps {
     graft.functions.DotF64.register(base.sparkSession)
     val cents = centroids.map(_.withColumn("cn", norm(col("ce"))))
       .getOrElse(ivfDefaultQuantizer(base))
-    val ranked = ivfRanked(base, cents, nprobe)
-      .persist() // consumed by both the probe side and the list side
-    ranked.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // consumed by both the probe side and the list side
+    val ranked = Scope.eager(ivfRanked(base, cents, nprobe))
     val assigned = ranked.filter(col("crk") === 1)
       .select(col("vec_id"), col("e"), col("nrm"), col("cent_id"))
     // nprobe rows per probe — one per probed list; lists partition the
@@ -763,14 +753,12 @@ object LlmOps {
     // (k-gram transform + window mins, interpreted lambdas) and the
     // corpus parquet is single-row-group — ProfJobs measured the
     // sketch pass 4.2 s on ONE task; identity on any wide scan
-    val f = winnowFps(graft.Graft.spreadNarrowScan(docs))
-      .select(col("doc_id"), col("fps")).persist()
-    f.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val f = Scope.eager(winnowFps(graft.Graft.spreadNarrowScan(docs))
+      .select(col("doc_id"), col("fps")))
     val e = f.select(col("doc_id"), explode(col("fps")).as("fp"))
     val keepFp = e.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= WinnowMaxPosting).select(col("fp"))
-    val el = e.join(keepFp, Seq("fp"), "left_semi").persist()
-    el.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val el = Scope.eager(e.join(keepFp, Seq("fp"), "left_semi"))
     val pairs = el.select(col("fp"), col("doc_id").as("doc_a"))
       .join(el.select(col("fp").as("fp2"), col("doc_id").as("doc_b")),
         col("fp") === col("fp2") && col("doc_a") < col("doc_b"))
@@ -844,10 +832,8 @@ object LlmOps {
     // once per doc — never size(<array expr>) above the explode, where
     // projection collapse re-evaluates the array per exploded row
     // (measured 5× the whole query's cost).
-    val docs = T.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk"))
-      .persist()
-    docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val docs = Scope.eager(T.documents(s, d)
+      .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk")))
     val feats = docs.select(col("doc_id"), col("lang"), col("source"),
       size(col("tk")).cast("long").as("sz"), explode(col("tk")).as("feat"))
     val cand = jaccardCandidates(feats, Seq("lang", "source"), 4, 5)
@@ -1004,8 +990,7 @@ object LlmOps {
     // signature table is materialized once (n_docs × 64 longs; at
     // 100 TB scale this is the LSH signature table every production
     // pipeline persists before banding).
-    val sig = minhashSig(T.documents(s, d), form).persist()
-    sig.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    val sig = Scope.eager(minhashSig(T.documents(s, d), form))
     // Band key: md5 of the concatenated in-band signature — one equi-join
     // key per band, so bucket collisions require all 8 in-band rows equal.
     def bandKey(b: Int): Column =
@@ -1227,10 +1212,9 @@ object LlmOps {
     // prefilter conservative).
     "q_llm_contain" -> ((s, d) => {
       graft.functions.OverlapCount.register(s) // graft_overlap; idempotent
-      val docs = T.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk"))
-        .persist() // three consumers: feature rows + both verify sides
-      docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      // three consumers: feature rows + both verify sides
+      val docs = Scope.eager(T.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk")))
       val feats = docs.select(col("doc_id"), col("lang"), col("source"),
         size(col("tk")).cast("long").as("sz"), explode(col("tk")).as("feat"))
       val cand = containmentCandidates(feats, Seq("lang", "source"), 9, 10)
@@ -1303,9 +1287,9 @@ object LlmOps {
     // equi-joins that AQE sizes.
     "q_llm_tri" -> ((s, d) => {
       // eager (r16): 3 readers of the pair list; lazy persist races
-      // under concurrent AQE stages (Graft.eager's doc — clustco's
+      // under concurrent AQE stages (Scope.eager's doc — clustco's
       // sibling site was the r15 8.4× regression)
-      val p = graft.Graft.eager(
+      val p = Scope.eager(
         neardupPairs(s, d).select(col("doc_a"), col("doc_b")))
       val e1 = p.select(col("doc_a").as("a"), col("doc_b").as("b"))
       val e2 = p.select(col("doc_a").as("b2"), col("doc_b").as("c"))
@@ -1330,14 +1314,14 @@ object LlmOps {
     // hash agg over the symmetrized pair list (∝ 2·pairs); the final
     // left join is node-sized. All counts exact integers; cc is ONE
     // IEEE division (unrounded §7.4), NULL at deg ≤ 1 (structural on
-    // both engines). Same persist + caller-clearCache contract as tri.
+    // both engines). Cached like tri.
     "q_llm_clustco" -> ((s, d) => {
       // eager (r16): FOUR readers across two independent aggregate
       // subtrees joined at the end — the r15 cache race's worst
-      // instance (2.1 s → 17.7 s driver-measured; Graft.eager's doc).
+      // instance (2.1 s → 17.7 s driver-measured; Scope.eager's doc).
       // The count is pair-list-sized — bounded, the trusspeel
       // precedent.
-      val p = graft.Graft.eager(
+      val p = Scope.eager(
         neardupPairs(s, d).select(col("doc_a"), col("doc_b")))
       val degs = p.union(p.select(col("doc_b"), col("doc_a")))
         .groupBy(col("doc_a").as("node")).agg(count(lit(1)).as("deg"))
@@ -1425,8 +1409,7 @@ object LlmOps {
     // over the candidate set, nothing corpus-quadratic.
     "q_llm_minhashconf" -> ((s, d) => {
       graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
-      val sig = minhashSig(T.documents(s, d), "native").persist()
-      sig.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      val sig = Scope.eager(minhashSig(T.documents(s, d), "native"))
       def bandKey(b: Int): Column =
         md5(concat_ws("#",
           (b * RowsPerBand until (b + 1) * RowsPerBand)
@@ -1487,16 +1470,14 @@ object LlmOps {
     // one-row-per-doc; output is 3 rows forever.
     "q_llm_lshtune" -> ((s, d) => {
       graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
-      val sig = minhashSig(T.documents(s, d), "native").persist()
-      sig.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
-      val buckets = LshTuneSchemes.map { case (nb, rpb) =>
+      val sig = Scope.eager(minhashSig(T.documents(s, d), "native"))
+      val buckets = Scope.eager(LshTuneSchemes.map { case (nb, rpb) =>
         def bandKey(bd: Int): Column = md5(concat_ws("#",
           (bd * rpb until (bd + 1) * rpb).map(i => col(s"m$i")): _*))
         sig.select(lit(nb).as("nb"), col("doc_id"),
           posexplode(array((0 until nb).map(bandKey): _*))
             .as(Seq("band", "bkey")))
-      }.reduce(_ unionByName _).persist()
-      buckets.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      }.reduce(_ unionByName _))
       val cand = buckets
         .select(col("nb"), col("doc_id").as("doc_a"), col("band"),
           col("bkey"))
@@ -1549,8 +1530,7 @@ object LlmOps {
     // rows forever. All-integer.
     "q_llm_cascade" -> ((s, d) => {
       graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
-      val docs = T.documents(s, d).persist()
-      docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      val docs = Scope.eager(T.documents(s, d))
       def flaggedBy(key: Column, guard: Column) = {
         val k = docs.filter(guard).select(col("doc_id"), key.as("k"))
         val g = k.groupBy(col("k")).agg(min(col("doc_id")).as("keeper"),
@@ -1559,13 +1539,10 @@ object LlmOps {
           .filter(col("n") > 1 && col("doc_id") =!= col("keeper"))
           .select(col("doc_id"))
       }
-      val f1 = flaggedBy(md5(col("text")), lit(true)).persist()
-      f1.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
-      val f2 = flaggedBy(substring(col("text"), 1, 32),
-        length(col("text")) >= 32).persist()
-      f2.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
-      val sig = minhashSig(docs, "native").persist()
-      sig.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      val f1 = Scope.eager(flaggedBy(md5(col("text")), lit(true)))
+      val f2 = Scope.eager(flaggedBy(substring(col("text"), 1, 32),
+        length(col("text")) >= 32))
+      val sig = Scope.eager(minhashSig(docs, "native"))
       def bandKey(b: Int): Column =
         md5(concat_ws("#",
           (b * RowsPerBand until (b + 1) * RowsPerBand)
@@ -1585,13 +1562,12 @@ object LlmOps {
       val matches = (0 until NumHashes).map(i =>
         when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
         .reduce(_ + _)
-      val f3 = cand
+      val f3 = Scope.eager(cand
         .join(a, col("doc_a") === col("a_doc_id"))
         .join(b, col("doc_b") === col("b_doc_id"))
         .select(col("doc_a"), col("doc_b"), matches.as("m"))
         .filter(col("m") * 2 >= NumHashes)
-        .select(col("doc_b").as("doc_id")).distinct().persist()
-      f3.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .select(col("doc_b").as("doc_id")).distinct())
       val f2new = f2.join(f1, Seq("doc_id"), "left_anti")
       val f3new = f3.join(f1.union(f2), Seq("doc_id"), "left_anti")
       def cnt(df: DataFrame, nm: String) =
@@ -1619,12 +1595,10 @@ object LlmOps {
     // prefixes, never quadratic), two bounded aggs; jaccard is ONE
     // IEEE division of exact ints, unrounded (§7.4.7).
     "q_llm_xsrcdup" -> ((s, d) => {
-      val hs = T.documents(s, d)
+      val hs = Scope.eager(T.documents(s, d)
         .filter(length(col("text")) >= 32)
         .select(substring(col("text"), 1, 32).as("h"), col("source"))
-        .distinct()
-        .persist()
-      hs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .distinct())
       val tot = hs.groupBy(col("source")).agg(count(lit(1)).as("n"))
       val shared = hs
         .join(hs.select(col("h").as("h2"), col("source").as("source_b")),
@@ -1668,7 +1642,7 @@ object LlmOps {
       val docs = graft.Graft.spreadNarrowScan(T.documents(s, d))
       val sig = minhashSig(docs, "native")
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      val ssig = graft.Graft.eager(sig.groupBy(col("source"))
+      val ssig = Scope.eager(sig.groupBy(col("source"))
         .agg(min(col("m0")).as("m0"),
           (1 until NumHashes).map(i => min(col(s"m$i")).as(s"m$i")): _*))
       val matches = (0 until NumHashes)
@@ -1683,7 +1657,7 @@ object LlmOps {
           col("source_a") < col("source_b"))
         .select(col("source_a"), col("source_b"),
           (matches.cast("double") / lit(NumHashes.toDouble)).as("est_sim"))
-      val ss = graft.Graft.eager(docs
+      val ss = Scope.eager(docs
         .withColumn("tk", split(col("text"), " "))
         .filter(size(col("tk")) >= 3)
         .select(col("source"), explode(shinglesCol(col("tk"))).as("sh"))
@@ -1725,11 +1699,10 @@ object LlmOps {
     // (DECIMAL(38,0), the markovdrift discipline). Output ∝ sources.
     "q_llm_dupshare" -> ((s, d) => {
       val dec = "decimal(38,0)"
-      val docs = T.documents(s, d)
+      // 2 consumers (keeper agg + join-back)
+      val docs = Scope.eager(T.documents(s, d)
         .select(col("doc_id"), col("source"), md5(col("text")).as("h"),
-          size(split(col("text"), " ")).cast("long").as("ntok"))
-        .persist() // 2 consumers (keeper agg + join-back); caller clearCache
-      docs.count() // eager (r16): fill the cache before the fan-out
+          size(split(col("text"), " ")).cast("long").as("ntok")))
       val keep = docs.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
       docs.join(keep, Seq("h"))
         .groupBy(col("source"))
@@ -1763,16 +1736,14 @@ object LlmOps {
     // output 4 rows forever.
     "q_llm_simsweep" -> ((s, d) => {
       graft.functions.OverlapCount.register(s) // graft_overlap; idempotent
-      val docs = T.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk"))
-        .persist()
-      docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+      val docs = Scope.eager(T.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk")))
       val feats = docs.select(col("doc_id"), col("lang"), col("source"),
         size(col("tk")).cast("long").as("sz"), explode(col("tk")).as("feat"))
       val cand = jaccardCandidates(feats, Seq("lang", "source"), 1, 2)
       val th = Seq((1, 2, 50L), (7, 10, 70L), (4, 5, 80L), (9, 10, 90L))
       def qual(n: Int, dd: Int) = col("inter") * dd >= col("uni") * n
-      val pairs = graft.Graft.eager(cand
+      val pairs = Scope.eager(cand
         .join(docs.select(col("doc_id").as("a_id"), col("tk").as("tk_a")),
           col("doc_a") === col("a_id"))
         .join(docs.select(col("doc_id").as("b_id"), col("tk").as("tk_b")),
@@ -1817,9 +1788,8 @@ object LlmOps {
     // q_llm_minhash: the band equi-join is keyed (block, band, value),
     // the signature join-back is one-row-per-doc, nothing broadcasts.
     "q_llm_simdup" -> ((s, d) =>
-      // Delegates to the parameterized engine (same persist +
-      // caller-clearCache contract as the other LSH queries); the
-      // graded shape drops the carried block columns.
+      // Delegates to the parameterized engine (cached like the other
+      // LSH queries); the graded shape drops the carried block columns.
       simDupPairsOn(simhashSigs(T.documents(s, d)), Seq("lang", "source"))
         .select(col("doc_a"), col("doc_b"), col("hamming"))
         .orderBy(col("doc_a"), col("doc_b"))),
@@ -1835,15 +1805,13 @@ object LlmOps {
       // both verify join sides — shinglesCol is evaluated ONCE per doc
       // and the parquet scan happens once (same r7 shave as
       // neardupPairs; previously 3 scans × 3 shingle evaluations).
-      val docs = graft.Graft.spreadNarrowScan(T.documents(s, d))
+      val docs = Scope.eager(graft.Graft.spreadNarrowScan(T.documents(s, d))
         // spread (r22): shinglesCol is a CPU-heavy per-row map on the
         // single-row-group scan — parallelize the cache FILL
         .withColumn("tk", split(col("text"), " "))
         .filter(size(col("tk")) >= 3)
         .select(col("doc_id"), col("lang"), col("source"),
-          shinglesCol(col("tk")).as("g"))
-        .persist()
-      docs.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+          shinglesCol(col("tk")).as("g")))
       val feats = docs.select(col("doc_id"), col("lang"), col("source"),
         size(col("g")).cast("long").as("sz"), explode(col("g")).as("feat"))
       val cand = jaccardCandidates(feats, Seq("lang", "source"), 1, 5)
@@ -1915,7 +1883,7 @@ object LlmOps {
     // boundary exists in {0,1⁄3,2⁄3,1}). Cost = the three searches
     // (each probe-bounded — see their own registrations) + joins over
     // ≤ 3·|probes| rows; output is 2·|probes| rows forever. The truth
-    // table persists eagerly (4 consumers — Graft.eager). Honest
+    // table persists eagerly (4 consumers — Scope.eager). Honest
     // reading: recall is DATA-dependent — the planted-cluster unit
     // fixtures (LlmOpsSuite) hold ≥ 0.8 because near-dups share
     // buckets/lists, while the graded synthetic embeddings are
@@ -1930,7 +1898,7 @@ object LlmOps {
     // new corpus.
     "q_llm_annrecall" -> ((s, d) => {
       graft.functions.DotF64.register(s)
-      val truth = graft.Graft.eager(
+      val truth = Scope.eager(
         queries("q_llm_knn")(s, d).filter(col("rk") <= 3)
           .select(col("probe_id"), col("neighbor_id")))
       def recallOf(m: String, approx: DataFrame) =
@@ -1977,7 +1945,7 @@ object LlmOps {
     // tracks scanned fraction), recorded per the r16 verdict ask.
     "q_llm_annsweep" -> ((s, d) => {
       graft.functions.DotF64.register(s)
-      val base = graft.Graft.eager(
+      val base = Scope.eager(
         embBase(s, d).withColumn("b8", signBucket(col("e"), 0, 8)))
       // exact truth: knn's arithmetic verbatim off the shared scan
       val probesT = base.filter(col("vec_id") < 5)
@@ -1985,7 +1953,7 @@ object LlmOps {
           col("nrm").as("pn"))
       val wT = Window.partitionBy(col("probe_id"))
         .orderBy(col("sim").desc, col("vec_id").asc)
-      val truth = graft.Graft.eager(base.crossJoin(broadcast(probesT))
+      val truth = Scope.eager(base.crossJoin(broadcast(probesT))
         .filter(col("vec_id") =!= col("probe_id"))
         .withColumn("sim",
           round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
@@ -2019,7 +1987,7 @@ object LlmOps {
               col("b8").bitwiseAND(lit((1 << b) - 1))
                 .bitwiseXOR(lit(f))): _*)).as("qbucket"))
       }.reduce(_ unionByName _)
-      val lshCand = graft.Graft.eager(
+      val lshCand = Scope.eager(
         baseB.join(broadcast(probeRows),
             col("bits_c") === col("bits") && col("bkey") === col("qbucket")
               && col("vec_id") =!= col("probe_id"))
@@ -2028,7 +1996,7 @@ object LlmOps {
           .select(col("bits"), col("radius"), col("probe_id"),
             col("vec_id"), col("sim")))
       // ---- IVF half: ONE top-8 centroid ranking feeds all nprobe configs
-      val ranked = graft.Graft.eager(
+      val ranked = Scope.eager(
         ivfRanked(base, ivfDefaultQuantizer(base), 8))
       val assigned = ranked.filter(col("crk") === 1)
         .select(col("vec_id"), col("e"), col("nrm"), col("cent_id"))
@@ -2037,7 +2005,7 @@ object LlmOps {
           col("crk"), col("vec_id").as("probe_id"), col("e").as("pe"),
           col("nrm").as("pn"), col("cent_id").as("pcent"))
         .filter(col("crk") <= col("np"))
-      val ivfCand = graft.Graft.eager(
+      val ivfCand = Scope.eager(
         assigned.join(broadcast(iprobes),
             col("cent_id") === col("pcent")
               && col("vec_id") =!= col("probe_id"))
@@ -2258,11 +2226,11 @@ object LlmOps {
     "q_llm_semdedup" -> ((s, d) => {
       graft.functions.DotF64.register(s)
       val base = embBase(s, d)
-      val assigned = ivfRanked(base, ivfDefaultQuantizer(base), nprobe = 1)
+      // both pair-join sides + the output
+      val assigned = Scope.eager(
+        ivfRanked(base, ivfDefaultQuantizer(base), nprobe = 1)
         .filter(col("crk") === 1)
-        .select(col("vec_id"), col("e"), col("nrm"), col("cent_id"))
-        .persist() // both pair-join sides + the output; caller clearCache
-      assigned.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .select(col("vec_id"), col("e"), col("nrm"), col("cent_id")))
       val pairs = assigned
         .select(col("cent_id"), col("vec_id").as("ia"), col("e").as("ea"),
           col("nrm").as("na"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Det, Tables => T}
+import graft.{Det, Scope, Tables => T}
 
 /** Training-data pipeline operators that sit DOWNSTREAM of dedup/split:
   * contamination audit, deterministic stratified sampling, domain
@@ -313,12 +313,9 @@ object PipelineOps {
     // Two consumers (the df derivation and the join below) — without
     // materialization Catalyst prunes their columns differently, the
     // canonical subtrees diverge, exchange reuse never fires, and the
-    // corpus is scanned + shuffled twice (read in PLANS.md r6). Same
-    // persist + caller-clearCache contract as the LSH signature tables.
-    val tf = tok.groupBy(col("doc_id"), col("term"))
-      .agg(max(col("doc_len")).as("doc_len"), count(lit(1)).as("tf"))
-      .persist()
-    tf.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // corpus is scanned + shuffled twice (read in PLANS.md r6).
+    val tf = Scope.eager(tok.groupBy(col("doc_id"), col("term"))
+      .agg(max(col("doc_len")).as("doc_len"), count(lit(1)).as("tf")))
     val dfTab = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.select(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
@@ -516,15 +513,14 @@ object PipelineOps {
     * integer cross-product). */
   private[graft] def dsirOn(docs: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(19, 0)
-    val sh = docs
+    // 3 consumers (cr, ct+tot, score)
+    val sh = Scope.eager(docs
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("tk"))
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"), col("lang"),
         explode(LlmOps.shinglesCol(col("tk"))).as("s0"))
       .select(col("doc_id"), col("lang"),
-        (Det.md5h32(col("s0")) % DsirBuckets).as("bkt"))
-      .persist() // 3 consumers (cr, ct+tot, score); caller clearCache
-    sh.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        (Det.md5h32(col("s0")) % DsirBuckets).as("bkt")))
     val cr = sh.groupBy(col("bkt")).agg(count(lit(1)).as("cr"))
     val ct = sh.filter(col("lang") === DsirTargetLang)
       .groupBy(col("bkt")).agg(count(lit(1)).as("ct"))

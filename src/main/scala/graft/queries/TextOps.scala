@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Det, Tables => T}
+import graft.{Det, Scope, Tables => T}
 
 /** North-star text-analysis operators over `documents`: n-gram-heuristic
   * language ID, quality scoring, token counting, document fingerprinting.
@@ -85,9 +85,9 @@ object TextOps {
         struct(element_at(tk, i).as("w1"), element_at(tk, i + 1).as("w2"))))
         .as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val bg = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab"))
-      .persist() // 2 consumers (total + ranked); caller clearCache
-    bg.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // 2 consumers (total + ranked)
+    val bg = Scope.eager(
+      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab")))
     val uni = docs.select(explode(tk).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val nTot = bg.agg(sum(col("n_ab")).as("n_bg"))
@@ -280,12 +280,11 @@ object TextOps {
     // ∝ tokens + vocab — never per-token broadcast state); all
     // integers, share = n·10⁶ div total.
     "q_text_oov" -> ((s, d) => {
-      val toks2 = T.documents(s, d)
+      // train vocab + eval stream
+      val toks2 = Scope.eager(T.documents(s, d)
         .withColumn("bucket",
           graft.Det.md5h32(col("doc_id").cast("string")) % 10)
-        .select(col("bucket"), explode(split(col("text"), " ")).as("w"))
-        .persist() // train vocab + eval stream; caller clearCache
-      toks2.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .select(col("bucket"), explode(split(col("text"), " ")).as("w")))
       val vocab = toks2.filter(col("bucket") < 8).select(col("w")).distinct()
       val ev = toks2.filter(col("bucket") >= 8)
         .withColumn("split",
@@ -305,12 +304,11 @@ object TextOps {
     "q_text_stylometry" -> ((s, d) => {
       val dec = "decimal(38,0)"
       val words = (stopwords ++ markers.flatMap(_._2)).distinct
-      val t = T.documents(s, d)
+      // norms + both dot sides
+      val t = Scope.eager(T.documents(s, d)
         .select(col("source"), explode(split(col("text"), " ")).as("w"))
         .filter(col("w").isin(words: _*))
-        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("n"))
-        .persist() // norms + both dot sides; caller clearCache
-      t.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+        .groupBy(col("source"), col("w")).agg(count(lit(1)).as("n")))
       val nrm = t.groupBy(col("source"))
         .agg(sum(col("n").cast(dec) * col("n")).as("ss"))
       val dots = t.select(col("source").as("sa"), col("w"), col("n").as("na"))
@@ -748,10 +746,9 @@ object TextOps {
 
   /** q_text_keyness's engine over any (source, text) corpus. */
   private[graft] def keynessOn(docs: DataFrame): DataFrame = {
-    val sw = docs.select(col("source"), explode(toks).as("word"))
-      .groupBy(col("source"), col("word")).agg(count(lit(1)).as("a"))
-      .persist() // 4 consumers (word/source/corpus totals + main); caller clearCache
-    sw.count() // eager (r16): fill the cache before the fan-out (Graft.eager doc)
+    // 4 consumers (word/source/corpus totals + main)
+    val sw = Scope.eager(docs.select(col("source"), explode(toks).as("word"))
+      .groupBy(col("source"), col("word")).agg(count(lit(1)).as("a")))
     val wt = sw.groupBy(col("word")).agg(sum(col("a")).as("w_tot"))
     val st = sw.groupBy(col("source")).agg(sum(col("a")).as("s_tot"))
     val nt = sw.agg(sum(col("a")).as("n_tot"))

@@ -1385,8 +1385,8 @@ object StreamOps {
     * after the marker, redelivery of any batchId ≤ the latest marker
     * is a no-op (foreachBatch ids are monotonic). A marker without a
     * complete state parquet fails loudly via [[crosskindState]]'s
-    * check. The fold output is localCheckpointed (eager) before the
-    * write so the new state never reads a parquet being replaced (the
+    * check. The fold output is cut (eager, [[graft.Scope.cut]]) before
+    * the write so the new state never reads a parquet being replaced (the
     * ccClusterMaintainer lesson). Exposed for direct testing;
     * [[crosskindMaintainer]] wires it as the foreachBatch body. */
   def crosskindFoldBatch(batch: DataFrame, batchId: Long,
@@ -1400,8 +1400,8 @@ object StreamOps {
     val prev = crosskindState(s, stateDir)
     val chunks = graft.queries.MultimodalOps
       .cdcChunkRows(batch, Seq("kind_stub"))
-    crosskindIncrementalFold(prev, chunks)
-      .localCheckpoint() // eager: sever lineage from the prior parquet
+    // eager cut: sever lineage from the prior parquet before overwriting
+    graft.Scope.cut(crosskindIncrementalFold(prev, chunks))._1
       .write.mode("overwrite").parquet(s"$stateDir/state-$batchId")
     // COMMIT: readers and redelivery checks switch to the new state here
     fs.create(new org.apache.hadoop.fs.Path(dir, s"_folded_$batchId"))

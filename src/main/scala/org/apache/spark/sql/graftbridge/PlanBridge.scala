@@ -1,53 +1,44 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** A STATS-PRESERVING eager localCheckpoint (reached from this
-  * org.apache.spark.sql subpackage — the [[CacheBridge]] extension-point
-  * idiom), for the iterative graph engines' per-round state.
+/** The mechanics of [[graft.Scope.cut]]: a STATS-PRESERVING eager local
+  * checkpoint, reached from this org.apache.spark.sql subpackage for
+  * the `private[sql]` `Dataset.ofRows` and `LogicalRDD` stats hook.
+  * Ownership and release live in [[graft.Scope]]; nothing else should
+  * call this directly.
   *
-  * Why it exists (r21, measured with ProfJobs): the engines' bounded
-  * fixpoints must truncate lineage every round — a persist()-only
-  * variant grows analysis time exponentially with rounds because each
-  * round's logical plan embeds every prior round's. But
-  * `Dataset.localCheckpoint` yields a [[LogicalRDD]] whose statistics
-  * are the ESTIMATE of the plan it replaced (a join+agg chain whose
-  * size estimate is garbage-in multiplication), so the planner gave
-  * every round's edge⋈state join a SortMergeJoin and re-shuffled the
-  * whole edge table per round (11 MB/round at sf0.1 — the dominant
-  * per-round cost) even when the state side was a few thousand rows.
-  * This cut counts the materialized RDD and attaches HONEST statistics
-  * (exact rowCount, sizeInBytes = rows x flat schema width), so the
-  * planner broadcasts the state side when it truly is small and keeps
-  * the sort-merge plan when it is not — the scale-correct decision at
-  * both ends, made from real numbers instead of a default.
+  * Why the stats: `Dataset.localCheckpoint` yields a [[LogicalRDD]]
+  * whose statistics are the ESTIMATE of the plan it replaced (a
+  * join+agg chain whose size estimate is garbage-in multiplication),
+  * so the planner gave every round's edge⋈state join a SortMergeJoin
+  * and re-shuffled the whole edge table per round (11 MB/round at
+  * sf0.1, measured with ProfJobs) even when the state side was a few
+  * thousand rows. This cut counts the materialized RDD and attaches
+  * HONEST statistics (exact rowCount, sizeInBytes = rows x flat schema
+  * width), so the planner broadcasts the state side when it truly is
+  * small and keeps the sort-merge plan when it is not.
   *
   * Mechanics mirror `Dataset.localCheckpoint(eager = true)`: the
   * query's internal row RDD is copied (UnsafeRow reuse), persisted
-  * MEMORY_AND_DISK, and eagerly materialized by the count; the block
-  * lifecycle is the same as a localCheckpoint's (dropped by the
-  * ContextCleaner when the RDD is collected, or at session stop).
+  * MEMORY_AND_DISK, locally checkpointed and eagerly materialized by
+  * the count.
   */
 object PlanBridge {
 
-  /** Materialize `df` to a persisted internal-row RDD and return a
-    * lineage-free frame over it carrying exact row-count statistics,
-    * plus the row count (callers use it as the fixpoint early-exit
-    * probe — no second action needed). */
-  def eagerCut(df: DataFrame): (DataFrame, Long) = {
+  /** Materialize `df` and return a lineage-free frame over it carrying
+    * exact row-count statistics, the row count, and the checkpointed
+    * RDD that holds the blocks (the handle a release unpersists). */
+  def cut(df: DataFrame): (DataFrame, Long, RDD[_]) = {
     val cs = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val qe = df.queryExecution
     val rdd = qe.toRdd.map(_.copy())
-    // a true RDD-level local checkpoint (not a bare persist): the
-    // blocks follow the Dataset.localCheckpoint lifecycle the repo's
-    // cache-hygiene contract expects — released by the ContextCleaner
-    // on dereference, ignored by the catalog clearCache sweep, and
-    // isCheckpointed=true for the hygiene suite's exclusion
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     rdd.localCheckpoint()
     val n = rdd.count()
@@ -57,28 +48,6 @@ object PlanBridge {
       rowCount = Some(BigInt(n)))
     val plan = LogicalRDD(qe.analyzed.output, rdd, UnknownPartitioning(0),
       Nil, false, None)(cs, Some(stats), None)
-    (org.apache.spark.sql.classic.Dataset.ofRows(cs, plan), n)
-  }
-
-  /** Release the checkpoint blocks of a frame produced by [[eagerCut]]
-    * (Dataset.unpersist only reaches the SQL cache manager, which never
-    * owned them) — the iterative engines call this on superseded rounds
-    * to keep an O(1) materialized footprint. Walks the WHOLE analyzed
-    * plan (r22; previously root-only), so a lazy UNION of per-round
-    * checkpointed pieces — the frontier engines' settled table — frees
-    * in one call once every consumer has materialized. No-op on frames
-    * with no materialized leaves.
-    *
-    * OWNERSHIP CONTRACT (the whole-plan walk's price): only call this
-    * on frames whose plan consists of the engine's OWN cuts (cut roots
-    * and unions of them). A frame carrying CALLER lineage — an
-    * engine's un-cut seed input — may embed checkpoints the caller's
-    * other consumers still read, and freeing those crashes them with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (a localCheckpoint cannot
-    * recompute). The loop engines guard round 1 with an `owned` flag
-    * for exactly this. */
-  def free(df: DataFrame): Unit = df.queryExecution.analyzed.foreach {
-    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-    case _ => ()
+    (org.apache.spark.sql.classic.Dataset.ofRows(cs, plan), n, rdd)
   }
 }
