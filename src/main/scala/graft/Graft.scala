@@ -783,26 +783,6 @@ object Graft {
     if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
   }
 
-  /** Broadcast hint gated on a frame's EXACT materialized size (r22):
-    * the iterative engines know the true row count of a
-    * Scope.cut state table the moment it materializes, so the
-    * build-side decision can be made from real numbers instead of the
-    * planner's 10 MB default over an estimate (guide §3.1 — "use an
-    * explicit broadcast hint when you know a side is small"). Measured
-    * motivation (ProfJobs, q_graph_betwsweep): the Brandes dependency
-    * sweep's per-level w table is ~20-40 MB flat at sf0.1 — just over
-    * the autoBroadcast threshold — so the ∝ pivots·edges probe side was
-    * exchanged (112 MB) and sorted to meet it. Scale-adaptive, not a
-    * local-mode constant: the bound is env-tunable
-    * (SPARK_GRAFT_BCAST_MB, default 64 — well inside the guide's
-    * "few hundred MB is usually fine" and far from the 8 GB hard cap),
-    * and a table past it keeps the sort-merge plan unhinted. */
-  private[graft] def bcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
-    val width = df.schema.map(_.dataType.defaultSize).sum + 8
-    val maxB = sys.env.getOrElse("SPARK_GRAFT_BCAST_MB", "64").toLong << 20
-    if (rows * width <= maxB) broadcast(df) else df
-  }
-
   /** First-order Markov transition matrix over any per-key ordered event
     * log (graded q_event_markov's engine): (prev, next, n, p) with
     * P(next ∣ prev) row-conditional. Needs (user_id, event_id,

@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's ONE way to materialize an intermediate, and the one
-  * owner of what it materialized. Four verbs:
+  * owner of what it materialized. Five verbs:
   *
   *  - [[cache]]: a lazy SQL cache, optionally hash-partitioned and
   *    sorted on join keys;
   *  - [[eager]]: [[cache]] plus one count;
   *  - [[cut]]: a stats-carrying lineage cut (a local checkpoint);
-  *  - [[release]]: free what the CURRENT scope made.
+  *  - [[release]]: free what the CURRENT scope made;
+  *  - [[adopt]]: take over a frame the enclosing scope made.
   *
   * Every verb records what it made in the innermost open scope of the
   * calling thread. A scope is opened two ways:
@@ -123,6 +124,21 @@ object Scope {
       val i = top.made.indexWhere(_.df eq x)
       if (i >= 0) top.made.remove(i).free(false)
     case Nil => ()
+  }
+
+  /** Move `x` into the innermost scope's record if the scope enclosing
+    * it made `x` (otherwise a no-op), so a [[release]] here frees it:
+    * how a [[Fixpoint]] loop takes over a round-0 frame its caller hands
+    * it to consume (CoreNumber's level input, freed after the level's
+    * first round). Returns `x`. */
+  def adopt(x: DataFrame): DataFrame = {
+    open.get match {
+      case top :: outer :: _ =>
+        val i = outer.made.indexWhere(_.df eq x)
+        if (i >= 0) top.made += outer.made.remove(i)
+      case _ => ()
+    }
+    x
   }
 
   /** Run `body` in a nested scope: [[release]] inside it frees only

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Pivot-sampled Brandes betweenness (Brandes 2001's dependency
   * accumulation, restricted to a bounded deterministic pivot set — the
@@ -50,9 +50,9 @@ import graft.Scope
   * Scale shape: per round/level ONE equi-join of the checkpointed edge
   * list against the (seed, node)-grain state + a map-side-combining
   * hash agg — shuffle ∝ pivots·edges, the multi-source Pregel cost;
-  * state localCheckpoints per round (the LabelProp discipline, O(1)
-  * cached footprint); the per-round driver action is the frontier
-  * count (a scalar — the KMeans bounded-control-flow precedent). Cost
+  * each round/level cuts one new piece ([[graft.Fixpoint.accumulate]]);
+  * the per-round driver action is the frontier count (a scalar — the
+  * KMeans bounded-control-flow precedent). Cost
   * is 2·diameter driver actions — the double-sweep floor; on the
   * graded graphs reach ≤ 4 hops so ~8 actions total.
   */
@@ -96,15 +96,11 @@ object Betweenness {
                                   rounds: Int): (DataFrame, List[DataFrame]) = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val dec = "decimal(38,0)"
-    var (settled, frontierCount) = Scope.cut(
-      seeds.select(col("seed"), col("node"),
-        lit(0).cast("long").as("d"), lit(1).cast(dec).as("sigma")))
-    var frontier = settled
-    var cuts = List(settled)
-    var r = 0
-    while (frontierCount > 0 && r < rounds) {
-      r += 1
-      val (nxt, c) = Scope.cut(e
+    Fixpoint.accumulate(Scope.cut(
+        seeds.select(col("seed"), col("node"),
+          lit(0).cast("long").as("d"), lit(1).cast(dec).as("sigma"))),
+        rounds, untilEmpty = true) { (frontier, settled, r) =>
+      Scope.cut(e
         .join(frontier
           .select(col("seed"), col("node").as("src"), col("sigma")),
           Seq("src"))
@@ -114,12 +110,7 @@ object Betweenness {
           Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(r).cast("long").as("d"),
           col("sigma").cast(dec).as("sigma")))
-      frontierCount = c
-      settled = settled.unionByName(nxt)
-      frontier = nxt
-      cuts ::= nxt
     }
-    (settled, cuts)
   }
 
   /** Backward sweep over a [[forward]] table: per (seed, node) the
@@ -146,7 +137,7 @@ object Betweenness {
   /** [[dependencies]] over an ALREADY keyed-cached edge frame — see
     * [[forwardKeyed]]; returns the per-level cuts with the table. */
   private[graft] def dependenciesKeyed(e: DataFrame, settled: DataFrame)
-      : (DataFrame, List[DataFrame]) = Scope {
+      : (DataFrame, List[DataFrame]) = {
     val spark = e.sparkSession
     val hdr = settled.agg(max(col("d")), max(col("sigma")),
       count(lit(1))).collect()(0)
@@ -168,51 +159,67 @@ object Betweenness {
       new org.apache.spark.sql.types.StructType()
         .add("seed", "long").add("node", "long")
         .add("dq", org.apache.spark.sql.types.DecimalType(38, 0)))
-    var out = empty
-    var cuts = List.empty[DataFrame]
-    var below = empty // dq of level lev+1
-    var lev = maxD - 1
-    while (lev >= 0) {
-      // w through the stats-carrying cut (r22, measured with ProfJobs):
-      // built lazily, w's filter+left-join lineage gave the planner no
-      // usable size estimate, so the (seed, dst) join below went
-      // sort-merge — EXCHANGING AND SORTING the probe side, the
-      // ∝ pivots·edges settled⋈e product (112 MB and 316 CPU-seconds at
-      // the deepest sf0.1 level, the query's single dominant job) to
-      // meet a ~5 MB build side. With exact rowCount attached the
-      // planner broadcasts w when it truly is small and keeps SMJ when
-      // it is not — the scale-correct decision both ways (the
-      // Scope.cut contract). Cost: one extra bounded action
-      // per level; the cut is freed as soon as the level's dq
-      // materializes.
-      val (wc, wn) = Scope.cut(
-        settled.filter(col("d") === lev + 1)
-          .join(below, Seq("seed", "node"), "left")
-          .select(col("seed"), col("node").as("dst"),
-            col("sigma").as("sw"),
-            coalesce(col("dq"), lit(0).cast("decimal(38,0)")).as("dqw")))
-      // exact-size broadcast gate (Graft.bcastIfSmall): at sf0.1 w sits
-      // just past the planner's 10 MB default, so without the hint the
-      // probe still exchanged+sorted; past the env bound the SMJ stays
-      val w = graft.Graft.bcastIfSmall(wc, wn)
-      val dl = Scope.cut(
-        settled.filter(col("d") === lev)
-          .select(col("seed"), col("node"), col("sigma"))
-          .join(e, col("node") === col("src"))
-          .join(w, Seq("seed", "dst"))
-          .groupBy(col("seed"), col("node"))
-          .agg(sum(expr(
-            "(sigma * (1000000 + dqw)) div sw")).as("dq"))
-          .select(col("seed"), col("node"),
-            col("dq").cast("decimal(38,0)").as("dq")))._1
-      Scope.release(wc)
-      out = out.unionByName(dl)
-      cuts ::= dl
-      below = dl
-      lev -= 1
+    // one level per round, deepest first: round r settles level
+    // maxD − r from the level below it (the previous piece)
+    Fixpoint.accumulate((empty, 0L), maxD.toInt, untilEmpty = false) {
+      (below, _, r) =>
+        val lev = maxD - r
+        // w through the stats-carrying cut (r22, measured with ProfJobs):
+        // built lazily, w's filter+left-join lineage gave the planner no
+        // usable size estimate, so the (seed, dst) join below went
+        // sort-merge — EXCHANGING AND SORTING the probe side, the
+        // ∝ pivots·edges settled⋈e product (112 MB and 316 CPU-seconds at
+        // the deepest sf0.1 level, the query's single dominant job) to
+        // meet a ~5 MB build side. With exact rowCount attached the
+        // planner broadcasts w when it truly is small and keeps SMJ when
+        // it is not — the scale-correct decision both ways (the
+        // Scope.cut contract). Cost: one extra bounded action
+        // per level; the cut is freed as soon as the level's dq
+        // materializes.
+        val (wc, wn) = Scope.cut(
+          settled.filter(col("d") === lev + 1)
+            .join(below, Seq("seed", "node"), "left")
+            .select(col("seed"), col("node").as("dst"),
+              col("sigma").as("sw"),
+              coalesce(col("dq"), lit(0).cast("decimal(38,0)")).as("dqw")))
+        // exact-size broadcast gate ([[bcastIfSmall]]): at sf0.1 w sits
+        // just past the planner's 10 MB default, so without the hint the
+        // probe still exchanged+sorted; past the bound the SMJ stays
+        val w = bcastIfSmall(wc, wn)
+        val dl = Scope.cut(
+          settled.filter(col("d") === lev)
+            .select(col("seed"), col("node"), col("sigma"))
+            .join(e, col("node") === col("src"))
+            .join(w, Seq("seed", "dst"))
+            .groupBy(col("seed"), col("node"))
+            .agg(sum(expr(
+              "(sigma * (1000000 + dqw)) div sw")).as("dq"))
+            .select(col("seed"), col("node"),
+              col("dq").cast("decimal(38,0)").as("dq")))
+        Scope.release(wc)
+        dl
     }
-    (out, cuts)
   }
+
+  /** Broadcast hint gated on a frame's EXACT materialized size (r22):
+    * the sweep knows the true row count of a cut the moment it
+    * materializes, so the build-side decision can be made from real
+    * numbers instead of the planner's 10 MB default over an estimate
+    * (guide §3.1 — "use an explicit broadcast hint when you know a side
+    * is small"). Measured motivation (ProfJobs, q_graph_betwsweep): the
+    * dependency sweep's per-level w table is ~20-40 MB flat at sf0.1 —
+    * just over the autoBroadcast threshold — so the ∝ pivots·edges probe
+    * side was exchanged (112 MB) and sorted to meet it. Scale-adaptive,
+    * not a local-mode constant: the bound ([[BcastMaxBytes]]) is well
+    * inside the guide's "few hundred MB is usually fine" and far from
+    * the 8 GB hard cap, and a table past it keeps the sort-merge plan
+    * unhinted. */
+  private def bcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
+    val width = df.schema.map(_.dataType.defaultSize).sum + 8
+    if (rows * width <= BcastMaxBytes) broadcast(df) else df
+  }
+
+  private val BcastMaxBytes = 64L << 20
 
   /** The full estimator: top-`k` nodes by summed pivot dependency,
     * seeds excluded from their own accumulation (Brandes' v ≠ s).

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Pivot-sampled WEIGHTED betweenness (r20) — [[Betweenness]] with σ
   * counted over MINIMAL-COST paths instead of fewest-hop paths: the
@@ -60,10 +60,11 @@ import graft.Scope
   * table against the checkpointed edge list (∝ pivots·edges, built
   * once); each σ∕dq step is ONE equi-join of the DAG against the
   * (seed, node)-grain state + a map-side-combining hash agg — shuffle
-  * ∝ pivots·DAG-edges per step, the multi-source Pregel cost; state
-  * localCheckpoints per step (O(1) cached footprint); 3·rounds driver
-  * jobs total, no data-dependent control flow (the costFrom
-  * discipline). */
+  * ∝ pivots·DAG-edges per step, the multi-source Pregel cost; each
+  * step reads its state once, so σ and dq steps fuse like costFrom's
+  * and the state is cut every [[graft.Fixpoint.Fuse]] steps
+  * ([[graft.Fixpoint]], O(1) cached footprint); no data-dependent
+  * control flow (the costFrom discipline). */
 object BetweennessW {
 
   /** The σ fixpoint over the minimal-cost DAG: (seed, node, sigma) for
@@ -92,46 +93,28 @@ object BetweennessW {
     val base = Scope.cut(
       seeds.select(col("seed"), col("node"),
         lit(1).cast(dec).as("sigma")))._1
-    // r21: each σ step reads the previous state ONCE (the base union
-    // side is the tiny checkpointed seed frame), so steps chain into
-    // fused plans with every intermediate a single-consumer exchange —
-    // materialize every Bfs.CostFuseRounds steps instead of every step
-    // (the costFrom fusion discipline; lineage truncated per
-    // materialization).
-    var sigma = base
-    var r = 0
-    while (r < rounds) {
-      val step = math.min(Bfs.CostFuseRounds, rounds - r)
-      r += step
-      val prev = sigma // superseded once the new cut has materialized
-      sigma = Scope.cut(
-        (1 to step).foldLeft(sigma)((s, _) =>
-          base.unionByName(
-              dag.join(s.select(col("seed"), col("node").as("src"),
-                  col("sigma")), Seq("seed", "src"))
-                .select(col("seed"), col("dst").as("node"),
-                  col("sigma")))
-            .groupBy(col("seed"), col("node"))
-            .agg(sum(col("sigma")).cast(dec).as("sigma"))))._1
-      // r22 (the LabelProp free discipline): the superseded cut's
-      // checkpoint blocks are provably dead — but NEVER free `base`,
-      // which every later fused step's union still reads.
-      if (!(prev eq base))
-        Scope.release(prev)
+    // each σ step reads the previous state ONCE (the base union side is
+    // the tiny checkpointed seed frame, made outside the loop, so the
+    // loop never frees it)
+    val sigma = Fixpoint.replace(base, rounds) { s =>
+      base.unionByName(
+          dag.join(s.select(col("seed"), col("node").as("src"),
+              col("sigma")), Seq("seed", "src"))
+            .select(col("seed"), col("dst").as("node"), col("sigma")))
+        .groupBy(col("seed"), col("node"))
+        .agg(sum(col("sigma")).cast(dec).as("sigma"))
     }
     // d (costFrom's final cut) was last read when `dag` materialized;
-    // base stays alive only while sigma steps union it — both dead here
-    // (when rounds = 0, sigma IS base: keep it)
+    // base only while the σ steps union it (at rounds = 0, σ IS base)
     Scope.release(d)
-    if (!(sigma eq base))
-      Scope.release(base)
+    if (rounds > 0) Scope.release(base)
     (sigma, dag)
   }
 
   /** The dq fixpoint: per (seed, node) the FLOOR-micros dependency
     * after `rounds` steps; rows with zero dependency absent. */
   private[graft] def dependenciesW(dag: DataFrame, sigma: DataFrame,
-                                   rounds: Int): DataFrame = Scope {
+                                   rounds: Int): DataFrame = {
     val spark = dag.sparkSession
     // one guarded 1-row action (the Betweenness.dependencies bound)
     val hdr = sigma.agg(max(col("sigma")), count(lit(1))).collect()(0)
@@ -160,27 +143,17 @@ object BetweennessW {
       new org.apache.spark.sql.types.StructType()
         .add("seed", "long").add("node", "long")
         .add("dq", org.apache.spark.sql.types.DecimalType(38, 0)))
-    // r21: each dq step reads the previous state ONCE (the left join),
-    // so steps chain into fused plans — the forwardW fusion discipline.
-    var dq = empty
-    var r = 0
-    while (r < rounds) {
-      val step = math.min(Bfs.CostFuseRounds, rounds - r)
-      r += step
-      val prev = dq // superseded once the new cut has materialized
-      dq = Scope.cut(
-        (1 to step).foldLeft(dq)((s, _) => dagS
-          .join(s.select(col("seed"), col("node").as("dst"),
-            col("dq").as("dqw")), Seq("seed", "dst"), "left")
-          .groupBy(col("seed"), col("src").as("node"))
-          .agg(sum(expr(
-            "(sv * (1000000 + coalesce(dqw, 0))) div sw")).as("dq"))
-          .select(col("seed"), col("node"),
-            col("dq").cast("decimal(38,0)").as("dq"))))._1
-      // r22: the superseded cut is dead (no-op on the empty seed frame)
-      Scope.release(prev)
+    // each dq step reads the previous state ONCE (the left join)
+    Fixpoint.replace(empty, rounds) { s =>
+      dagS
+        .join(s.select(col("seed"), col("node").as("dst"),
+          col("dq").as("dqw")), Seq("seed", "dst"), "left")
+        .groupBy(col("seed"), col("src").as("node"))
+        .agg(sum(expr(
+          "(sv * (1000000 + coalesce(dqw, 0))) div sw")).as("dq"))
+        .select(col("seed"), col("node"),
+          col("dq").cast("decimal(38,0)").as("dq"))
     }
-    dq
   }
 
   /** The full estimator — [[Betweenness.pivotBetweenness]]'s readout

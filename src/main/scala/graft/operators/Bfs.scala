@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Fixed-round breadth-first hop distances from a deterministic seed —
   * the REACHABILITY primitive of the graph family ([[PageRank]] ranks,
@@ -32,7 +32,7 @@ import graft.Scope
   * the edge list against ONLY the nodes first settled in the previous
   * round (the [[Betweenness]] forward-sweep shape), dedups the reached
   * set, and anti-joins the already-settled table; the settled table is
-  * the lazy UNION of the per-round persisted pieces, never rewritten.
+  * the lazy UNION of the per-round cut pieces, never rewritten.
   * The r17-r20 form instead min-aggregated the FULL distance table
   * every round and fused round pairs into one plan; ProfJobs measured
   * (BASELINE.md r21) that (a) the fused inner round's aggregate was
@@ -47,44 +47,32 @@ import graft.Scope
   * map-side-combining dedup ∝ frontier-adjacent edges + a node-grain
   * anti-join against the settled union. The edge list persists
   * COLUMNAR (a localCheckpoint stores uncompressed rows — measured
-  * 6.3x the columnar cache size per scan); the per-round pieces
-  * localCheckpoint (new rows only — tiny, and the lineage truncation
-  * is load-bearing: see [[frontierLoop]]). One checkpoint job + one
+  * 6.3x the columnar cache size per scan); the per-round pieces are
+  * cut ([[graft.Fixpoint.accumulate]] — new rows only, tiny; without
+  * the cut each piece's logical plan embeds every prior piece's through
+  * the union + anti-join, measured as multi-second driver gaps when the
+  * pieces were persist()ed instead). One checkpoint job + one
   * cached-scan count per round; checkpointed footprint across pieces
   * = the final settled table, the same O(nodes) the old single cached
   * table held.
   */
 object Bfs {
 
-  /** The shared frontier loop over an ALREADY-PERSISTED edge frame:
-    * per-round pieces (seed, node, d) eagerly localCheckpointed (the
-    * piece is NEW rows only — tiny; the checkpoint truncates lineage,
-    * without which each piece's logical plan embeds every prior
-    * piece's through the union + anti-join and analysis time grows
-    * exponentially with rounds — measured as multi-second driver gaps
-    * when the pieces were persist()ed instead), settled = lazy union
-    * of the pieces; the count on a just-checkpointed piece is a cached
-    * scan (the early-exit probe). */
-  private def frontierLoop(e: DataFrame, seeds0: DataFrame,
-                           rounds: Int): DataFrame = {
-    var (settled, frontierCount) = Scope.cut(seeds0)
-    var frontier = settled
-    var r = 0
-    while (frontierCount > 0 && r < rounds) {
-      r += 1
-      val (nxt, c) = Scope.cut(e
-        .join(frontier.select(col("seed"), col("node").as("src")),
-          Seq("src"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(settled.select(col("seed"), col("node")),
-          Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(r.toLong).as("d")))
-      frontierCount = c
-      settled = settled.unionByName(nxt)
-      frontier = nxt
-    }
-    settled
-  }
+  /** The shared frontier sweep over an ALREADY-PERSISTED edge frame:
+    * per-round pieces (seed, node, d) of the newly settled nodes,
+    * settled = their lazy union; a round whose piece is empty ends it. */
+  private def settle(e: DataFrame, seeds0: DataFrame,
+                     rounds: Int): DataFrame =
+    Fixpoint.accumulate(Scope.cut(seeds0), rounds, untilEmpty = true) {
+      (frontier, settled, r) =>
+        Scope.cut(e
+          .join(frontier.select(col("seed"), col("node").as("src")),
+            Seq("src"))
+          .select(col("seed"), col("dst").as("node")).distinct()
+          .join(settled.select(col("seed"), col("node")),
+            Seq("seed", "node"), "left_anti")
+          .select(col("seed"), col("node"), lit(r.toLong).as("d")))
+    }._1
 
   /** @param edges  symmetrized directed edge list (`src`, `dst`) — the
     *               [[graft.queries.GraphOps]] edge-builder contract.
@@ -105,7 +93,7 @@ object Bfs {
     val seeds0 = e.agg(min(col("src")).as("node"))
       .where(col("node").isNotNull)
       .select(col("node").as("seed"), col("node"), lit(0L).as("d"))
-    frontierLoop(e, seeds0, rounds)
+    settle(e, seeds0, rounds)
       .groupBy(col("d").as("dist")).agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("dist"))
   }
@@ -116,8 +104,8 @@ object Bfs {
     * driver⇄executor barriers as one (the whole point at cluster
     * scale; the per-round join fans out ∝ k·frontier-edges worst case,
     * the standard multi-source Pregel cost, and stays one exchange).
-    * Same synchronous-relaxation contract, frontier execution, eager
-    * per-round persist, and result-identical early exit as [[hops]] —
+    * Same synchronous-relaxation contract, frontier execution, per-round
+    * cut, and result-identical early exit as [[hops]] —
     * the dedup and frontier property hold per seed independently
     * because `seed` rides every key.
     *
@@ -150,7 +138,7 @@ object Bfs {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val seeds0 = seeds
       .select(col("seed"), col("node"), lit(0L).as("d"))
-    frontierLoop(e, seeds0, rounds)
+    settle(e, seeds0, rounds)
       .groupBy(col("seed"), col("d").as("dist"))
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("seed"), col("dist"))
@@ -178,13 +166,12 @@ object Bfs {
     * in-neighbors-plus-self) — the state is read ONCE per round, so
     * consecutive rounds chain into one plan with every intermediate a
     * single-consumer exchange (no duplicated subtree — the hazard the
-    * r17 pair fusion measured) and the loop materializes every
-    * `CostFuseRounds` rounds instead of every round, cutting the
-    * driver-action floor ~3x (the r20 verdict's ordered item). The
-    * self-loop set covers edge sources AND seed nodes, so an isolated
-    * seed keeps its d = 0 row exactly as the union form did. The
-    * edge+self list persists columnar; the state localCheckpoints per
-    * materialization (lineage truncation — the frontierLoop finding).
+    * r17 pair fusion measured) and the loop is fused, cut every
+    * [[graft.Fixpoint.Fuse]] rounds instead of every round
+    * ([[graft.Fixpoint]]), cutting the driver-action floor ~3x (the r20
+    * verdict's ordered item). The self-loop set covers edge sources AND
+    * seed nodes, so an isolated seed keeps its d = 0 row exactly as the
+    * union form did. The edge+self list persists columnar.
     *
     * Scale shape: per round ONE equi-join of the persisted edge+self
     * list against the (seed, node)-grain distance table + a map-side-
@@ -198,7 +185,7 @@ object Bfs {
     * @param rounds fixed relaxation rounds (≥ 0).
     * @return (`seed`, `node`, `d`): minimum ≤`rounds`-edge path cost. */
   def costFrom(edges: DataFrame, seeds: DataFrame,
-               rounds: Int): DataFrame = Scope {
+               rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val e0 = edges.select(col("src"), col("dst"), col("cost"))
     // keyed cache (r22): every round joins on src — see hops
@@ -209,32 +196,14 @@ object Bfs {
           .distinct()
           .select(col("src"), col("src").as("dst"),
             lit(0L).as("cost"))), "src") // every round's join reads it
-    var dist: DataFrame = Scope.cut(seeds
-      .select(col("seed"), col("node"), lit(0L).as("d")))._1
-    var r = 0
-    while (r < rounds) {
-      val step = math.min(CostFuseRounds, rounds - r)
-      r += step
-      val prev = dist // superseded once the new cut has materialized
-      dist = Scope.cut((1 to step).foldLeft(dist)((d, _) =>
-        e.join(d.select(col("seed"), col("node").as("src"),
-            col("d")), Seq("src"))
-          .select(col("seed"), col("dst").as("node"),
-            (col("d") + col("cost")).as("d"))
-          .groupBy(col("seed"), col("node")).agg(min(col("d")).as("d"))))
-        ._1
-      // the superseded materialization's blocks are provably dead (the
-      // new cut's count already read them) — free now instead of
-      // waiting for the GC-driven ContextCleaner
-      Scope.release(prev)
+    Fixpoint.replace(Scope.cut(seeds
+        .select(col("seed"), col("node"), lit(0L).as("d")))._1,
+        rounds) { d =>
+      e.join(d.select(col("seed"), col("node").as("src"), col("d")),
+          Seq("src"))
+        .select(col("seed"), col("dst").as("node"),
+          (col("d") + col("cost")).as("d"))
+        .groupBy(col("seed"), col("node")).agg(min(col("d")).as("d"))
     }
-    dist
   }
-
-  /** Rounds chained per materialization in [[costFrom]] — each fused
-    * round is a single-consumer join+agg (the self-loop form), so
-    * fusing trades driver actions for plan depth with no duplicated
-    * work; 3 keeps the fused plan small while cutting the per-round
-    * action floor to a third. */
-  private[graft] val CostFuseRounds = 3
 }

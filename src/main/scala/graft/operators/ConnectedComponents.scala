@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Connected components over an undirected edge list by hash-min label
   * propagation — the pair→cluster step of a dedup pipeline (near-dup
@@ -34,14 +34,8 @@ import graft.Scope
   * large-star/small-star (O(log n) rounds); not needed for the dedup
   * workload this serves.
   *
-  * Lineage: each round's label table is `localCheckpoint`ed (eager) —
-  * persist() alone is NOT enough for an iterative dataflow, because the
-  * LOGICAL plan still nests one round per iteration and Catalyst/AQE
-  * plan handling grows exponentially with rounds (a 9-node path graph
-  * OOMed the driver on plan STRINGS before this truncation; pinned by
-  * the path-graph unit test). The previous round's blocks are released
-  * eagerly; the final table's blocks are dropped by the ContextCleaner
-  * once unreferenced.
+  * Each round's label table is cut ([[graft.Fixpoint]], unfused: the
+  * round reads the labels twice — join and union).
   */
 object ConnectedComponents {
 
@@ -70,50 +64,39 @@ object ConnectedComponents {
     val e = Scope.eager(
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))),
       "src") // every round's join reads it
-    // Round 1 fused into initialization: from identity labels, a
-    // neighbor's message is just its node id, so the first label table
-    // is one groupBy-min over (neighbor ids ∪ self) — no join, and no
-    // separate distinct-nodes pass (the node set is exactly src of the
-    // symmetrized edge list).
-    var labels = Scope.cut(
-      e.select(col("dst").as("node"), col("src").as("rep"))
-        .union(e.select(col("src").as("node"), col("src").as("rep")))
-        .groupBy(col("node")).agg(min(col("rep")).as("rep")))._1
-    // e is materialized by the (eager) init above; the raw list's cache
-    // has served its one purpose
+    // e is materialized (eager); the raw list's cache has served its
+    // one purpose
     Scope.release(fwd)
     // Convergence check: labels only ever DECREASE (new rep =
     // min(old, neighbor reps) ≤ old) over a fixed node set, so Σrep
     // strictly decreases exactly when some label changed — one exact
-    // decimal aggregate over the just-checkpointed table per round,
-    // instead of a join against the previous round's labels.
-    def repSum(df: org.apache.spark.sql.DataFrame): java.math.BigDecimal =
+    // decimal aggregate over the just-cut table per round, instead of a
+    // join against the previous round's labels.
+    def repSum(df: DataFrame): BigDecimal =
       // SUM over zero rows is NULL — an empty edge list (no near-dup
       // pairs at all) must converge to an empty result, not NPE
       Option(df.agg(sum(col("rep").cast("decimal(38,0)"))).head.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = repSum(labels)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      it += 1
-      // neighbor messages ∪ own label, min per node (map-side combine);
-      // eager localCheckpoint truncates lineage AND materializes once
-      // for the two consumers (sum check now, join next round)
-      val msgs = e.join(labels, col("src") === col("node"))
+        .map(BigDecimal(_)).getOrElse(BigDecimal(0))
+    val last = Fixpoint.replaceUntil(
+      // Round 1 fused into initialization: from identity labels, a
+      // neighbor's message is just its node id, so the first label table
+      // is one groupBy-min over (neighbor ids ∪ self) — no join, and no
+      // separate distinct-nodes pass (the node set is exactly src of the
+      // symmetrized edge list).
+      Scope.cut(
+        e.select(col("dst").as("node"), col("src").as("rep"))
+          .union(e.select(col("src").as("node"), col("src").as("rep")))
+          .groupBy(col("node")).agg(min(col("rep")).as("rep"))),
+      maxIter, (df, _) => repSum(df)) { labels =>
+      // neighbor messages ∪ own label, min per node (map-side combine)
+      e.join(labels, col("src") === col("node"))
         .select(col("dst").as("node"), col("rep"))
-      val next = Scope.cut(
-        msgs.union(labels)
-          .groupBy(col("node")).agg(min(col("rep")).as("rep")))._1
-      val nextSum = repSum(next)
-      Scope.release(labels)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
+        .union(labels)
+        .groupBy(col("node")).agg(min(col("rep")).as("rep"))
     }
     Scope.release(e)
-    require(converged,
+    require(last.stopped,
       s"ConnectedComponents did not converge in $maxIter rounds (diameter > maxIter?)")
-    labels
+    last.state
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Full k-core DECOMPOSITION over a symmetrized edge list — the
   * per-node generalization of [[KCore]]'s fixed-k peel: instead of
@@ -33,10 +33,11 @@ import graft.Scope
   * Scale shape: identical per-round cost to [[KCore]] (ONE map-side-
   * combining degree agg ∝ surviving nodes + two semi-joins of the
   * shrinking edge set), ≤ kMax·rounds bounded rounds total, each
-  * round `localCheckpoint(eager = true)` (the CC lineage-truncation
-  * discipline — each round references the previous edge set three
-  * times; kMax·rounds levels of 3-way fan-out would otherwise grow
-  * the logical tree 3^(k·r)). Per-level survivor membership frames
+  * round cut ([[graft.Fixpoint]] — kMax·rounds levels of KCore's 3-way
+  * fan-out would otherwise grow the logical tree 3^(k·r)); each
+  * level's loop adopts its input edge cut and frees it after the
+  * level's first round, so a level holds at most two edge-sized cuts.
+  * Per-level survivor membership frames
   * are node-sized and eagerly checkpointed too, so the closing
   * union + max-aggregate reads only materialized leaves — no lazy
   * multi-branch recompute race (the trusspeel lesson), shuffle
@@ -62,22 +63,12 @@ object CoreNumber {
         .select(col("node"), lit(0L).as("k")))._1)
     var k = 1
     while (k <= kMax && nEdges > 0) {
-      var it = 0
-      var stable = false
-      while (!stable && it < rounds) {
-        it += 1
-        val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("src").as("kn"))
-        val (next, nextCount) = Scope.cut(e
-          .join(keep, e("src") === keep("kn"), "left_semi")
-          .join(keep, e("dst") === keep("kn"), "left_semi"))
-        Scope.release(e)
-        e = next
-        // dropping any node removes its ≥1 edges, so equal edge counts
-        // over a monotone subset chain mean an identical edge set
-        stable = nextCount == nEdges
-        nEdges = nextCount
-      }
+      // dropping any node removes its ≥1 edges, so equal edge counts
+      // over a monotone subset chain mean an identical edge set
+      val level = Fixpoint.replaceUntil((Scope.adopt(e), nEdges), rounds,
+        Fixpoint.Rows)(KCore.keepAtLeast(count(lit(1)), k))
+      e = level.state
+      nEdges = level.rows
       if (nEdges > 0) {
         members ::= Scope.cut(e.select(col("src").as("node")).distinct()
           .select(col("node"), lit(k.toLong).as("k")))._1

@@ -35,7 +35,8 @@ import graft.Scope
   * endpoints, never an edge-sized sort); the normalizer is a 1-row
   * aggregate broadcast back (crossJoin of a 1-row frame, the repo's
   * standing pattern) — never a driver collect. Iterations are a fixed
-  * small constant; deep loops should localCheckpoint like CC.
+  * small constant, and every half-step's raw table is cut (see
+  * [[run]]), so lineage stays one half-step deep at any count.
   */
 object Hits {
 
@@ -43,22 +44,6 @@ object Hits {
 
   private def q12(c: org.apache.spark.sql.Column) =
     round(c * 1e12).cast(Dec38)
-
-  /** Eagerly materialize a half-step's raw table with the
-    * stats-preserving cut (r22; previously persist+count below 4
-    * iterations and localCheckpoint past it). The cut does three jobs
-    * at once: it materializes BEFORE the raw table fans into the
-    * normalizer aggregate and the projection (a lazy persist RACES
-    * under concurrent AQE stages — the r15 44.6 s defect), it
-    * truncates lineage (the un-truncated logical tree quadruples per
-    * iteration: ProfJobs measured 39.5 s of pure DRIVER planning gaps
-    * at the graded 2 iterations, 3x the 13.2 s the jobs themselves
-    * took), and it carries the exact row count, so the planner
-    * broadcasts the node-sized score table into the next half-step's
-    * edge join when it truly is small — at which point the persisted
-    * edge table is never re-shuffled at all (guide §3.1). */
-  private def materialize(df: DataFrame): DataFrame =
-    Scope.cut(df)._1
 
   /** @param edges0     directed edges (`src`, `dst`); duplicates removed.
     * @param iterations fixed iteration count (≥ 1).
@@ -91,14 +76,23 @@ object Hits {
     var prevA: DataFrame = null
     var prevH: DataFrame = null
     for (_ <- 1 to iterations) {
-      // each half-step's raw table cuts eagerly ([[materialize]]): its
-      // own normalizer aggregate AND the score projection both read
-      // it, and the next half-step (plus the final union) reads the
-      // score. Lazily, the tot crossJoin would double the un-cached
-      // lineage per HALF-step — 2^(2·iters) evaluations of the base
-      // edge join (measured 16-108 s at sf0.1 vs ~3 s persisted).
-      val aRaw = materialize(edges.join(h, Seq("src"))
-        .groupBy(col("dst")).agg(sum(q12(col("h"))).as("raw")))
+      // each half-step's raw table is cut: its own normalizer aggregate
+      // AND the score projection both read it, and the next half-step
+      // (plus the final union) reads the score. The cut does three jobs
+      // at once: it materializes BEFORE the raw table fans into the
+      // normalizer and the projection (a lazy persist RACES under
+      // concurrent AQE stages — the r15 44.6 s defect); it truncates
+      // lineage (lazily the tot crossJoin doubles the un-cached lineage
+      // per HALF-step — 2^(2·iters) evaluations of the base edge join,
+      // measured 16-108 s at sf0.1 vs ~3 s persisted, and ProfJobs
+      // measured 39.5 s of pure DRIVER planning gaps at the graded 2
+      // iterations, 3x the 13.2 s the jobs took); and it carries the
+      // exact row count, so the planner broadcasts the node-sized score
+      // table into the next half-step's edge join when it truly is
+      // small — at which point the persisted edge table is never
+      // re-shuffled at all (guide §3.1).
+      val aRaw = Scope.cut(edges.join(h, Seq("src"))
+        .groupBy(col("dst")).agg(sum(q12(col("h"))).as("raw")))._1
       if (prevH != null) // h_{i-1} is baked into aRaw_i
         Scope.release(prevH)
       val aTot = aRaw.agg(sum(col("raw")).cast(Dec38).as("tot"))
@@ -106,8 +100,8 @@ object Hits {
         .select(col("dst"),
           round(col("raw").cast("double") / col("tot").cast("double"), 6)
             .as("a"))
-      val hRaw = materialize(edges.join(a, Seq("dst"))
-        .groupBy(col("src")).agg(sum(q12(col("a"))).as("raw")))
+      val hRaw = Scope.cut(edges.join(a, Seq("dst")) // cut: see aRaw
+        .groupBy(col("src")).agg(sum(q12(col("a"))).as("raw")))._1
       if (prevA != null) // a_{i-1} was consumed at hRaw_{i-1}
         Scope.release(prevA)
       val hTot = hRaw.agg(sum(col("raw")).cast(Dec38).as("tot"))

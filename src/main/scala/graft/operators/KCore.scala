@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Fixed-round k-core peel over a symmetrized edge list — the
   * density-core extractor of the graph family ([[PageRank]] ranks
@@ -30,11 +30,9 @@ import graft.Scope
   * (shuffle ∝ surviving nodes) plus two semi-joins of the edge list
   * against the ≥k node set (AQE broadcasts the node side when the
   * survivor set collapses — the common case after round 1). Edge-set
-  * size is monotone non-increasing, so per-round cost shrinks. Lineage
-  * is truncated per round with eager `localCheckpoint` (the
-  * [[ConnectedComponents]] discipline — each round references the
-  * previous edge set THREE times: degree agg + two semi-joins; without
-  * truncation the logical plan grows 3^rounds).
+  * size is monotone non-increasing, so per-round cost shrinks. Each
+  * round is cut ([[graft.Fixpoint]]; unfused — it reads the previous
+  * edge set THREE times: degree agg + two semi-joins).
   */
 object KCore {
 
@@ -46,25 +44,22 @@ object KCore {
     * @param rounds fixed peel rounds (≥ 0).
     * @return (`node`, `deg`): surviving nodes with their degree in the
     *         peeled subgraph. */
-  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = Scope {
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var (e, prevCount) = Scope.cut(edges.select(col("src"), col("dst")))
-    var stable = false
-    var it = 0
-    while (!stable && it < rounds) {
-      it += 1
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("kn"))
-      val (next, nextCount) = Scope.cut(e
-        .join(keep, e("src") === keep("kn"), "left_semi")
-        .join(keep, e("dst") === keep("kn"), "left_semi"))
-      Scope.release(e)
-      e = next
-      stable = nextCount == prevCount
-      prevCount = nextCount
-    }
-    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    Fixpoint.replaceUntil(Scope.cut(edges.select(col("src"), col("dst"))),
+        rounds, Fixpoint.Rows)(keepAtLeast(count(lit(1)), k)).state
+      .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+  }
+
+  /** One peel round: keep the edges whose BOTH endpoints have `strength`
+    * (an aggregate over each src's edges) ≥ `min`. */
+  private[operators] def keepAtLeast(strength: Column, min: Long)
+                                    (e: DataFrame): DataFrame = {
+    val keep = e.groupBy(col("src")).agg(strength.as("st"))
+      .filter(col("st") >= min).select(col("src").as("kn"))
+    e.join(keep, e("src") === keep("kn"), "left_semi")
+      .join(keep, e("dst") === keep("kn"), "left_semi")
   }
 
   /** WEIGHTED (s-core) peel (r20) — [[peel]] with degree replaced by
@@ -85,7 +80,7 @@ object KCore {
     * profile), all-integer arithmetic, and per-round scale shape: ONE
     * map-side-combining strength hash agg (shuffle ∝ surviving nodes)
     * + two semi-joins against the ≥s node set, edge mass monotone
-    * non-increasing, per-round localCheckpoint lineage truncation.
+    * non-increasing, per-round cut ([[graft.Fixpoint]]).
     *
     * @param edges  symmetrized directed (`src`, `dst`, `w`) — both
     *               orientations with the same positive integer weight
@@ -94,25 +89,12 @@ object KCore {
     * @param rounds fixed peel rounds (≥ 0).
     * @return (`node`, `strength`): survivors with their strength in
     *         the peeled subgraph. */
-  def peelW(edges: DataFrame, s: Long, rounds: Int): DataFrame = Scope {
+  def peelW(edges: DataFrame, s: Long, rounds: Int): DataFrame = {
     require(s >= 1, s"s must be >= 1, got $s")
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    var (e, prevCount) = Scope.cut(
-      edges.select(col("src"), col("dst"), col("w")))
-    var stable = false
-    var it = 0
-    while (!stable && it < rounds) {
-      it += 1
-      val keep = e.groupBy(col("src")).agg(sum(col("w")).as("st"))
-        .filter(col("st") >= s).select(col("src").as("kn"))
-      val (next, nextCount) = Scope.cut(e
-        .join(keep, e("src") === keep("kn"), "left_semi")
-        .join(keep, e("dst") === keep("kn"), "left_semi"))
-      Scope.release(e)
-      e = next
-      stable = nextCount == prevCount
-      prevCount = nextCount
-    }
-    e.groupBy(col("src").as("node")).agg(sum(col("w")).as("strength"))
+    Fixpoint.replaceUntil(
+        Scope.cut(edges.select(col("src"), col("dst"), col("w"))),
+        rounds, Fixpoint.Rows)(keepAtLeast(sum(col("w")), s)).state
+      .groupBy(col("src").as("node")).agg(sum(col("w")).as("strength"))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scope
+import graft.{Fixpoint, Scope}
 
 /** Fixed-round synchronous label propagation over a symmetrized edge
   * list — the COMMUNITY detector of the graph family ([[PageRank]]
@@ -28,8 +28,10 @@ import graft.Scope
   * dst side, shuffle ∝ edges) + two stacked map-side-combining hash
   * aggs ((src, label) counts ∝ edges, then the per-src argmax ∝ nodes —
   * the argmax is a struct-max AGGREGATE, never a window over the edge
-  * list). Lineage truncated per round with eager `localCheckpoint` (the
-  * [[ConnectedComponents]] discipline).
+  * list). The round reads the previous labels ONCE (the single join),
+  * so rounds are fused and cut [[graft.Fixpoint.Fuse]] at a time
+  * ([[graft.Fixpoint]]); the stats-carrying cut lets the label side
+  * broadcast when small.
   */
 object LabelProp {
 
@@ -37,47 +39,25 @@ object LabelProp {
     *               orientations of every undirected edge present;
     *               integer node ids.
     * @return (node, label) — the label after `rounds` rounds. */
-  def run(edges: DataFrame, rounds: Int): DataFrame = Scope {
+  def run(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // keyed cache (r22): every round joins labels onto the dst side —
     // partition + sort once so per-round joins never re-shuffle edges
     // every round's join reads it (columnar — r21)
     val e = Scope.eager(
       edges.select(col("src"), col("dst")), "dst")
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    // r21: each round reads the previous labels ONCE (the single join),
-    // so rounds chain into one fused plan with every intermediate a
-    // single-consumer exchange — materialize every FuseRounds rounds
-    // instead of every round (the Bfs.costFrom fusion discipline; the
-    // stats-carrying cut lets the label side broadcast when small).
-    var r = 0
-    while (r < rounds) {
-      val step = math.min(FuseRounds, rounds - r)
-      r += step
-      val prev = labels // superseded once the new cut has materialized
-      labels = Scope.cut((1 to step).foldLeft(labels)((l, _) => e
-        .join(l.select(col("node").as("dst"), col("label")), Seq("dst"))
+    Fixpoint.replace(e.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")), rounds) { l =>
+      e.join(l.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         // (cnt desc, label asc) argmax as a struct max: larger cnt wins,
         // then larger -label = SMALLER label
         .groupBy(col("src"))
         .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("label"))))._1
-      // the cut's count has materialized the new round, so the previous
-      // round's blocks are provably dead — free them now instead of
-      // waiting for the GC-driven ContextCleaner (a no-op on the seed
-      // frame, which this scope did not make)
-      Scope.release(prev)
+        .select(col("src").as("node"), (-col("m.nl")).as("label"))
     }
-    labels
   }
-
-  /** Rounds chained per materialization — each fused round is a
-    * single-consumer join+agg chain, so fusing trades driver actions
-    * for plan depth with no duplicated work. */
-  private[graft] val FuseRounds = 3
 
   /** WEIGHTED label propagation (r19): [[run]] with the majority vote
     * a WEIGHT SUM instead of a neighbor count — a neighborhood's label
@@ -96,32 +76,22 @@ object LabelProp {
     *               integer weights; both orientations present with the
     *               SAME weight (the edge-builder contract).
     * @return (node, label) — the label after `rounds` rounds. */
-  def runW(edges: DataFrame, rounds: Int): DataFrame = Scope {
+  def runW(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // keyed cache (r22): see run
     // every round's join reads it (columnar — r21)
     val e = Scope.eager(
       edges.select(col("src"), col("dst"), col("w")), "dst")
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    // r21: fused rounds — the [[run]] discipline verbatim
-    var r = 0
-    while (r < rounds) {
-      val step = math.min(FuseRounds, rounds - r)
-      r += step
-      val prev = labels // superseded once the new cut has materialized
-      labels = Scope.cut((1 to step).foldLeft(labels)((l, _) => e
-        .join(l.select(col("node").as("dst"), col("label")), Seq("dst"))
+    Fixpoint.replace(e.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")), rounds) { l =>
+      e.join(l.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label"))
         .agg(sum(col("w")).as("wsum"))
         // (wsum desc, label asc) argmax as a struct max — run's
         // tiebreak with the count replaced by the exact weight sum
         .groupBy(col("src"))
         .agg(max(struct(col("wsum"), (-col("label")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("label"))))._1
-      // the superseded round's blocks are dead — free (see run)
-      Scope.release(prev)
+        .select(col("src").as("node"), (-col("m.nl")).as("label"))
     }
-    labels
   }
 }
