@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.json4s.JLong
 
 /** Scale rehearsal (not graded, not part of the bench): measures the
   * operators whose 100-TB story rests on an asymptotic claim, on
@@ -61,7 +62,8 @@ import org.apache.spark.sql.functions._
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleRehearsal"
   *        [probe-name substring filter as arg, e.g. "pairs" to run
   *         only the pair-family probes]
-  * Prints one JSON line per (probe, rows) with wall seconds.
+  * Prints one [[Trace]] record line per (probe, rows), plus `rows` (the
+  * input size) and `out` (the probe's row count, -1 for a noop sink).
   */
 object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
@@ -74,29 +76,12 @@ object ScaleRehearsal {
       (col("id") % 50 + 1).as("qty"))
     // shuffle-bytes accounting: on a single node every probe's wall
     // clock hides the cluster cost (shuffles are loopback memcpys
-    // here); total shuffle WRITE bytes is the layout-independent
-    // number that survives the 1000-executor extrapolation. Listener
-    // events are async — the post-body sleep drains the bus (crude,
-    // fine for a rehearsal harness).
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
+    // here); the record's summed stage shuffle_write_bytes is the
+    // layout-independent number that survives the 1000-executor
+    // extrapolation.
     def time(label: String, n: Long)(body: => Long): Unit = {
-      Thread.sleep(300); shuffleBytes.set(0L)
-      // the scope frees the probe's caches and cuts after the timing
-      val (rows, secs) = Graft.cacheScoped(spark) {
-        val t0 = System.nanoTime()
-        val rows = body
-        (rows, (System.nanoTime() - t0) / 1e9)
-      }
-      Thread.sleep(1000) // drain the listener bus before reading
-      val mb = shuffleBytes.get / 1e6
-      println(f"""{"probe":"$label","rows":$n,"secs":${"%.2f".formatLocal(java.util.Locale.ROOT, secs)},"out":$rows,"shuffle_mb":${"%.1f".formatLocal(java.util.Locale.ROOT, mb)}}""")
+      val (out, rec) = Trace.run(label)(body)
+      println(rec.line("rows" -> JLong(n), "out" -> JLong(out)))
     }
     // arg = probe-name substring filter ("pairs" → pair family only)
     val only = args.headOption.getOrElse("")

@@ -16,7 +16,7 @@ import graft.queries._
   * DataFrame is lazy, so the builder cannot free them after its own
   * action: run each query through [[Graft.runScoped]] (or materialize
   * it inside [[Graft.cacheScoped]]), which frees exactly what the query
-  * made once the body returns — the runners (Bench, Verify, Prof) all
+  * made once the body returns — the runners (Bench, Verify, Trace) all
   * do.
   */
 object SparkEntry {

@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -28,20 +30,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // json4s escapes backslash, quote and every control char: a tab or
+    // CR in builder-authored SQL must not make json.load of this file
+    // fail and silently zero the correctness check.
+    val json = compact(JObject(SparkEntry.oracleSql.toList
+      .map { case (k, v) => k -> JString(v) }))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
