@@ -45,7 +45,13 @@ object KeyedFold {
   /** The fold on `transformWithState` (RocksDB state store): one
     * ValueState per key. A `ttl` makes the store expire a key idle for
     * that much processing time (and so selects TimeMode.ProcessingTime);
-    * `initial` seeds keys before their first live batch. */
+    * `initial` seeds keys before their first live batch.
+    *
+    * On a session built by [[graft.LocalSession]] the store commits each
+    * micro-batch as a per-partition changelog of the keys it wrote, takes
+    * snapshots in background maintenance, and recovers by replaying the
+    * last snapshot plus the changelogs after it, so a commit costs the
+    * batch's writes, not the whole state. */
   def tws[K: Encoder, E, S: Encoder, O: Encoder](
       events: Dataset[E], f: KeyedFold[K, E, S, O], mode: OutputMode,
       ttl: Option[java.time.Duration] = None,

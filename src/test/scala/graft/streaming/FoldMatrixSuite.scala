@@ -24,7 +24,12 @@ import scala.util.Random
   * `StreamingQueryProgress.stateOperators`: one `[fold-state]` line per
   * fold and adapter with rows and bytes, and — no run here sets a TTL —
   * an assertion that the store holds at most one row per distinct key
-  * fed. */
+  * fed.
+  *
+  * Two more runs sit beside the matrix: the causal and gap folds with a
+  * restart before every one of six batches, and `causalTws` on a clone
+  * that sets only the RocksDB provider, which pins that the store
+  * commits per-batch changelogs rather than a full snapshot. */
 class FoldMatrixSuite extends SparkSuite {
   import spark.implicits._
 
@@ -109,15 +114,16 @@ class FoldMatrixSuite extends SparkSuite {
       case None => rows.groupBy(identity).map { case (o, os) => o -> os.size }
     }
 
-  /** One streaming run through one adapter; returns the emitted rows in
-    * batch order and the (rows, bytes) of the last data batch's state. */
+  /** One streaming run through one adapter on session `s`, checkpointed
+    * at `cp`, with a stop and a restart from the checkpoint before each
+    * batch index in `restarts`; returns the emitted rows in batch order
+    * and the (rows, bytes) of the last data batch's state. */
   private def run[K, E, S, O](c: Case[K, E, S, O], tws: Boolean,
-                              batches: Seq[Seq[E]], restartAt: Int)
+                              batches: Seq[Seq[E]], restarts: Set[Int],
+                              s: SparkSession, cp: String)
       : (Seq[O], Long, Long) = {
     import c.{ke, ee, se, oe}
-    val s = if (tws) rocksSession else hdfsSession
     val ms = MemoryStream[E](s)
-    val cp = Files.createTempDirectory(s"graft_fold_${c.name}").toString
     val out = collection.mutable.TreeMap.empty[Long, Seq[O]]
     def start() = {
       val mode = if (tws) c.twsMode else c.fmMode
@@ -133,7 +139,7 @@ class FoldMatrixSuite extends SparkSuite {
     }
     var q = start()
     try batches.zipWithIndex.foreach { case (b, i) =>
-      if (i == restartAt) { q.stop(); q = start() }
+      if (restarts(i)) { q.stop(); q = start() }
       ms.addData(b)
       q.processAllAvailable()
     } finally q.stop()
@@ -142,26 +148,36 @@ class FoldMatrixSuite extends SparkSuite {
       ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum)
   }
 
-  private def check[K, E, S, O](c: Case[K, E, S, O]): Unit = {
+  private def checkpointDir(c: Case[_, _, _, _]): String =
+    Files.createTempDirectory(s"graft_fold_${c.name}").toString
+
+  /** Runs `c` through both adapters and checks it against the batch
+    * answer. By default the input is a seeded split into 3–4 batches with
+    * one restart at a seeded boundary; `restartEach = Some(n)` splits it
+    * into `n` batches and restarts before every batch but the first. */
+  private def check[K, E, S, O](c: Case[K, E, S, O],
+                                restartEach: Option[Int] = None): Unit = {
     import c.{ee, oe}
     val rng = new Random(20261017L ^ c.name.hashCode)
     val ordered = c.fold.order.fold(rng.shuffle(c.input))(o => c.input.sorted(o))
-    val nBatches = 3 + rng.nextInt(2)
+    val nBatches = restartEach.getOrElse(3 + rng.nextInt(2))
     val cuts = rng.shuffle((1 until ordered.size).toVector)
       .take(nBatches - 1).sorted
     val batches = (0 +: cuts).zip(cuts :+ ordered.size)
       .map { case (a, b) => rng.shuffle(ordered.slice(a, b)) }
-    val restartAt = 1 + rng.nextInt(nBatches - 1)
+    val restarts = restartEach.fold(Set(1 + rng.nextInt(nBatches - 1)))(
+      _ => (1 until nBatches).toSet)
     val expected = standings(c, c.batch(spark.createDataset(c.input)).collect().toSeq)
     val keys = c.input.map(c.fold.key).distinct.size
     for (tws <- Seq(false, true)) {
       val api = if (tws) "tws" else "fmgws"
-      val (rows, stateRows, stateBytes) = run(c, tws, batches, restartAt)
+      val (rows, stateRows, stateBytes) = run(c, tws, batches, restarts,
+        if (tws) rocksSession else hdfsSession, checkpointDir(c))
       println(f"[fold-state] ${c.name}%-14s $api%-5s rows=$stateRows%5d " +
-        f"bytes=$stateBytes%9d keys=$keys%5d")
+        f"bytes=$stateBytes%9d keys=$keys%5d restarts=${restarts.size}")
       assert(standings(c, rows) === expected,
         s"${c.name} via $api: batches ${batches.map(_.size)}, " +
-          s"restart before batch $restartAt")
+          s"restarts before batches ${restarts.toSeq.sorted.mkString(",")}")
       assert(stateRows <= keys,
         s"${c.name} via $api holds $stateRows state rows for $keys keys")
     }
@@ -171,5 +187,48 @@ class FoldMatrixSuite extends SparkSuite {
     val failures = cases.flatMap(c =>
       scala.util.Try(check(c)).failed.toOption.map(e => s"${c.name}: ${e.getMessage.take(400)}"))
     assert(cases.size === 28 && failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("restart before every batch: causal and gap folds via fMGWS and TWS over 6 batches == batch") {
+    // Each TWS restart reopens the RocksDB store from its last snapshot
+    // plus the changelogs committed since, so five restarts replay five
+    // changelog chains of growing length.
+    for (name <- Seq("causal", "gap")) check(cases.find(_.name == name).get, Some(6))
+  }
+
+  test("RocksDB commits per-batch changelogs by default: causalTws on a plain RocksDB session") {
+    // Only the provider class is set on the clone, as the benchmark and
+    // an embedder do; the changelog commit must come from the session
+    // LocalSession built. With full-snapshot commits every batch would
+    // leave one .zip per state partition and no .changelog at all. `run`
+    // builds what causalTws builds: KeyedFold.tws(_, causalFold, Update).
+    val s = spark.newSession()
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val c = new Case("causal", StreamOps.causalFold)(U, U, StreamOps.causalTracker,
+      Some(_.user_id), events)
+    val ordered = c.input.sorted(StreamOps.ById)
+    val batches = ordered.grouped((ordered.size + 11) / 12).toSeq
+    val cp = checkpointDir(c)
+    val (rows, _, _) = run(c, tws = true, batches, Set.empty, s, cp)
+    assert(standings(c, rows) ===
+      standings(c, c.batch(spark.createDataset(c.input)).collect().toSeq))
+
+    import scala.jdk.CollectionConverters._
+    def files(dir: String): List[String] = {
+      val w = Files.walk(java.nio.file.Paths.get(cp, dir))
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toList
+      finally w.close()
+    }
+    val committed = files("commits").count(_.forall(_.isDigit))
+    val partitions = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val state = files("state")
+    val zips = state.count(_.endsWith(".zip"))
+    assert(committed === batches.size)
+    assert(state.exists(_.endsWith(".changelog")),
+      s"no .changelog under $cp/state: $state")
+    assert(zips < committed * partitions,
+      s"$zips .zip snapshots for $committed batches x $partitions partitions")
   }
 }
