@@ -438,18 +438,31 @@ object Graft {
         iterations)
     }
 
+  /** The graph facades' one edge prelude: rename the caller's columns
+    * to (`src`, `dst`) — plus `w` when `wCol` is given — drop
+    * self-loops unless `keepLoops`, then union the reversed copy and
+    * `distinct()`. Weighted rows dedup as whole (src, dst, w) triples
+    * (the [[modularityWeighted]] caller contract). */
+  private def symmetrize(edges: DataFrame, srcCol: String, dstCol: String,
+                         wCol: Option[String] = None,
+                         keepLoops: Boolean = false): DataFrame = {
+    val w = wCol.toSeq
+    val named = edges.select(Seq(col(srcCol).as("src"),
+      col(dstCol).as("dst")) ++ w.map(c => col(c).as("w")): _*)
+    val e = if (keepLoops) named else named.filter(col("src") =!= col("dst"))
+    e.union(e.select(Seq(col("dst").as("src"), col("src").as("dst")) ++
+      w.map(_ => col("w")): _*)).distinct()
+  }
+
   /** Fixed-round k-core peel over any undirected edge list (graded
     * q_graph_kcore's engine, [[graft.operators.KCore]]): nodes
     * surviving `rounds` cascaded degree-< k peels, with their degree in
     * the peeled subgraph. The input lists each undirected edge ONCE in
     * either orientation; symmetrization happens here. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
-            k: Int, rounds: Int): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+            k: Int, rounds: Int): DataFrame =
     graft.operators.KCore.peel(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
-      k, rounds)
-  }
+      symmetrize(edges, srcCol, dstCol, keepLoops = true), k, rounds)
 
   /** Label-propagation communities over any undirected edge list
     * (graded q_graph_labelprop's engine): `rounds` synchronous
@@ -461,13 +474,8 @@ object Graft {
     * arbitrary caller graphs (the graded copurchase graph is
     * bipartite-parity-encoded and cannot carry one). */
   def labelPropagate(edges: DataFrame, srcCol: String, dstCol: String,
-                     rounds: Int): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    graft.operators.LabelProp.run(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
-      rounds)
-  }
+                     rounds: Int): DataFrame =
+    graft.operators.LabelProp.run(symmetrize(edges, srcCol, dstCol), rounds)
 
   /** WEIGHTED label-propagation communities (graded
     * q_graph_labelprop_w's engine; weight-1 reproduces
@@ -479,15 +487,9 @@ object Graft {
     * label). */
   def labelPropagateWeighted(edges: DataFrame, srcCol: String,
                              dstCol: String, wCol: String,
-                             rounds: Int): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
+                             rounds: Int): DataFrame =
     graft.operators.LabelProp.runW(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct(),
-      rounds)
-  }
+      symmetrize(edges, srcCol, dstCol, Some(wCol)), rounds)
 
   /** WEIGHTED greedy modularity refinement (graded q_graph_refine_w's
     * engine; weight-1 reproduces [[refineCommunities]]): up to `moves`
@@ -500,17 +502,12 @@ object Graft {
                                 dstCol: String, wCol: String,
                                 labels: DataFrame, nodeCol: String,
                                 labelCol: String,
-                                moves: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
+                                moves: Int = 6): DataFrame =
     graft.queries.GraphOps.refineWOn(
-        e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-          col("w"))).distinct(),
+        symmetrize(edges, srcCol, dstCol, Some(wCol)),
         labels.select(col(nodeCol).as("node"), col(labelCol).as("label")),
         moves)
       .select(col("node").as(nodeCol), col("label").as(labelCol))
-  }
 
   /** Trailing event-time rolling aggregate over any (key, ts, value)
     * rows (graded q_win_timerange's engine generalized, r13): per row,
@@ -1374,12 +1371,9 @@ object Graft {
     * cap contract. Returns (node, corenum). Runs bounded driver
     * actions per round (the trusspeel pattern). */
   def coreNumbers(edges: DataFrame, srcCol: String, dstCol: String,
-                  kMax: Int = 12, rounds: Int = 8): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+                  kMax: Int = 12, rounds: Int = 8): DataFrame =
     graft.operators.CoreNumber.decompose(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
-      kMax, rounds)
-  }
+      symmetrize(edges, srcCol, dstCol, keepLoops = true), kMax, rounds)
 
   /** BFS hop-distance histogram from the min-id node over any
     * undirected edge list (graded q_graph_bfs's engine): (dist,
@@ -1387,12 +1381,9 @@ object Graft {
     * the fixed-unroll contract. Runs bounded driver actions per
     * round. */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-              rounds: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+              rounds: Int = 6): DataFrame =
     graft.operators.Bfs.hops(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
-      rounds)
-  }
+      symmetrize(edges, srcCol, dstCol, keepLoops = true), rounds)
 
   /** AMS F2 (second frequency moment ≡ self-join size) sketch + exact
     * audit over any key column (graded q_agg_ams's engine): one
@@ -1417,7 +1408,7 @@ object Graft {
     * baseline, the single-community partition scores exactly 0.
     * Returns one row (n_comms, m_edges, q_micro, q_modularity);
     * q_micro is the exact floor-quantized value, the double is one
-    * IEEE division of it. See [[graft.queries.GraphOps.modularityOn]]
+    * IEEE division of it. See [[graft.queries.GraphOps.modularityWOn]]
     * for the exact-integer determinism contract.
     *
     * Self-loops are DROPPED before symmetrizing (simple-graph
@@ -1428,13 +1419,9 @@ object Graft {
     * loop-free semantics (r17 ADVICE). */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame, nodeCol: String,
-                 labelCol: String): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    graft.queries.GraphOps.modularityOn(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
+                 labelCol: String): DataFrame =
+    graft.queries.GraphOps.modularityOn(symmetrize(edges, srcCol, dstCol),
       labels.select(col(nodeCol).as("node"), col(labelCol).as("label")))
-  }
 
   /** Per-community conductance φ(c) = cut∕min(vol, vol-complement) for
     * the k largest communities of a partition (graded
@@ -1446,13 +1433,9 @@ object Graft {
     * cuts nor should count once in volume). */
   def conductance(edges: DataFrame, srcCol: String, dstCol: String,
                   labels: DataFrame, nodeCol: String, labelCol: String,
-                  k: Int = 10): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    graft.queries.GraphOps.conductanceOn(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct(),
+                  k: Int = 10): DataFrame =
+    graft.queries.GraphOps.conductanceOn(symmetrize(edges, srcCol, dstCol),
       labels.select(col(nodeCol).as("node"), col(labelCol).as("label")), k)
-  }
 
   /** Content-defined-chunking dedup audit over any binary payload
     * column (graded q_mm_cdc's engine): rolling-hash chunk boundaries
@@ -1496,9 +1479,7 @@ object Graft {
                seedIds: Seq[Long], rounds: Int = 6): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val g = e.union(
-      e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    val g = symmetrize(edges, srcCol, dstCol, keepLoops = true)
     // seed ids absent from the graph are dropped (a phantom seed would
     // otherwise report itself at distance 0) — empty graph ⟹ empty
     // result, the Bfs.hops empty-edge convention
@@ -1554,11 +1535,7 @@ object Graft {
                         rounds: Int = 6): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
-    val g = e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct()
+    val g = symmetrize(edges, srcCol, dstCol, Some(wCol))
       .select(col("src"), col("dst"),
         expr("cast(1000000 div w as bigint)").as("cost"))
     val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
@@ -1590,10 +1567,7 @@ object Graft {
                         k: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val g = e.union(
-      e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+    val g = symmetrize(edges, srcCol, dstCol)
     val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
       .join(g.select(col("src").as("node")).distinct(),
         Seq("node"), "left_semi")
@@ -1619,11 +1593,7 @@ object Graft {
                           k: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
-    val g = e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct()
+    val g = symmetrize(edges, srcCol, dstCol, Some(wCol))
       .select(col("src"), col("dst"),
         expr("greatest(cast(1000000 div w as bigint), 1L)").as("cost"))
     val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
@@ -1646,11 +1616,8 @@ object Graft {
                            dstCol: String, ks: Seq[Int] = Seq(4, 8, 16),
                            topK: Int = 20): DataFrame = {
     require(ks.nonEmpty, "ks must be non-empty")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
     graft.queries.GraphOps.betwsweepOn(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(), ks, topK)
+      symmetrize(edges, srcCol, dstCol), ks, topK)
   }
 
   /** TWO-LEVEL weighted community refinement (graded q_graph_louvain2's
@@ -1668,12 +1635,8 @@ object Graft {
                                 labels: DataFrame, nodeCol: String,
                                 labelCol: String,
                                 moves: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
     val (_, l2) = graft.queries.GraphOps.louvain2On(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct(),
+      symmetrize(edges, srcCol, dstCol, Some(wCol)),
       labels.select(col(nodeCol).as("node"), col(labelCol).as("label")),
       moves)
     l2.select(col("node").as(nodeCol), col("label").as(labelCol))
@@ -1692,14 +1655,9 @@ object Graft {
     * that may cascade deeper should raise `rounds` until the peel's
     * early exit triggers (an unchanged round is the fixpoint). */
   def sCore(edges: DataFrame, srcCol: String, dstCol: String,
-            wCol: String, s: Long, rounds: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
+            wCol: String, s: Long, rounds: Int = 6): DataFrame =
     graft.operators.KCore.peelW(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct(), s, rounds)
-  }
+      symmetrize(edges, srcCol, dstCol, Some(wCol)), s, rounds)
 
   /** Greedy modularity refinement of a node partition (graded
     * q_graph_refine's engine): up to `moves` exact-integer argmax
@@ -1709,16 +1667,11 @@ object Graft {
     * the caller's column names. */
   def refineCommunities(edges: DataFrame, srcCol: String, dstCol: String,
                         labels: DataFrame, nodeCol: String,
-                        labelCol: String, moves: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    graft.queries.GraphOps.refineOn(
-        e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct(),
+                        labelCol: String, moves: Int = 6): DataFrame =
+    graft.queries.GraphOps.refineOn(symmetrize(edges, srcCol, dstCol),
         labels.select(col(nodeCol).as("node"), col(labelCol).as("label")),
         moves)
       .select(col("node").as(nodeCol), col("label").as(labelCol))
-  }
 
   /** Weighted Newman modularity over a ONE-DIRECTIONAL undirected edge
     * list carrying an integer weight column (graded
@@ -1741,15 +1694,10 @@ object Graft {
     * Returns one row (n_comms, w_total, q_micro, q_modularity). */
   def modularityWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                          wCol: String, labels: DataFrame, nodeCol: String,
-                         labelCol: String): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
+                         labelCol: String): DataFrame =
     graft.queries.GraphOps.modularityWOn(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct(),
+      symmetrize(edges, srcCol, dstCol, Some(wCol)),
       labels.select(col(nodeCol).as("node"), col(labelCol).as("label")))
-  }
 
   /** Weighted per-community conductance (graded q_graph_conductance_w's
     * engine; weight-1 reproduces [[conductance]]). Self-loops dropped
@@ -1762,13 +1710,8 @@ object Graft {
     * phi_micro, conductance) for the k largest communities. */
   def conductanceWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                           wCol: String, labels: DataFrame, nodeCol: String,
-                          labelCol: String, k: Int = 10): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(wCol).as("w"))
-      .filter(col("src") =!= col("dst"))
+                          labelCol: String, k: Int = 10): DataFrame =
     graft.queries.GraphOps.conductanceWOn(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"),
-        col("w"))).distinct(),
+      symmetrize(edges, srcCol, dstCol, Some(wCol)),
       labels.select(col(nodeCol).as("node"), col(labelCol).as("label")), k)
-  }
 }

@@ -817,13 +817,11 @@ object ScaleRehearsal {
         require(q1 >= q0, s"Q decreased at n=$n: $q0 -> $q1")
         n
       }
-      // The fully-weighted loop's newcomers (r19): the SAME planted
-      // shapes as labelprop_flat / refine_move with an integer weight
-      // riding every edge. Claims: runW ≡ run's per-round join +
-      // two-agg shape with the count swapped for a weight sum (zero
-      // extra shuffles — time within the unweighted curve's band);
-      // refineWOn ≡ refineOn's per-move scoring pass (the
-      // modularityw_fold precedent: weight sums add no exchange).
+      // The fully-weighted loop's probes (r19): the SAME planted
+      // shapes as labelprop_flat / refine_move with a non-unit integer
+      // weight riding every edge. LabelProp.run/runW and
+      // refineOn/refineWOn share one body each, so these time the same
+      // programs plus a stored weight column.
       // Truths: labelprop_w over n/2 disjoint weighted pairs emits one
       // label per node (out = n); weighted refine never lowers Q_w.
       if (want("labelpropw_flat")) time("labelpropw_flat", n) {

@@ -44,9 +44,10 @@ import graft.Scope
   * shuffle ∝ distinct dst per partition (collapses hard on hub-heavy
   * graphs), never an edge-sized sort. N is carried as a broadcast
   * one-row aggregate, never a driver-side collect. Iterations are a
-  * fixed small constant (3 graded) — plan depth stays shallow; callers
-  * running tens of hops should localCheckpoint the rank table like CC
-  * does.
+  * fixed small constant (3 graded) and the rank table is NOT cut
+  * between them, so the plan grows one join + aggregate per iteration;
+  * a run of tens of hops would need a per-round cut — a
+  * [[graft.Fixpoint]] loop, the [[ConnectedComponents]] form.
   */
 object PageRank {
 
@@ -82,7 +83,7 @@ object PageRank {
     // static across iterations: pre-partition by the join key once so
     // per-hop shuffles move only the node-sized rank table.
     // The returned DataFrame is lazy, so e stays cached until the
-    // enclosing Scope closes (or the caller's clearCache). An
+    // enclosing Scope closes (Graft.cacheScoped / runScoped). An
     // eager-checkpoint variant was considered and rejected: it would
     // hide the iteration body from every plan assertion (the returned
     // plan collapses to an RDD scan).

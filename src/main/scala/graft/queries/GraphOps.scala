@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Det, Scope, Tables => T}
@@ -734,7 +734,7 @@ object GraphOps {
     // weight w), each node adopting the label with the largest
     // NEIGHBOR WEIGHT SUM ((wsum desc, label asc) total tiebreak —
     // semantics, weight-1 ≡ unweighted law, and the per-round
-    // join + two-agg scale shape in operators/LabelProp.runW's
+    // join + two-agg scale shape in operators/LabelProp's
     // scaladoc; the oracle unrolls the identical rounds with SUM(w)
     // votes).
     "q_graph_labelprop_w" -> ((s, d) => {
@@ -755,8 +755,9 @@ object GraphOps {
     // program q_graph_labelprop runs (LabelProp.run on the ≥2-repeat
     // co-purchase graph, LpRounds rounds — the oracle unrolls the
     // identical rounds) — semantics, determinism and the scale shape
-    // in modularityOn's scaladoc. Honest measured finding (the audit
-    // working as designed): this graph is BIPARTITE, and LPA's
+    // in modularityWOn's scaladoc (modularityOn runs it over unit
+    // weights). Honest measured finding (the audit working as
+    // designed): this graph is BIPARTITE, and LPA's
     // synchronous majority vote settles on (or fragments around) the
     // side partition — the anti-community — so Q is ≤ 0 at every sf
     // (−0.5 exactly at sf0.001, the theoretical minimum: a clean
@@ -778,9 +779,10 @@ object GraphOps {
     // labelprop communities (Q can look acceptable while one flagship
     // community leaks half its edges; φ names it). Same labels
     // program as q_graph_labelprop (oracle unrolls the identical
-    // rounds); semantics/determinism/scale in conductanceOn's
-    // scaladoc. On this BIPARTITE graph the labelprop side-partition
-    // communities are maximally leaky — φ ≈ 1 (every in-community
+    // rounds); semantics/determinism/scale in conductanceWOn's
+    // scaladoc (conductanceOn runs it over unit weights). On this
+    // BIPARTITE graph the labelprop side-partition communities are
+    // maximally leaky — φ ≈ 1 (every in-community
     // edge crosses sides) — the per-community confirmation of
     // modularity's global REJECT.
     "q_graph_conductance" -> ((s, d) => {
@@ -908,9 +910,10 @@ object GraphOps {
     // trio opened: labelprop PROPOSES a partition, modularity SCORES
     // it, conductance NAMES the leaky community — and this IMPROVES
     // it: RefineMoves exact-integer argmax single-node moves (each
-    // provably ΔQ > 0; semantics/determinism/scale in refineOn's
-    // scaladoc), then the modularityOn fold of the refined partition
-    // beside the starting score. Honest measured finding: from the
+    // provably ΔQ > 0; semantics/determinism/scale in refineWOn's
+    // scaladoc — refineOn runs it over unit weights), then the
+    // modularityOn fold of the refined partition beside the starting
+    // score. Honest measured finding: from the
     // labelprop side-partition start the greedy moves DO claw Q
     // upward (the bipartite REJECT has improvable slack — e.g. at
     // sf0.001 the exhausted loop lifts Q from −0.5), but single-node
@@ -1265,62 +1268,14 @@ object GraphOps {
       .limit(k)
   }
 
-  /** q_graph_modularity's engine — Newman modularity Q of ANY node
-    * partition over a symmetrized directed edge list (Newman & Girvan
-    * 2004): Q = Σ_c (e_c∕m − (d_c∕2m)²). Extracted for the planted
-    * two-clique-bridge fixture and arbitrary caller partitions.
-    *
-    * Semantics on the symmetrized list (M2 = directed edge count =
-    * 2m): per community, inc_c = directed edges with BOTH endpoints in
-    * c (= 2e_c) and dsum_c = directed edges whose src is in c (= d_c),
-    * so Q = A∕M2 − B∕M2² with A = Σ inc_c, B = Σ dsum_c². Q ∈ [−½, 1);
-    * the single-community partition scores exactly 0 — the
-    * accept/reject baseline. Nodes absent from `labels` simply drop
-    * from both sums (inner joins — callers pass a total labeling).
-    *
-    * Determinism: A, M2, B are EXACT integer sums in DECIMAL(38,0)
-    * (order-free; B caps at M2² ~ 10²⁴ even at a 10¹²-edge corpus,
-    * ·10⁶ still inside 38 digits); Q is FLOOR-quantized to micros from
-    * the exact integers — ((A·M2 − B + M2²)·10⁶) div M2² − 10⁶, the
-    * markovdrift discipline, with the +M2² shift keeping the numerator
-    * non-negative (Q ≥ −½) so Spark's truncating `div` and DuckDB's
-    * flooring `//` agree — never a float ROUND on a rational that
-    * could land on a .5 boundary. q_modularity = q_micro∕10⁶ is ONE
-    * IEEE division of exact ints (both engines correctly round it to
-    * the same bits).
-    *
-    * Scale shape: two node-keyed equi join-backs attach labels to the
-    * edge list (shuffle ∝ edges; AQE broadcasts the node-sized label
-    * table at graded scale), then ONE map-side-combining hash agg to
-    * per-community (inc, dsum) pairs (∝ communities) and ONE global
-    * fold to 4 numbers — output is a single row forever. */
+  /** q_graph_modularity's engine: [[modularityWOn]] over unit weights,
+    * so every weight sum is an edge count. Returns one row (n_comms,
+    * m_edges, q_micro, q_modularity); m_edges is the undirected edge
+    * count (the weighted engine's w_total). */
   private[graft] def modularityOn(edges: DataFrame,
-                                  labels: DataFrame): DataFrame = {
-    val dec = "decimal(38,0)"
-    // both join-backs read it
-    val lab = Scope.eager(labels.select(col("node"), col("label")))
-    val e2 = edges.select(col("src"), col("dst"))
-      .join(lab.select(col("node").as("src"), col("label").as("la")),
-        Seq("src"))
-      .join(lab.select(col("node").as("dst"), col("label").as("lb")),
-        Seq("dst"))
-    val comm = e2.groupBy(col("la"))
-      .agg(count(lit(1)).as("dsum"),
-        sum(when(col("lb") === col("la"), 1L).otherwise(0L)).as("inc"))
-    comm.agg(
-        count(lit(1)).as("n_comms"),
-        sum(col("inc").cast(dec)).as("a"),
-        sum(col("dsum").cast(dec)).as("m2"),
-        sum(col("dsum").cast(dec) * col("dsum")).as("b"))
-      .select(col("n_comms"),
-        expr("cast(m2 div 2 as bigint)").as("m_edges"),
-        when(col("m2") > 0,
-          expr("""cast(((a * m2 - b + m2 * m2) * 1000000)
-                  div (m2 * m2) as bigint)""") - lit(1000000L))
-          .as("q_micro"))
-      .withColumn("q_modularity",
-        col("q_micro").cast("double") / lit(1000000.0))
-  }
+                                  labels: DataFrame): DataFrame =
+    modularityWOn(edges.withColumn("w", lit(1L)), labels)
+      .withColumnRenamed("w_total", "m_edges")
 
   /** q_graph_richclub's degree checkpoints — they span the graded
     * graph's bimodal range (parts ~10-40, suppliers ~200-700); the
@@ -1361,59 +1316,16 @@ object GraphOps {
       .orderBy(col("k"))
   }
 
-  /** q_graph_conductance's engine — per-community conductance
-    * φ(c) = cut(c) ∕ min(vol(c), vol(V∖c)) of ANY node partition over
-    * a symmetrized directed edge list: the PER-COMMUNITY quality
-    * number beside [[modularityOn]]'s global Q (a partition can score
-    * a decent Q while one flagship community leaks half its edges —
-    * φ names the leaky one). On the symmetrized list vol(c) = directed
-    * edges with src in c and cut(c) = directed edges leaving c, so φ
-    * is the standard cut∕volume ratio with both orientations of every
-    * crossing edge counted on its own side — the textbook form.
-    *
-    * Determinism: vol, cut, node counts are exact integer sums; φ is
-    * FLOOR-quantized to micros from the exact integers ((cut·10⁶) div
-    * min(vol, m2−vol), DECIMAL(38,0) — non-negative, so truncating
-    * `div` ≡ flooring `//`; the markovdrift discipline); the readable
-    * double is ONE IEEE division; NULL-guarded when min(vol, m2−vol)
-    * = 0 (the whole-graph community has no outside). Top-k by
-    * community size with the (n_nodes desc, label asc) total
-    * tiebreak.
-    *
-    * Scale shape: the same two label join-backs + community-grain
-    * hash agg as modularityOn (shuffle ∝ edges then ∝ communities), a
-    * node-count agg ∝ nodes, one 1-row total broadcast back; top-k is
-    * a TakeOrderedAndProject over community-grain rows, never a
-    * corpus sort. */
+  /** q_graph_conductance's engine: [[conductanceWOn]] over unit
+    * weights, so volumes and cuts are directed edge counts. Returns
+    * (label, n_nodes, vol_deg, cut_deg, phi_micro, conductance) for the
+    * k largest communities; vol_deg and cut_deg are the weighted
+    * engine's vol_w and cut_w. */
   private[graft] def conductanceOn(edges: DataFrame, labels: DataFrame,
-                                   k: Int): DataFrame = {
-    val dec = "decimal(38,0)"
-    // 2 join-backs + the node count read it
-    val lab = Scope.eager(labels.select(col("node"), col("label")))
-    val e2 = edges.select(col("src"), col("dst"))
-      .join(lab.select(col("node").as("src"), col("label").as("la")),
-        Seq("src"))
-      .join(lab.select(col("node").as("dst"), col("label").as("lb")),
-        Seq("dst"))
-    val comm = e2.groupBy(col("la").as("label"))
-      .agg(count(lit(1)).as("vol_deg"),
-        sum(when(col("lb") =!= col("la"), 1L).otherwise(0L)).as("cut_deg"))
-    val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("n_nodes"))
-    val m2 = comm.agg(sum(col("vol_deg").cast(dec)).as("m2"))
-    comm.join(sizes, Seq("label"))
-      .crossJoin(broadcast(m2))
-      .withColumn("phi_micro", when(
-        expr(s"least(cast(vol_deg as $dec), m2 - vol_deg)") > 0,
-        expr(s"""cast((cast(cut_deg as $dec) * 1000000)
-                 div least(cast(vol_deg as $dec), m2 - vol_deg)
-                 as bigint)""")))
-      .select(col("label"), col("n_nodes"), col("vol_deg"),
-        col("cut_deg"), col("phi_micro"),
-        (col("phi_micro").cast("double") / lit(1000000.0))
-          .as("conductance"))
-      .orderBy(col("n_nodes").desc, col("label").asc)
-      .limit(k)
-  }
+                                   k: Int): DataFrame =
+    conductanceWOn(edges.withColumn("w", lit(1L)), labels, k)
+      .withColumnRenamed("vol_w", "vol_deg")
+      .withColumnRenamed("cut_w", "cut_deg")
 
   /** q_graph_projmod's ONE-MODE supplier projection (r18): suppliers
     * linked iff they share ≥ [[CosimMinCommon]] (hub-capped ≤
@@ -1510,22 +1422,38 @@ object GraphOps {
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
         col("e.w").as("w"))
 
-  /** q_graph_modularity_w's engine — WEIGHTED Newman modularity Q of a
-    * node partition over a symmetrized directed edge list carrying an
-    * integer weight `w` (Newman 2004's weighted generalization: every
-    * count in [[modularityOn]] becomes a weight sum). With W2 = total
-    * directed weight, A = Σ_c (in-community directed weight) and
-    * B = Σ_c (strength sum)², Q = A∕W2 − B∕W2². Weight-1 edges make
-    * this IDENTICAL to [[modularityOn]] — the law KCoreSuite pins.
+  /** q_graph_modularity_w's engine — Newman modularity Q of ANY node
+    * partition over a symmetrized directed edge list carrying an
+    * integer weight `w` (Newman & Girvan 2004; Newman 2004's weighted
+    * generalization: every count becomes a weight sum). Extracted for
+    * the planted two-clique-bridge fixture and arbitrary caller
+    * partitions; [[modularityOn]] is this engine over unit weights.
     *
-    * Determinism and scale shape are modularityOn's verbatim: exact
-    * DECIMAL(38,0) integer sums (W2 ≤ ~10¹² directed weight at a
-    * 100 TB corpus keeps B·10⁶ ≤ 10³⁰ inside 38 digits), the shifted
-    * FLOOR-micros quantization ((A·W2 − B + W2²)·10⁶) div W2² − 10⁶
-    * (truncating `div` ≡ flooring `//` on the non-negative numerator),
-    * ONE IEEE division for the readable double; two node-keyed label
-    * join-backs (shuffle ∝ edges), ONE map-side-combining hash agg ∝
-    * communities, one global fold — a single row forever. */
+    * Semantics on the symmetrized list (W2 = total directed weight =
+    * 2m): per community, inc_c = directed weight with BOTH endpoints
+    * in c (= 2e_c) and dsum_c = directed weight whose src is in c (the
+    * strength sum d_c), so Q = A∕W2 − B∕W2² with A = Σ inc_c,
+    * B = Σ dsum_c². Q ∈ [−½, 1); the single-community partition
+    * scores exactly 0 — the accept/reject baseline. Nodes absent from
+    * `labels` simply drop from both sums (inner joins — callers pass a
+    * total labeling). w_total = W2∕2.
+    *
+    * Determinism: A, W2, B are EXACT integer sums in DECIMAL(38,0)
+    * (order-free; W2 ≤ ~10¹² directed weight at a 100 TB corpus keeps
+    * B·10⁶ ≤ 10³⁰ inside 38 digits); Q is FLOOR-quantized to micros
+    * from the exact integers — ((A·W2 − B + W2²)·10⁶) div W2² − 10⁶,
+    * the markovdrift discipline, with the +W2² shift keeping the
+    * numerator non-negative (Q ≥ −½) so Spark's truncating `div` and
+    * DuckDB's flooring `//` agree — never a float ROUND on a rational
+    * that could land on a .5 boundary. q_modularity = q_micro∕10⁶ is
+    * ONE IEEE division of exact ints (both engines correctly round it
+    * to the same bits).
+    *
+    * Scale shape: two node-keyed equi join-backs attach labels to the
+    * edge list (shuffle ∝ edges; AQE broadcasts the node-sized label
+    * table at graded scale), then ONE map-side-combining hash agg to
+    * per-community (inc, dsum) pairs (∝ communities) and ONE global
+    * fold to 4 numbers — output is a single row forever. */
   private[graft] def modularityWOn(edges: DataFrame,
                                    labels: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
@@ -1554,15 +1482,32 @@ object GraphOps {
         col("q_micro").cast("double") / lit(1000000.0))
   }
 
-  /** q_graph_conductance_w's engine — WEIGHTED per-community
-    * conductance φ(c) = cutW(c) ∕ min(volW(c), W2 − volW(c)) over a
-    * symmetrized directed integer-weighted edge list: [[conductanceOn]]
-    * with every count a weight sum (volW = directed weight out of c's
-    * nodes, cutW = directed weight leaving c). Weight-1 ≡ unweighted —
-    * the law KCoreSuite pins. Same exact-integer FLOOR-micros
-    * quantization, NULL guard, (n_nodes desc, label asc) top-k
-    * tiebreak, and edges-then-communities shuffle shape as the
-    * unweighted engine. */
+  /** q_graph_conductance_w's engine — per-community conductance
+    * φ(c) = cut(c) ∕ min(vol(c), W2 − vol(c)) of ANY node partition
+    * over a symmetrized directed integer-weighted edge list: the
+    * PER-COMMUNITY quality number beside [[modularityWOn]]'s global Q
+    * (a partition can score a decent Q while one flagship community
+    * leaks half its weight — φ names the leaky one). On the
+    * symmetrized list vol_w(c) = directed weight out of c's nodes and
+    * cut_w(c) = directed weight leaving c, so φ is the standard
+    * cut∕volume ratio with both orientations of every crossing edge
+    * counted on its own side — the textbook form. [[conductanceOn]] is
+    * this engine over unit weights.
+    *
+    * Determinism: vol, cut, node counts are exact integer sums; φ is
+    * FLOOR-quantized to micros from the exact integers ((cut·10⁶) div
+    * min(vol, W2−vol), DECIMAL(38,0) — non-negative, so truncating
+    * `div` ≡ flooring `//`; the markovdrift discipline); the readable
+    * double is ONE IEEE division; NULL-guarded when min(vol, W2−vol)
+    * = 0 (the whole-graph community has no outside). Top-k by
+    * community size with the (n_nodes desc, label asc) total
+    * tiebreak.
+    *
+    * Scale shape: the same two label join-backs + community-grain
+    * hash agg as modularityWOn (shuffle ∝ edges then ∝ communities), a
+    * node-count agg ∝ nodes, one 1-row total broadcast back; top-k is
+    * a TakeOrderedAndProject over community-grain rows, never a
+    * corpus sort. */
   private[graft] def conductanceWOn(edges: DataFrame, labels: DataFrame,
                                     k: Int): DataFrame = {
     val dec = "decimal(38,0)"
@@ -1595,15 +1540,23 @@ object GraphOps {
   }
 
   /** q_graph_refine: fixed budget of greedy argmax moves (see
-    * [[refineOn]]). 6 covers the graded graphs' improvement headroom
+    * [[refineWOn]]). 6 covers the graded graphs' improvement headroom
     * from the labelprop start (measured: the move loop EXHAUSTS —
     * no positive-ΔQ move remains — before the budget at sf0.001;
     * at larger sfs each move is one edges-shuffle scoring pass, so
     * the budget bounds the cost exactly like LpRounds/BfsRounds). */
   private[graft] val RefineMoves = 6
 
-  /** q_graph_refine's engine — a deterministic, modularity-increasing
-    * greedy refinement of ANY node partition (Louvain level-1 style,
+  /** q_graph_refine's engine: [[refineWOn]] over unit weights, so
+    * every strength is a degree and every ΔQ term an edge count.
+    * Returns the refined (node, label) partition. */
+  private[graft] def refineOn(edges: DataFrame, labels0: DataFrame,
+                              moves: Int): DataFrame =
+    refineBy(edges.select(col("src"), col("dst")), lit(1L), labels0, moves)
+
+  /** q_graph_refine_w's engine — a deterministic, modularity-increasing
+    * greedy refinement of ANY node partition over a symmetrized
+    * directed integer-weighted edge list (Louvain level-1 style,
     * Blondel et al. 2008): `moves` rounds, each computing the exact
     * integer ΔQ of every candidate single-node move to a NEIGHBOR
     * community and applying the single globally-best strictly-positive
@@ -1611,16 +1564,20 @@ object GraphOps {
     * when no positive move remains — result-identical to running the
     * full budget (an unchanged partition reproduces the same empty
     * candidate set), which is what lets the oracle unroll the full
-    * budget verbatim.
+    * budget verbatim. [[refineOn]] is this engine over unit weights;
+    * the heavy-bridge fixture (KCoreSuite) pins a node the weighted
+    * argmax keeps where the unit-weight one moves it.
     *
-    * ΔQ in [[modularityOn]]'s integer convention (M2 = directed edge
-    * count, A = Σ inc, B = Σ dsum²): moving v from a to b changes
-    * ΔA = 2·(k_vb − k_va) (k_vc = directed edges v→c) and
-    * ΔB = 2·d_v·(dsum_b − dsum_a) + 2·d_v² (dsum_a INCLUDES d_v), so
-    * ΔQ·M2² = ΔA·M2 − ΔB — compared exactly in DECIMAL(38,0), never a
-    * float. Candidates are neighbor communities only (k_vb ≥ 1) — the
-    * standard Louvain move set; each applied move strictly raises Q,
-    * so Q NEVER decreases across the pass (the law KCoreSuite pins).
+    * ΔQ in [[modularityWOn]]'s integer convention (W2 = total directed
+    * weight, A = Σ_c in-community directed weight, B = Σ_c
+    * strength-sum²; strength s_v = Σ w out of v): moving v from a to
+    * b changes ΔA = 2·(w_vb − w_va) (w_vc = directed weight v→nodes
+    * of c) and ΔB = 2·s_v·(ssum_b − ssum_a) + 2·s_v² (ssum_a INCLUDES
+    * s_v), so ΔQ·W2² = ΔA·W2 − ΔB — compared exactly in
+    * DECIMAL(38,0), never a float. Candidates are neighbor communities
+    * only (w_vb > 0) — the standard Louvain move set; each applied
+    * move strictly raises Q, so Q NEVER decreases across the pass (the
+    * law KCoreSuite pins).
     *
     * Why single-move rounds and not a full sweep: a Louvain sweep is
     * a SEQUENTIAL scan over nodes by definition (each move reads the
@@ -1628,140 +1585,29 @@ object GraphOps {
     * loop over the corpus. The distributed contract is therefore a
     * bounded budget of globally-best moves, each round ONE
     * edges-shuffle scoring pass (labels join ∝ edges, per-(node,
-    * target) hash agg ∝ edges, community dsum agg ∝ communities) + a
-    * 1-row TakeOrderedAndProject argmax whose single row the driver
-    * reads (the KMeans bounded-control-flow precedent — the same O(1)
-    * probe as the r18-r21 `best.count()`, now carrying the move) and
-    * folds into the labels as a literal when-projection (r22): the
+    * target) weight-sum agg ∝ edges, community strength agg ∝
+    * communities) + a 1-row TakeOrderedAndProject argmax whose single
+    * row the driver reads (the KMeans bounded-control-flow precedent)
+    * and folds into the labels as a literal when-projection (r22): the
     * label state stays a ≤`moves`-deep stack of narrow column maps
     * over the entry checkpoint — no per-round join, persist, or
-    * checkpoint, and rounds-minus-one fewer driver actions. */
-  private[graft] def refineOn(edges: DataFrame, labels0: DataFrame,
-                              moves: Int): DataFrame = Scope {
-    require(moves >= 0, s"moves must be >= 0, got $moves")
-    val dec = "decimal(38,0)"
+    * checkpoint. */
+  private[graft] def refineWOn(edges: DataFrame, labels0: DataFrame,
+                               moves: Int): DataFrame =
+    refineBy(edges.select(col("src"), col("dst"), col("w")), col("w"),
+      labels0, moves)
+
+  /** The one body of [[refineOn]] and [[refineWOn]]: each edge of
+    * `edges` weighs `weight`. [[refineOn]]'s unit weight is a literal
+    * projected over the edge cache, never stored in it (the
+    * LabelProp.vote measurement: a cached constant column costs ~40% of
+    * a per-round engine). */
+  private def refineBy(edges: DataFrame, weight: Column, labels0: DataFrame,
+                       moves: Int): DataFrame = Scope {
     // keyed cache (r22): every round's kv scoring join keys on dst —
     // partition + sort once so rounds never re-shuffle the edge side
     // (columnar — r21)
-    val e = Scope.eager(
-      edges.select(col("src"), col("dst")), "dst")
-    // read every round; released before return
-    val deg = Scope.eager(
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("d")))
-    // m2 as a one-time driver literal (r22): the 1-row normalizer was a
-    // crossJoin(broadcast) rebuilt by EVERY round's action — same exact
-    // decimal value, rounds fewer broadcast stages (NULL on an empty
-    // graph, exactly like the old empty-sum broadcast row)
-    val m2 = Option(deg.agg(sum(col("d")).cast(dec)).head.getDecimal(0))
-      .map(lit).getOrElse(lit(null).cast(dec))
-    var labels = Scope.cut(labels0.select(col("node"), col("label")))._1
-    // Community degree sums: computed ONCE (stats-carrying cut — it
-    // broadcasts into both the dsa and dsb joins), then maintained on
-    // the driver (r22 second pass): the applied move changes exactly
-    // one node's community, so dsum shifts by the EXACT ±d_v already
-    // in hand from the argmax row — a literal when-projection over the
-    // round-1 cut, zero jobs per later round (same exact long
-    // arithmetic the re-aggregation would produce, term for term).
-    val ds0 = Scope.cut(
-      labels.join(deg, Seq("node"))
-        .groupBy(col("label")).agg(sum(col("d")).as("dsum")))._1
-    var ds = ds0
-    var r = 0
-    var exhausted = false
-    while (!exhausted && r < moves) {
-      r += 1
-      // ONE action per round (r22 second pass; was three — ds cut, kv
-      // cut, argmax take). The kv cut existed because kva and the
-      // candidate branch both read the edges-shuffle aggregate and the
-      // pushed-down label filters defeated AQE exchange reuse
-      // (ProfJobs: paired identical exchange jobs per round); computing
-      // kva INLINE as a window max over the same (src, tl) aggregate —
-      // the own-community row, identical value to the old left-joined
-      // branch, NULL→0 when v has no same-label neighbor — makes the
-      // whole scoring pass a single-consumer chain the argmax action
-      // evaluates once: cached-edge scan → broadcast labels → (src,tl)
-      // agg → src window → broadcast deg/ds joins → top-1.
-      val kv = e
-        .join(labels.select(col("node").as("dst"), col("label").as("tl")),
-          Seq("dst"))
-        .groupBy(col("src"), col("tl")).agg(count(lit(1)).as("kv"))
-      val cand = kv
-        .join(labels.withColumnRenamed("node", "src"), Seq("src"))
-        .withColumn("kva", max(when(col("tl") === col("label"),
-          col("kv"))).over(Window.partitionBy(col("src"))))
-        .filter(col("tl") =!= col("label"))
-        .select(col("src").as("node"), col("label"), col("tl").as("b"),
-          col("kv").as("kvb"), col("kva"))
-        .join(deg, Seq("node"))
-        .join(ds.select(col("label"), col("dsum").as("dsa")), Seq("label"))
-        .join(ds.select(col("label").as("b"), col("dsum").as("dsb")),
-          Seq("b"))
-        .select(col("node"), col("b"), col("label"), col("d"),
-          ((col("kvb") - coalesce(col("kva"), lit(0L))).cast(dec)
-            * lit(2)).as("da"),
-          (lit(2).cast(dec) * col("d") * (col("dsb") - col("dsa"))
-            + lit(2).cast(dec) * col("d") * col("d")).as("db"))
-      val best = cand
-        .withColumn("dq_num", col("da") * m2 - col("db"))
-        .filter(col("dq_num") > 0)
-        .orderBy(col("dq_num").desc, col("node").asc, col("b").asc)
-        .limit(1)
-        .select(col("node"), col("b").as("nl"), col("label").as("a"),
-          col("d"))
-      // bounded action (r22): the argmax is ≤ 1 row by construction, so
-      // reading it is the same O(1) driver probe as the r18-r21
-      // best.count() — and with the row IN HAND the label update is a
-      // literal when-projection instead of a broadcast join, and the
-      // per-round persist/count/unpersist churn and per-round
-      // checkpoint disappear (labels stays a ≤`moves`-deep stack of
-      // narrow column maps over the entry cut — linear, tiny lineage).
-      val hit = best.take(1)
-      if (hit.isEmpty) exhausted = true
-      else {
-        val (v, b, a, dv) = (hit(0).get(0), hit(0).get(1), hit(0).get(2),
-          hit(0).getLong(3))
-        labels = labels.select(col("node"),
-          when(col("node") === lit(v), lit(b))
-            .otherwise(col("label")).as("label"))
-        ds = ds.select(col("label"),
-          when(col("label") === lit(a), col("dsum") - lit(dv))
-            .when(col("label") === lit(b), col("dsum") + lit(dv))
-            .otherwise(col("dsum")).as("dsum"))
-      }
-    }
-    // the returned labels read only their entry cut; the dsum cut is dead
-    Scope.release(ds0)
-    Scope.release(deg)
-    labels
-  }
-
-  /** q_graph_refine_w's engine (r19) — [[refineOn]] with every count a
-    * weight sum (the modularityOn → modularityWOn generalization
-    * applied to the MOVE SCORER, closing the weighted community loop:
-    * r18 scored an unweighted proposal with weighted metrics; now the
-    * proposal ([[graft.operators.LabelProp.runW]]) and the refinement
-    * both see the weights). In modularityWOn's integer convention
-    * (W2 = total directed weight, A = Σ_c in-community directed
-    * weight, B = Σ_c strength-sum²; strength s_v = Σ w out of v),
-    * moving v from a to b changes ΔA = 2·(w_vb − w_va) (w_vc =
-    * directed weight v→nodes of c) and ΔB = 2·s_v·(ssum_b − ssum_a)
-    * + 2·s_v² (ssum_a INCLUDES s_v), so ΔQ·W2² = ΔA·W2 − ΔB —
-    * compared exactly in DECIMAL(38,0), never a float. Weight-1 edges
-    * make every sum a count, so refineWOn ≡ [[refineOn]] — the law
-    * KCoreSuite pins, alongside the heavy-bridge fixture where the
-    * weighted argmax moves a node the unweighted scorer leaves put.
-    * Same bounded-budget + result-identical-early-exhaustion contract,
-    * (ΔQ desc, node asc, target asc) total tiebreak, and per-round
-    * scale shape as refineOn: ONE edges-shuffle scoring pass (labels
-    * join ∝ edges, per-(node, target) weight-sum agg ∝ edges,
-    * community strength agg ∝ communities) + a 1-row
-    * TakeOrderedAndProject argmax + a broadcast label update; the
-    * per-round driver action reads ≤1 row. */
-  private[graft] def refineWOn(edges: DataFrame, labels0: DataFrame,
-                               moves: Int): DataFrame = Scope {
-    // keyed cache (r22): see refineOn
-    val e = Scope.eager(
-      edges.select(col("src"), col("dst"), col("w")), "dst")
+    val e = Scope.eager(edges, "dst").withColumn("w", weight)
     // read every round; dead once the core returns
     val deg = Scope.eager(
       e.groupBy(col("src").as("node")).agg(sum(col("w")).as("d")))
@@ -1779,7 +1625,7 @@ object GraphOps {
     * that split the ΔQ·W2² compare on the contracted graph is exactly
     * the original-graph ΔQ of the projected move (the contraction
     * invariant in [[contractW]]'s scaladoc), so level-2 moves carry
-    * refineOn's never-decreases law up to the original graph.
+    * refineWOn's never-decreases law up to the original graph.
     * Contract: `e` materialized (cached) by the caller, no
     * self-loops; `deg` cached by the caller and covering every node of
     * `e` (dead once this returns — the caller releases it); m2 = Σ deg
@@ -1789,12 +1635,20 @@ object GraphOps {
                                  moves: Int): DataFrame = Scope {
     require(moves >= 0, s"moves must be >= 0, got $moves")
     val dec = "decimal(38,0)"
-    // m2 as a one-time driver literal — see refineOn
+    // m2 as a one-time driver literal (r22): the 1-row normalizer was a
+    // crossJoin(broadcast) rebuilt by EVERY round's action — same exact
+    // decimal value, rounds fewer broadcast stages (NULL on an empty
+    // graph, exactly like the old empty-sum broadcast row)
     val m2 = Option(deg.agg(sum(col("d")).cast(dec)).head.getDecimal(0))
       .map(lit).getOrElse(lit(null).cast(dec))
     var labels = Scope.cut(labels0.select(col("node"), col("label")))._1
-    // strength sums cut once, then maintained as exact literal deltas —
-    // see refineOn (the move shifts ssum by the ±s_v in the argmax row)
+    // Community strength sums: computed ONCE (stats-carrying cut — it
+    // broadcasts into both the dsa and dsb joins), then maintained on
+    // the driver (r22 second pass): the applied move changes exactly
+    // one node's community, so dsum shifts by the EXACT ±s_v already
+    // in hand from the argmax row — a literal when-projection over the
+    // round-1 cut, zero jobs per later round (same exact long
+    // arithmetic the re-aggregation would produce, term for term).
     val ds0 = Scope.cut(
       labels.join(deg, Seq("node"))
         .groupBy(col("label")).agg(sum(col("d")).as("dsum")))._1
@@ -1803,8 +1657,17 @@ object GraphOps {
     var exhausted = false
     while (!exhausted && r < moves) {
       r += 1
-      // ONE action per round; kva inline as a window max over the same
-      // (src, tl) weight-sum aggregate — see refineOn
+      // ONE action per round (r22 second pass; was three — ds cut, kv
+      // cut, argmax take). The kv cut existed because kva and the
+      // candidate branch both read the edges-shuffle aggregate and the
+      // pushed-down label filters defeated AQE exchange reuse
+      // (paired identical exchange jobs per round); computing kva
+      // INLINE as a window max over the same (src, tl) aggregate — the
+      // own-community row, identical value to the old left-joined
+      // branch, NULL→0 when v has no same-label neighbor — makes the
+      // whole scoring pass a single-consumer chain the argmax action
+      // evaluates once: cached-edge scan → broadcast labels → (src,tl)
+      // agg → src window → broadcast deg/ds joins → top-1.
       val kv = e
         .join(labels.select(col("node").as("dst"), col("label").as("tl")),
           Seq("dst"))
@@ -1832,9 +1695,13 @@ object GraphOps {
         .limit(1)
         .select(col("node"), col("b").as("nl"), col("label").as("a"),
           col("d"))
-      // bounded ≤1-row action + literal when-update (r22) — see
-      // refineOn: same O(1) probe as the old count(), no per-round
-      // join/persist/checkpoint
+      // bounded action (r22): the argmax is ≤ 1 row by construction, so
+      // reading it is an O(1) driver probe — and with the row IN HAND
+      // the label update is a literal when-projection instead of a
+      // broadcast join, with no per-round persist/count/unpersist churn
+      // and no per-round checkpoint (labels stays a ≤`moves`-deep stack
+      // of narrow column maps over the entry cut — linear, tiny
+      // lineage).
       val hit = best.take(1)
       if (hit.isEmpty) exhausted = true
       else {
@@ -1849,6 +1716,7 @@ object GraphOps {
             .otherwise(col("dsum")).as("dsum"))
       }
     }
+    // the returned labels read only their entry cut; the dsum cut is dead
     Scope.release(ds0)
     labels
   }

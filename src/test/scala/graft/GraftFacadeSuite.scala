@@ -1444,4 +1444,82 @@ class GraftFacadeSuite extends SparkSuite {
     assert(out.map(_.getAs[Long]("n_dups")).sum === 1L)
     assert(out.map(_.getAs[Long]("bytes_dedupable")).sum === 3L)
   }
+
+  test("graph facades symmetrize in one place: the self-loop contract of every facade, table-driven") {
+    // two triangles {1,2,3} and {5,6,7} joined through node 4, a
+    // self-loop on 4 and an isolated self-loop node 0. kCore,
+    // coreNumbers, bfsHops and kSeedBfs (with harmonicCentrality and
+    // eccentricity over it) KEEP self-loops — 4's peeled degree counts
+    // its loop, node 0 is the min-id BFS source and a live seed; every
+    // other facade DROPS them before symmetrizing.
+    val g = Seq((1L, 2L, 1L), (2L, 3L, 2L), (1L, 3L, 1L), (3L, 4L, 4L),
+      (4L, 5L, 1L), (5L, 6L, 1L), (6L, 7L, 3L), (5L, 7L, 1L),
+      (4L, 4L, 5L), (0L, 0L, 2L)).toDF("u", "v", "wt")
+    val lab = Seq((0L, 30L), (1L, 10L), (2L, 10L), (3L, 20L), (4L, 20L),
+      (5L, 20L), (6L, 20L), (7L, 20L)).toDF("id", "community")
+    val seeds = Seq(0L, 1L, 4L)
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame,
+        Seq[String])] = Seq(
+      ("kCore", () => Graft.kCore(g, "u", "v", 2, 4),
+        Seq("1|2", "2|2", "3|3", "4|3", "5|3", "6|2", "7|2")),
+      ("coreNumbers", () => Graft.coreNumbers(g, "u", "v"),
+        Seq("0|1", "1|2", "2|2", "3|2", "4|2", "5|2", "6|2", "7|2")),
+      ("bfsHops", () => Graft.bfsHops(g, "u", "v"),
+        Seq("0|1")),
+      ("kSeedBfs", () => Graft.kSeedBfs(g, "u", "v", seeds),
+        Seq("0|0|1", "1|0|1", "1|1|2", "1|2|1", "1|3|1", "1|4|2",
+          "4|0|1", "4|1|2", "4|2|4")),
+      ("harmonicCentrality",
+        () => Graft.harmonicCentrality(g, "u", "v", seeds),
+        Seq("0|1|0|0.0", "1|7|3333333|3.333333", "4|7|4000000|4.0")),
+      ("eccentricity", () => Graft.eccentricity(g, "u", "v", seeds),
+        Seq("0|1|0", "1|7|4", "4|7|2")),
+      ("labelPropagate", () => Graft.labelPropagate(g, "u", "v", 2),
+        Seq("1|1", "2|1", "3|1", "4|1", "5|5", "6|4", "7|4")),
+      ("labelPropagateWeighted",
+        () => Graft.labelPropagateWeighted(g, "u", "v", "wt", 2),
+        Seq("1|3", "2|4", "3|3", "4|4", "5|3", "6|6", "7|7")),
+      ("modularity",
+        () => Graft.modularity(g, "u", "v", lab, "id", "community"),
+        Seq("2|8|125000|0.125")),
+      ("modularityWeighted", () => Graft.modularityWeighted(
+        g, "u", "v", "wt", lab, "id", "community"),
+        Seq("2|14|79081|0.079081")),
+      ("conductance",
+        () => Graft.conductance(g, "u", "v", lab, "id", "community"),
+        Seq("10|2|4|2|500000|0.5", "20|5|12|2|500000|0.5")),
+      ("conductanceWeighted", () => Graft.conductanceWeighted(
+        g, "u", "v", "wt", lab, "id", "community"),
+        Seq("10|2|5|3|600000|0.6", "20|5|23|3|600000|0.6")),
+      ("refineCommunities", () => Graft.refineCommunities(
+        g, "u", "v", lab, "id", "community"),
+        Seq("0|30", "1|10", "2|10", "3|10", "4|20", "5|20", "6|20", "7|20")),
+      ("refineCommunitiesWeighted", () => Graft.refineCommunitiesWeighted(
+        g, "u", "v", "wt", lab, "id", "community"),
+        Seq("0|30", "1|10", "2|10", "3|10", "4|10", "5|20", "6|20", "7|20")),
+      ("refineCommunitiesTwoLevel", () => Graft.refineCommunitiesTwoLevel(
+        g, "u", "v", "wt", lab, "id", "community"),
+        Seq("1|10", "2|10", "3|10", "4|10", "5|20", "6|20", "7|20")),
+      ("sCore", () => Graft.sCore(g, "u", "v", "wt", 3L),
+        Seq("3|4", "4|5", "5|3", "6|4", "7|4")),
+      ("weightedCloseness",
+        () => Graft.weightedCloseness(g, "u", "v", "wt", seeds),
+        Seq("1|7|12000000|500000|0.5", "4|7|7250000|827586|0.827586")),
+      ("betweennessApprox",
+        () => Graft.betweennessApprox(g, "u", "v", seeds),
+        Seq("3|6000000|21.0", "4|3000000|10.5", "5|4000000|14.0")),
+      ("betweennessWeighted",
+        () => Graft.betweennessWeighted(g, "u", "v", "wt", seeds),
+        Seq("3|6000000|21.0", "4|3000000|10.5", "5|4000000|14.0")),
+      ("betweennessStability",
+        () => Graft.betweennessStability(g, "u", "v", Seq(1, 2, 3)),
+        Seq("1|2|2|1000000|1.0", "2|3|3|1000000|1.0", "3|3|3|1000000|1.0")))
+    val wrong = cases.flatMap { case (name, run, want) =>
+      val got = Graft.cacheScoped(spark) {
+        run().collect().map(_.toSeq.mkString("|")).toSeq.sorted
+      }
+      if (got == want.sorted) None else Some(s"$name: $got (want $want)")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }
