@@ -23,10 +23,14 @@ import scala.collection.mutable
   * the warm wall.
   *
   * Record fields: `label`, `wall_ms` (build + action; the scope's
-  * release is outside it), and `jobs` in start order, each with `id`,
-  * `ms`, `gap_ms` (since the previous job ended; 0 for the first),
-  * `desc` (`spark.job.description`, absent when unset) and `stages`
-  * (every completed stage, by id: `id`, `name`, `ms`, `tasks`, `run_ms`,
+  * release is outside it), `build_ms` (the part of `wall_ms` until the
+  * build returned, before the action: for a query, the time to its
+  * DataFrame, which includes any job the build runs; 0 for a body given
+  * as one block, which [[run]] counts as all action) and `jobs` in
+  * start order, each with `id`, `ms`, `gap_ms` (since the previous job
+  * ended; 0 for the first), `desc` (`spark.job.description`, absent
+  * when unset) and `stages` (every completed stage, by id: `id`,
+  * `name`, `ms`, `tasks`, `run_ms`,
   * `gc_ms`, `shuffle_read_bytes`, `shuffle_write_bytes`, `input_bytes`,
   * `fetch_wait_ms`, `spill_bytes`). A job's `ms` and `gap_ms` come from
   * listener-event times; with jobs run one after another, `wall_ms` −
@@ -56,7 +60,8 @@ object Trace {
                          fetchWaitMs: Long, spillBytes: Long)
   final case class Job(id: Int, ms: Long, gapMs: Long, desc: Option[String],
                        stages: Seq[Stage])
-  final case class Record(label: String, wallMs: Long, jobs: Seq[Job]) {
+  final case class Record(label: String, wallMs: Long, jobs: Seq[Job],
+                          buildMs: Long = 0L) {
     /** One JSON line: this record's fields, snake_cased, then `extra`. */
     def line(extra: JField*): String = compact(
       Extraction.decompose(this)(DefaultFormats).snakizeKeys merge
@@ -109,27 +114,35 @@ object Trace {
     }
   }
 
-  /** Run `body` inside [[Graft.cacheScoped]] on the active session and
-    * return its value with the record of every job it started. The
-    * clock covers the whole body, so jobs run while a query is built
-    * (an engine's `Scope.eager`/`Scope.cut`) fall inside `wall_ms`.
-    * The listener bus is drained before the recorder attaches (no
-    * earlier job leaks in) and after the body (every job and stage of
-    * the body is in the record when this returns). */
-  def run[A](label: String)(body: => A): (A, Record) = {
+  /** [[run]] of a body given as one block: all of it is action, so
+    * the record's `build_ms` is 0. */
+  def run[A](label: String)(body: => A): (A, Record) = run(label, ())(_ => body)
+
+  /** Run `build`, then `act` on what it built, inside
+    * [[Graft.cacheScoped]] on the active session, and return the
+    * action's value with the record of every job either started. The
+    * clock covers both, so jobs run while a query is built (an engine's
+    * `Scope.eager`/`Scope.cut`, a schema inference) fall inside
+    * `wall_ms`; `build_ms` ends when `build` returns. The listener bus
+    * is drained before the recorder attaches (no earlier job leaks in)
+    * and after the action (every job and stage of the body is in the
+    * record when this returns). */
+  def run[B, A](label: String, build: => B)(act: B => A): (A, Record) = {
     val spark = SparkSession.active
     val sc = spark.sparkContext
     val recorder = new Recorder
     BusBridge.drain(sc)
     sc.addSparkListener(recorder)
     try {
-      val (out, ns) = Graft.cacheScoped(spark) {
+      val (out, buildNs, ns) = Graft.cacheScoped(spark) {
         val t0 = System.nanoTime()
-        val out = body
-        (out, System.nanoTime() - t0)
+        val built = build
+        val t1 = System.nanoTime()
+        val out = act(built)
+        (out, t1 - t0, System.nanoTime() - t0)
       }
       BusBridge.drain(sc)
-      (out, Record(label, ns / 1000000, recorder.jobs))
+      (out, Record(label, ns / 1000000, recorder.jobs, buildNs / 1000000))
     } finally sc.removeSparkListener(recorder)
   }
 
@@ -142,7 +155,7 @@ object Trace {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     for (pass <- 1 to WarmPasses + TimedPasses; name <- names) {
-      val (_, rec) = run(name)(SparkEntry.queries(name)(spark, sfDir).count())
+      val (_, rec) = run(name, SparkEntry.queries(name)(spark, sfDir))(_.count())
       val plan = if (pass > 1) Nil else List[JField]("plan" -> JString(
         Graft.runScoped(name, spark, sfDir)(
           _.queryExecution.explainString(FormattedMode))))
