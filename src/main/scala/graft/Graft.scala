@@ -8,7 +8,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * has its own column names, so nothing here assumes the test tables.
   * Each method delegates to the same engine code the oracle-graded
   * queries run (one implementation, two entry styles), and the scale
-  * notes on those implementations apply unchanged.
+  * notes on those implementations apply unchanged. These graded
+  * queries call a facade directly, so the oracle grades the code
+  * embedders run: q_join_asof, q_join_asof_near, q_join_asof_tol,
+  * q_join_asof_fwd ([[asofJoin]]), q_join_interval ([[intervalJoin]]),
+  * q_win_timerange ([[trailingAgg]]), q_llm_sample
+  * ([[stratifiedSample]]) and q_llm_cc ([[clusterPairs]]). Others share
+  * the facade's body in `graft.queries`: q_llm_knn ([[knnExact]] =
+  * `LlmOps.knnQueryOn`), q_graph_ecc ([[eccentricity]] =
+  * `GraphOps.eccFold`), q_graph_harmonic ([[harmonicCentrality]] =
+  * `GraphOps.harmonicFold`), q_graph_wcloseness ([[weightedCloseness]]
+  * = `GraphOps.costEdges` + `wcloseFold`) and q_graph_betweenness_w
+  * ([[betweennessWeighted]]'s clamped `GraphOps.costEdges`).
   *
   * Where an operator family is already DataFrame-parameterized it is
   * not wrapped again — use it directly:
@@ -70,8 +81,9 @@ object Graft {
   /** Token-set Jaccard near-duplicate pairs over any corpus — the
     * prefix-filtered AllPairs plan of the graded `q_llm_neardup`
     * (Bayardo et al. 2007: DF-ascending prefixes + exact integer size
-    * bound, then a native-codegen Jaccard verify on survivors only; hot
-    * tokens fall out of every prefix, nothing broadcasts).
+    * bound, then an exact integer Jaccard verify — `size(array_intersect)`
+    * over the two distinct token sets — on survivors only; hot tokens
+    * fall out of every prefix, nothing broadcasts).
     *
     * @param df        corpus.
     * @param idCol     unique doc id.
@@ -226,6 +238,7 @@ object Graft {
   /** Near-dup pair graph → clusters: representative (min id), cluster
     * size, keeper flag per node — hash-min label propagation
     * ([[graft.operators.ConnectedComponents]]; rounds ∝ diameter).
+    * Graded through q_llm_cc.
     *
     * @param pairs any 2-column edge list (first = a, second = b). */
   def clusterPairs(pairs: DataFrame): DataFrame = {
@@ -454,6 +467,18 @@ object Graft {
       w.map(_ => col("w")): _*)).distinct()
   }
 
+  /** The seed facades' `(seed, node)` frame: distinct `seedIds`, minus
+    * ids absent from `g`'s `src` column (a phantom seed would otherwise
+    * report itself at distance 0) — empty graph ⟹ no seeds, the
+    * Bfs.hops empty-edge convention. */
+  private def seedsIn(g: DataFrame, seedIds: Seq[Long]): DataFrame = {
+    val spark = g.sparkSession
+    import spark.implicits._
+    seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
+      .join(g.select(col("src").as("node")).distinct(),
+        Seq("node"), "left_semi")
+  }
+
   /** Fixed-round k-core peel over any undirected edge list (graded
     * q_graph_kcore's engine, [[graft.operators.KCore]]): nodes
     * surviving `rounds` cascaded degree-< k peels, with their degree in
@@ -510,10 +535,11 @@ object Graft {
       .select(col("node").as(nodeCol), col("label").as(labelCol))
 
   /** Trailing event-time rolling aggregate over any (key, ts, value)
-    * rows (graded q_win_timerange's engine generalized, r13): per row,
-    * the count and decimal value sum of the same key's rows in the
-    * trailing `windowUs` microseconds, current row inclusive; RANGE
-    * peers (same-µs rows) share one frame. One key-hash exchange;
+    * rows (graded through q_win_timerange, r13): per row, the count and
+    * decimal value sum of the same key's rows in the trailing
+    * `windowUs` microseconds, current row inclusive; RANGE peers
+    * (same-µs rows) share one frame. One key-hash exchange on the
+    * caller's own key column (renamed to `key` only in the output);
     * WindowExec's sliding frame is O(rows) two-pointer state per
     * partition. Null-ts rows dropped (the r13 as-of discipline).
     * Rows sharing (key, us) are indistinguishable in the default
@@ -526,22 +552,21 @@ object Graft {
                   valueCol: String, windowUs: Long,
                   idCol: Option[String] = None): DataFrame = {
     require(windowUs >= 0, s"windowUs < 0: $windowUs")
-    val fr = s"PARTITION BY __k ORDER BY __us ASC " +
-      s"RANGE BETWEEN $windowUs PRECEDING AND CURRENT ROW"
-    val id = idCol.toSeq
+    val us = unix_micros(col(tsCol))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(keyCol)).orderBy(us.asc)
+      .rangeBetween(-windowUs, 0L)
     df.filter(col(tsCol).isNotNull)
-      .select(Seq(col(keyCol).as("__k"), unix_micros(col(tsCol)).as("__us"),
-        col(valueCol).cast("double").as("__v")) ++ id.map(col): _*)
-      .select(Seq(col("__k").as("key")) ++ id.map(col) ++ Seq(
-        col("__us").as("us"),
-        expr(s"count(1) OVER ($fr)").as("n_win"),
-        expr(s"CAST(ROUND(SUM(CAST(__v AS DECIMAL(18,4))) OVER ($fr), 4) " +
-          "AS DOUBLE)").as("val_win")): _*)
+      .select(Seq(col(keyCol).as("key")) ++ idCol.toSeq.map(col) ++ Seq(
+        us.as("us"),
+        count(lit(1)).over(w).as("n_win"),
+        round(sum(col(valueCol).cast("double").cast("decimal(18,4)"))
+          .over(w), 4).cast("double").as("val_win")): _*)
   }
 
-  /** Interval join over ARBITRARY left/right tables (r13) — the graded
-    * q_join_interval shape generalized (the stream-stream interval join
-    * batch analog): every (left, right) pair within the same key whose
+  /** Interval join over ARBITRARY left/right tables (r13; graded
+    * through q_join_interval — the stream-stream interval join batch
+    * analog): every (left, right) pair within the same key whose
     * time delta r_ts − l_ts lies in [lowerUs, upperUs] (both bounds
     * inclusive; negative lower bound = right may precede left). The
     * plan is the correct one at any scale: ONE key equi-join (shuffle
@@ -568,10 +593,10 @@ object Graft {
         (col("r_us") - col("l_us")).as("delta_us"))
   }
 
-  /** As-of join over ARBITRARY left/right tables (r13) — the graded
-    * q_join_asof / q_join_asof_near single-scan engine generalized:
-    * for each left row, the matching right row within the same key by
-    * event-time proximity, WITHOUT the join+rank expansion (10⁵ rights
+  /** As-of join over ARBITRARY left/right tables (r13) — the
+    * single-scan engine graded through `q_join_asof`, `_near`, `_tol`,
+    * `_fwd`: for each left row, the matching right row within the same
+    * key by event-time proximity, WITHOUT the join+rank expansion (10⁵ rights
     * × 10⁵ lefts per key costs one 2·10⁵-row sorted pass, not 10¹⁰
     * candidate rows — the windowed as-of is the 100-TB shape).
     *
@@ -1041,9 +1066,12 @@ object Graft {
 
   /** Deterministic stratified sample over arbitrary strata: exactly k
     * rows per stratum by md5-hash rank (never `rand()` — reproducible
-    * across runs, engines, and layouts; the graded q_llm_sample
-    * contract). Plans as WindowGroupLimit: O(k) state per stratum, no
-    * full per-stratum sort.
+    * across runs, engines, and layouts; graded through q_llm_sample).
+    * The rank filter plans as WindowGroupLimit (pinned in
+    * PlanAssertionsSuite): each stratum keeps a k-row heap during the
+    * shuffle — no stratum is ever fully sorted, so a billion-row
+    * stratum costs O(n) scan + O(k) state, and the output is
+    * strata-bounded regardless of corpus size.
     *
     * @return the sampled rows: idCol, strataCols, hash key, rank. */
   def stratifiedSample(df: DataFrame, idCol: String,
@@ -1222,14 +1250,6 @@ object Graft {
         col(vecCol).cast("array<double>").as("e")),
       dim, m, k)
 
-  private def vecBase(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.DotF64.register(df.sparkSession)
-    df.select(col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<double>").as("e"))
-      .withColumn("nrm",
-        sqrt(call_function("graft_dot", col("e"), col("e"))))
-  }
-
   /** Multi-probe sign-LSH approximate nearest neighbors over any
     * embedding table (the graded q_llm_ann plan: sign-bit bucket
     * equi-join + all Hamming-`radius` probe flips — the scale path when
@@ -1239,7 +1259,8 @@ object Graft {
   def annCandidates(df: DataFrame, idCol: String, vecCol: String,
                     probeIds: Seq[Long], bits: Int, radius: Int,
                     k: Int): DataFrame =
-    graft.queries.LlmOps.annQueryOn(vecBase(df, idCol, vecCol),
+    graft.queries.LlmOps.annQueryOn(
+      graft.queries.LlmOps.vecBase(df, idCol, vecCol),
       bits, radius, k, _.isin(probeIds: _*))
 
   /** IVF-flat approximate nearest neighbors over any embedding table
@@ -1251,38 +1272,25 @@ object Graft {
   def ivfSearch(df: DataFrame, idCol: String, vecCol: String,
                 probeIds: Seq[Long], nprobe: Int, k: Int,
                 centroids: Option[DataFrame] = None): DataFrame =
-    graft.queries.LlmOps.ivfQueryOn(vecBase(df, idCol, vecCol),
+    graft.queries.LlmOps.ivfQueryOn(
+      graft.queries.LlmOps.vecBase(df, idCol, vecCol),
       nprobe, k, _.isin(probeIds: _*), centroids)
 
-  /** Exact cosine top-k over any embedding table (the graded q_llm_knn
-    * plan): the probe rows broadcast, the corpus is scanned ONCE and
-    * never shuffled — per-probe work is one native-codegen dot per
-    * corpus row. Ties break to the lower id; self-matches excluded.
+  /** Exact cosine top-k over any embedding table (graded through
+    * q_llm_knn — [[graft.queries.LlmOps.knnQueryOn]]): the probe rows
+    * broadcast, the corpus is scanned ONCE and never shuffled —
+    * per-probe work is one native-codegen dot per corpus row. Ties
+    * break to the lower id; self-matches excluded.
     *
     * @param df       (idCol, vecCol) rows; vecCol any numeric array.
     * @param probeIds ids to search for (must be small — they broadcast).
-    * @return (probe_id, rk, neighbor_id, sim 6dp). */
+    * @return (probe_id, rk, neighbor_id, sim 6dp), ordered by
+    *         (probe_id, rk). */
   def knnExact(df: DataFrame, idCol: String, vecCol: String,
-               probeIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.DotF64.register(df.sparkSession)
-    def d(a: Column, b: Column) = call_function("graft_dot", a, b)
-    val base = df.select(col(idCol).cast("long").as("vec_id"),
-        col(vecCol).cast("array<double>").as("e"))
-      .withColumn("nrm", sqrt(d(col("e"), col("e"))))
-    val probes = base.filter(col("vec_id").isin(probeIds: _*))
-      .select(col("vec_id").as("probe_id"), col("e").as("pe"),
-        col("nrm").as("pn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    base.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(d(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"),
-        col("sim"))
-  }
+               probeIds: Seq[Long], k: Int): DataFrame =
+    graft.queries.LlmOps.knnQueryOn(
+      graft.queries.LlmOps.vecBase(df, idCol, vecCol), k,
+      _.isin(probeIds: _*))
 
   /** Canonicalize an arbitrary undirected edge list: self-loops drop,
     * (a, b)/(b, a) duplicates collapse, output is distinct (a < b). */
@@ -1477,16 +1485,8 @@ object Graft {
     * fixed-unroll contract. Returns (seed, dist, n_nodes). */
   def kSeedBfs(edges: DataFrame, srcCol: String, dstCol: String,
                seedIds: Seq[Long], rounds: Int = 6): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     val g = symmetrize(edges, srcCol, dstCol, keepLoops = true)
-    // seed ids absent from the graph are dropped (a phantom seed would
-    // otherwise report itself at distance 0) — empty graph ⟹ empty
-    // result, the Bfs.hops empty-edge convention
-    val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
-      .join(g.select(col("src").as("node")).distinct(),
-        Seq("node"), "left_semi")
-    graft.operators.Bfs.hopsFrom(g, seeds, rounds)
+    graft.operators.Bfs.hopsFrom(g, seedsIn(g, seedIds), rounds)
   }
 
   /** Truncated harmonic centrality per seed (graded q_graph_harmonic's
@@ -1513,11 +1513,8 @@ object Graft {
     * (seed, n_reached, ecc). */
   def eccentricity(edges: DataFrame, srcCol: String, dstCol: String,
                    seedIds: Seq[Long], rounds: Int = 6): DataFrame =
-    kSeedBfs(edges, srcCol, dstCol, seedIds, rounds)
-      .groupBy(col("seed"))
-      .agg(sum(col("n_nodes")).as("n_reached"),
-        max(col("dist")).as("ecc"))
-      .orderBy(col("seed"))
+    graft.queries.GraphOps.eccFold(
+      kSeedBfs(edges, srcCol, dstCol, seedIds, rounds))
 
   /** Weighted closeness over bounded Bellman-Ford affinity distances
     * (graded q_graph_wcloseness's engine): edge cost = 10⁶ div w
@@ -1533,23 +1530,10 @@ object Graft {
   def weightedCloseness(edges: DataFrame, srcCol: String, dstCol: String,
                         wCol: String, seedIds: Seq[Long],
                         rounds: Int = 6): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = symmetrize(edges, srcCol, dstCol, Some(wCol))
-      .select(col("src"), col("dst"),
-        expr("cast(1000000 div w as bigint)").as("cost"))
-    val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
-      .join(g.select(col("src").as("node")).distinct(),
-        Seq("node"), "left_semi")
-    graft.operators.Bfs.costFrom(g, seeds, rounds)
-      .groupBy(col("seed"))
-      .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("sum_cost"))
-      .withColumn("wclose_micro", when(col("sum_cost") > 0,
-        expr("""cast((cast(n_reached - 1 as decimal(38,0))
-                * 1000000000000) div sum_cost as bigint)""")))
-      .withColumn("wcloseness",
-        col("wclose_micro").cast("double") / lit(1000000.0))
-      .orderBy(col("seed"))
+    val g = graft.queries.GraphOps.costEdges(
+      symmetrize(edges, srcCol, dstCol, Some(wCol)))
+    graft.queries.GraphOps.wcloseFold(
+      graft.operators.Bfs.costFrom(g, seedsIn(g, seedIds), rounds))
   }
 
   /** Pivot-sampled approximate betweenness (graded
@@ -1565,13 +1549,9 @@ object Graft {
   def betweennessApprox(edges: DataFrame, srcCol: String, dstCol: String,
                         seedIds: Seq[Long], rounds: Int = 6,
                         k: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     val g = symmetrize(edges, srcCol, dstCol)
-    val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
-      .join(g.select(col("src").as("node")).distinct(),
-        Seq("node"), "left_semi")
-    graft.operators.Betweenness.pivotBetweenness(g, seeds, rounds, k)
+    graft.operators.Betweenness.pivotBetweenness(g, seedsIn(g, seedIds),
+      rounds, k)
   }
 
   /** Pivot-sampled WEIGHTED betweenness (graded
@@ -1591,15 +1571,10 @@ object Graft {
                           dstCol: String, wCol: String,
                           seedIds: Seq[Long], rounds: Int = 6,
                           k: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = symmetrize(edges, srcCol, dstCol, Some(wCol))
-      .select(col("src"), col("dst"),
-        expr("greatest(cast(1000000 div w as bigint), 1L)").as("cost"))
-    val seeds = seedIds.distinct.map(i => (i, i)).toDF("seed", "node")
-      .join(g.select(col("src").as("node")).distinct(),
-        Seq("node"), "left_semi")
-    graft.operators.BetweennessW.pivotBetweennessW(g, seeds, rounds, k)
+    val g = graft.queries.GraphOps.costEdges(
+      symmetrize(edges, srcCol, dstCol, Some(wCol)), clamped = true)
+    graft.operators.BetweennessW.pivotBetweennessW(g, seedsIn(g, seedIds),
+      rounds, k)
   }
 
   /** Betweenness pivot-count stability audit over any undirected edge

@@ -1141,12 +1141,6 @@ object ScaleRehearsal {
         graft.operators.Percentiles.cont(df, Seq("st"), "price",
           Seq(0.5 -> "p50", 0.9 -> "p90")).count()
       }
-      if (want("pct_select")) time("pct_select", n) {
-        // the r9 distributed-selection variant built FROM this
-        // harness's finding — parallelism groups × partitions
-        graft.operators.Percentiles.contSelect(df, Seq("st"), "price",
-          Seq(0.5 -> "p50", 0.9 -> "p90")).count()
-      }
       if (want("pct_native")) time("pct_native", n) {
         // the refused plan, for contrast — buffers n/3 doubles per
         // group in a no-spill ObjectHashAggregate buffer

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Scope
-
 /** Scale-safe EXACT percentiles over arbitrary (group, value) columns —
   * the engine behind the graded `q_agg_pctile` / `q_agg_pctile_disc` and
   * [[graft.Graft.percentiles]] / [[graft.Graft.percentilesDisc]].
@@ -30,12 +28,12 @@ import graft.Scope
   * serialization dominates (8.3 s vs the native buffer's 0.8 s at 60M
   * rows / 3 groups — native stays faster exactly until a group's
   * distinct buffer exceeds a task heap, then fails instead of
-  * spilling). [[contSelect]] implements the textbook upgrade for that
-  * regime — range-partitioned distributed selection, parallelism
-  * groups × partitions — with a property law pinning it result-
-  * identical to [[cont]]. Graded plans keep [[cont]]: their group
-  * counts make the window trivially parallel, and the correctness
-  * gate's requirement is the spill-not-fail property both forms have.
+  * spilling). Graded plans' group counts make the window trivially
+  * parallel. A range-partitioned distributed-selection variant
+  * (parallelism groups × partitions) was measured slower than [[cont]]
+  * at every size this harness reaches (2.5 vs 1.1–1.3 s at 6M rows,
+  * 14.6 vs 8.3–8.8 s at 60M — BASELINE.md r9) and was removed; [[cont]]
+  * is the one continuous engine.
   *
   * All working columns are `__pct_`-prefixed so a caller's own columns
   * (including ones literally named `n`, `cnt`, `v`, …) are never
@@ -153,164 +151,6 @@ object Percentiles {
     withRanks.groupBy(gc: _*)
       .agg(aggs.head, aggs.tail: _*)
       .select((gc ++ outs) :+ col("n"): _*)
-  }
-
-  /** Continuous percentiles by RANGE-PARTITIONED DISTRIBUTED SELECTION —
-    * exact same results as [[cont]] (PropertySuite pins the equivalence
-    * law), built for the regime the scale rehearsal measured [[cont]]
-    * losing: FEW groups × tens of millions of distinct values, where
-    * the cumulative window's one-task-per-group sort serializes.
-    *
-    * Plan: distinct-value pre-agg (as [[cont]]) → range-repartition by
-    * value, so partition id IS the value order → per-(group, partition)
-    * subtotals (≤ groups×partitions rows) collect to the driver, which
-    * prefix-sums them and computes, per requested fraction, WHICH
-    * partition holds the floor/ceil neighbour and its residual rank —
-    * a tiny broadcast target table → the cumulative window then runs
-    * per (group, PARTITION): parallelism groups×partitions, each task
-    * sorting only its value range. Still spillable, still exact; the
-    * boundaries' placement cannot affect the answer (any split yields
-    * the same order statistics), so the result stays deterministic even
-    * though range sampling is not.
-    *
-    * Driver memory holds the groups×partitions subtotal table — that is
-    * the few-groups trade, guarded by a require. For many groups use
-    * [[cont]], whose window is already parallel there.
-    *
-    * MEASURED HONESTLY (ScaleRehearsal `pct_select`, BASELINE.md r9):
-    * at every size this box can test (≤60M rows, ≤~45M distinct) this
-    * variant is SLOWER than [[cont]] (14.6 s vs 8.8 s at 60M) — the
-    * extra subtotal pass over the persisted pre-agg costs more than the
-    * sort parallelism recovers while cont's few spilling tasks are
-    * still fast. The crossover regime is per-group sorts far beyond a
-    * task's memory (billions of distinct values on a real cluster),
-    * where cont's G-task sort wall-clock grows ~D·log D on G cores and
-    * this form's grows on G×P cores for one extra ~D pass. Kept as the
-    * documented escape hatch for that regime, with the law pinning it
-    * result-identical; it is in NO graded path.
-    *
-    * @param partitions value-range splits (default
-    *                   spark.sql.shuffle.partitions). */
-  def contSelect(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                 ps: Seq[(Double, String)],
-                 weightCol: Option[String] = None,
-                 partitions: Int = 0): DataFrame = Scope {
-    require(ps.nonEmpty && ps.forall { case (p, _) => p >= 0 && p <= 1 },
-      s"percentile fractions must be in [0,1]: ${ps.map(_._1)}")
-    checkNames(groupCols, ps.map(_._2))
-    val spark = df.sparkSession
-    val P = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val gc = groupCols.map(col)
-    val PID = "__pct_pid"
-    val w = weightCol.map(c => coalesce(col(c).cast("long"), lit(0L)))
-      .getOrElse(lit(1L))
-    // Persisted for the two consumers (subtotal collect + final locate)
-    // — a perf choice, not correctness: RangePartitioner's sampling
-    // seed is deterministic, so a recomputed partition reproduces the
-    // same boundaries (and ANY boundary split yields the same order
-    // statistics regardless). Released with the enclosing scope.
-    val vc = Scope.cache(df.filter(col(valueCol).isNotNull)
-      .groupBy((gc :+ col(valueCol).as(V)): _*)
-      .agg(sum(w).as(CNT))
-      .filter(col(CNT) > 0)
-      .repartitionByRange(P, col(V))
-      .withColumn(PID, spark_partition_id()))
-    // ≤ groups×partitions rows — the driver-side piece of selection
-      val subs = vc.groupBy((gc :+ col(PID)): _*).agg(sum(CNT).as("c"))
-        .collect()
-      require(subs.length <= 1000000,
-        s"contSelect collected ${subs.length} (group, partition) " +
-          "subtotals — this variant targets FEW groups; use cont for " +
-          "many groups")
-      if (subs.isEmpty) {
-        // empty input: same empty-result contract as cont. Unpersist
-        // eagerly — there is no second consumer, and the returned
-        // (empty) frame recomputes its lineage trivially; leaving the
-        // cached empty RDD behind would accumulate across calls in a
-        // long-lived session (r10 advice).
-        Scope.release(vc)
-        vc.groupBy(gc: _*)
-          .agg(max(col(CNT)).cast("long").as("n"))
-          .select((gc ++ ps.map { case (_, name) =>
-            lit(null).cast("double").as(name) }) :+ col("n"): _*)
-      } else {
-        val keyOf: org.apache.spark.sql.Row => Seq[Any] =
-          r => groupCols.indices.map(r.get)
-        // per group: partition subtotals in value order (pid IS the order)
-        val byGroup = subs.groupBy(keyOf).map { case (k, rows) =>
-          k -> rows.map(r => (r.getAs[Int](PID),
-            r.getAs[Long]("c"))).sortBy(_._1)
-        }
-        // target rows: (groupKey..., pid, residual 1-based rank, tag, r)
-        // one per requested fraction per floor/ceil neighbour
-        val targets = byGroup.toSeq.flatMap { case (k, parts) =>
-          val n = parts.map(_._2).sum
-          ps.zipWithIndex.flatMap { case ((p, _), i) =>
-            val r = p * (n - 1).toDouble
-            Seq(("lo", math.floor(r).toLong), ("hi", math.ceil(r).toLong))
-              .map { case (side, j) =>
-                val rank = j + 1 // 1-based global rank of 0-based index j
-                var acc = 0L
-                var hit: Option[(Int, Long)] = None
-                parts.foreach { case (pid, c) =>
-                  if (hit.isEmpty && rank <= acc + c) hit = Some((pid, acc))
-                  acc += c
-                }
-                val (pid, before) = hit.get
-                (k, pid, rank - before, s"$side$i", r, n)
-              }
-          }
-        }
-        val tRows = targets.map { case (k, pid, rank, tag, r, n) =>
-          org.apache.spark.sql.Row.fromSeq(
-            k ++ Seq(pid, rank, tag, r, n))
-        }
-        val gFields = groupCols.map(c =>
-          org.apache.spark.sql.types.StructField(
-            s"__pct_g_$c", df.schema(c).dataType))
-        val tSchema = org.apache.spark.sql.types.StructType(gFields ++ Seq(
-          org.apache.spark.sql.types.StructField("__pct_tpid",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("__pct_trank",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__pct_tag",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__pct_r",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("__pct_tn",
-            org.apache.spark.sql.types.LongType)))
-        val tDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(tRows, 1), tSchema)
-        // per-(group, partition) cumulative — parallelism groups × P
-        val wRun = Window.partitionBy((gc :+ col(PID)): _*).orderBy(col(V))
-        val cum = vc.withColumn(CUM_END, sum(CNT).over(wRun))
-          .withColumn(CUM_START, col(CUM_END) - col(CNT))
-        val joinCond = groupCols.map(c => col(c) <=> col(s"__pct_g_$c"))
-          .foldLeft(col(PID) === col("__pct_tpid") &&
-            col(CUM_START) < col("__pct_trank") &&
-            col("__pct_trank") <= col(CUM_END))(_ && _)
-        val hits = cum.join(broadcast(tDf), joinCond)
-        val aggs = ps.indices.flatMap { i =>
-          Seq(max(when(col("__pct_tag") === s"lo$i",
-              col(V).cast("double"))).as(s"__pct_lo$i"),
-            max(when(col("__pct_tag") === s"hi$i",
-              col(V).cast("double"))).as(s"__pct_hi$i"),
-            max(when(col("__pct_tag") === s"lo$i",
-              col("__pct_r"))).as(s"__pct_r$i"))
-        } :+ max(col("__pct_tn")).as("n")
-        // identical interpolation expression shape to cont — the IEEE
-        // sequence (and so the bytes) must match cont exactly
-        val outs = ps.zipWithIndex.map { case ((_, name), i) =>
-          (col(s"__pct_lo$i") +
-            (col(s"__pct_r$i") - floor(col(s"__pct_r$i"))) *
-              (col(s"__pct_hi$i") - col(s"__pct_lo$i")))
-            .as(name)
-        }
-        hits.groupBy(gc: _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .select((gc ++ outs) :+ col("n"): _*)
-      }
   }
 
   /** Discrete (type-1 order statistic, SQL `percentile_disc`)

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.{Det, Tables => T}
 
 /** SURVEY §2.1–§2.3: scans, projection/filter/predicates, joins.
@@ -23,13 +22,24 @@ import graft.{Det, Tables => T}
   *  - The one genuinely large join (lineitem⋈orders) is a shuffle
   *    hash/sort-merge join on the join key — the correct plan at scale;
   *    AQE handles skew splitting at runtime.
-  *  - As-of / interval joins pre-filter both sides before the join and
-  *    carry an equi-key (user_id) so Spark plans a hash join with the
-  *    range predicate as a post-filter, never a cartesian product.
+  *  - As-of / interval joins run through the `graft.Graft` facades over
+  *    pre-filtered purchase/click sides: the as-of family is one
+  *    per-user interleaved window (no join); the interval join carries
+  *    an equi-key (user_id) so Spark plans a hash join with the range
+  *    predicate as a post-filter, never a cartesian product.
   */
 object CoreRelational {
   type Q = (SparkSession, String) => DataFrame
   import Det.{dsum, sqlSum, tbl}
+
+  /** The purchase and click sides the as-of and interval joins pair
+    * up: two filtered scans of `events`. */
+  private def purchasesClicks(s: SparkSession,
+                              d: String): (DataFrame, DataFrame) = {
+    val ev = T.events(s, d)
+    (ev.filter(col("event_type") === "purchase"),
+      ev.filter(col("event_type") === "click"))
+  }
 
   val queries: Map[String, Q] = Map(
     // §2.1 full scan, all columns. NOTE: lineitem's true unique key is
@@ -187,32 +197,23 @@ object CoreRelational {
           col("l_quantity"))),
 
     // §2.3 as-of join: for each purchase, most recent prior click by the
-    // same user (tie → highest click event_id). Plan: NO join at all —
-    // union both event kinds into one per-user timeline and carry the
-    // running max click as a struct max over preceding rows. One shuffle
-    // by user_id, O(n log n) per key, skew-tolerant: a bot user with 10⁵
-    // clicks and 10⁵ purchases costs one 2·10⁵-row sorted pass, not the
-    // 10¹⁰-row expansion a join+rank plan materializes.
-    //
-    // Ordering (us asc, is_p asc, event_id asc) puts every click with
-    // c_us <= p_us strictly before the purchase row (ties on us: clicks
-    // first — the as-of bound is inclusive), and struct max on
-    // (c_us, c_id) encodes "latest click, tie → highest id".
+    // same user (tie → highest click event_id), graded through the
+    // public facade (graft.Graft.asofJoin, direction "backward"). Plan:
+    // NO join at all — both event kinds interleave into one per-user
+    // timeline and the running max click is a struct max over
+    // preceding rows. One shuffle by user_id, O(n log n) per key,
+    // skew-tolerant: a bot user with 10⁵ clicks and 10⁵ purchases costs
+    // one 2·10⁵-row sorted pass, not the 10¹⁰-row expansion a join+rank
+    // plan materializes. Same-µs clicks sort before the purchase (the
+    // as-of bound is inclusive); the struct max on (c_us, c_id) encodes
+    // "latest click, tie → highest id".
     "q_join_asof" -> ((s, d) => {
-      val ev = T.events(s, d)
-        .filter(col("event_type").isin("click", "purchase")
-          && col("ts").isNotNull)
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
-          (col("event_type") === "purchase").cast("int").as("is_p"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("us").asc, col("is_p").asc, col("event_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("lc",
-          max(when(col("is_p") === 0, struct(col("us"), col("event_id")))).over(w))
-        .filter(col("is_p") === 1)
-        .select(col("event_id").as("p_id"), col("user_id"), col("us").as("p_us"),
-          col("lc.event_id").as("c_id"), col("lc.us").as("c_us"),
-          (col("us") - col("lc.us")).as("gap_us"))
+      val (p, c) = purchasesClicks(s, d)
+      graft.Graft.asofJoin(p, c, "user_id", "ts", "event_id",
+          "ts", "event_id")
+        .select(col("left_id").as("p_id"), col("key").as("user_id"),
+          col("l_us").as("p_us"), col("right_id").as("c_id"),
+          col("r_us").as("c_us"), col("gap_us"))
         .orderBy(col("p_id"))
     }),
 
@@ -220,43 +221,25 @@ object CoreRelational {
     // each purchase pairs with its click of minimum ∣Δt∣ in EITHER
     // direction, equal distance → the earlier (backward) click — the
     // sensor-alignment/event-matching semantics a backward-only as-of
-    // misses when the nearest reading sits just ahead. Same single-scan
-    // interleaved-window engine (never the join+rank expansion): the
-    // SAME (us, is_p, event_id) ordering carries TWO frames — the
-    // inclusive backward struct-max of q_join_asof and a currentRow..
-    // following struct-min (same-µs clicks sort before the purchase, so
-    // the forward frame is strictly c_us > p_us by construction) — one
-    // user-hash exchange, one WindowExec, both carries in it. Side pick
-    // and delta are exact integer µs compares; NULL-side cases resolve
-    // structurally ('none' when the user has no clicks at all).
+    // misses when the nearest reading sits just ahead. Graded through
+    // the facade's "nearest" direction: the interleaved timeline
+    // carries TWO frames in one WindowExec (the inclusive backward
+    // struct-max and a currentRow..following struct-min; same-µs
+    // clicks sort before the purchase, so a forward match is strictly
+    // c_us > p_us). The side follows from the match: 'none' when the
+    // user has no clicks at all, 'back' when gap_us ≥ 0, else 'fwd';
+    // delta_us = c_us − p_us = −gap_us — exact integer µs throughout.
     "q_join_asof_near" -> ((s, d) => {
-      val ev = T.events(s, d)
-        .filter(col("event_type").isin("click", "purchase")
-          && col("ts").isNotNull)
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
-          (col("event_type") === "purchase").cast("int").as("is_p"))
-      val ord = Window.partitionBy(col("user_id"))
-        .orderBy(col("us").asc, col("is_p").asc, col("event_id").asc)
-      val back = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val fwd = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val cl = when(col("is_p") === 0, struct(col("us"), col("event_id")))
-      ev.withColumn("cb", max(cl).over(back))
-        .withColumn("cf", min(cl).over(fwd))
-        .filter(col("is_p") === 1)
-        .withColumn("side",
-          when(col("cb").isNull && col("cf").isNull, "none")
-            .when(col("cf").isNull, "back")
-            .when(col("cb").isNull, "fwd")
-            .when(col("us") - col("cb.us") <= col("cf.us") - col("us"),
-              "back")
-            .otherwise("fwd"))
-        .select(col("event_id").as("p_id"), col("user_id"),
-          col("us").as("p_us"), col("side"),
-          when(col("side") === "back", col("cb.event_id"))
-            .when(col("side") === "fwd", col("cf.event_id")).as("c_id"),
-          when(col("side") === "back", col("cb.us"))
-            .when(col("side") === "fwd", col("cf.us")).as("c_us"))
-        .withColumn("delta_us", col("c_us") - col("p_us"))
+      val (p, c) = purchasesClicks(s, d)
+      graft.Graft.asofJoin(p, c, "user_id", "ts", "event_id",
+          "ts", "event_id", "nearest")
+        .select(col("left_id").as("p_id"), col("key").as("user_id"),
+          col("l_us").as("p_us"),
+          when(col("r_us").isNull, "none")
+            .when(col("gap_us") >= 0, "back")
+            .otherwise("fwd").as("side"),
+          col("right_id").as("c_id"), col("r_us").as("c_us"),
+          (-col("gap_us")).as("delta_us"))
         .orderBy(col("p_id"))
     }),
 
@@ -269,9 +252,7 @@ object CoreRelational {
     // same single-scan interleaved-window plan, same (us, id) tie
     // discipline, one user-hash exchange.
     "q_join_asof_tol" -> ((s, d) => {
-      val ev = T.events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-      val c = ev.filter(col("event_type") === "click")
+      val (p, c) = purchasesClicks(s, d)
       graft.Graft.asofJoin(p, c, "user_id", "ts", "event_id",
           "ts", "event_id", "backward", Some(1800000000L))
         .select(col("key").as("user_id"), col("left_id").as("p_id"),
@@ -292,9 +273,7 @@ object CoreRelational {
     // gap_us = p_us − c_us ≤ 0 by construction. One user-hash
     // exchange.
     "q_join_asof_fwd" -> ((s, d) => {
-      val ev = T.events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-      val c = ev.filter(col("event_type") === "click")
+      val (p, c) = purchasesClicks(s, d)
       graft.Graft.asofJoin(p, c, "user_id", "ts", "event_id",
           "ts", "event_id", "forward")
         .select(col("key").as("user_id"), col("left_id").as("p_id"),
@@ -304,21 +283,18 @@ object CoreRelational {
     }),
 
     // §2.3 interval join (stream-stream join batch analog): click→purchase
-    // pairs within 1h per user, aggregated per user. Micros-integer range
-    // bounds keep interval arithmetic identical across engines.
+    // pairs within 1h per user, aggregated per user, graded through the
+    // public facade (graft.Graft.intervalJoin: clicks left, purchases
+    // right, bounds [0, 1 h]). Micros-integer range bounds keep interval
+    // arithmetic identical across engines.
     "q_join_interval" -> ((s, d) => {
-      val ev = T.events(s, d)
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("c_us"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), unix_micros(col("ts")).as("p_us"))
-      c.join(p, col("user_id") === col("p_user")
-          && col("p_us") >= col("c_us")
-          && col("p_us") <= col("c_us") + lit(3600000000L))
-        .groupBy(col("user_id"))
+      val (p, c) = purchasesClicks(s, d)
+      graft.Graft.intervalJoin(c, p, "user_id", "ts", "event_id",
+          "ts", "event_id", 0L, 3600000000L)
+        .groupBy(col("key").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
-          min(col("p_us") - col("c_us")).as("min_gap_us"),
-          max(col("p_us") - col("c_us")).as("max_gap_us"))
+          min(col("delta_us")).as("min_gap_us"),
+          max(col("delta_us")).as("max_gap_us"))
         .orderBy(col("user_id"))
     }),
 

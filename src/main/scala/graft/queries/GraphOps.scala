@@ -458,10 +458,7 @@ object GraphOps {
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
       val e = Scope.eager(copurchaseEdges(s, d), "src")
-      val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      graft.operators.Bfs.hopsFromKeyed(e, seeds, BfsRounds)
+      graft.operators.Bfs.hopsFromKeyed(e, hubSeeds(e), BfsRounds)
     }),
 
     // Closeness-centrality checkpoints (r18) — the FOLD of
@@ -483,16 +480,11 @@ object GraphOps {
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
       val e = Scope.eager(copurchaseEdges(s, d), "src")
-      val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      graft.operators.Bfs.hopsFromKeyed(e, seeds, BfsRounds)
+      graft.operators.Bfs.hopsFromKeyed(e, hubSeeds(e), BfsRounds)
         .groupBy(col("seed"))
         .agg(sum(col("n_nodes")).as("n_reached"),
           sum(col("dist") * col("n_nodes")).as("sum_dist"))
-        .withColumn("closeness_micro", when(col("sum_dist") > 0,
-          expr("""cast((cast(n_reached - 1 as decimal(38,0)) * 1000000)
-                  div sum_dist as bigint)""")))
+        .withColumn("closeness_micro", closenessMicro)
         .withColumn("closeness",
           col("closeness_micro").cast("double") / lit(1000000.0))
         .orderBy(col("seed"))
@@ -516,10 +508,8 @@ object GraphOps {
     "q_graph_harmonic" -> ((s, d) => {
       // ONE keyed cache (r22) — see q_graph_kbfs
       val e = Scope.eager(copurchaseEdges(s, d), "src")
-      val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      harmonicFold(graft.operators.Bfs.hopsFromKeyed(e, seeds, BfsRounds))
+      harmonicFold(
+        graft.operators.Bfs.hopsFromKeyed(e, hubSeeds(e), BfsRounds))
     }),
 
     // WEIGHTED closeness — bounded Bellman-Ford affinity distances
@@ -542,20 +532,8 @@ object GraphOps {
     // the identical rounds.
     "q_graph_wcloseness" -> ((s, d) => {
       val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
-      val seeds = ew.groupBy(col("src")).agg(sum(col("w")).as("st"))
-        .orderBy(col("st").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      val ce = ew.select(col("src"), col("dst"),
-        expr("cast(1000000 div w as bigint)").as("cost"))
-      graft.operators.Bfs.costFrom(ce, seeds, BfsRounds)
-        .groupBy(col("seed"))
-        .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("sum_cost"))
-        .withColumn("wclose_micro", when(col("sum_cost") > 0,
-          expr("""cast((cast(n_reached - 1 as decimal(38,0))
-                  * 1000000000000) div sum_cost as bigint)""")))
-        .withColumn("wcloseness",
-          col("wclose_micro").cast("double") / lit(1000000.0))
-        .orderBy(col("seed"))
+      wcloseFold(graft.operators.Bfs.costFrom(costEdges(ew),
+        hubSeeds(ew, byStrength = true), BfsRounds))
     }),
 
     // Eccentricity checkpoints (r19) — the THIRD fold over the kbfs
@@ -574,14 +552,7 @@ object GraphOps {
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
       val e = Scope.eager(copurchaseEdges(s, d), "src")
-      val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      graft.operators.Bfs.hopsFromKeyed(e, seeds, BfsRounds)
-        .groupBy(col("seed"))
-        .agg(sum(col("n_nodes")).as("n_reached"),
-          max(col("dist")).as("ecc"))
-        .orderBy(col("seed"))
+      eccFold(graft.operators.Bfs.hopsFromKeyed(e, hubSeeds(e), BfsRounds))
     }),
 
     // FUSED distance centralities (r20) — the r19 verdict's standing
@@ -605,10 +576,7 @@ object GraphOps {
       // exchange-free on the keyed layout) and the frontier loop — was
       // an eager cache + a keyed re-cache inside hopsFrom
       val e = Scope.eager(copurchaseEdges(s, d), "src")
-      val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      graft.operators.Bfs.hopsFromKeyed(e, seeds, BfsRounds)
+      graft.operators.Bfs.hopsFromKeyed(e, hubSeeds(e), BfsRounds)
         .groupBy(col("seed"))
         .agg(sum(col("n_nodes")).as("n_reached"),
           sum(col("dist") * col("n_nodes")).as("sum_dist"),
@@ -617,9 +585,7 @@ object GraphOps {
             .otherwise(lit(0L).cast("decimal(38,0)")))
             .cast("bigint").as("harmonic_micro"),
           max(col("dist")).as("ecc"))
-        .withColumn("closeness_micro", when(col("sum_dist") > 0,
-          expr("""cast((cast(n_reached - 1 as decimal(38,0)) * 1000000)
-                  div sum_dist as bigint)""")))
+        .withColumn("closeness_micro", closenessMicro)
         .select(col("seed"), col("n_reached"), col("sum_dist"),
           col("closeness_micro"), col("harmonic_micro"), col("ecc"))
         .orderBy(col("seed"))
@@ -643,12 +609,8 @@ object GraphOps {
     // centralities at ONE Bellman-Ford floor.
     "q_graph_wcentral" -> ((s, d) => {
       val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
-      val seeds = ew.groupBy(col("src")).agg(sum(col("w")).as("st"))
-        .orderBy(col("st").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      val ce = ew.select(col("src"), col("dst"),
-        expr("cast(1000000 div w as bigint)").as("cost"))
-      graft.operators.Bfs.costFrom(ce, seeds, BfsRounds)
+      graft.operators.Bfs.costFrom(costEdges(ew),
+          hubSeeds(ew, byStrength = true), BfsRounds)
         .groupBy(col("seed"))
         .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("sum_cost"),
           sum(when(col("d") > 0,
@@ -656,9 +618,7 @@ object GraphOps {
             .otherwise(lit(0L).cast("decimal(38,0)")))
             .cast("bigint").as("wharm_micro"),
           max(col("d")).as("wecc"))
-        .withColumn("wclose_micro", when(col("sum_cost") > 0,
-          expr("""cast((cast(n_reached - 1 as decimal(38,0))
-                  * 1000000000000) div sum_cost as bigint)""")))
+        .withColumn("wclose_micro", wcloseMicro)
         .select(col("seed"), col("n_reached"), col("sum_cost"),
           col("wclose_micro"), col("wharm_micro"), col("wecc"))
         .orderBy(col("seed"))
@@ -687,11 +647,8 @@ object GraphOps {
       // exchange-free on the keyed layout), both Brandes sweeps, and
       // the node count — was an eager cache + a keyed re-cache per sweep
       val e = Scope.eager(copurchaseEdges(s, d), "src")
-      val seeds = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-        .orderBy(col("dg").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
       graft.operators.Betweenness
-        .pivotBetweennessKeyed(e, seeds, BfsRounds, BetwTopK)
+        .pivotBetweennessKeyed(e, hubSeeds(e), BfsRounds, BetwTopK)
     }),
 
     // Resource-Allocation link prediction (r12): top-100 predicted
@@ -1010,13 +967,9 @@ object GraphOps {
     // TakeOrderedAndProject.
     "q_graph_betweenness_w" -> ((s, d) => {
       val ew = Scope.eager(copurchaseEdgesW(s, d, CoreMinPair))
-      val seeds = ew.groupBy(col("src")).agg(sum(col("w")).as("st"))
-        .orderBy(col("st").desc, col("src").asc).limit(KbfsSeeds)
-        .select(col("src").as("seed"), col("src").as("node"))
-      val ce = ew.select(col("src"), col("dst"),
-        expr("greatest(cast(1000000 div w as bigint), 1L)").as("cost"))
-      graft.operators.BetweennessW
-        .pivotBetweennessW(ce, seeds, BfsRounds, BetwTopK)
+      graft.operators.BetweennessW.pivotBetweennessW(
+        costEdges(ew, clamped = true), hubSeeds(ew, byStrength = true),
+        BfsRounds, BetwTopK)
     }),
 
     // Betweenness pivot-count stability audit (r20) — the annsweep/
@@ -1379,6 +1332,64 @@ object GraphOps {
         struct(col("sb").as("src"), col("sa").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
+
+  /** The top-[[KbfsSeeds]] hubs of a (src, dst[, w]) edge list as
+    * (seed, node) rows, ranked (degree desc, src asc) — or by strength
+    * Σw when `byStrength`, the weighted family's seed rule. A
+    * TakeOrderedAndProject over the src-grain agg, never a corpus sort;
+    * exchange-free on a src-keyed cache. */
+  private def hubSeeds(e: DataFrame,
+                       byStrength: Boolean = false): DataFrame =
+    e.groupBy(col("src"))
+      .agg((if (byStrength) sum(col("w")) else count(lit(1))).as("hub"))
+      .orderBy(col("hub").desc, col("src").asc).limit(KbfsSeeds)
+      .select(col("src").as("seed"), col("src").as("node"))
+
+  /** closeness_micro = ((reached−1)·10⁶) div Σdist — exact integers
+    * (`div` ≡ `//` on the non-negative numerator), NULL when the seed
+    * reaches nothing (q_graph_closeness, q_graph_central). */
+  private def closenessMicro: Column = when(col("sum_dist") > 0,
+    expr("""cast((cast(n_reached - 1 as decimal(38,0)) * 1000000)
+            div sum_dist as bigint)"""))
+
+  /** q_graph_ecc's fold (r19) — per-seed truncated eccentricity over a
+    * hop histogram: ecc = max dist, a LOWER bound past the rounds cap;
+    * all-integer, a seed-grain agg over ≤ seeds·(rounds+1) rows. */
+  private[graft] def eccFold(hops: DataFrame): DataFrame =
+    hops.groupBy(col("seed"))
+      .agg(sum(col("n_nodes")).as("n_reached"), max(col("dist")).as("ecc"))
+      .orderBy(col("seed"))
+
+  /** The affinity-cost edge list (src, dst, cost) of a weighted
+    * (src, dst, w) list: cost = 10⁶ div w micro-hops (heavier tie ⟹
+    * cheaper edge — the exact-integer 1∕w transform). `clamped` keeps
+    * it ≥ 1, the betweenness form: a zero-cost edge would put cycles in
+    * the shortest-path DAG (binds only past 10⁶-weight edges). */
+  private[graft] def costEdges(ew: DataFrame,
+                               clamped: Boolean = false): DataFrame = {
+    val cost = "cast(1000000 div w as bigint)"
+    ew.select(col("src"), col("dst"),
+      expr(if (clamped) s"greatest($cost, 1L)" else cost).as("cost"))
+  }
+
+  /** wclose_micro = ((reached−1)·10¹²) div Σcost — exact integers (Σcost
+    * is micro-hops, so 10¹² keeps micro precision of the per-hop
+    * closeness), NULL when the seed reaches nothing. */
+  private def wcloseMicro: Column = when(col("sum_cost") > 0,
+    expr("""cast((cast(n_reached - 1 as decimal(38,0))
+            * 1000000000000) div sum_cost as bigint)"""))
+
+  /** q_graph_wcloseness's fold (r19) — weighted closeness per seed over
+    * a [[graft.operators.Bfs.costFrom]] (seed, node, d) table:
+    * (seed, n_reached, sum_cost, wclose_micro, wcloseness), the double
+    * ONE IEEE division of the exact micro value. */
+  private[graft] def wcloseFold(dist: DataFrame): DataFrame =
+    dist.groupBy(col("seed"))
+      .agg(count(lit(1)).as("n_reached"), sum(col("d")).as("sum_cost"))
+      .withColumn("wclose_micro", wcloseMicro)
+      .withColumn("wcloseness",
+        col("wclose_micro").cast("double") / lit(1000000.0))
+      .orderBy(col("seed"))
 
   /** q_graph_harmonic's fold (r19) — per-seed truncated harmonic
     * centrality over a [[graft.operators.Bfs.hopsFrom]] hop histogram:

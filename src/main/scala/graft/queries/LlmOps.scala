@@ -576,12 +576,43 @@ object LlmOps {
                probePred: Column => Column = _ < 5): DataFrame =
     annQueryOn(embBase(s, d), bits, radius, k, probePred)
 
-  /** The normalized (vec_id, e, nrm) view of the embeddings table that
-    * the similarity paths share. */
-  private def embBase(s: SparkSession, d: String): DataFrame =
-    T.embeddings(s, d)
-      .select(col("vec_id"), toDouble(col("embedding")).as("e"))
+  /** The normalized (vec_id, e, nrm) view of any (id, vector) table —
+    * long ids, double vectors, codegen-dot norms — that the similarity
+    * paths and their [[graft.Graft]] facades share. Registers DotF64. */
+  private[graft] def vecBase(df: DataFrame, idCol: String,
+                             vecCol: String): DataFrame = {
+    graft.functions.DotF64.register(df.sparkSession)
+    df.select(col(idCol).cast("long").as("vec_id"),
+        toDouble(col(vecCol)).as("e"))
       .withColumn("nrm", norm(col("e")))
+  }
+
+  /** [[vecBase]] of the embeddings table. */
+  private def embBase(s: SparkSession, d: String): DataFrame =
+    vecBase(T.embeddings(s, d), "vec_id", "embedding")
+
+  /** Exact cosine top-k over ANY prepared (vec_id, e, nrm) DataFrame —
+    * the graded q_llm_knn plan and [[graft.Graft.knnExact]]: the probe
+    * rows broadcast, the corpus is scanned ONCE and never shuffled —
+    * per-probe work is one native-codegen dot per corpus row. Ties
+    * break to the lower id; self-matches excluded.
+    * @return (probe_id, rk, neighbor_id, sim 6dp). */
+  def knnQueryOn(base: DataFrame, k: Int,
+                 probePred: Column => Column): DataFrame = {
+    graft.functions.DotF64.register(base.sparkSession)
+    val probes = base.filter(probePred(col("vec_id")))
+      .select(col("vec_id").as("probe_id"), col("e").as("pe"),
+        col("nrm").as("pn"))
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("sim").desc, col("vec_id").asc)
+    base.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .withColumn("sim", round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"), col("sim"))
+      .orderBy(col("probe_id"), col("rk"))
+  }
 
   /** [[annQuery]] over ANY prepared (vec_id, e, nrm) DataFrame — the
     * form [[graft.Graft.annCandidates]] exposes to caller corpora. */
@@ -1238,16 +1269,12 @@ object LlmOps {
     // the component; cluster stats via groupBy + join-back (skew-safe,
     // same shape as q_llm_dedup). Only docs in ≥1 near-dup pair appear —
     // singletons are by definition already deduplicated.
-    "q_llm_cc" -> ((s, d) => {
-      val edges = neardupPairs(s, d).select(col("doc_a"), col("doc_b"))
-      val labels = graft.operators.ConnectedComponents.run(edges)
-      val sizes = labels.groupBy(col("rep").as("r"))
-        .agg(count(lit(1)).as("cluster_size"))
-      labels.join(sizes, col("rep") === col("r"))
-        .select(col("node").as("doc_id"), col("rep"), col("cluster_size"),
-          (col("node") === col("rep")).cast("int").as("is_rep"))
-        .orderBy(col("doc_id"))
-    }),
+    // Graded through the public facade (graft.Graft.clusterPairs).
+    "q_llm_cc" -> ((s, d) =>
+      graft.Graft.clusterPairs(
+          neardupPairs(s, d).select(col("doc_a"), col("doc_b")))
+        .withColumnRenamed("node", "doc_id")
+        .orderBy(col("doc_id"))),
 
     // KEEP-BEST selection — the decision step that turns dedup clusters
     // into a training set: per near-dup cluster, keep the doc with the
@@ -1829,23 +1856,7 @@ object LlmOps {
 
     // Brute-force cosine top-5 for probe vectors (vec_id < 5) — the exact
     // baseline an ANN variant is judged against. Probe side broadcasts.
-    "q_llm_knn" -> ((s, d) => {
-      graft.functions.DotF64.register(s)
-      val base = T.embeddings(s, d)
-        .select(col("vec_id"), toDouble(col("embedding")).as("e"))
-        .withColumn("nrm", norm(col("e")))
-      val probes = base.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("e").as("pe"), col("nrm").as("pn"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("sim").desc, col("vec_id").asc)
-      base.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("sim", round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"), col("sim"))
-        .orderBy(col("probe_id"), col("rk"))
-    }),
+    "q_llm_knn" -> ((s, d) => knnQueryOn(embBase(s, d), 5, _ < 5)),
 
     // Multi-probe LSH ANN: 4 sign-bit bucket + all Hamming-≤2 probes —
     // the MEASURED optimum of the r17 q_llm_annsweep grid (macro

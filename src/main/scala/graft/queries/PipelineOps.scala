@@ -188,24 +188,6 @@ object PipelineOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Deterministic stratified sampling: exactly `k` docs per
-    * (lang, source) stratum, chosen by md5-hash rank (uniform within the
-    * stratum, reproducible, never rand()). The rank filter plans as
-    * WindowGroupLimit (pinned in PlanAssertionsSuite): each group keeps
-    * a k-row heap during the shuffle — no stratum is ever fully sorted,
-    * so a billion-doc stratum costs O(n) scan + O(k) state, and the
-    * output is strata-bounded regardless of corpus size. */
-  def stratifiedSample(docs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("lang"), col("source"))
-      .orderBy(col("hk").asc, col("doc_id").asc)
-    docs
-      .withColumn("hk", Det.md5h32(col("doc_id").cast("string")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("doc_id"), col("lang"), col("source"), col("hk"), col("rk"))
-      .orderBy(col("doc_id"))
-  }
-
   /** Token-budget selection (q_llm_budget): keep documents in quality
     * order (distinct-token count DESC, doc_id ASC) until a corpus token
     * budget is spent — the "fill the training mix from the top" step
@@ -629,7 +611,9 @@ object PipelineOps {
     "q_llm_chunk" -> ((s, d) =>
       chunk(T.documents(s, d), ChunkSize, ChunkStride)),
     "q_llm_contam" -> ((s, d) => contamAudit(T.documents(s, d))),
-    "q_llm_sample" -> ((s, d) => stratifiedSample(T.documents(s, d), SampleK)),
+    "q_llm_sample" -> ((s, d) =>
+      graft.Graft.stratifiedSample(T.documents(s, d), "doc_id",
+        Seq("lang", "source"), SampleK).orderBy(col("doc_id"))),
     // §2.10 quality-ordered token-budget selection (r12) — see
     // [[budgetSelect]] for the bucket-decomposed scale shape (the
     // oracle runs the equivalent naive global-window cumsum).

@@ -111,30 +111,25 @@ object WindowFns {
     // TIME-interval RANGE frame (r13) — the event-time rolling
     // aggregate q_win_rangeframe's value-range frame can't express: per
     // user at each event, the count and decimal value sum of that
-    // user's events in the trailing hour (current row inclusive). The
-    // frame orders by the raw TIMESTAMP with an INTERVAL boundary —
-    // identical ANSI text both engines; RANGE peers (same-µs events)
-    // share one frame, so no unique tiebreak is needed INSIDE the
-    // frame (the q_win_rangeframe determinism argument) while the
-    // presentation order keys on the unique event_id. The sum rides
-    // the exact decimal domain (order-free across engines); null ts
-    // rows are excluded up front (the r13 as-of discipline — a null
-    // order key sorts differently across engines). Plan: ONE user-hash
-    // exchange + in-partition sort; WindowExec's sliding time frame is
-    // O(rows) two-pointer state per partition — at 100 TB this is the
-    // per-key linear pass a trailing-window metric costs at minimum.
-    "q_win_timerange" -> ((s, d) => {
-      val fr = "PARTITION BY user_id ORDER BY ts ASC " +
-        "RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW"
-      T.events(s, d)
-        .filter(col("ts").isNotNull)
-        .select(
-          col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"),
-          expr(s"count(1) OVER ($fr)").as("n_1h"),
-          expr(s"CAST(ROUND(SUM(CAST(value AS DECIMAL(18,4))) OVER ($fr), 4) AS DOUBLE)")
-            .as("val_1h"))
-        .orderBy(col("event_id"))
-    })
+    // user's events in the trailing hour (current row inclusive),
+    // graded through the public facade (graft.Graft.trailingAgg, the
+    // event id carried through). The frame orders by exact µs with a
+    // 3600000000-µs RANGE bound; RANGE peers (same-µs events) share one
+    // frame, so no unique tiebreak is needed INSIDE the frame (the
+    // q_win_rangeframe determinism argument) while the presentation
+    // order keys on the unique event_id. The sum rides the exact
+    // decimal domain (order-free across engines); null ts rows are
+    // excluded up front (the r13 as-of discipline — a null order key
+    // sorts differently across engines). Plan: ONE user-hash exchange
+    // + in-partition sort; WindowExec's sliding time frame is O(rows)
+    // two-pointer state per partition — at 100 TB this is the per-key
+    // linear pass a trailing-window metric costs at minimum.
+    "q_win_timerange" -> ((s, d) =>
+      graft.Graft.trailingAgg(T.events(s, d), "user_id", "ts", "value",
+          3600000000L, idCol = Some("event_id"))
+        .select(col("event_id"), col("key").as("user_id"), col("us"),
+          col("n_win").as("n_1h"), col("val_win").as("val_1h"))
+        .orderBy(col("event_id")))
   )
 
   private val cust = tbl("customer"); private val evt = tbl("events")

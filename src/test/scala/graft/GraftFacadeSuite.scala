@@ -967,12 +967,6 @@ class GraftFacadeSuite extends SparkSuite {
         catch { case e: Throwable => fail(s"$name threw on empty input: $e") }
       assert(rows.isEmpty, s"$name produced rows from an empty input")
     }
-    // the operator-level selection variant's empty early-return branch
-    // (not facade-exposed; see Percentiles.contSelect)
-    val sel = graft.operators.Percentiles
-      .contSelect(emptyGv, Seq("grp"), "v", Seq(0.5 -> "med"))
-      .collect()
-    assert(sel.isEmpty, s"contSelect produced rows from an empty input")
     spark.catalog.clearCache()
   }
 

@@ -46,13 +46,14 @@ class PipelineOpsSuite extends SparkSuite {
     val docs = docsDF(
       (0L until 30L).map(i => (i, s"w$i", "en", "s0")) ++   // 30-doc stratum
         (30L until 33L).map(i => (i, s"w$i", "de", "s1")))  // 3-doc stratum
-    val out = PipelineOps.stratifiedSample(docs, 5)
+    val out = Graft.stratifiedSample(docs, "doc_id", Seq("lang", "source"), 5)
     val byStratum = out.collect().groupBy(_.getAs[String]("lang"))
     assert(byStratum("en").length === 5 && byStratum("de").length === 3)
     // Hash-determined membership: reversing input row order changes nothing.
-    val rev = PipelineOps.stratifiedSample(
+    val rev = Graft.stratifiedSample(
       docsDF((0L until 33L).reverse.map(i =>
-        (i, s"w$i", if (i < 30) "en" else "de", if (i < 30) "s0" else "s1"))), 5)
+        (i, s"w$i", if (i < 30) "en" else "de", if (i < 30) "s0" else "s1"))),
+      "doc_id", Seq("lang", "source"), 5)
     assert(out.collect().toSeq === rev.collect().toSeq)
   }
 

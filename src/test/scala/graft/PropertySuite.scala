@@ -660,38 +660,6 @@ class PropertySuite extends AnyFunSuite {
     assert(res.passed, s"weighted cont percentiles: ${res.status}")
   }
 
-  test("Spark law: Percentiles.contSelect == cont bit-for-bit on any weighted multiset") {
-    // The distributed-selection variant must be a pure refactoring of
-    // the window locate: same stored lo/hi neighbours, same rank
-    // doubles, same interpolation expression shape → EXACT double
-    // equality, weighted and not, on generated multisets (including
-    // many distinct values per group across several range partitions —
-    // partitions fixed at 4 so multi-partition residual-rank paths are
-    // exercised even on small generated inputs).
-    val spark = SharedSpark.spark
-    import spark.implicits._
-    val rows = Gen.resize(16,
-      Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(-30, 30), Gen.chooseNum(1, 3))))
-    val prop = Prop.forAll(rows) { (vw: List[(Int, Int)]) =>
-      val df = vw.map { case (v, w) => ("g" + (v % 2 == 0), v, w) }
-        .toDF("grp", "v", "w")
-      val ps = Seq(0.0 -> "p0", 0.5 -> "p50", 0.9 -> "p90", 1.0 -> "p100")
-      def rowsOf(d: org.apache.spark.sql.DataFrame) = d.collect()
-        .map(r => r.getAs[String]("grp") ->
-          ((r.getAs[Double]("p0"), r.getAs[Double]("p50"),
-            r.getAs[Double]("p90"), r.getAs[Double]("p100"),
-            r.getAs[Long]("n")))).toMap
-      val base = rowsOf(graft.operators.Percentiles
-        .cont(df, Seq("grp"), "v", ps, Some("w")))
-      val sel = rowsOf(graft.operators.Percentiles
-        .contSelect(df, Seq("grp"), "v", ps, Some("w"), partitions = 4))
-      spark.catalog.clearCache() // contSelect persists its range-partitioned pre-agg
-      base == sel
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
-    assert(res.passed, s"contSelect law: ${res.status}")
-  }
-
   test("quiet law: consecutive gaps exactly tile the silence for any active-day set") {
     // span = active + silent AND Σ gaps == silent AND max_gap ≤ silent
     // — the q_event_quiet identities (silent days are exactly the
