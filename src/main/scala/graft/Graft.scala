@@ -13,7 +13,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * embedders run: q_join_asof, q_join_asof_near, q_join_asof_tol,
   * q_join_asof_fwd ([[asofJoin]]), q_join_interval ([[intervalJoin]]),
   * q_win_timerange ([[trailingAgg]]), q_llm_sample
-  * ([[stratifiedSample]]) and q_llm_cc ([[clusterPairs]]). Others share
+  * ([[stratifiedSample]]), q_llm_cc ([[clusterPairs]]) and q_llm_contain
+  * ([[containPairs]]). Others share
   * the facade's body in `graft.queries`: q_llm_knn ([[knnExact]] =
   * `LlmOps.knnQueryOn`), q_graph_ecc ([[eccentricity]] =
   * `GraphOps.eccFold`), q_graph_harmonic ([[harmonicCentrality]] =
@@ -104,22 +105,13 @@ object Graft {
     *         construction). */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    blockCols: Seq[String], tNum: Int, tDen: Int): DataFrame = {
-    val toks = array_distinct(split(col(textCol), " "))
-    val docs = Scope.eager(df
-      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ toks.as("tk"): _*))
-    val feats = docs.select(
-      (col("doc_id") +: blockCols.map(col)) :+
-        size(col("tk")).cast("long").as("sz") :+ explode(col("tk")).as("feat"): _*)
-    graft.queries.LlmOps.jaccardCandidates(feats, blockCols, tNum, tDen)
-      .join(docs.select((col("doc_id").as("a_id") +: blockCols.map(col)) :+
-          col("tk").as("tk_a"): _*),
-        col("doc_a") === col("a_id"))
-      .join(docs.select(col("doc_id").as("b_id"), col("tk").as("tk_b")),
-        col("doc_b") === col("b_id"))
+    import graft.queries.LlmOps
+    LlmOps.setPairs(LlmOps.tokenSets(df, idCol, textCol, blockCols), "tk", blockCols,
+        LlmOps.jaccardCandidates(_, blockCols, tNum, tDen))
       .withColumn("n_inter",
-        size(array_intersect(col("tk_a"), col("tk_b"))).cast("long"))
+        size(array_intersect(col("set_a"), col("set_b"))).cast("long"))
       .withColumn("n_union",
-        size(col("tk_a")).cast("long") + size(col("tk_b")).cast("long")
+        size(col("set_a")).cast("long") + size(col("set_b")).cast("long")
           - col("n_inter"))
       .filter(col("n_inter") * lit(tDen.toLong) >=
         col("n_union") * lit(tNum.toLong))
@@ -130,8 +122,8 @@ object Graft {
         col("jaccard"): _*)
   }
 
-  /** Asymmetric CONTAINMENT pairs over any corpus — the plan of the
-    * graded `q_llm_contain`: ordered (a, b) where ≥ tNum/tDen of a's
+  /** Asymmetric CONTAINMENT pairs over any corpus — graded through
+    * q_llm_contain: ordered (a, b) where ≥ tNum/tDen of a's
     * distinct tokens also occur in b. The dup criterion Jaccard misses:
     * a short doc swallowed by a long one (re-hosted article + chrome,
     * quote farm) scores low symmetric similarity while the contained
@@ -147,22 +139,13 @@ object Graft {
     *         id_a is the contained side. */
   def containPairs(df: DataFrame, idCol: String, textCol: String,
                    blockCols: Seq[String], tNum: Int, tDen: Int): DataFrame = {
+    import graft.queries.LlmOps
     graft.functions.OverlapCount.register(df.sparkSession) // idempotent
-    val toks = array_distinct(split(col(textCol), " "))
-    val docs = Scope.eager(df
-      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ toks.as("tk"): _*))
-    val feats = docs.select(
-      (col("doc_id") +: blockCols.map(col)) :+
-        size(col("tk")).cast("long").as("sz") :+ explode(col("tk")).as("feat"): _*)
-    graft.queries.LlmOps.containmentCandidates(feats, blockCols, tNum, tDen)
-      .join(docs.select((col("doc_id").as("a_id") +: blockCols.map(col)) :+
-          col("tk").as("tk_a"): _*),
-        col("doc_a") === col("a_id"))
-      .join(docs.select(col("doc_id").as("b_id"), col("tk").as("tk_b")),
-        col("doc_b") === col("b_id"))
+    LlmOps.setPairs(LlmOps.tokenSets(df, idCol, textCol, blockCols), "tk", blockCols,
+        LlmOps.containmentCandidates(_, blockCols, tNum, tDen))
       .withColumn("n_inter",
-        call_function("graft_overlap", col("tk_a"), col("tk_b")))
-      .withColumn("sz_a", size(col("tk_a")).cast("long"))
+        call_function("graft_overlap", col("set_a"), col("set_b")))
+      .withColumn("sz_a", size(col("set_a")).cast("long"))
       .filter(col("n_inter") * lit(tDen.toLong) >= col("sz_a") * lit(tNum.toLong))
       .withColumn("containment",
         col("n_inter").cast("double") / col("sz_a").cast("double"))
@@ -226,14 +209,8 @@ object Graft {
     *
     * @return (idCol, sig: array<bigint> of 64). */
   def minhashSignatures(df: DataFrame, idCol: String,
-                        textCol: String): DataFrame = {
-    import graft.queries.LlmOps
-    graft.functions.MinHashSig.register(df.sparkSession,
-      LlmOps.hashA.toSeq, LlmOps.hashB.toSeq, LlmOps.HashP)
-    df.select(col(idCol), split(col(textCol), " ").as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .select(col(idCol), call_function("graft_minhash_sig", col("tk")).as("sig"))
-  }
+                        textCol: String): DataFrame =
+    graft.queries.LlmOps.minhashSigArr(df, idCol, textCol)
 
   /** Near-dup pair graph → clusters: representative (min id), cluster
     * size, keeper flag per node — hash-min label propagation
@@ -1289,8 +1266,9 @@ object Graft {
   def knnExact(df: DataFrame, idCol: String, vecCol: String,
                probeIds: Seq[Long], k: Int): DataFrame =
     graft.queries.LlmOps.knnQueryOn(
-      graft.queries.LlmOps.vecBase(df, idCol, vecCol), k,
-      _.isin(probeIds: _*))
+        graft.queries.LlmOps.vecBase(df, idCol, vecCol), k,
+        _.isin(probeIds: _*))
+      .orderBy(col("probe_id"), col("rk"))
 
   /** Canonicalize an arbitrary undirected edge list: self-loops drop,
     * (a, b)/(b, a) duplicates collapse, output is distinct (a < b). */

@@ -225,19 +225,13 @@ object ScaleRehearsal {
       if (want("ngram_pairs")) time("ngram_pairs", n) {
         // the q_llm_ngram shape on the synthetic corpus: 3-gram
         // shingles, prefix filter at t = 1/5, codegen Jaccard verify
+        import graft.queries.LlmOps
         graft.functions.JaccardStr.register(spark)
-        val docs = Scope.eager(synthDocs(n)
-          .withColumn("tk", split(col("text"), " "))
-          .select(col("doc_id"),
-            graft.queries.LlmOps.shinglesCol(col("tk")).as("g")))
-        val feats = docs.select(col("doc_id"),
-          size(col("g")).cast("long").as("sz"), explode(col("g")).as("feat"))
-        graft.queries.LlmOps.jaccardCandidates(feats, Nil, 1, 5)
-          .join(docs.select(col("doc_id").as("a_id"), col("g").as("g_a")),
-            col("doc_a") === col("a_id"))
-          .join(docs.select(col("doc_id").as("b_id"), col("g").as("g_b")),
-            col("doc_b") === col("b_id"))
-          .filter(call_function("graft_jaccard", col("g_a"), col("g_b")) >= 0.2)
+        LlmOps.setPairs(synthDocs(n)
+            .withColumn("tk", split(col("text"), " "))
+            .select(col("doc_id"), LlmOps.shinglesCol(col("tk")).as("g")),
+            "g", Nil, LlmOps.jaccardCandidates(_, Nil, 1, 5))
+          .filter(call_function("graft_jaccard", col("set_a"), col("set_b")) >= 0.2)
           .count()
       }
       if (want("cc_flat")) time("cc_flat", n) {

@@ -22,7 +22,8 @@ import graft.{Det, Scope, Tables => T}
   *    first |x| − ceil(t·|x|) + 1 features) is indexed, the candidate
   *    equi-join carries the exact size bound (J ≥ t ⟹ t·|A| ≤ |B| and
   *    t·|B| ≤ |A|, integer arithmetic) in its condition, and only
-  *    surviving candidates pay an array_intersect verify. Both filters
+  *    surviving candidates pay the exact set-overlap verify (see
+  *    [[setPairs]]). Both filters
   *    are exact (zero false negatives); high-DF boilerplate features
   *    sort to the END of the ranking so they fall OUT of prefixes —
   *    posting lists stay bounded where a naive inverted index goes
@@ -79,16 +80,6 @@ object LlmOps {
   private[graft] val LshTuneSchemes = Seq((4, 16), (8, 8), (16, 4))
   private[graft] val MinHashEstSim = 0.5
 
-  /** Universal-hash family h_i(x) = (a_i·x + b_i) mod p over a 31-bit
-    * prime: one md5 per feature gives the base x; the 64 signature rows
-    * are integer multiply-adds, not 64 md5 calls (measured 15× cheaper —
-    * md5+conv per hash was the round-1 bottleneck at 38 µs/row). The
-    * (a_i, b_i) come from a fixed-seed java.util.Random (LCG, spec-stable
-    * across JVMs) and are embedded as literals in the DuckDB twin, so
-    * both engines evaluate the identical integer expressions. */
-  /** SimHash near-dup knobs (q_llm_simdup): 16-bit signature split into
-    * 4 bands × 4 bits; candidate generation is exact for hamming ≤
-    * bands − 1 = 3 (pigeonhole — see the query comment). */
   /** q_llm_winnow: gram size K and window W — the (K, W) guarantee is
     * that any shared token run of length ≥ K+W−1 yields ≥ 1 shared
     * fingerprint, storing only ~2/(W+1) of the gram hashes. */
@@ -102,6 +93,9 @@ object LlmOps {
   private[graft] val WinnowMaxPosting = 50
   private[graft] val WinnowMinShared = 2
 
+  /** SimHash near-dup knobs (q_llm_simdup): 16-bit signature split into
+    * 4 bands × 4 bits; candidate generation is exact for hamming ≤
+    * bands − 1 = 3 (pigeonhole — see the query comment). */
   private[graft] val SimBands = 4
   private[graft] val SimBandBits = 4
   private[graft] val SimHamMax = SimBands - 1
@@ -126,6 +120,13 @@ object LlmOps {
     * at sf0.1), so the uncapped DuckDB oracle stays exact. */
   private[graft] val EditDupBandCap = 2000
 
+  /** Universal-hash family h_i(x) = (a_i·x + b_i) mod p over a 31-bit
+    * prime: one md5 per feature gives the base x; the 64 signature rows
+    * are integer multiply-adds, not 64 md5 calls (measured 15× cheaper —
+    * md5+conv per hash was the round-1 bottleneck at 38 µs/row). The
+    * (a_i, b_i) come from a fixed-seed java.util.Random (LCG, spec-stable
+    * across JVMs) and are embedded as literals in the DuckDB twin, so
+    * both engines evaluate the identical integer expressions. */
   private[graft] val HashP = 2147483647L
   private[graft] val (hashA, hashB) = {
     val rng = new scala.util.Random(42)
@@ -138,7 +139,13 @@ object LlmOps {
     * both MUST hash identically). */
   private def md5h32(c: Column): Column = Det.md5h32(c)
 
-  private def tokensCol: Column = array_distinct(split(col("text"), " "))
+  /** (doc_id, blockCols…, tk: distinct whitespace tokens) of any corpus —
+    * the token-set input of [[setPairs]] for q_llm_neardup,
+    * q_llm_simsweep and the [[graft.Graft]] pair facades. */
+  private[graft] def tokenSets(df: DataFrame, idCol: String, textCol: String,
+                               blockCols: Seq[String]): DataFrame =
+    df.select((col(idCol).as("doc_id") +: blockCols.map(col)) :+
+      array_distinct(split(col(textCol), " ")).as("tk"): _*)
 
   /** Distinct 3-gram word shingles of `tk` (requires size ≥ 3). Shared
     * with [[PipelineOps]] (q_llm_contam intersects test-doc shingles with
@@ -148,91 +155,89 @@ object LlmOps {
       concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
         element_at(tk, i + 2))))
 
-  /** Per-row MinHash LSH band keys — the signature stage of
-    * q_llm_minhash re-expressed as a STATELESS projection: the 64
-    * signature mins are `array_min` over transforms of the per-doc
-    * shingle-hash set instead of an explode + groupBy (identical values
-    * by construction — the min of a set equals the min over its exploded
-    * rows; same shingles, same (aᵢ·x + bᵢ) mod p family, same
-    * md5-of-concat band key). Zero shuffle in batch, and in a STREAM it
-    * is a pure map, so LSH banding runs inside a micro-batch with no
-    * streaming state — the property an incremental ingest pipeline needs
-    * (see [[graft.streaming.StreamOps.neardupIngestProbe]] and its
-    * parity test). Docs with < 3 tokens have no shingles and emit no
-    * rows, matching the graded batch pipeline's filter.
+  /** Native MinHash signatures over any corpus: registers
+    * [[graft.functions.MinHashSig]], keeps rows with ≥ 3 tokens (fewer
+    * have no shingles) and computes the whole stage — shingling, md5,
+    * 64 mins — as ONE compiled expression per row (zero shuffle, zero
+    * interpreted lambdas). Shared by [[minhashSig]] and
+    * [[graft.Graft.minhashSignatures]].
+    * @return (idCol, sig: array<bigint> of [[NumHashes]]). */
+  private[graft] def minhashSigArr(docs: DataFrame, idCol: String,
+                                   textCol: String): DataFrame = {
+    graft.functions.MinHashSig.register(docs.sparkSession,
+      hashA.toSeq, hashB.toSeq, HashP)
+    docs.select(col(idCol), split(col(textCol), " ").as("tk"))
+      .filter(size(col("tk")) >= 3)
+      .select(col(idCol), call_function("graft_minhash_sig", col("tk")).as("sig"))
+  }
+
+  /** MinHash signature table (doc_id, m0..m63) of a (doc_id, text, …)
+    * corpus — [[minhashSigArr]] spread into columns, the signature
+    * stage of every MinHash query. The late-r7 A/B measured the graded
+    * query end-to-end at 1.55 s with this compiled form vs 2.24 s with
+    * the former explode + 64-min hash-aggregate form (4.5 vs 6.5 s
+    * cold). The explode and per-row HOF reference forms live in
+    * LlmOpsSuite, bitwise-pinned equal through the shared LSH body. */
+  private[graft] def minhashSig(docs: DataFrame): DataFrame =
+    minhashSigArr(docs, "doc_id", "text")
+      .select(col("doc_id") +: (0 until NumHashes).map(i =>
+        element_at(col("sig"), i + 1).as(s"m$i")): _*)
+
+  /** LSH band buckets of a signature table (doc_id, m0..m63) for `nb`
+    * bands of `rpb` rows: the band key is the md5 of the band's
+    * '#'-joined rows, one equi-join key per band, so a bucket collision
+    * needs all `rpb` rows equal.
+    * @return (doc_id, band: int 0..nb-1, bkey: string). */
+  private[graft] def lshBuckets(sig: DataFrame, nb: Int, rpb: Int): DataFrame =
+    sig.select(col("doc_id"),
+      posexplode(array((0 until nb).map(b => md5(concat_ws("#",
+        (b * rpb until (b + 1) * rpb).map(i => col(s"m$i")): _*))): _*))
+        .as(Seq("band", "bkey")))
+
+  /** LSH candidates with their signature agreement: the `doc_a < doc_b`
+    * self-join of `buckets` on (keys…, band, bkey), distinct, then both
+    * signatures joined back by id. The signature table has one row per
+    * DOCUMENT — corpus-sized, so never broadcast-hinted; AQE broadcasts
+    * at small sf and shuffle-joins at scale.
+    * @param keys extra bucket columns that must match (lshtune's scheme).
+    * @return (keys…, doc_a, doc_b, m) — m = signature positions (of
+    *         [[NumHashes]]) on which the two docs agree. */
+  private[graft] def lshMatches(buckets: DataFrame, sig: DataFrame,
+                                keys: Seq[String] = Nil): DataFrame = {
+    val x = buckets.select((keys.map(col) :+ col("doc_id").as("doc_a")) ++
+      Seq(col("band"), col("bkey")): _*)
+    val y = buckets.select((keys.map(c => col(c).as(s"${c}_b")) :+
+      col("doc_id").as("doc_b")) ++
+      Seq(col("band").as("band_b"), col("bkey").as("bkey_b")): _*)
+    val cond = (keys.map(c => col(c) === col(s"${c}_b")) ++
+      Seq(col("band") === col("band_b"), col("bkey") === col("bkey_b"),
+        col("doc_a") < col("doc_b"))).reduce(_ && _)
+    val cand = x.join(y, cond)
+      .select(keys.map(col) ++ Seq(col("doc_a"), col("doc_b")): _*).distinct()
+    val a = sig.select(sig.columns.map(c => col(c).as(s"a_$c")): _*)
+    val b = sig.select(sig.columns.map(c => col(c).as(s"b_$c")): _*)
+    val matches = (0 until NumHashes).map(i =>
+      when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
+      .reduce(_ + _)
+    cand
+      .join(a, col("doc_a") === col("a_doc_id"))
+      .join(b, col("doc_b") === col("b_doc_id"))
+      .select(cand.columns.map(col) :+ matches.as("m"): _*)
+  }
+
+  /** Per-row MinHash LSH band keys: [[lshBuckets]] over [[minhashSig]]
+    * at the graded (8, 8) scheme — the very keys q_llm_minhash joins on.
+    * A STATELESS projection (zero shuffle in batch, a pure map in a
+    * stream), so LSH banding runs inside a micro-batch with no
+    * streaming state — the property an incremental ingest pipeline
+    * needs (see [[graft.streaming.StreamOps.neardupIngestProbe]] and
+    * its parity test). Docs with < 3 tokens emit no rows.
     *
     * @param docs (doc_id, text, ...) — batch or streaming.
     * @return (doc_id, band: int 0-7, bkey: string) — [[Bands]] rows per
     *         eligible doc. */
-  /** MinHash signature table (doc_id, m0..m63) in one of three
-    * value-identical physical forms (the min of a set equals the min
-    * over its exploded rows — same shingles, same (aᵢ·x + bᵢ) mod p
-    * family; all three bitwise-pinned equal in the unit suite):
-    *  - `"hof"`: 64 `array_min(transform(...))` columns over the
-    *    per-doc shingle-hash array — zero shuffle but THREE interpreted
-    *    HOF layers per row (lambdas block codegen).
-    *  - `"explode"`: explode shingles → 64 codegen'd hash columns →
-    *    hash-aggregate 64 mins. Map-side partial agg collapses each
-    *    doc's shingle rows before the exchange (shuffle = n_docs × 64
-    *    longs) — the r6/early-r7 graded form; the first r7 A/B measured
-    *    it beating "hof" 1.8 s vs 2.4 s end-to-end at sf0.1.
-    *  - `"native"`: [[graft.functions.MinHashSig]] — the whole stage
-    *    (shingling, md5, 64 mins) as one compiled expression: zero
-    *    shuffle AND zero interpreted lambdas. The late-r7 A/B (same
-    *    Prof invocation shape, same host window, back to back)
-    *    measured the graded query end-to-end at native 1.55 s vs
-    *    explode 2.24 s warm (4.5 vs 6.5 cold), so this is the graded
-    *    form: the signature stage is now a pure scan-side projection
-    *    at any corpus size — the exchange the explode form paid is
-    *    gone entirely.
-    * "hof" remains the STREAMING form's conceptual twin and parity pin
-    * (see [[minhashBands]] — stateless banding in a micro-batch). */
-  private[graft] def minhashSig(docs: DataFrame, form: String): DataFrame = {
-    val withTk = docs.withColumn("tk", split(col("text"), " "))
-      .filter(size(col("tk")) >= 3)
-    form match {
-      case "hof" =>
-        withTk
-          .withColumn("xs", transform(shinglesCol(col("tk")), t => md5h32(t)))
-          .select(col("doc_id") +: (0 until NumHashes).map(i =>
-            array_min(transform(col("xs"), x =>
-              (lit(hashA(i)) * x + lit(hashB(i))) % lit(HashP))).as(s"m$i")): _*)
-      case "native" =>
-        withTk
-          .withColumn("ms", call_function("graft_minhash_sig", col("tk")))
-          .select(col("doc_id") +: (0 until NumHashes).map(i =>
-            element_at(col("ms"), i + 1).as(s"m$i")): _*)
-      case "explode" =>
-        val toks = withTk
-          .select(col("doc_id"), explode(shinglesCol(col("tk"))).as("tok"))
-          .withColumn("x", md5h32(col("tok")))
-        val hashed = toks.select(
-          (col("doc_id") +: (0 until NumHashes).map(i =>
-            ((lit(hashA(i)) * col("x") + lit(hashB(i))) % lit(HashP)).as(s"h$i"))): _*)
-        hashed.groupBy(col("doc_id"))
-          .agg(min(col("h0")).as("m0"),
-            (1 until NumHashes).map(i => min(col(s"h$i")).as(s"m$i")): _*)
-    }
-  }
-
-  private[graft] def minhashBands(docs: DataFrame): DataFrame = {
-    val withXs = docs
-      .withColumn("tk", split(col("text"), " "))
-      .filter(size(col("tk")) >= 3)
-      .withColumn("xs", transform(shinglesCol(col("tk")), t => md5h32(t)))
-    // ms materializes as its own projection so the 64 mins are computed
-    // once per row (HOFs run interpreted — no common-subexpression
-    // elimination to save a re-evaluation).
-    val mins = array((0 until NumHashes).map(i =>
-      array_min(transform(col("xs"), x =>
-        (lit(hashA(i)) * x + lit(hashB(i))) % lit(HashP)))): _*)
-    withXs.withColumn("ms", mins)
-      .select(col("doc_id"),
-        posexplode(array((0 until Bands).map(b =>
-          md5(concat_ws("#", (b * RowsPerBand until (b + 1) * RowsPerBand)
-            .map(i => element_at(col("ms"), i + 1)): _*))): _*))
-          .as(Seq("band", "bkey")))
-  }
+  private[graft] def minhashBands(docs: DataFrame): DataFrame =
+    lshBuckets(minhashSig(docs), Bands, RowsPerBand)
 
   /** 16-bit SimHash signature per doc, with its (lang, source) block
     * carried through: per distinct token, a 16-bit md5-derived hash
@@ -240,8 +245,8 @@ object LlmOps {
     * Shared by q_llm_simhash (signatures) and q_llm_simdup (banded
     * near-dup pairs). */
   private def simhashSigs(docs: DataFrame): DataFrame =
-    simhashSigsOn(docs.select(col("doc_id"), col("lang"), col("source"),
-      tokensCol.as("tk")), Seq("lang", "source"))
+    simhashSigsOn(tokenSets(docs, "doc_id", "text", Seq("lang", "source")),
+      Seq("lang", "source"))
 
   /** [[simhashSigs]] over ANY (doc_id, tk: array<string>, blockCols…)
     * rows — the form [[graft.Graft.simDupPairs]] exposes to caller
@@ -460,6 +465,38 @@ object LlmOps {
     a.join(b, cond).select(col("doc_a"), col("doc_b")).distinct()
   }
 
+  /** Set-similarity candidate pairs with both sets attached — the one
+    * body behind every token/shingle-set pair query and facade. The
+    * (doc_id, blockCols…, set) projection is cached ONCE and feeds all
+    * three consumers (the exploded feature rows and both join-backs) —
+    * one scan + one set pass per doc instead of three. Explode runs over
+    * the CACHED array, so the set is still evaluated exactly once per
+    * doc — never size(<array expr>) above the explode, where projection
+    * collapse re-evaluates the array per exploded row (measured 5× the
+    * whole query's cost).
+    * @param docs       (doc_id, blockCols…, setCol) — set elements
+    *                   DISTINCT per doc.
+    * @param candidates candidate generator over the DISTINCT
+    *                   (doc_id, blockCols…, sz, feat) rows —
+    *                   [[jaccardCandidates]] or [[containmentCandidates]].
+    * @return (doc_a, doc_b, blockCols…, set_a, set_b); callers verify. */
+  private[graft] def setPairs(docs: DataFrame, setCol: String,
+                              blockCols: Seq[String],
+                              candidates: DataFrame => DataFrame): DataFrame = {
+    val bc = blockCols.map(col)
+    val d = Scope.eager(docs)
+    val feats = d.select((col("doc_id") +: bc) :+
+      size(col(setCol)).cast("long").as("sz") :+
+      explode(col(setCol)).as("feat"): _*)
+    candidates(feats)
+      .join(d.select((col("doc_id").as("a_id") +: bc) :+ col(setCol).as("set_a"): _*),
+        col("doc_a") === col("a_id"))
+      .join(d.select(col("doc_id").as("b_id"), col(setCol).as("set_b")),
+        col("doc_b") === col("b_id"))
+      .select((col("doc_a") +: col("doc_b") +: bc) ++
+        Seq(col("set_a"), col("set_b")): _*)
+  }
+
   /** Dot product of two double arrays via the native codegen expression
     * [[graft.functions.DotF64]] — a sequential left fold from 0.0 in
     * list order, the same sequence DuckDB's list_aggregate 'sum' uses,
@@ -591,27 +628,40 @@ object LlmOps {
   private def embBase(s: SparkSession, d: String): DataFrame =
     vecBase(T.embeddings(s, d), "vec_id", "embedding")
 
+  /** Probe-to-corpus cosine at 6dp: probe (pe, pn) against corpus
+    * (e, nrm) — the score of every cosine search. */
+  private def probeSim: Column =
+    round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6)
+
+  /** The top-k tail every cosine search ends in: score the
+    * (probe_id, pe, pn) × (vec_id, e, nrm) candidates with [[probeSim]],
+    * rank per probe by (sim desc, vec_id asc) and keep rk ≤ k.
+    * @return (probe_id, rk, neighbor_id, sim 6dp), unordered. */
+  private def cosineTopK(cand: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("probe_id"))
+      .orderBy(col("sim").desc, col("vec_id").asc)
+    cand
+      .withColumn("sim", probeSim)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= k)
+      .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"), col("sim"))
+  }
+
   /** Exact cosine top-k over ANY prepared (vec_id, e, nrm) DataFrame —
     * the graded q_llm_knn plan and [[graft.Graft.knnExact]]: the probe
     * rows broadcast, the corpus is scanned ONCE and never shuffled —
     * per-probe work is one native-codegen dot per corpus row. Ties
     * break to the lower id; self-matches excluded.
-    * @return (probe_id, rk, neighbor_id, sim 6dp). */
+    * @return (probe_id, rk, neighbor_id, sim 6dp), unordered — callers
+    *         that present it sort by (probe_id, rk). */
   def knnQueryOn(base: DataFrame, k: Int,
                  probePred: Column => Column): DataFrame = {
     graft.functions.DotF64.register(base.sparkSession)
     val probes = base.filter(probePred(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("e").as("pe"),
         col("nrm").as("pn"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    base.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"), col("sim"))
-      .orderBy(col("probe_id"), col("rk"))
+    cosineTopK(base.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("probe_id")), k)
   }
 
   /** [[annQuery]] over ANY prepared (vec_id, e, nrm) DataFrame — the
@@ -637,14 +687,8 @@ object LlmOps {
         col("nrm").as("pn"), col("bucket").as("pbucket"))
       .withColumn("flip", explode(array(flips: _*)))
       .withColumn("qbucket", col("pbucket").bitwiseXOR(col("flip")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    base.join(broadcast(probes), col("bucket") === col("qbucket")
-        && col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"), col("sim"))
+    cosineTopK(base.join(broadcast(probes), col("bucket") === col("qbucket")
+        && col("vec_id") =!= col("probe_id")), k)
       .orderBy(col("probe_id"), col("rk"))
   }
 
@@ -744,22 +788,11 @@ object LlmOps {
     val probes = ranked.filter(probePred(col("vec_id")) && col("crk") <= nprobe)
       .select(col("vec_id").as("probe_id"), col("e").as("pe"),
         col("nrm").as("pn"), col("cent_id").as("pcent"))
-    val wTop = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("vec_id").asc)
-    assigned.join(broadcast(probes), col("cent_id") === col("pcent")
-        && col("vec_id") =!= col("probe_id"))
-      .withColumn("sim", round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
-      .withColumn("rk", row_number().over(wTop))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("rk"), col("vec_id").as("neighbor_id"), col("sim"))
+    cosineTopK(assigned.join(broadcast(probes), col("cent_id") === col("pcent")
+        && col("vec_id") =!= col("probe_id")), k)
       .orderBy(col("probe_id"), col("rk"))
   }
 
-  /** Exact token-set-Jaccard ≥ 0.8 near-dup pairs within (lang, source)
-    * blocks — candidate generation via [[jaccardCandidates]], then an
-    * array_intersect verify on survivors. Shared by q_llm_neardup (the
-    * pair listing) and q_llm_cc (pair→cluster grouping).
-    * Returns (doc_a, doc_b, jacc) with doc_a < doc_b, unordered. */
   /** The q_llm_winnow engine over any documents-shaped frame
     * (extracted for the (K,W)-guarantee unit test): per doc, winnowed
     * fingerprints — min K-gram hash per W-window of the gram-hash
@@ -853,33 +886,24 @@ object LlmOps {
           .otherwise(array().cast("array<bigint>")).as("fps"))
   }
 
+  /** Exact token-set-Jaccard ≥ 0.8 near-dup pairs within (lang, source)
+    * blocks — candidate generation via [[jaccardCandidates]] over
+    * [[setPairs]], then a `graft_jaccard` verify on survivors. Shared by
+    * q_llm_neardup (the pair listing) and q_llm_cc/keepbest/tri/clustco
+    * (the pair graph).
+    * Returns (doc_a, doc_b, jacc) with doc_a < doc_b, unordered. */
   private def neardupPairs(s: SparkSession, d: String): DataFrame = {
     graft.functions.JaccardStr.register(s) // graft_jaccard below; idempotent
-    // ONE tokenized projection of the corpus, persisted, feeds all three
-    // consumers (the exploded feature rows and both verify join sides) —
-    // one parquet scan + one split/array_distinct pass instead of three
-    // (the r7 shave; r6 re-scanned documents per consumer). Explode runs
-    // over the CACHED array, so the token set is still evaluated exactly
-    // once per doc — never size(<array expr>) above the explode, where
-    // projection collapse re-evaluates the array per exploded row
-    // (measured 5× the whole query's cost).
-    val docs = Scope.eager(T.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk")))
-    val feats = docs.select(col("doc_id"), col("lang"), col("source"),
-      size(col("tk")).cast("long").as("sz"), explode(col("tk")).as("feat"))
-    val cand = jaccardCandidates(feats, Seq("lang", "source"), 4, 5)
-    cand
-      .join(docs.select(col("doc_id").as("a_id"), col("tk").as("tk_a")),
-        col("doc_a") === col("a_id"))
-      .join(docs.select(col("doc_id").as("b_id"), col("tk").as("tk_b")),
-        col("doc_b") === col("b_id"))
+    val blocks = Seq("lang", "source")
+    setPairs(tokenSets(T.documents(s, d), "doc_id", "text", blocks),
+        "tk", blocks, jaccardCandidates(_, blocks, 4, 5))
       // graft_jaccard (functions/JaccardStr): one codegen'd hash-probe
       // pass per pair, replacing the interpreted-intermediate
       // size(array_intersect)/sizes composite — bitwise-equal by
       // construction (exact int counts → one IEEE division; pinned in
       // FunctionsSuite).
       .withColumn("jacc",
-        call_function("graft_jaccard", col("tk_a"), col("tk_b")))
+        call_function("graft_jaccard", col("set_a"), col("set_b")))
       .filter(col("jacc") >= 0.8)
       // unrounded: one IEEE division of exact ints is bit-identical in
       // both engines; round(.,6) would add a .5-boundary hazard (e.g.
@@ -1011,42 +1035,17 @@ object LlmOps {
       .withColumn("n_dropped", col("n_docs") - bandCap)
       .orderBy((blockCols.map(col) :+ col("band")): _*)
 
-  /** The full graded q_llm_minhash pipeline, parameterized on the
-    * signature form (see [[minhashSig]]) so the physical variants can
-    * be benchmarked end-to-end and parity-pinned. */
-  private[graft] def minhashQuery(s: SparkSession, d: String,
-                                  form: String): DataFrame = {
-    graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
+  /** The full graded q_llm_minhash pipeline: signatures, banded
+    * candidates, est_sim = agreeing positions / [[NumHashes]] ≥
+    * [[MinHashEstSim]]. */
+  private[graft] def minhashQuery(s: SparkSession, d: String): DataFrame = {
     // Three consumers (band buckets + both est_sim join sides) — the
     // signature table is materialized once (n_docs × 64 longs; at
     // 100 TB scale this is the LSH signature table every production
     // pipeline persists before banding).
-    val sig = Scope.eager(minhashSig(T.documents(s, d), form))
-    // Band key: md5 of the concatenated in-band signature — one equi-join
-    // key per band, so bucket collisions require all 8 in-band rows equal.
-    def bandKey(b: Int): Column =
-      md5(concat_ws("#",
-        (b * RowsPerBand until (b + 1) * RowsPerBand).map(i => col(s"m$i")): _*))
-    val buckets = sig.select(col("doc_id"),
-      posexplode(array((0 until Bands).map(bandKey): _*)).as(Seq("band", "bkey")))
-    val x = buckets.select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-    val y = buckets.select(col("doc_id").as("doc_b"), col("band").as("band_b"),
-      col("bkey").as("bkey_b"))
-    val cand = x.join(y, col("band") === col("band_b")
-        && col("bkey") === col("bkey_b") && col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val a = sig.select(sig.columns.map(c => col(c).as(s"a_$c")): _*)
-    val b = sig.select(sig.columns.map(c => col(c).as(s"b_$c")): _*)
-    val matches = (0 until NumHashes).map(i =>
-      when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    // est_sim verify: the signature table has one row per DOCUMENT —
-    // corpus-sized, so never broadcast-hinted; AQE broadcasts at small
-    // sf and shuffle-joins at scale.
-    cand
-      .join(a, col("doc_a") === col("a_doc_id"))
-      .join(b, col("doc_b") === col("b_doc_id"))
-      .withColumn("est_sim", matches / lit(NumHashes))
+    val sig = Scope.eager(minhashSig(T.documents(s, d)))
+    lshMatches(lshBuckets(sig, Bands, RowsPerBand), sig)
+      .withColumn("est_sim", col("m") / lit(NumHashes))
       .filter(col("est_sim") >= MinHashEstSim)
       .select(col("doc_a"), col("doc_b"), col("est_sim"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -1238,29 +1237,16 @@ object LlmOps {
     // `graft_overlap` count (functions/OverlapCount — one hash-probe
     // pass, no intermediate intersection array; bitwise parity vs the
     // size(array_intersect) composite pinned in FunctionsSuite).
-    // cont = |a∩b|/|a|: exact int counts, ONE IEEE division, unrounded
-    // (the q_llm_neardup float discipline; 9/10 ≤ 0.9d keeps the
-    // prefilter conservative).
-    "q_llm_contain" -> ((s, d) => {
-      graft.functions.OverlapCount.register(s) // graft_overlap; idempotent
-      // three consumers: feature rows + both verify sides
-      val docs = Scope.eager(T.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk")))
-      val feats = docs.select(col("doc_id"), col("lang"), col("source"),
-        size(col("tk")).cast("long").as("sz"), explode(col("tk")).as("feat"))
-      val cand = containmentCandidates(feats, Seq("lang", "source"), 9, 10)
-      cand
-        .join(docs.select(col("doc_id").as("a_id"), col("tk").as("tk_a")),
-          col("doc_a") === col("a_id"))
-        .join(docs.select(col("doc_id").as("b_id"), col("tk").as("tk_b")),
-          col("doc_b") === col("b_id"))
-        .withColumn("cont",
-          call_function("graft_overlap", col("tk_a"), col("tk_b"))
-            / size(col("tk_a")))
-        .filter(col("cont") >= 0.9)
-        .select(col("doc_a"), col("doc_b"), col("cont"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    // Graded through the public facade (graft.Graft.containPairs): the
+    // threshold is the exact integer test n_inter·10 ≥ |a|·9, never a
+    // double boundary; cont = |a∩b|/|a| is exact int counts, ONE IEEE
+    // division, unrounded.
+    "q_llm_contain" -> ((s, d) =>
+      graft.Graft.containPairs(T.documents(s, d), "doc_id", "text",
+          Seq("lang", "source"), 9, 10)
+        .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+          col("containment").as("cont"))
+        .orderBy(col("doc_a"), col("doc_b"))),
 
     // Near-dup CLUSTERS: connected components over the q_llm_neardup
     // pair graph (the pair→cluster step every production dedup pipeline
@@ -1419,7 +1405,7 @@ object LlmOps {
     // 64 min-hashes from the universal family, 8 bands × 8 rows,
     // candidates share ≥1 band bucket, emitted when est_sim
     // (= agreeing positions / 64) ≥ 0.5.
-    "q_llm_minhash" -> ((s, d) => minhashQuery(s, d, form = "native")),
+    "q_llm_minhash" -> ((s, d) => minhashQuery(s, d)),
 
     // MinHash estimator-quality audit (r15) — the confusion matrix of
     // the sketch against ground truth, the figure that justifies (or
@@ -1435,32 +1421,10 @@ object LlmOps {
     // output is ≤ 11×11 cells — the audit costs one extra verify pass
     // over the candidate set, nothing corpus-quadratic.
     "q_llm_minhashconf" -> ((s, d) => {
-      graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
-      val sig = Scope.eager(minhashSig(T.documents(s, d), "native"))
-      def bandKey(b: Int): Column =
-        md5(concat_ws("#",
-          (b * RowsPerBand until (b + 1) * RowsPerBand)
-            .map(i => col(s"m$i")): _*))
-      val buckets = sig.select(col("doc_id"),
-        posexplode(array((0 until Bands).map(bandKey): _*))
-          .as(Seq("band", "bkey")))
-      val x = buckets.select(col("doc_id").as("doc_a"), col("band"),
-        col("bkey"))
-      val y = buckets.select(col("doc_id").as("doc_b"),
-        col("band").as("band_b"), col("bkey").as("bkey_b"))
-      val cand = x.join(y, col("band") === col("band_b")
-          && col("bkey") === col("bkey_b") && col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      val a = sig.select(sig.columns.map(c => col(c).as(s"a_$c")): _*)
-      val b = sig.select(sig.columns.map(c => col(c).as(s"b_$c")): _*)
-      val matches = (0 until NumHashes).map(i =>
-        when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      val est = cand
-        .join(a, col("doc_a") === col("a_doc_id"))
-        .join(b, col("doc_b") === col("b_doc_id"))
+      val sig = Scope.eager(minhashSig(T.documents(s, d)))
+      val est = lshMatches(lshBuckets(sig, Bands, RowsPerBand), sig)
         .select(col("doc_a"), col("doc_b"),
-          (matches / lit(NumHashes)).as("est_sim"))
+          (col("m") / lit(NumHashes)).as("est_sim"))
       val sets = T.documents(s, d)
         .withColumn("tk", split(col("text"), " "))
         .filter(size(col("tk")) >= 3)
@@ -1496,34 +1460,11 @@ object LlmOps {
     // key) — never all-pairs; the signature join-backs are
     // one-row-per-doc; output is 3 rows forever.
     "q_llm_lshtune" -> ((s, d) => {
-      graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
-      val sig = Scope.eager(minhashSig(T.documents(s, d), "native"))
+      val sig = Scope.eager(minhashSig(T.documents(s, d)))
       val buckets = Scope.eager(LshTuneSchemes.map { case (nb, rpb) =>
-        def bandKey(bd: Int): Column = md5(concat_ws("#",
-          (bd * rpb until (bd + 1) * rpb).map(i => col(s"m$i")): _*))
-        sig.select(lit(nb).as("nb"), col("doc_id"),
-          posexplode(array((0 until nb).map(bandKey): _*))
-            .as(Seq("band", "bkey")))
+        lshBuckets(sig, nb, rpb).withColumn("nb", lit(nb))
       }.reduce(_ unionByName _))
-      val cand = buckets
-        .select(col("nb"), col("doc_id").as("doc_a"), col("band"),
-          col("bkey"))
-        .join(buckets.select(col("nb").as("nb2"),
-          col("doc_id").as("doc_b"), col("band").as("band_b"),
-          col("bkey").as("bkey_b")),
-          col("nb") === col("nb2") && col("band") === col("band_b")
-            && col("bkey") === col("bkey_b")
-            && col("doc_a") < col("doc_b"))
-        .select(col("nb"), col("doc_a"), col("doc_b")).distinct()
-      val a = sig.select(sig.columns.map(c => col(c).as(s"a_$c")): _*)
-      val b = sig.select(sig.columns.map(c => col(c).as(s"b_$c")): _*)
-      val matches = (0 until NumHashes).map(i =>
-        when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      val agg = cand
-        .join(a, col("doc_a") === col("a_doc_id"))
-        .join(b, col("doc_b") === col("b_doc_id"))
-        .select(col("nb"), matches.as("m"))
+      val agg = lshMatches(buckets, sig, Seq("nb"))
         .groupBy(col("nb"))
         .agg(count(lit(1)).as("n_cand"),
           sum(when(col("m") * 2 >= NumHashes, 1L).otherwise(0L))
@@ -1556,7 +1497,6 @@ object LlmOps {
     // set differences as left-anti equi-joins on doc_id; output is 3
     // rows forever. All-integer.
     "q_llm_cascade" -> ((s, d) => {
-      graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
       val docs = Scope.eager(T.documents(s, d))
       def flaggedBy(key: Column, guard: Column) = {
         val k = docs.filter(guard).select(col("doc_id"), key.as("k"))
@@ -1569,30 +1509,8 @@ object LlmOps {
       val f1 = Scope.eager(flaggedBy(md5(col("text")), lit(true)))
       val f2 = Scope.eager(flaggedBy(substring(col("text"), 1, 32),
         length(col("text")) >= 32))
-      val sig = Scope.eager(minhashSig(docs, "native"))
-      def bandKey(b: Int): Column =
-        md5(concat_ws("#",
-          (b * RowsPerBand until (b + 1) * RowsPerBand)
-            .map(i => col(s"m$i")): _*))
-      val buckets = sig.select(col("doc_id"),
-        posexplode(array((0 until Bands).map(bandKey): _*))
-          .as(Seq("band", "bkey")))
-      val cand = buckets
-        .select(col("doc_id").as("doc_a"), col("band"), col("bkey"))
-        .join(buckets.select(col("doc_id").as("doc_b"),
-          col("band").as("band_b"), col("bkey").as("bkey_b")),
-          col("band") === col("band_b") && col("bkey") === col("bkey_b")
-            && col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      val a = sig.select(sig.columns.map(c => col(c).as(s"a_$c")): _*)
-      val b = sig.select(sig.columns.map(c => col(c).as(s"b_$c")): _*)
-      val matches = (0 until NumHashes).map(i =>
-        when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      val f3 = Scope.eager(cand
-        .join(a, col("doc_a") === col("a_doc_id"))
-        .join(b, col("doc_b") === col("b_doc_id"))
-        .select(col("doc_a"), col("doc_b"), matches.as("m"))
+      val sig = Scope.eager(minhashSig(docs))
+      val f3 = Scope.eager(lshMatches(lshBuckets(sig, Bands, RowsPerBand), sig)
         .filter(col("m") * 2 >= NumHashes)
         .select(col("doc_b").as("doc_id")).distinct())
       val f2new = f2.join(f1, Seq("doc_id"), "left_anti")
@@ -1663,11 +1581,10 @@ object LlmOps {
     // (|sources| rows — a domain constant, never corpus-scaled) —
     // sanctioned like the 1-row normalizer crossJoins.
     "q_llm_srcsim" -> ((s, d) => {
-      graft.functions.MinHashSig.register(s, hashA.toSeq, hashB.toSeq, HashP)
       // spread (r22): the minhash signature and shingle projections are
       // CPU-heavy per-row maps on the single-row-group scan
       val docs = graft.Graft.spreadNarrowScan(T.documents(s, d))
-      val sig = minhashSig(docs, "native")
+      val sig = minhashSig(docs)
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
       val ssig = Scope.eager(sig.groupBy(col("source"))
         .agg(min(col("m0")).as("m0"),
@@ -1763,22 +1680,16 @@ object LlmOps {
     // output 4 rows forever.
     "q_llm_simsweep" -> ((s, d) => {
       graft.functions.OverlapCount.register(s) // graft_overlap; idempotent
-      val docs = Scope.eager(T.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("source"), tokensCol.as("tk")))
-      val feats = docs.select(col("doc_id"), col("lang"), col("source"),
-        size(col("tk")).cast("long").as("sz"), explode(col("tk")).as("feat"))
-      val cand = jaccardCandidates(feats, Seq("lang", "source"), 1, 2)
+      val blocks = Seq("lang", "source")
       val th = Seq((1, 2, 50L), (7, 10, 70L), (4, 5, 80L), (9, 10, 90L))
       def qual(n: Int, dd: Int) = col("inter") * dd >= col("uni") * n
-      val pairs = Scope.eager(cand
-        .join(docs.select(col("doc_id").as("a_id"), col("tk").as("tk_a")),
-          col("doc_a") === col("a_id"))
-        .join(docs.select(col("doc_id").as("b_id"), col("tk").as("tk_b")),
-          col("doc_b") === col("b_id"))
+      val pairs = Scope.eager(setPairs(
+          tokenSets(T.documents(s, d), "doc_id", "text", blocks),
+          "tk", blocks, jaccardCandidates(_, blocks, 1, 2))
         .select(col("doc_a"), col("doc_b"),
-          call_function("graft_overlap", col("tk_a"), col("tk_b"))
+          call_function("graft_overlap", col("set_a"), col("set_b"))
             .cast("long").as("inter"),
-          (size(col("tk_a")) + size(col("tk_b"))).cast("long").as("szsum"))
+          (size(col("set_a")) + size(col("set_b"))).cast("long").as("szsum"))
         .withColumn("uni", col("szsum") - col("inter"))
         .filter(col("inter") * 2 >= col("uni")) // the sweep floor
         .select(col("doc_a"), col("doc_b"), col("inter"), col("uni")))
@@ -1828,27 +1739,19 @@ object LlmOps {
     // DF ordering and the exact max ≤ 5·min size bound still apply).
     "q_llm_ngram" -> ((s, d) => {
       graft.functions.JaccardStr.register(s) // graft_jaccard; idempotent
-      // One persisted shingle projection feeds the feature explode and
-      // both verify join sides — shinglesCol is evaluated ONCE per doc
-      // and the parquet scan happens once (same r7 shave as
-      // neardupPairs; previously 3 scans × 3 shingle evaluations).
-      val docs = Scope.eager(graft.Graft.spreadNarrowScan(T.documents(s, d))
-        // spread (r22): shinglesCol is a CPU-heavy per-row map on the
-        // single-row-group scan — parallelize the cache FILL
-        .withColumn("tk", split(col("text"), " "))
-        .filter(size(col("tk")) >= 3)
-        .select(col("doc_id"), col("lang"), col("source"),
-          shinglesCol(col("tk")).as("g")))
-      val feats = docs.select(col("doc_id"), col("lang"), col("source"),
-        size(col("g")).cast("long").as("sz"), explode(col("g")).as("feat"))
-      val cand = jaccardCandidates(feats, Seq("lang", "source"), 1, 5)
-      cand
-        .join(docs.select(col("doc_id").as("a_id"), col("g").as("g_a")),
-          col("doc_a") === col("a_id"))
-        .join(docs.select(col("doc_id").as("b_id"), col("g").as("g_b")),
-          col("doc_b") === col("b_id"))
+      val blocks = Seq("lang", "source")
+      // setPairs caches the shingle projection: shinglesCol is evaluated
+      // ONCE per doc and the parquet scan happens once
+      setPairs(graft.Graft.spreadNarrowScan(T.documents(s, d))
+          // spread (r22): shinglesCol is a CPU-heavy per-row map on the
+          // single-row-group scan — parallelize the cache FILL
+          .withColumn("tk", split(col("text"), " "))
+          .filter(size(col("tk")) >= 3)
+          .select(col("doc_id"), col("lang"), col("source"),
+            shinglesCol(col("tk")).as("g")),
+          "g", blocks, jaccardCandidates(_, blocks, 1, 5))
         .withColumn("jacc",
-          call_function("graft_jaccard", col("g_a"), col("g_b")))
+          call_function("graft_jaccard", col("set_a"), col("set_b")))
         .filter(col("jacc") >= 0.2)
         .select(col("doc_a"), col("doc_b"), col("jacc")) // unrounded — see q_llm_neardup
         .orderBy(col("doc_a"), col("doc_b"))
@@ -1856,7 +1759,8 @@ object LlmOps {
 
     // Brute-force cosine top-5 for probe vectors (vec_id < 5) — the exact
     // baseline an ANN variant is judged against. Probe side broadcasts.
-    "q_llm_knn" -> ((s, d) => knnQueryOn(embBase(s, d), 5, _ < 5)),
+    "q_llm_knn" -> ((s, d) =>
+      knnQueryOn(embBase(s, d), 5, _ < 5).orderBy(col("probe_id"), col("rk"))),
 
     // Multi-probe LSH ANN: 4 sign-bit bucket + all Hamming-≤2 probes —
     // the MEASURED optimum of the r17 q_llm_annsweep grid (macro
@@ -1958,20 +1862,9 @@ object LlmOps {
       graft.functions.DotF64.register(s)
       val base = Scope.eager(
         embBase(s, d).withColumn("b8", signBucket(col("e"), 0, 8)))
-      // exact truth: knn's arithmetic verbatim off the shared scan
-      val probesT = base.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("e").as("pe"),
-          col("nrm").as("pn"))
-      val wT = Window.partitionBy(col("probe_id"))
-        .orderBy(col("sim").desc, col("vec_id").asc)
-      val truth = Scope.eager(base.crossJoin(broadcast(probesT))
-        .filter(col("vec_id") =!= col("probe_id"))
-        .withColumn("sim",
-          round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
-        .withColumn("rk", row_number().over(wT))
-        .filter(col("rk") <= 3)
-        .select(col("probe_id").as("t_probe"),
-          col("vec_id").as("neighbor_id")))
+      // exact truth: knn's engine off the shared scan
+      val truth = Scope.eager(knnQueryOn(base, 3, _ < 5)
+        .select(col("probe_id").as("t_probe"), col("neighbor_id")))
       val nP = truth.agg(countDistinct(col("t_probe")).as("n_probes"))
       // ---- LSH half: per-bits bucket = mask of the ONE 8-bit signature
       val bitsList = Seq(4, 6, 8)
@@ -2002,8 +1895,7 @@ object LlmOps {
         baseB.join(broadcast(probeRows),
             col("bits_c") === col("bits") && col("bkey") === col("qbucket")
               && col("vec_id") =!= col("probe_id"))
-          .withColumn("sim",
-            round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
+          .withColumn("sim", probeSim)
           .select(col("bits"), col("radius"), col("probe_id"),
             col("vec_id"), col("sim")))
       // ---- IVF half: ONE top-8 centroid ranking feeds all nprobe configs
@@ -2020,8 +1912,7 @@ object LlmOps {
         assigned.join(broadcast(iprobes),
             col("cent_id") === col("pcent")
               && col("vec_id") =!= col("probe_id"))
-          .withColumn("sim",
-            round(dot(col("pe"), col("e")) / (col("pn") * col("nrm")), 6))
+          .withColumn("sim", probeSim)
           .select(col("np"), col("probe_id"), col("vec_id"), col("sim")))
       // ---- per-config stats: candidate count + top-3 hits vs truth
       def statsOf(cand: DataFrame, method: String,

@@ -779,13 +779,40 @@ class LlmOpsSuite extends SparkSuite {
     // the three physical forms of the signature stage must agree
     // bitwise so any of them can be the graded form without touching
     // the oracle — in particular the native compiled expression must
-    // reproduce the SQL md5/mod arithmetic exactly
-    val a = LlmOps.minhashQuery(spark, sf, form = "explode").collect().toSeq
-    spark.catalog.clearCache()
-    val b = LlmOps.minhashQuery(spark, sf, form = "hof").collect().toSeq
-    spark.catalog.clearCache()
-    val c = LlmOps.minhashQuery(spark, sf, form = "native").collect().toSeq
-    spark.catalog.clearCache()
+    // reproduce the SQL md5/mod arithmetic exactly. The explode and
+    // per-row HOF reference forms are built here; all three run
+    // through the shared LSH body the graded q_llm_minhash runs.
+    import LlmOps.{hashA, hashB, HashP, NumHashes}
+    val withTk = Tables.documents(spark, sf)
+      .withColumn("tk", split(col("text"), " "))
+      .filter(size(col("tk")) >= 3)
+    // explode shingles → 64 hash columns → hash-aggregate 64 mins
+    val hashed = withTk
+      .select(col("doc_id"), explode(LlmOps.shinglesCol(col("tk"))).as("tok"))
+      .withColumn("x", Det.md5h32(col("tok")))
+      .select(col("doc_id") +: (0 until NumHashes).map(i =>
+        ((lit(hashA(i)) * col("x") + lit(hashB(i))) % lit(HashP)).as(s"h$i")): _*)
+    val explodeSig = hashed.groupBy(col("doc_id"))
+      .agg(min(col("h0")).as("m0"),
+        (1 until NumHashes).map(i => min(col(s"h$i")).as(s"m$i")): _*)
+    // 64 array_min(transform(...)) columns over the shingle-hash array
+    val hofSig = withTk
+      .withColumn("xs", transform(LlmOps.shinglesCol(col("tk")), t => Det.md5h32(t)))
+      .select(col("doc_id") +: (0 until NumHashes).map(i =>
+        array_min(transform(col("xs"), x =>
+          (lit(hashA(i)) * x + lit(hashB(i))) % lit(HashP))).as(s"m$i")): _*)
+    def viaLsh(sig0: org.apache.spark.sql.DataFrame) = {
+      val sig = Scope.eager(sig0)
+      try LlmOps.lshMatches(LlmOps.lshBuckets(sig, LlmOps.Bands, LlmOps.RowsPerBand), sig)
+        .withColumn("est_sim", col("m") / lit(NumHashes))
+        .filter(col("est_sim") >= LlmOps.MinHashEstSim)
+        .select(col("doc_a"), col("doc_b"), col("est_sim"))
+        .orderBy(col("doc_a"), col("doc_b")).collect().toSeq
+      finally spark.catalog.clearCache()
+    }
+    val a = viaLsh(explodeSig)
+    val b = viaLsh(hofSig)
+    val c = viaLsh(LlmOps.minhashSig(Tables.documents(spark, sf)))
     assert(a === b)
     assert(a === c)
     assert(a.nonEmpty) // sf0.001 has minhash pairs; vacuous parity would hide a broken filter
