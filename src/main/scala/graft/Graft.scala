@@ -432,10 +432,11 @@ object Graft {
     * to (`src`, `dst`) — plus `w` when `wCol` is given — drop
     * self-loops unless `keepLoops`, then union the reversed copy and
     * `distinct()`. Weighted rows dedup as whole (src, dst, w) triples
-    * (the [[modularityWeighted]] caller contract). */
-  private def symmetrize(edges: DataFrame, srcCol: String, dstCol: String,
-                         wCol: Option[String] = None,
-                         keepLoops: Boolean = false): DataFrame = {
+    * (the [[modularityWeighted]] caller contract). ScaleRehearsal's
+    * unweighted graph probes build their edge lists with it too. */
+  private[graft] def symmetrize(edges: DataFrame, srcCol: String,
+                                dstCol: String, wCol: Option[String] = None,
+                                keepLoops: Boolean = false): DataFrame = {
     val w = wCol.toSeq
     val named = edges.select(Seq(col(srcCol).as("src"),
       col(dstCol).as("dst")) ++ w.map(c => col(c).as("w")): _*)

@@ -16,7 +16,8 @@ import scala.collection.mutable
   *
   * It replaced the profiler mains Prof (warm query timings), ProfJobs
   * (the per-job/per-stage breakdown with driver gaps) and PlanDump
-  * (formatted plans), and ScaleRehearsal's private shuffle listener.
+  * (formatted plans). The scale harness, ScaleRehearsal under
+  * `src/test`, records each probe through [[run]].
   * The "ProfJobs measured …" and "Prof warm …" figures cited in engine
   * comments and OPTIMIZATION_r22.md were taken with those tools; a
   * pass-1 record carries the same job/stage breakdown, a timed record

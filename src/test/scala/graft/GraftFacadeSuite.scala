@@ -1516,4 +1516,23 @@ class GraftFacadeSuite extends SparkSuite {
     }
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
+
+  test("knnExact returns its rows in (probe_id, rk) order over a repartitioned input") {
+    // 40 unit vectors around the circle; six probes whose hash
+    // partitions of the rank window do not follow their id order. With
+    // AQE's partition coalescing off, the window's output spans
+    // several partitions, so only knnExact's own sort orders it.
+    val vecs = (1 to 40).map(i =>
+        (i.toLong, Seq(math.cos(i * 0.3), math.sin(i * 0.3))))
+      .toDF("vid", "vec").repartition(5)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, false)
+    val got = try Graft.knnExact(vecs, "vid", "vec",
+        Seq(31L, 4L, 17L, 9L, 26L, 12L), 3).collect()
+      .map(r => (r.getAs[Long]("probe_id"), r.getAs[Int]("rk"))).toSeq
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(got === Seq(4L, 9L, 12L, 17L, 26L, 31L).flatMap(p =>
+      (1 to 3).map(p -> _)))
+  }
 }
